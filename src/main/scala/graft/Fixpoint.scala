@@ -1,5 +1,9 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.functions._
+
 /** Outcome of a fixed-point kernel run ([[operators.Hits.runConverged]],
   * [[operators.Salsa.runConverged]],
   * [[operators.PageRank.runConverged]]): the final vector(s), the
@@ -16,3 +20,194 @@ package graft
   * it as a marker row alongside `n_iter`.
   */
 case class Fixpoint[A](result: A, iterations: Int, converged: Boolean)
+
+/** The one iteration loop of the link-analysis kernels (HITS, SALSA,
+  * PageRank): a superstep of equi-join + hash aggregate over a
+  * persisted edge set, repeated on a fixed or a converged schedule.
+  * The kernels supply only what differs — edge annotation,
+  * contribution expression, norm, teleport — as a [[Program]]; the
+  * loop owns the execution discipline they share:
+  *
+  *  - Width: one scale-adaptive loop width ([[width]]), or
+  *    a bucketed layout's bucket count.
+  *  - Edge copies: the kernel's edge projection hash-clustered on `dst`
+  *    and on `src` at that width ([[Edges]]) — repartitioned once per
+  *    run, or read from the bucketed tables with no shuffle at all —
+  *    dropped, with every cache and checkpoint the program made, when
+  *    the loop ends.
+  *  - The width flip: the aggregation exchanges plan at
+  *    `shuffle.partitions`, so the loop runs under
+  *    [[AdaptiveWidth.withWidth]] and every per-iteration join reads
+  *    both sides co-partitioned.
+  *  - Checkpoints: each iteration's carried vector is truncated with
+  *    [[Checkpoints.materializeKeyed]] (one eager job, hash layout
+  *    preserved for the next join); superseded checkpoints are
+  *    released eagerly, so live storage stays O(|V|) however long the
+  *    run (see [[Checkpoints]]); the final side vector is
+  *    materialized before the edge caches drop.
+  *  - Schedule: a fixed count, or delta checks on the
+  *    `firstCheck, firstCheck+checkEvery, ...` schedule — the delta is
+  *    a second |V|-sized job, so checking every iteration would double
+  *    the loop's job count for detection < `checkEvery` iterations
+  *    earlier; the loop may overrun the true fixed point by that many
+  *    no-op refinements and reports the iterations actually executed.
+  */
+object Fixpoint {
+
+  /** `tol = None`: exactly `maxIter` iterations. `Some(tol)`: stop at the
+    * first scheduled check whose max |Δscore| against the vector it
+    * replaced (the init, at iteration 1) is below `tol`. */
+  private[graft] final case class Schedule(maxIter: Int,
+      tol: Option[Double] = None, checkEvery: Int = 1, firstCheck: Int = 1) {
+    require(maxIter >= 1, s"need at least one iteration, got $maxIter")
+    require(checkEvery >= 1 && firstCheck >= 1,
+      s"need positive check schedule, got every=$checkEvery first=$firstCheck")
+    def checks(it: Int): Boolean =
+      tol.nonEmpty && it >= firstCheck && (it - firstCheck) % checkEvery == 0
+  }
+
+  /** The kernel's edge projection, hash-clustered on `dst` / `src` at the
+    * loop `width`. Plans, not caches: a program persists the copies it
+    * re-reads every iteration, `byDst` first — `bySrc` derives from it,
+    * so a cached `byDst` runs an upstream subgraph derivation once. */
+  private[graft] final case class Edges(byDst: DataFrame, bySrc: DataFrame,
+      width: Int)
+
+  /** One kernel's iteration. `side` (HITS/SALSA hubs) maps the carried
+    * vector to the side vector and `step` maps that (or, without a
+    * side, the carried vector) to the next carried vector, both
+    * un-normalized; `norm` normalizes either. `owned` are the program's
+    * own caches and checkpoints, dropped when the loop ends. */
+  private[graft] final case class Program[A](init: DataFrame,
+      side: Option[DataFrame => DataFrame], step: DataFrame => DataFrame,
+      norm: DataFrame => DataFrame, result: (DataFrame, DataFrame) => A,
+      owned: Seq[DataFrame])
+
+  /** The loop width for a kernel over these edges: data-proportional at
+    * gate scale, the session's `shuffle.partitions` at cluster scale.
+    * Derived from the `(src, dst, w)` projection every kernel shuffles;
+    * the bucketed-layout writer sizes its bucket count with it, so the
+    * handoff layout IS the consumer kernels' loop width. */
+  private[graft] def width(edges: DataFrame): Int =
+    AdaptiveWidth.of(edges.select(col("src"), col("dst"),
+      col("weight").cast("double").as("w")))
+
+  /** Join the `(id, score)` vector `v` to `edges` on `key` and sum
+    * `contrib` per opposite endpoint. SHUFFLE_HASH scoped to this join
+    * (not a session-wide planner flag): the |V|-sized score side is the
+    * build side, re-aggregated fresh each iteration, so sorting it for a
+    * sort-merge join every round is pure waste. */
+  private[graft] def gather(edges: DataFrame, key: String, contrib: Column)(
+      v: DataFrame): DataFrame = {
+    val v0 = v.hint("SHUFFLE_HASH")
+    edges.join(v0, edges(key) === v0("id"))
+      .groupBy(edges(if (key == "src") "dst" else "src").as("id"))
+      .agg(sum(contrib).as("score"))
+  }
+
+  /** Runs `program` over a derived edge set, projected to `cols`. */
+  private[graft] def run[A](edges: DataFrame, cols: Seq[Column],
+      schedule: Schedule)(program: Edges => Program[A]): Fixpoint[A] = {
+    val np = width(edges)
+    val byDst = edges.select(cols: _*).repartition(np, col("dst"))
+    drive(Edges(byDst, byDst.repartition(np, col("src")), np), schedule,
+      program)
+  }
+
+  /** Runs `program` over a [[GraphIO.writeBucketedGraph]] layout: the
+    * edge tables come back from the catalog already hash-clustered on
+    * each join key, so the run plans ZERO edge-side Exchange — provided
+    * the loop width IS the bucket count, which the loop pins (any
+    * layout then stays exchange-free, and the writer is free to size
+    * buckets data-proportionally). A cache of a bucketed copy reports
+    * the bucketed scan's partitioning. */
+  private[graft] def runBucketed[A](spark: SparkSession, prefix: String,
+      cols: Seq[Column], schedule: Schedule)(
+      program: Edges => Program[A]): Fixpoint[A] = {
+    val buckets = spark.sessionState.catalog
+      .getTableMetadata(TableIdentifier(s"${prefix}_edges_by_dst"))
+      .bucketSpec.map(_.numBuckets)
+    require(buckets.nonEmpty,
+      s"bucketed layout '$prefix' has no bucket spec; rewrite it with " +
+        "GraphIO.writeBucketedGraph to keep the kernel's " +
+        "zero-edge-Exchange plan")
+    def table(key: String): DataFrame =
+      spark.table(s"${prefix}_edges_by_$key").select(cols: _*)
+    drive(Edges(table("dst"), table("src"), buckets.get), schedule, program)
+  }
+
+  private def drive[A](e: Edges, schedule: Schedule,
+      program: Edges => Program[A]): Fixpoint[A] =
+    try AdaptiveWidth.withWidth(e.bySrc.sparkSession, e.width) {
+      val p = program(e)
+      try iterate(p, schedule)
+      finally p.owned.foreach { df =>
+        df.unpersist(false)
+        Checkpoints.release(df)
+      }
+    } finally {
+      // The loop runs eager actions, so exceptions mid-loop are real;
+      // results live on their own checkpoints, so the caches can go
+      // (non-blocking) without recompute risk.
+      e.byDst.unpersist(false)
+      e.bySrc.unpersist(false)
+    }
+
+  private def iterate[A](p: Program[A], s: Schedule): Fixpoint[A] = {
+    val fixed = s.tol.isEmpty
+    // A converged run compares normalized vectors, so it checkpoints them
+    // normalized; a fixed run checkpoints the raw aggregate and
+    // normalizes lazily on top. Either way one eager job per iteration.
+    def checkpoint(v: DataFrame) =
+      Checkpoints.materializeKeyed(if (fixed) v else p.norm(v))
+    // Only a converged run's side vector stays lazy past its iteration
+    // (the last iteration is unknown in advance); it reads the previous
+    // checkpoint, which is then held one iteration longer.
+    val lazySide = !fixed && p.side.nonEmpty
+    var carried = p.init
+    var side: Option[DataFrame] = None
+    var ck: DataFrame = null   // checkpoint behind `carried`
+    var held: DataFrame = null // superseded, still read by the lazy side
+    var it = 0
+    var done = false
+    while (it < s.maxIter && !done) {
+      it += 1
+      // A fixed run's final side vector is checkpointed where it is
+      // computed: the step below consumes the checkpoint instead of
+      // re-running the side aggregate (no extra job), and intermediate
+      // side vectors stay lazy subtrees of the step's checkpoint job.
+      val sideU = p.side.map { f =>
+        val v = f(carried)
+        if (fixed && it == s.maxIter) Checkpoints.materializeKeyed(v) else v
+      }
+      val cur = checkpoint(p.step(sideU.getOrElse(carried)))
+      if (s.checks(it)) done = maxDelta(cur, carried) < s.tol.get
+      val stale = if (lazySide) held else ck
+      if (lazySide) held = ck
+      if (stale != null) Checkpoints.release(stale)
+      ck = cur
+      carried = if (fixed) p.norm(cur) else cur
+      side = sideU
+    }
+    // Materialize the lazy side before the edge caches drop; the
+    // checkpoint it read is unreachable after that.
+    val sideOut = side.map(v => if (fixed) p.norm(v) else checkpoint(v))
+    if (held != null) Checkpoints.release(held)
+    Fixpoint(p.result(sideOut.orNull, carried), it, done)
+  }
+
+  /** Max |Δscore| between two `(id, score)` vectors; a node missing on
+    * one side counts as 0 there. Both sides are hash-partitioned on id
+    * (or the init), so the full-outer join is co-partitioned, and
+    * SHUFFLE_HASH skips re-sorting both vectors (full-outer shuffled
+    * hash joins are supported since Spark 3.1). */
+  private def maxDelta(cur: DataFrame, prev: DataFrame): Double =
+    cur.as("c")
+      .join(prev.as("p").hint("SHUFFLE_HASH"), col("c.id") === col("p.id"),
+        "full_outer")
+      .select(abs(coalesce(col("c.score"), lit(0.0)) -
+        coalesce(col("p.score"), lit(0.0))).as("d"))
+      // coalesce: an empty vector pair (degenerate empty graph) has
+      // max-delta NULL, which must read as converged, not NPE.
+      .agg(coalesce(max(col("d")), lit(0.0))).head.getDouble(0)
+}

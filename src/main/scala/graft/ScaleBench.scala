@@ -666,8 +666,9 @@ object ScaleBench {
       // a single authority holding ~4-5% of ALL edges, so the kernel's
       // dst-keyed aggregation and the degree joins each see one giant
       // reduce key (the power-law hot-authority stress). The claim under
-      // test: Hits.loop's co-partitioned join/agg plan degrades
-      // gracefully under graph skew (skew_ratio ≈ uniform_ratio), since
+      // test: the kernel loop's ([[Fixpoint]]) co-partitioned join/agg
+      // plan degrades gracefully under graph skew (skew_ratio ≈
+      // uniform_ratio), since
       // the per-iteration agg is a partial-aggregating hash agg, not a
       // sort over the hot key's edge list.
       val uniDir = s"$outDir-unikernel$reps"

@@ -145,11 +145,11 @@ object SparkEntry {
       // (r20, guide §2.2/§6): data-proportional here, the session's
       // shuffle.partitions at cluster scale — fewer, larger bucket
       // files at gate scale, and the bucketed kernels pin their loop
-      // to the layout's count (Hits.bucketWidth), so the
+      // to the layout's count (Fixpoint.runBucketed), so the
       // zero-edge-Exchange property holds at any scale.
       GraphIO.writeBucketedGraph(GraphIO.orderGraph(s, dir),
         bucketedPrefix(s, dir),
-        Hits.kernelWidth(GraphIO.orderGraph(s, dir).edges))
+        graft.Fixpoint.width(GraphIO.orderGraph(s, dir).edges))
       Seq("edges_by_dst", "edges_by_src", "nodes").map(t =>
         (t, s.table(s"${bucketedPrefix(s, dir)}_$t").count()))
         .toDF("bucket_table", "n_rows").orderBy(col("bucket_table"))
@@ -162,7 +162,7 @@ object SparkEntry {
       val prefix = bucketedPrefix(s, dir)
       if (!s.catalog.tableExists(s"${prefix}_nodes"))
         GraphIO.writeBucketedGraph(GraphIO.orderGraph(s, dir), prefix,
-          Hits.kernelWidth(GraphIO.orderGraph(s, dir).edges))
+          graft.Fixpoint.width(GraphIO.orderGraph(s, dir).edges))
       hitsOut(Hits.runBucketed(s, prefix))
     }),
     // ---- SALSA family (K7-K12) ----
@@ -174,7 +174,7 @@ object SparkEntry {
       val prefix = bucketedPrefix(s, dir)
       if (!s.catalog.tableExists(s"${prefix}_nodes"))
         GraphIO.writeBucketedGraph(GraphIO.orderGraph(s, dir), prefix,
-          Hits.kernelWidth(GraphIO.orderGraph(s, dir).edges))
+          graft.Fixpoint.width(GraphIO.orderGraph(s, dir).edges))
       salsaOut(Salsa.runBucketed(s, prefix))
     }),
     "salsa_simplified" -> ((s, dir) =>

@@ -17,9 +17,10 @@ import org.apache.spark.sql.functions._
   * every node carries the minimum id of its component. Each round is
   * one equi-join of the (persisted, hash-partitioned) edge list against
   * the |V|-sized label vector plus one hash aggregation — the same
-  * join/agg discipline as the HITS kernel ([[Hits.iterate]]), so the
-  * big edge side is shuffled once and only the label vector moves per
-  * round. Labels are `localCheckpoint`ed per round to truncate lineage.
+  * join/agg discipline as the link-analysis kernel loop
+  * ([[graft.Fixpoint]]), so the big edge side is shuffled once and only
+  * the label vector moves per round. Labels are `localCheckpoint`ed per
+  * round to truncate lineage.
   *
   * Convergence detection is one in-plan scalar per round: labels only
   * ever decrease, so `sum(comp)` is strictly monotone until the fixed
@@ -41,14 +42,14 @@ object ConnectedComponents {
   def run(pairs: DataFrame, a: String = "a", b: String = "b"): DataFrame = {
     // Both directions so one join side covers every neighborhood —
     // hashed on the per-round join key `y` BEFORE caching (the
-    // Hits.iterate discipline, r19): the per-round label join then
+    // kernel loop's discipline, r19): the per-round label join then
     // reads the edge side co-partitioned instead of re-exchanging the
     // symmetric edge list every round, and the keyed label checkpoint
     // (hash-partitioned on id) makes the probe side exchange-free too.
     val spark = pairs.sparkSession
     val sym = pairs.select(col(a).as("x"), col(b).as("y"))
       .unionAll(pairs.select(col(b).as("x"), col(a).as("y")))
-    // Scale-adaptive loop width (guide §2.2) — see [[Hits.iterate]]: the
+    // Scale-adaptive loop width — see [[graft.Fixpoint]]: the
     // per-round stages run at the width of the symmetric edge cache,
     // data-proportional at gate scale, `shuffle.partitions` at 100 TB.
     val np = graft.AdaptiveWidth.of(sym)

@@ -1,7 +1,8 @@
 package graft.operators
 
-import graft.{Checkpoints, Graph}
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.{Checkpoints, Fixpoint, Graph}
+import graft.Fixpoint.{Edges, Program, Schedule}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** HITS (Kleinberg hubs & authorities) kernel family, K1-K6 of SURVEY.md §2.6.
@@ -22,12 +23,11 @@ import org.apache.spark.sql.functions._
   * Execution model (the Spark-first redesign, nothing like the reference's
   * RDD loop): score vectors are DataFrames `(id, score)`; one iteration is
   * two equi-joins + two partial/final hash aggregates, all whole-stage
-  * codegen'd. Each aggregated vector is `localCheckpoint`ed: without plan
-  * truncation, 8 iterations of nested joins make Catalyst analysis cost
-  * explode (the known failure mode of iterative DataFrame algorithms).
-  * The |V|-sized score side of each join is left to AQE to broadcast when
-  * it fits; at cluster scale it degrades gracefully to a shuffle hash join
-  * on the same key as the previous iteration.
+  * codegen'd, driven by the shared kernel loop [[graft.Fixpoint]] (edge
+  * caches, loop width, per-iteration checkpoints, schedule). This file
+  * holds only what is HITS's own: the `(src, dst, w)` projection, the
+  * contribution, L2, the [[Post]] transforms — and [[mutual]], the
+  * hub/authority update SALSA shares.
   */
 object Hits {
 
@@ -45,149 +45,37 @@ object Hits {
 
   /** K1 base HITS. */
   def run(g: Graph, numIter: Int = 8): Result =
-    iterate(g.nodes, g.edges, numIter, weighted = false, Identity)
+    fixed(g, numIter)(_ => Identity)
 
   /** K2 weighted HITS: contribution = weight * score
     * (reference `src/weighted_hits.py:53-56`). */
   def runWeighted(g: Graph, numIter: Int = 8): Result =
-    iterate(g.nodes, g.edges, numIter, weighted = true, Identity)
+    fixed(g, numIter, weighted = true)(_ => Identity)
 
   /** K3 random-teleport HITS (reference `src/random_teleport_hits.py`). */
   def runTeleport(g: Graph, beta: Double = 0.8, numIter: Int = 8): Result = {
     val n = g.nodes.count()
-    iterate(g.nodes, g.edges, numIter, weighted = false, Teleport(beta, n))
+    fixed(g, numIter)(_ => Teleport(beta, n))
   }
 
   /** K4 topic-specific HITS: uniform init over all nodes, teleport mass
-    * only to topic nodes (reference `src/topic_specific_hits.py:54-87`).
-    * Flags are pre-hashed on id and cached once: the per-iteration flag
-    * join is then shuffle-free on both sides. */
+    * only to topic nodes (reference `src/topic_specific_hits.py:54-87`). */
   def runTopicSpecific(g: Graph, topic: String, beta: Double = 0.8,
-      numIter: Int = 8): Result = {
-    // One width decision shared by the flag cache and the loop: the
-    // per-iteration flag join is co-partitioned only if both sides
-    // hash at the SAME width (stats can shift between the two calls as
-    // caches materialize, so derive once and thread it through).
-    val k = kernelWidth(g.edges)
-    val flags = prepFlags(g, topic, k)
-    val nTopic = flags.filter(col("flag") === 1).count()
-    val r = iterate(g.nodes, g.edges, numIter, weighted = false,
-      TopicTeleport(beta, nTopic, flags), k)
-    flags.unpersist(false)
-    r
-  }
-
-  private[operators] def prepFlags(g: Graph, topic: String,
-      width: Int): DataFrame =
-    g.nodes.select(col("id"),
-        when(col("label") === topic, 1).otherwise(0).as("flag"))
-      .repartition(width, col("id")).persist()
-
-  /** The loop width for a kernel over these edges — scale-adaptive
-    * (guide §2.2): data-proportional at gate scale, the session's
-    * `shuffle.partitions` (today's behavior) at cluster scale. Derived
-    * from the same `(src, dst, w)` projection every kernel shuffles.
-    * `private[graft]`: the bucketed-layout writer sizes its bucket
-    * count with the same derivation so the handoff layout IS the
-    * consumer kernels' loop width. */
-  private[graft] def kernelWidth(edges: DataFrame): Int =
-    graft.AdaptiveWidth.of(edges.select(col("src"), col("dst"),
-      col("weight").cast("double").as("w")))
+      numIter: Int = 8): Result =
+    fixed(g, numIter)(topicTeleport(g, topic, beta, 1))
 
   /** Fixed-point extension (not in the reference, which always runs a
     * fixed 8 iterations): stop when the max absolute change of the
-    * normalized authority vector drops below `tol`. The delta is a
-    * second |V|-sized job per checked iteration, so checks run on a
-    * schedule (`firstCheck, firstCheck+checkEvery, ...`) — the kernel
-    * may overrun the true fixed point by < `checkEvery` no-op
-    * refinements and reports the iterations actually executed (see
-    * [[PageRank.runConverged]] for the full rationale). The returned
-    * [[graft.Fixpoint]] carries an explicit `converged` flag —
+    * normalized authority vector drops below `tol`, checked on the
+    * `firstCheck/checkEvery` schedule (see [[graft.Fixpoint]]). The
+    * returned [[graft.Fixpoint]] carries an explicit `converged` flag —
     * false = capped at `maxIter` without a sub-`tol` delta. */
   def runConverged(g: Graph, tol: Double = 1e-9,
       maxIter: Int = 50, checkEvery: Int = 3, firstCheck: Int = 3)
-      : graft.Fixpoint[Result] = {
-    require(checkEvery >= 1 && firstCheck >= 1,
-      s"need positive check schedule, got every=$checkEvery first=$firstCheck")
-    val spark = g.edges.sparkSession
-    val proj = g.edges.select(col("src"), col("dst"),
-      col("weight").cast("double").as("w"))
-    // Same co-partitioning discipline as the fixed-count loop: edges
-    // shuffled once for the whole run, score vectors only thereafter —
-    // at the scale-adaptive loop width ([[graft.AdaptiveWidth]]), with
-    // the aggregation exchanges pinned to the same width below so every
-    // per-iteration join (score, delta) stays co-partitioned.
-    val np = kernelWidth(g.edges)
-    val eDst = proj.repartition(np, col("dst")).persist()
-    val eSrc = eDst.repartition(np, col("src")).persist()
-    val n = g.nodes.count()
-    val init = g.nodes.select(col("id"), lit(1.0 / math.sqrt(n)).as("score"))
-
-    try graft.AdaptiveWidth.withWidth(spark, np) {
-      var hubs = init
-      var auths = init
-      var prev: Option[DataFrame] = None
-      var ck2: DataFrame = null // checkpoint superseded two iterations back
-      var it = 0
-      var done = false
-      while (it < maxIter && !done) {
-        it += 1
-        // Same materialization discipline as `iterate`: only the
-        // normalized auth vector is checkpointed (one eager job per
-        // iteration) — the hub subtree stays lazy inside it, and the
-        // returned hubs plan hangs off the last checkpointed auths, so
-        // plan depth stays bounded without 3 materializations/iteration.
-        // SHUFFLE_HASH hints scoped to these joins (not a session-wide
-        // planner flag): the |V|-sized score side is the build side and
-        // is re-aggregated fresh each iteration — sorting it for SMJ
-        // every round is pure waste.
-        val a0 = auths.hint("SHUFFLE_HASH")
-        val hubsU = eDst.join(a0, eDst("dst") === a0("id"))
-          .groupBy(eDst("src").as("id")).agg(sum(col("score")).as("score"))
-        val h0 = hubsU.hint("SHUFFLE_HASH")
-        val authsU = eSrc.join(h0, eSrc("src") === h0("id"))
-          .groupBy(eSrc("dst").as("id")).agg(sum(col("score")).as("score"))
-        hubs = Normalize.l2(hubsU)
-        val cur = Checkpoints.materializeKeyed(Normalize.l2(authsU))
-        if (it >= firstCheck && (it - firstCheck) % checkEvery == 0)
-            prev.foreach { p =>
-          // Both sides are checkpointed aggregation outputs hash-
-          // partitioned on id — the full-outer delta join is
-          // co-partitioned, and the SHUFFLE_HASH hint skips re-sorting
-          // both |V|-sized vectors every iteration (full-outer
-          // shuffled-hash joins are supported since Spark 3.1).
-          val delta = cur.as("c")
-            .join(p.as("p").hint("SHUFFLE_HASH"),
-              col("c.id") === col("p.id"), "full_outer")
-            .select(abs(coalesce(col("c.score"), lit(0.0)) -
-              coalesce(col("p.score"), lit(0.0))).as("d"))
-            // coalesce: an empty vector pair (degenerate empty graph)
-            // has max-delta NULL, which must read as converged, not NPE.
-            .agg(coalesce(max(col("d")), lit(0.0))).head.getDouble(0)
-          if (delta < tol) done = true
-        }
-        // Live references at this point: `cur` (it), `prev` (it-1, still
-        // feeding the pending lazy `hubs` plan). The it-2 checkpoint is
-        // unreachable — release it eagerly.
-        if (ck2 != null) Checkpoints.release(ck2)
-        ck2 = prev.orNull
-        prev = Some(cur)
-        auths = cur
-      }
-      // The final hub vector re-derives from the last checkpoint when
-      // consumed; materialize it here so callers (and the unpersist
-      // below) cannot race the edge-cache release. Once materialized, the
-      // it-1 auth checkpoint it hung off is unreachable too.
-      val h = Checkpoints.materialize(hubs)
-      if (ck2 != null) Checkpoints.release(ck2)
-      graft.Fixpoint(Result(h, auths), it, done)
-    } finally {
-      // Drop the caches even on failure — the loop runs eager actions,
-      // so exceptions mid-loop are real.
-      eDst.unpersist(false)
-      eSrc.unpersist(false)
-    }
-  }
+      : Fixpoint[Result] =
+    Fixpoint.run(g.edges, Cols,
+      Schedule(maxIter, Some(tol), checkEvery, firstCheck))(
+      program((uniform(g.nodes), Nil), weighted = false, _ => Identity))
 
   /** K5 topic-exclusive HITS: base kernel on the induced topic subgraph
     * (intent semantics by default — SURVEY.md §2 note E;
@@ -201,9 +89,86 @@ object Hits {
   def runQueryDependent(g: Graph, topic: String, numIter: Int = 8): Result =
     run(Subgraph.queryDependent(g, topic), numIter)
 
+  /** K1 over a [[graft.GraphIO.writeBucketedGraph]] layout: ZERO
+    * edge-side Exchange for the whole run, not even the once-per-run
+    * shuffle a derived edge set pays — worth it whenever a 100 TB graph
+    * is scored more than once (see [[graft.Fixpoint.runBucketed]]). */
+  def runBucketed(spark: SparkSession, prefix: String,
+      numIter: Int = 8): Result =
+    Fixpoint.runBucketed(spark, prefix, Cols, Schedule(numIter))(
+      program(idsUniform(spark.table(s"${prefix}_nodes")),
+        weighted = false, _ => Identity)).result
+
   // -----------------------------------------------------------------
 
-  private[operators] def applyPost(scores: DataFrame, post: Post): DataFrame = post match {
+  private val Cols =
+    Seq(col("src"), col("dst"), col("weight").cast("double").as("w"))
+
+  private def fixed(g: Graph, numIter: Int, weighted: Boolean = false)(
+      post: Int => Post): Result =
+    Fixpoint.run(g.edges, Cols, Schedule(numIter))(
+      program(idsUniform(g.nodes), weighted, post)).result
+
+  /** `init`: the initial authority vector and what it materialized. */
+  private def program(init: => (DataFrame, Seq[DataFrame]),
+      weighted: Boolean, post: Int => Post)(e: Edges): Program[Result] = {
+    val contribution = if (weighted) col("w") * col("score") else col("score")
+    val (auths, owned) = init
+    // Both copies are re-probed every iteration: cache them (the parquet
+    // scan of a bucketed layout then also stays out of the loop).
+    mutual(auths, e.byDst.persist(), contribution, e.bySrc.persist(),
+      contribution, post(e.width), Normalize.l2, Result, owned)
+  }
+
+  /** Uniform `1/√N` init over `nodes`. */
+  private[operators] def uniform(nodes: DataFrame): DataFrame = {
+    val n = nodes.count()
+    nodes.select(col("id"), lit(1.0 / math.sqrt(n)).as("score"))
+  }
+
+  /** [[uniform]] over the node ids, materialized once: for the subgraph
+    * kernels (K5/K6) `nodes` is a semi/anti-join plan over the edges that
+    * would otherwise run for the count AND again when iteration 1
+    * consumes the init. A checkpoint, not a cache: against a cached init
+    * iteration 1 also re-shuffles its edge side (measured at sf0.01). */
+  private def idsUniform(nodes: DataFrame): (DataFrame, Seq[DataFrame]) = {
+    val ids = Checkpoints.materialize(nodes.select(col("id")))
+    (uniform(ids), Seq(ids))
+  }
+
+  /** Topic teleport with the flags pre-hashed on id at the loop width
+    * and cached for the run, so the per-iteration flag join is
+    * shuffle-free on both sides. `scale` multiplies N_topic (SALSA's
+    * reference denominator is 2·N_topic). */
+  private[operators] def topicTeleport(g: Graph, topic: String, beta: Double,
+      scale: Long)(width: Int): TopicTeleport = {
+    val flags = g.nodes.select(col("id"),
+        when(col("label") === topic, 1).otherwise(0).as("flag"))
+      .repartition(width, col("id")).persist()
+    TopicTeleport(beta, scale * flags.filter(col("flag") === 1).count(), flags)
+  }
+
+  /** The HITS/SALSA mutual update as a loop program. Gauss-Seidel
+    * ordering (reference `src/base_hits.py:57-60`): hubs from the
+    * carried authorities over the dst-clustered side, authorities from
+    * the NEW, not-yet-normalized hubs over the src-clustered side;
+    * `post` applies to each aggregate before it is consumed or
+    * normalized, and only to aggregated nodes (dropout semantics). */
+  private[operators] def mutual[A](init: DataFrame, byDst: DataFrame,
+      toHub: Column, bySrc: DataFrame, toAuth: Column, post: Post,
+      norm: DataFrame => DataFrame, result: (DataFrame, DataFrame) => A,
+      owned: Seq[DataFrame]): Program[A] = {
+    val flags = post match {
+      case TopicTeleport(_, _, f) => Seq(f)
+      case _ => Nil
+    }
+    Program(init,
+      Some(v => applyPost(Fixpoint.gather(byDst, "dst", toHub)(v), post)),
+      v => applyPost(Fixpoint.gather(bySrc, "src", toAuth)(v), post),
+      norm, result, owned ++ flags)
+  }
+
+  private def applyPost(scores: DataFrame, post: Post): DataFrame = post match {
     case Identity => scores
     case Teleport(beta, n) =>
       scores.select(col("id"),
@@ -214,7 +179,7 @@ object Hits {
       // `.join(nodes_label)` (`src/topic_specific_hits.py:76`).
       // SHUFFLE_HASH, not the planner's broadcast pick (guide §3.1):
       // `scores` is a fresh aggregation output hash-partitioned on id
-      // and `flags` is pre-hashed on id ([[prepFlags]]) — the join is
+      // and `flags` is pre-hashed on id ([[topicTeleport]]) — the join is
       // co-partitioned and exchange-free, while the broadcast plan
       // rebuilt and shipped a |V|-row broadcast TWICE PER ITERATION
       // (16 driver collects per topic kernel in the r19 event logs).
@@ -223,155 +188,5 @@ object Hits {
           when(col("flag") === 0, lit(beta) * col("score"))
             .otherwise(lit(beta) * col("score") + lit((1.0 - beta) / nTopic))
             .as("score"))
-  }
-
-  private[graft] def iterate(nodes: DataFrame, edges: DataFrame, numIter: Int,
-      weighted: Boolean, post: Post, width: Int = -1): Result = {
-    val spark = edges.sparkSession
-    // Scale-adaptive loop width (guide §2.2) — callers that pre-hash a
-    // side at a chosen width (the topic kernels' flag cache) pass it in
-    // so every co-partitioned join agrees.
-    val np = if (width > 0) width else kernelWidth(edges)
-    val proj = edges.select(col("src"), col("dst"),
-      col("weight").cast("double").as("w"))
-    val eDst = proj.repartition(np, col("dst")).persist()
-    // derive the src-hashed copy from the cached dst-hashed one: the
-    // upstream edge derivation (incl. subgraph semi/anti joins for the
-    // exclusive/query-dependent kernels) then runs exactly once
-    val eSrc = eDst.repartition(np, col("src")).persist()
-    // The aggregation exchanges inside the loop plan at
-    // `shuffle.partitions`; pin it to the loop width so the per-
-    // iteration score joins read both sides co-partitioned at `np`.
-    try graft.AdaptiveWidth.withWidth(spark, np)(
-      loop(nodes, eDst, eSrc, numIter, weighted, post))
-    finally {
-      // Final results live on the last checkpoints only; the edge caches
-      // can go (non-blocking) without recompute risk.
-      eDst.unpersist(false)
-      eSrc.unpersist(false)
-    }
-  }
-
-  /** K1 over a [[graft.GraphIO.writeBucketedGraph]] layout: the edge
-    * tables come back from the catalog already hash-clustered on each
-    * join key (`<prefix>_edges_by_dst` / `_by_src`), so the kernel plans
-    * ZERO edge-side Exchange for the whole run — not even the once-per-
-    * run shuffle [[iterate]] pays to co-partition a derived edge set. At
-    * 100 TB that once-per-run shuffle is itself worth eliminating when a
-    * graph is reused across many runs. */
-  /** The bucketed layout's bucket count — the loop width its consumer
-    * kernels PIN for the run (r20): the zero-edge-Exchange property
-    * needs the per-iteration score-aggregation width to equal the
-    * bucket count, so instead of requiring the session conf to match
-    * (the pre-r20 fail-fast, which also froze the layout at the
-    * cluster-scale constant), the loop runs under
-    * [[graft.AdaptiveWidth.withWidth]] at this value — any layout is
-    * exchange-free on the edge side, and the writer is free to size
-    * buckets data-proportionally. Shared by [[Hits.runBucketed]] and
-    * [[Salsa.runBucketed]]. */
-  private[operators] def bucketWidth(
-      spark: org.apache.spark.sql.SparkSession, prefix: String): Int = {
-    val buckets = spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(
-        s"${prefix}_edges_by_dst"))
-      .bucketSpec.map(_.numBuckets)
-    require(buckets.nonEmpty,
-      s"bucketed layout '$prefix' has no bucket spec; rewrite it with " +
-        "GraphIO.writeBucketedGraph to keep the kernel's " +
-        "zero-edge-Exchange plan")
-    buckets.get
-  }
-
-  def runBucketed(spark: org.apache.spark.sql.SparkSession, prefix: String,
-      numIter: Int = 8): Result = {
-    val np = bucketWidth(spark, prefix)
-    def edges(table: String): DataFrame =
-      spark.table(table).select(col("src"), col("dst"),
-        col("weight").cast("double").as("w"))
-    // Persisting keeps the parquet scan out of the per-iteration loop;
-    // the InMemoryRelation reports the bucketed scan's partitioning, so
-    // the no-Exchange property survives caching.
-    val eDst = edges(s"${prefix}_edges_by_dst").persist()
-    val eSrc = edges(s"${prefix}_edges_by_src").persist()
-    try graft.AdaptiveWidth.withWidth(spark, np)(
-      loop(spark.table(s"${prefix}_nodes"), eDst, eSrc, numIter,
-        weighted = false, Identity))
-    finally {
-      eDst.unpersist(false)
-      eSrc.unpersist(false)
-    }
-  }
-
-  /** The shared kernel loop over pre-co-partitioned (and persisted) edge
-    * copies — `eDst` hash-clustered on `dst`, `eSrc` on `src`, both with
-    * schema `(src, dst, w)`. Every iteration shuffles ONLY the freshly
-    * aggregated |V|-sized vector: the score side of each join is an
-    * aggregation output (hash partitioned on id) whose partitioning
-    * survives the checkpoint, and the edge side's clustering comes from
-    * the caller (one up-front repartition, or a bucketed table layout
-    * with zero shuffles at all). */
-  private def loop(nodes: DataFrame, eDst: DataFrame, eSrc: DataFrame,
-      numIter: Int, weighted: Boolean, post: Post): Result = {
-    require(numIter >= 1, s"numIter must be >= 1, got $numIter")
-    // Materialize the node-id set ONCE. For the subgraph kernels (K5/K6)
-    // `nodes` is a semi/anti-join plan over the edge tables that would
-    // otherwise re-execute for the count AND again when iteration 1
-    // consumes `init`; for plain kernels it is a cheap copy of the cached
-    // node table. Released in `finally` — init is consumed only inside
-    // the (eager) iteration-1 checkpoint job.
-    val nodeIds = Checkpoints.materialize(nodes.select(col("id")))
-    val n = nodeIds.count()
-    val init = nodeIds.select(col("id"), lit(1.0 / math.sqrt(n)).as("score"))
-
-    def contribution(score: Column): Column =
-      if (weighted) col("w") * score else score
-
-    try {
-      var hubs = init
-      var auths = init
-      var prevCk: DataFrame = null
-      for (i <- 1 to numIter) {
-        // Hub: for each a, sum (weighted) authority scores over (a,b) edges.
-        // Only the auth vector feeds the next iteration (Gauss-Seidel), so
-        // the hub side is materialized just once, on the final iteration —
-        // halving the per-iteration job count; intermediate hubs stay a
-        // lazy subtree inside the auth checkpoint's job.
-        // SHUFFLE_HASH hints scoped to these two joins (not a session-
-        // wide planner flag, which would leak to concurrent queries on
-        // the same session): the |V|-sized score side is the build side
-        // and is re-aggregated fresh each iteration — sorting it for a
-        // sort-merge join every round is pure waste.
-        val a0 = auths.hint("SHUFFLE_HASH")
-        val hubsRaw = applyPost(
-          eDst.join(a0, eDst("dst") === a0("id"))
-            .groupBy(eDst("src").as("id"))
-            .agg(sum(contribution(col("score"))).as("score")),
-          post)
-        val hubsU = if (i == numIter) Checkpoints.materializeKeyed(hubsRaw)
-          else hubsRaw
-        // Authority: from the NEW, un-normalized hubs (Gauss-Seidel).
-        val h0 = hubsU.hint("SHUFFLE_HASH")
-        val authsU = Checkpoints.materializeKeyed(applyPost(
-          eSrc.join(h0, eSrc("src") === h0("id"))
-            .groupBy(eSrc("dst").as("id"))
-            .agg(sum(contribution(col("score"))).as("score")),
-          post))
-        // The fresh auth checkpoint (and on the final iteration the hub
-        // one) is materialized; the previous iteration's auth blocks are
-        // now unreachable by any live plan — release them eagerly instead
-        // of waiting for a driver GC + ContextCleaner sweep. Live blocks
-        // per kernel stay O(2·|V|) however long the run.
-        if (prevCk != null) Checkpoints.release(prevCk)
-        prevCk = authsU
-        hubs = Normalize.l2(hubsU)
-        auths = Normalize.l2(authsU)
-      }
-      Result(hubs, auths)
-    } finally {
-      // Final results live on the last checkpoints only; the init
-      // node-id checkpoint can go without recompute risk. try/finally so
-      // an exception inside the eager loop cannot leak it.
-      Checkpoints.release(nodeIds)
-    }
   }
 }

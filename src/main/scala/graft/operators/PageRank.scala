@@ -1,7 +1,8 @@
 package graft.operators
 
-import graft.{Checkpoints, Graph}
-import org.apache.spark.sql.DataFrame
+import graft.{Fixpoint, Graph}
+import graft.Fixpoint.{Program, Schedule}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** PageRank — a kernel-family extension (the reference covers HITS and
@@ -15,56 +16,16 @@ import org.apache.spark.sql.functions._
   * formulation; the DuckDB oracle implements the identical recurrence,
   * so the simplification is cross-engine consistent.
   *
-  * Execution discipline mirrors [[Hits.iterate]]: the edge table (the
-  * 100 TB side) is degree-annotated and hashed on `src` exactly once;
-  * each iteration shuffles only the |V|-sized score vector (the
+  * Runs on the shared kernel loop [[graft.Fixpoint]]: the edge table
+  * (the 100 TB side) is degree-annotated and hashed on `src` exactly
+  * once; each iteration shuffles only the |V|-sized score vector (the
   * aggregation output is hash-partitioned on id, which co-partitions
-  * both the node left-join and the next iteration's probe side);
-  * `localCheckpoint` truncates the iterative plan.
+  * both the node left-join and the next iteration's probe side).
   */
 object PageRank {
 
-  def run(g: Graph, damping: Double = 0.85, numIter: Int = 8): DataFrame = {
-    val spark = g.edges.sparkSession
-    // Scale-adaptive loop width — see [[Hits.iterate]].
-    val np = Hits.kernelWidth(g.edges)
-    val proj = g.edges.select(col("src"), col("dst"))
-    // Per-join SHUFFLE_HASH hints (not a session-wide planner flag) —
-    // the degree/score sides are the |V|-sized build sides.
-    val dOut = Degrees.out(proj).hint("SHUFFLE_HASH")
-    val eOut = proj.repartition(np, col("src"))
-      .join(dOut, col("src") === dOut("id"))
-      .select(col("src"), col("dst"), col("out_degree")).persist()
-    // node universe, pre-hashed once: the per-iteration left join that
-    // gives rankless nodes their (1-d)/N floor is then shuffle-free on
-    // both sides
-    val nodeIds = g.nodes.select(col("id"))
-      .repartition(np, col("id")).persist()
-    val n = g.nodes.count()
-    try graft.AdaptiveWidth.withWidth(spark, np) {
-      var p = g.nodes.select(col("id"), lit(1.0 / n).as("score"))
-      var prevCk: DataFrame = null
-      for (_ <- 1 to numIter) {
-        val p0 = p.hint("SHUFFLE_HASH")
-        val contrib = eOut.join(p0, eOut("src") === p0("id"))
-          .groupBy(eOut("dst").as("id"))
-          .agg(sum(col("score") / col("out_degree")).as("mass"))
-        p = Checkpoints.materializeKeyed(
-          nodeIds.join(contrib.hint("SHUFFLE_HASH"), Seq("id"), "left")
-            .select(col("id"), (lit((1.0 - damping) / n) +
-              lit(damping) * coalesce(col("mass"), lit(0.0))).as("score")))
-        // Previous iteration's checkpoint is now unreachable — release
-        // its blocks eagerly (see [[graft.Checkpoints]]). The final
-        // checkpoint (the returned vector) is never released here.
-        if (prevCk != null) Checkpoints.release(prevCk)
-        prevCk = p
-      }
-      p
-    } finally {
-      eOut.unpersist(false)
-      nodeIds.unpersist(false)
-    }
-  }
+  def run(g: Graph, damping: Double = 0.85, numIter: Int = 8): DataFrame =
+    iterate(g, damping, Schedule(numIter), None).result
 
   /** PERSONALIZED PageRank — teleport mass goes to a topic seed set
     * instead of uniformly to every node (the PageRank analogue of
@@ -76,125 +37,64 @@ object PageRank {
     * with `s` uniform over the nodes labeled `topic` and zero
     * elsewhere; `p₀ = s`. Same simplified no-dangling-redistribution
     * formulation, same execution shape as [[run]]: the teleport vector
-    * rides the pre-hashed node table, so each iteration still shuffles
-    * only the |V|-sized aggregated mass. Kept separate from [[run]]
-    * rather than expressing uniform teleport through this path:
+    * rides the pre-hashed node table. Kept distinct from the uniform
+    * teleport rather than expressing it through this path:
     * `(1-d)·(1/n)` and `(1-d)/n` round differently in IEEE doubles,
     * and the uniform gate's oracle replays the latter. */
   def runPersonalized(g: Graph, topic: String, damping: Double = 0.85,
       numIter: Int = 8): DataFrame = {
-    val spark = g.edges.sparkSession
-    // Scale-adaptive loop width — see [[Hits.iterate]].
-    val np = Hits.kernelWidth(g.edges)
-    val proj = g.edges.select(col("src"), col("dst"))
-    val dOut = Degrees.out(proj).hint("SHUFFLE_HASH")
-    val eOut = proj.repartition(np, col("src"))
-      .join(dOut, col("src") === dOut("id"))
-      .select(col("src"), col("dst"), col("out_degree")).persist()
     val nSeeds = g.nodes.filter(col("label") === topic).count()
     require(nSeeds > 0, s"no nodes labeled '$topic' to seed teleport")
-    // node universe + teleport column, pre-hashed once (the per-
-    // iteration left join is then shuffle-free on both sides)
-    val tele = g.nodes.select(col("id"),
-        when(col("label") === topic, lit(1.0 / nSeeds))
-          .otherwise(lit(0.0)).as("t"))
-      .repartition(np, col("id")).persist()
-    try graft.AdaptiveWidth.withWidth(spark, np) {
-      var p = tele.select(col("id"), col("t").as("score"))
-      var prevCk: DataFrame = null
-      for (_ <- 1 to numIter) {
-        val p0 = p.hint("SHUFFLE_HASH")
-        val contrib = eOut.join(p0, eOut("src") === p0("id"))
-          .groupBy(eOut("dst").as("id"))
-          .agg(sum(col("score") / col("out_degree")).as("mass"))
-        p = Checkpoints.materializeKeyed(
-          tele.join(contrib.hint("SHUFFLE_HASH"), Seq("id"), "left")
-            .select(col("id"), (lit(1.0 - damping) * col("t") +
-              lit(damping) * coalesce(col("mass"), lit(0.0))).as("score")))
-        if (prevCk != null) Checkpoints.release(prevCk)
-        prevCk = p
-      }
-      p
-    } finally {
-      eOut.unpersist(false)
-      tele.unpersist(false)
-    }
+    iterate(g, damping, Schedule(numIter), Some(
+      when(col("label") === topic, lit(1.0 / nSeeds)).otherwise(lit(0.0))))
+      .result
   }
 
   /** Fixed-point extension completing the convergence family
     * ([[Hits.runConverged]], [[Salsa.runConverged]]): iterate the
-    * recurrence until the max absolute score change drops below `tol`.
-    * PageRank's geometric contraction is governed by the damping
-    * factor (‖Δ_k‖ ≲ d^k), so expect ~`ln(tol/Δ₀)/ln(d)` iterations —
-    * markedly more than HITS/SALSA's spectral-gap-driven loops; pick
-    * `tol` with that cost in mind. Every node always carries a score
-    * (the left-join floor), so the delta join is a co-partitioned
-    * inner join on the node universe. Returns the vector and the
-    * number of iterations executed.
-    *
-    * The delta check is a SECOND Spark job per iteration (a |V|-sized
-    * join + max agg + driver action) on top of the iteration's one
-    * materialize job — for a contraction that needs ~25 iterations,
-    * half the loop's job count buys nothing but earlier detection by
-    * < `checkEvery` iterations. So the check runs on a schedule:
-    * iterations `firstCheck, firstCheck+checkEvery, ...` only. The
-    * kernel may therefore run up to `checkEvery-1` iterations past the
-    * true fixed point — each a no-op refinement of an already-converged
-    * vector — and reports the iterations actually executed. Callers
-    * pinning a determinized N (the oracle gates) align `firstCheck`
-    * with the measured fixed point. The returned [[graft.Fixpoint]]
-    * carries an explicit `converged` flag — false = capped at
-    * `maxIter` without a sub-`tol` delta. */
+    * recurrence until the max absolute score change drops below `tol`,
+    * checked on the `firstCheck/checkEvery` schedule (see
+    * [[graft.Fixpoint]]). PageRank's geometric contraction is governed
+    * by the damping factor (‖Δ_k‖ ≲ d^k), so expect
+    * ~`ln(tol/Δ₀)/ln(d)` iterations — markedly more than HITS/SALSA's
+    * spectral-gap-driven loops; pick `tol` with that cost in mind.
+    * Callers pinning a determinized N (the oracle gates) align
+    * `firstCheck` with the measured fixed point. The returned
+    * [[graft.Fixpoint]] carries an explicit `converged` flag — false =
+    * capped at `maxIter` without a sub-`tol` delta. */
   def runConverged(g: Graph, damping: Double = 0.85, tol: Double = 1e-7,
       maxIter: Int = 80, checkEvery: Int = 3, firstCheck: Int = 3)
-      : graft.Fixpoint[DataFrame] = {
-    require(checkEvery >= 1 && firstCheck >= 1,
-      s"need positive check schedule, got every=$checkEvery first=$firstCheck")
-    val spark = g.edges.sparkSession
-    // Scale-adaptive loop width — see [[Hits.runConverged]].
-    val np = Hits.kernelWidth(g.edges)
-    val proj = g.edges.select(col("src"), col("dst"))
-    val dOut = Degrees.out(proj).hint("SHUFFLE_HASH")
-    val eOut = proj.repartition(np, col("src"))
-      .join(dOut, col("src") === dOut("id"))
-      .select(col("src"), col("dst"), col("out_degree")).persist()
-    val nodeIds = g.nodes.select(col("id"))
-      .repartition(np, col("id")).persist()
-    val n = g.nodes.count()
-    try graft.AdaptiveWidth.withWidth(spark, np) {
-      var p = Checkpoints.materialize(
-        g.nodes.select(col("id"), lit(1.0 / n).as("score")))
-      var ck2: DataFrame = null // checkpoint superseded two iterations back
-      var it = 0
-      var done = false
-      while (it < maxIter && !done) {
-        it += 1
-        val p0 = p.hint("SHUFFLE_HASH")
-        val contrib = eOut.join(p0, eOut("src") === p0("id"))
-          .groupBy(eOut("dst").as("id"))
-          .agg(sum(col("score") / col("out_degree")).as("mass"))
-        val cur = Checkpoints.materializeKeyed(
-          nodeIds.join(contrib.hint("SHUFFLE_HASH"), Seq("id"), "left")
-            .select(col("id"), (lit((1.0 - damping) / n) +
-              lit(damping) * coalesce(col("mass"), lit(0.0))).as("score")))
-        // Both sides cover the full node universe and are hash-
-        // partitioned on id — inner co-partitioned delta join.
-        if (it >= firstCheck && (it - firstCheck) % checkEvery == 0) {
-          val delta = cur.as("c")
-            .join(p.as("p").hint("SHUFFLE_HASH"), Seq("id"))
-            .select(abs(col("c.score") - col("p.score")).as("d"))
-            .agg(coalesce(max(col("d")), lit(0.0))).head.getDouble(0)
-          if (delta < tol) done = true
-        }
-        if (ck2 != null) Checkpoints.release(ck2)
-        ck2 = p
-        p = cur
+      : Fixpoint[DataFrame] =
+    iterate(g, damping, Schedule(maxIter, Some(tol), checkEvery, firstCheck),
+      None)
+
+  /** `seeds`: the personalized teleport vector s(v) over the node
+    * table, or None for the uniform `(1-d)/N`. */
+  private def iterate(g: Graph, damping: Double, s: Schedule,
+      seeds: Option[Column]): Fixpoint[DataFrame] =
+    Fixpoint.run(g.edges, Seq(col("src"), col("dst")), s) { e =>
+      // Per-join SHUFFLE_HASH hints (not a session-wide planner flag) —
+      // the degree/score sides are the |V|-sized build sides.
+      val dOut = Degrees.out(e.bySrc).hint("SHUFFLE_HASH")
+      val eOut = e.bySrc.join(dOut, col("src") === dOut("id"))
+        .select(col("src"), col("dst"), col("out_degree")).persist()
+      // node universe (+ teleport column), pre-hashed once: the per-
+      // iteration left join that gives rankless nodes their teleport
+      // floor is then shuffle-free on both sides
+      val tele = g.nodes.select(col("id") +: seeds.map(_.as("t")).toSeq: _*)
+        .repartition(e.width, col("id")).persist()
+      lazy val n = g.nodes.count()
+      val (init, floor) = seeds match {
+        case None => (g.nodes.select(col("id"), lit(1.0 / n).as("score")),
+          lit((1.0 - damping) / n))
+        case Some(_) => (tele.select(col("id"), col("t").as("score")),
+          lit(1.0 - damping) * col("t"))
       }
-      if (ck2 != null) Checkpoints.release(ck2)
-      graft.Fixpoint(p, it, done)
-    } finally {
-      eOut.unpersist(false)
-      nodeIds.unpersist(false)
+      Program(init, None, v => tele
+        .join(Fixpoint.gather(eOut, "src", col("score") / col("out_degree"))(v)
+          .hint("SHUFFLE_HASH"), Seq("id"), "left")
+        .select(col("id"), (floor +
+          lit(damping) * coalesce(col("score"), lit(0.0))).as("score")),
+        identity, (_, p) => p, Seq(eOut, tele))
     }
-  }
 }

@@ -1,7 +1,8 @@
 package graft.operators
 
-import graft.{Checkpoints, Graph}
-import org.apache.spark.sql.DataFrame
+import graft.{Checkpoints, Fixpoint, Graph}
+import graft.Fixpoint.{Edges, Program, Schedule}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** SALSA kernel family, K7-K12 of SURVEY.md §2.6.
@@ -47,13 +48,13 @@ object Salsa {
   /** K8 iterative SALSA (rank-equivalent to K7; reference
     * `src/base_salsa_2.py:1-2`). */
   def run(g: Graph, numIter: Int = 8): Result =
-    iterate(initUniform(g.nodes), g.edges, numIter, Hits.Identity)
+    fixed(g, numIter)(_ => Hits.Identity)
 
   /** K10 random-teleport SALSA: `beta*s + (1-beta)/(2N)` applied to every
     * aggregated node, hubs first (reference `src/random_teleport_salsa.py:70-85`). */
   def runTeleport(g: Graph, beta: Double = 0.8, numIter: Int = 8): Result = {
     val n = g.nodes.count()
-    iterate(initUniform(g.nodes), g.edges, numIter, Hits.Teleport(beta, 2L * n))
+    fixed(g, numIter)(_ => Hits.Teleport(beta, 2L * n))
   }
 
   /** K11 topic-specific SALSA: init 0 for non-topic nodes and
@@ -61,20 +62,8 @@ object Salsa {
     * `src/topic_specific_salsa.py:23`), conditional `(1-beta)/(2·N_topic)`
     * teleport each update. */
   def runTopicSpecific(g: Graph, topic: String, beta: Double = 0.8,
-      numIter: Int = 8): Result = {
-    // One shared width decision for the flag cache and the loop — see
-    // [[Hits.runTopicSpecific]].
-    val k = Hits.kernelWidth(g.edges)
-    val flags = Hits.prepFlags(g, topic, k)
-    val nTopic = flags.filter(col("flag") === 1).count()
-    val init = flags.select(col("id"),
-      when(col("flag") === 0, lit(0.0))
-        .otherwise(lit(1.0 / (2.0 * nTopic))).as("score"))
-    val r = iterate(init, g.edges, numIter,
-      Hits.TopicTeleport(beta, 2L * nTopic, flags), k)
-    flags.unpersist(false)
-    r
-  }
+      numIter: Int = 8): Result =
+    fixed(g, numIter)(Hits.topicTeleport(g, topic, beta, 2))
 
   /** K12 query-dependent SALSA: simplified SALSA on the neighborhood
     * subgraph (reference `src/query_dependent_salsa.py:36-55`). The
@@ -87,9 +76,9 @@ object Salsa {
       val r = runSimplified(e)
       val out =
         Result(Checkpoints.materialize(r.hubs), Checkpoints.materialize(r.auths))
-      // The re-materialized copies supersede iterate's final checkpoints;
-      // release those now rather than leaving two |V|-sized blocks to the
-      // GC-timed ContextCleaner path.
+      // The re-materialized copies supersede any checkpoint under the
+      // simplified vectors; release those now rather than leaving
+      // |V|-sized blocks to the GC-timed ContextCleaner path.
       Checkpoints.releaseAll(r.hubs)
       Checkpoints.releaseAll(r.auths)
       out
@@ -99,195 +88,62 @@ object Salsa {
   /** Fixed-point extension mirroring [[Hits.runConverged]] (the
     * reference always runs a fixed 8 iterations — `src/base_salsa_2
     * .py:71-84`): iterate the K8 mutual update until the max absolute
-    * change of the L1-normalized authority vector drops below `tol`.
-    * Same edge-cache discipline as [[iterate]] (edges shuffled once per
-    * run, degree joins co-partitioned), plus one |V|-sized full-outer
-    * delta join per CHECKED iteration — checks run on the
-    * `firstCheck/checkEvery` schedule (see [[PageRank.runConverged]]
-    * for the rationale); the kernel may overrun the true fixed point
-    * by < `checkEvery` no-op refinements and reports the iterations
-    * actually executed. The returned [[graft.Fixpoint]] carries an
+    * change of the L1-normalized authority vector drops below `tol`,
+    * checked on the `firstCheck/checkEvery` schedule (see
+    * [[graft.Fixpoint]]). The returned [[graft.Fixpoint]] carries an
     * explicit `converged` flag — false = capped at `maxIter` without
     * a sub-`tol` delta. */
   def runConverged(g: Graph, tol: Double = 1e-9,
       maxIter: Int = 50, checkEvery: Int = 3, firstCheck: Int = 3)
-      : graft.Fixpoint[Result] = {
-    require(checkEvery >= 1 && firstCheck >= 1,
-      s"need positive check schedule, got every=$checkEvery first=$firstCheck")
-    val spark = g.edges.sparkSession
-    // Scale-adaptive loop width — see [[Hits.runConverged]].
-    val np = Hits.kernelWidth(g.edges)
-    val eBase = g.edges.select(col("src"), col("dst"))
-      .repartition(np, col("dst")).persist()
-    val dIn = Degrees.in(eBase).hint("SHUFFLE_HASH")
-    val eIn = eBase.join(dIn, eBase("dst") === dIn("id"))
-      .select(col("src"), col("dst"), col("in_degree")).persist()
-    val dOut = Degrees.out(eBase).hint("SHUFFLE_HASH")
-    val eOut = eBase.repartition(np, col("src"))
-      .join(dOut, col("src") === dOut("id"))
-      .select(col("src"), col("dst"), col("out_degree")).persist()
-    val init = initUniform(g.nodes)
+      : Fixpoint[Result] =
+    Fixpoint.run(g.edges, Cols,
+      Schedule(maxIter, Some(tol), checkEvery, firstCheck))(
+      program(g.nodes, _ => Hits.Identity))
 
-    try graft.AdaptiveWidth.withWidth(spark, np) {
-      var hubs = init
-      var auths = init
-      var prev: Option[DataFrame] = None
-      var ck2: DataFrame = null // checkpoint superseded two iterations back
-      var it = 0
-      var done = false
-      while (it < maxIter && !done) {
-        it += 1
-        // Same materialization discipline as Hits.runConverged: only the
-        // normalized auth vector is checkpointed each iteration; the hub
-        // subtree stays lazy inside it. The auth update consumes the
-        // UN-normalized fresh hubs (matching iterate / the reference's
-        // update order); normalization applies to the carried vectors.
-        val a0 = auths.hint("SHUFFLE_HASH")
-        val hubsU = eIn.join(a0, eIn("dst") === a0("id"))
-          .groupBy(eIn("src").as("id"))
-          .agg(sum(col("score") / col("in_degree")).as("score"))
-        val h0 = hubsU.hint("SHUFFLE_HASH")
-        val authsU = eOut.join(h0, eOut("src") === h0("id"))
-          .groupBy(eOut("dst").as("id"))
-          .agg(sum(col("score") / col("out_degree")).as("score"))
-        hubs = Normalize.l1(hubsU)
-        val cur = Checkpoints.materializeKeyed(Normalize.l1(authsU))
-        if (it >= firstCheck && (it - firstCheck) % checkEvery == 0)
-            prev.foreach { p =>
-          // Co-partitioned full-outer delta join — see Hits.runConverged.
-          val delta = cur.as("c")
-            .join(p.as("p").hint("SHUFFLE_HASH"),
-              col("c.id") === col("p.id"), "full_outer")
-            .select(abs(coalesce(col("c.score"), lit(0.0)) -
-              coalesce(col("p.score"), lit(0.0))).as("d"))
-            .agg(coalesce(max(col("d")), lit(0.0))).head.getDouble(0)
-          if (delta < tol) done = true
-        }
-        if (ck2 != null) Checkpoints.release(ck2)
-        ck2 = prev.orNull
-        prev = Some(cur)
-        auths = cur
-      }
-      // Materialize the lazy hub plan before the edge caches drop; the
-      // it-1 auth checkpoint it hung off becomes unreachable then.
-      val h = Checkpoints.materialize(hubs)
-      if (ck2 != null) Checkpoints.release(ck2)
-      graft.Fixpoint(Result(h, auths), it, done)
-    } finally {
-      eIn.unpersist(false)
-      eOut.unpersist(false)
-      eBase.unpersist(false)
-    }
-  }
+  /** K8 over a [[graft.GraphIO.writeBucketedGraph]] layout — the SALSA
+    * twin of [[Hits.runBucketed]]: the degree aggregations, the
+    * degree-attach joins AND the per-iteration score joins all plan with
+    * ZERO edge-side Exchange. Scores are identical to [[run]]. */
+  def runBucketed(spark: SparkSession, prefix: String,
+      numIter: Int = 8): Result =
+    Fixpoint.runBucketed(spark, prefix, Cols, Schedule(numIter))(
+      program(spark.table(s"${prefix}_nodes"), _ => Hits.Identity)).result
 
   // -----------------------------------------------------------------
 
-  private def initUniform(nodes: DataFrame): DataFrame = {
-    val n = nodes.count()
-    nodes.select(col("id"), lit(1.0 / math.sqrt(n)).as("score"))
-  }
-
-  /** K8 over a [[graft.GraphIO.writeBucketedGraph]] layout — the SALSA
-    * twin of [[Hits.runBucketed]]: both edge tables come back from the
-    * catalog hash-clustered on their join key, so the degree
-    * aggregations, the degree-attach joins AND the per-iteration score
-    * joins all plan with ZERO edge-side Exchange. Scores are identical
-    * to [[run]] (same loop, same init). */
-  def runBucketed(spark: org.apache.spark.sql.SparkSession, prefix: String,
-      numIter: Int = 8): Result = {
-    val np = Hits.bucketWidth(spark, prefix)
-    def edges(table: String): DataFrame =
-      spark.table(table).select(col("src"), col("dst"))
-    // Persisting keeps the parquet scan out of the loop; the
-    // InMemoryRelation reports the bucketed scan's partitioning.
-    val eDstB = edges(s"${prefix}_edges_by_dst").persist()
-    val eSrcB = edges(s"${prefix}_edges_by_src").persist()
-    try graft.AdaptiveWidth.withWidth(spark, np)(
-      loopDeg(initUniform(spark.table(s"${prefix}_nodes")),
-        eDstB, eSrcB, numIter, Hits.Identity))
-    finally {
-      eDstB.unpersist(false)
-      eSrcB.unpersist(false)
-    }
-  }
+  private val Cols = Seq(col("src"), col("dst"))
 
   /** `post` reuses the HITS transforms; for SALSA the teleport `n` slot
     * carries 2N / 2·N_topic (the reference's denominators). */
-  private def iterate(init: DataFrame, edges: DataFrame, numIter: Int,
-      post: Hits.Post, width: Int = -1): Result = {
-    val spark = edges.sparkSession
-    // Scale-adaptive loop width — see [[Hits.iterate]]; the topic
-    // kernel passes the width its flag cache was hashed at.
-    val np = if (width > 0) width else Hits.kernelWidth(edges)
-    // The upstream edge derivation (union of three projections; for K12
-    // also the subgraph semi/anti joins) runs exactly ONCE into `eBase`;
-    // both degree-annotated copies and both degree aggregations derive
-    // from the cache — the mirror of the Hits.iterate eSrc-from-eDst fix.
-    val eBase = edges.select(col("src"), col("dst"))
-      .repartition(np, col("dst")).persist()
-    try graft.AdaptiveWidth.withWidth(spark, np)(
-      loopDeg(init, eBase, eBase.repartition(np, col("src")), numIter, post))
-    finally eBase.unpersist(false)
-  }
+  private def fixed(g: Graph, numIter: Int)(post: Int => Hits.Post): Result =
+    Fixpoint.run(g.edges, Cols, Schedule(numIter))(program(g.nodes, post))
+      .result
 
-  /** The shared degree-annotated kernel loop over pre-co-partitioned
-    * edge copies (`eDstBase` clustered on dst, `eSrcBase` on src, both
-    * `(src, dst)`). Each degree aggregation groups by its base's
-    * clustering key and each degree-attach join matches it, so neither
-    * adds an edge Exchange; per iteration only the fresh |V|-sized
-    * score vector shuffles. SHUFFLE_HASH hints on the (small) degree /
-    * score sides keep the joins hash-based without touching
-    * session-wide planner flags. */
-  private def loopDeg(init: DataFrame, eDstBase: DataFrame,
-      eSrcBase: DataFrame, numIter: Int, post: Hits.Post): Result = {
-    val dIn = Degrees.in(eDstBase).hint("SHUFFLE_HASH")
-    val eIn = eDstBase.join(dIn, eDstBase("dst") === dIn("id"))
+  /** The mutual update over degree-annotated edge caches. Each degree
+    * aggregation groups by its copy's clustering key and each
+    * degree-attach join matches it, so neither adds an edge Exchange;
+    * SHUFFLE_HASH hints on the (small) degree sides keep the joins
+    * hash-based without touching session-wide planner flags. */
+  private def program(nodes: DataFrame, post: Int => Hits.Post)(
+      e: Edges): Program[Result] = {
+    // A derived edge set's upstream derivation runs exactly ONCE, into
+    // the cached by-dst copy the by-src copy derives from.
+    val eBase = e.byDst.persist()
+    val dIn = Degrees.in(eBase).hint("SHUFFLE_HASH")
+    val eIn = eBase.join(dIn, eBase("dst") === dIn("id"))
       .select(col("src"), col("dst"), col("in_degree")).persist()
-    val dOut = Degrees.out(eSrcBase).hint("SHUFFLE_HASH")
-    val eOut = eSrcBase.join(dOut, col("src") === dOut("id"))
+    val dOut = Degrees.out(e.bySrc).hint("SHUFFLE_HASH")
+    val eOut = e.bySrc.join(dOut, col("src") === dOut("id"))
       .select(col("src"), col("dst"), col("out_degree")).persist()
-
-    try {
-      var hubs = init
-      var auths = init
-      var prevCk: DataFrame = null
-      for (i <- 1 to numIter) {
-        // Hub side checkpointed only on the final iteration — see
-        // Hits.iterate: intermediate hubs are consumed solely by the auth
-        // update within the same job.
-        // Per-join SHUFFLE_HASH hints — see Hits.loop.
-        val a0 = auths.hint("SHUFFLE_HASH")
-        val hubsRaw = applyPost(
-          eIn.join(a0, eIn("dst") === a0("id"))
-            .groupBy(eIn("src").as("id"))
-            .agg(sum(col("score") / col("in_degree")).as("score")),
-          post)
-        val hubsU = if (i == numIter) Checkpoints.materializeKeyed(hubsRaw)
-          else hubsRaw
-        val h0 = hubsU.hint("SHUFFLE_HASH")
-        val authsU = Checkpoints.materializeKeyed(applyPost(
-          eOut.join(h0, eOut("src") === h0("id"))
-            .groupBy(eOut("dst").as("id"))
-            .agg(sum(col("score") / col("out_degree")).as("score")),
-          post))
-        // Previous iteration's auth checkpoint is now unreachable —
-        // release its blocks eagerly (see [[graft.Checkpoints]]).
-        if (prevCk != null) Checkpoints.release(prevCk)
-        prevCk = authsU
-        hubs = Normalize.l1(hubsU)
-        auths = Normalize.l1(authsU)
-      }
-      Result(hubs, auths)
-    } finally {
-      // Drop the caches even if an action inside the (eager) loop
-      // throws — no leaked session state.
-      eIn.unpersist(false)
-      eOut.unpersist(false)
+    val p = post(e.width)
+    val init = p match {
+      case Hits.TopicTeleport(_, twoNTopic, flags) => flags.select(col("id"),
+        when(col("flag") === 0, lit(0.0)).otherwise(lit(1.0 / twoNTopic))
+          .as("score"))
+      case _ => Hits.uniform(nodes)
     }
+    Hits.mutual(init, eIn, col("score") / col("in_degree"),
+      eOut, col("score") / col("out_degree"), p, Normalize.l1, Result,
+      Seq(eIn, eOut))
   }
-
-  // Teleport arithmetic is shared with HITS (the 2N / 2N_topic factors
-  // are baked into the constructor arguments by the callers above).
-  private def applyPost(scores: DataFrame, post: Hits.Post): DataFrame =
-    Hits.applyPost(scores, post)
 }

@@ -1,0 +1,97 @@
+package graft
+
+import graft.operators.{Hits, PageRank, Salsa}
+
+/** Kernel scores must not depend on the loop width. The fixtures are
+  * small enough that the default bytes-per-task target derives width 1,
+  * so every kernel here runs twice: with the target forced huge (width
+  * 1) and forced to one byte (width = the session's
+  * `shuffle.partitions` cap), via [[AdaptiveWidth.BytesPerTaskKey]].
+  * The loop's width flip must also leave `shuffle.partitions` as it
+  * found it after every call.
+  */
+class WidthInvarianceSpec extends SparkSuite {
+
+  private val ShufflePartitions = "spark.sql.shuffle.partitions"
+
+  private def g = graph(Seq(
+    ("a", "c", 1.0), ("a", "d", 2.0), ("b", "c", 1.0), ("c", "d", 3.0),
+    ("d", "a", 1.0), ("e", "a", 0.5), ("e", "f", 1.0), ("f", "c", 2.0),
+    ("g", "h", 1.0), ("h", "g", 1.0), ("b", "e", 1.5)),
+    Map("a" -> "t", "c" -> "t", "f" -> "t", "b" -> "other"))
+
+  /** Scores (and, for the converged kernels, iterations and verdict) of
+    * every iterative kernel entry point, keyed by name. */
+  private def runAll(): Map[String, (Map[String, Double], Int, Boolean)] = {
+    val cap = spark.conf.get(ShufflePartitions)
+    def check[T](name: String)(body: => T): T = {
+      val r = body
+      assert(spark.conf.get(ShufflePartitions) == cap,
+        s"$name left shuffle.partitions changed")
+      r
+    }
+    def vec(df: org.apache.spark.sql.DataFrame) = (scoresMap(df), 0, false)
+    def hits(name: String)(r: => Hits.Result) = {
+      val x = check(name)(r)
+      Seq(s"$name.hubs" -> vec(x.hubs), s"$name.auths" -> vec(x.auths))
+    }
+    def salsa(name: String)(r: => Salsa.Result) = {
+      val x = check(name)(r)
+      Seq(s"$name.hubs" -> vec(x.hubs), s"$name.auths" -> vec(x.auths))
+    }
+    def conv[A](name: String)(fp: => Fixpoint[A])(vs: A => Seq[
+        (String, org.apache.spark.sql.DataFrame)]) = {
+      val x = check(name)(fp)
+      vs(x.result).map { case (k, df) =>
+        s"$name.$k" -> (scoresMap(df), x.iterations, x.converged) }
+    }
+    (hits("Hits.run")(Hits.run(g, 4)) ++
+      hits("Hits.runWeighted")(Hits.runWeighted(g, 4)) ++
+      hits("Hits.runTeleport")(Hits.runTeleport(g, 0.8, 4)) ++
+      hits("Hits.runTopicSpecific")(Hits.runTopicSpecific(g, "t", 0.8, 4)) ++
+      salsa("Salsa.run")(Salsa.run(g, 4)) ++
+      salsa("Salsa.runTopicSpecific")(Salsa.runTopicSpecific(g, "t", 0.8, 4)) ++
+      Seq("PageRank.run" -> vec(check("PageRank.run")(PageRank.run(g))),
+        "PageRank.runPersonalized" -> vec(check("PageRank.runPersonalized")(
+          PageRank.runPersonalized(g, "t")))) ++
+      conv("Hits.runConverged")(Hits.runConverged(g, 1e-9, 30))(r =>
+        Seq("hubs" -> r.hubs, "auths" -> r.auths)) ++
+      conv("Salsa.runConverged")(Salsa.runConverged(g, 1e-9, 30))(r =>
+        Seq("hubs" -> r.hubs, "auths" -> r.auths)) ++
+      conv("PageRank.runConverged")(PageRank.runConverged(g, 0.85, 1e-7, 80))(
+        r => Seq("scores" -> r))).toMap
+  }
+
+  private def atBytesPerTask[T](bytes: String)(body: => T): T = {
+    val prev = spark.conf.getOption(AdaptiveWidth.BytesPerTaskKey)
+    spark.conf.set(AdaptiveWidth.BytesPerTaskKey, bytes)
+    try body
+    finally prev match {
+      case Some(v) => spark.conf.set(AdaptiveWidth.BytesPerTaskKey, v)
+      case None => spark.conf.unset(AdaptiveWidth.BytesPerTaskKey)
+    }
+  }
+
+  test("every iterative kernel scores identically at loop width 1 and at " +
+      "the shuffle.partitions cap") {
+    val cap = spark.conf.get(ShufflePartitions).toInt
+    assert(cap > 1, "the cap must differ from width 1 for this spec to bite")
+    val narrow = atBytesPerTask("1t") {
+      assert(Fixpoint.width(g.edges) == 1)
+      runAll()
+    }
+    val wide = atBytesPerTask("1b") {
+      assert(Fixpoint.width(g.edges) == cap)
+      runAll()
+    }
+    assert(narrow.keySet == wide.keySet)
+    narrow.foreach { case (k, (scores, iters, conv)) =>
+      val (wScores, wIters, wConv) = wide(k)
+      assert(scores.nonEmpty, s"$k: empty result")
+      withClue(s"$k: ") { assertApprox(wScores, scores, 1e-12) }
+      assert(wIters == iters && wConv == conv,
+        s"$k: (iterations, converged) ($iters, $conv) at width 1 vs " +
+          s"($wIters, $wConv) at width $cap")
+    }
+  }
+}

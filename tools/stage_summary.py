@@ -20,7 +20,7 @@ def load_events(path):
         files = [path]
     for f in files:
         if f.endswith(".inprogress") or os.path.isdir(f):
-            pass
+            continue
         with open(f, errors="replace") as fh:
             for line in fh:
                 line = line.strip()
