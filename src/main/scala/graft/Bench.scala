@@ -21,6 +21,14 @@ object Bench {
 
   private[graft] val familyOrder = Seq("order", "orderalt", "event", "flat")
 
+  /** The JVM's Janino compiles so far and their total compile nanos
+    * (driver and executor threads alike: local mode is one JVM). */
+  private[graft] def codegenCounters(): (Long, Long) = (
+    org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME.getCount,
+    org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+      .compileTime)
+
   /** Warm a family's shared input cache (graph derivation + persist) and,
     * for the kernel-heavy order family, JIT/codegen-compile the iterative
     * join/agg/checkpoint stage classes with one throwaway iteration per
@@ -127,6 +135,11 @@ object Bench {
     val results = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     val cold = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     val pass2 = scala.collection.mutable.LinkedHashMap.empty[String, Double]
+    // Janino compiles and compile nanos per pass, summed over queries: a
+    // pass 2 that compiles about as much as pass 1 means the
+    // generated-class cache is smaller than the suite's working set.
+    val compiles = Array(0L, 0L)
+    val compileNs = Array(0L, 0L)
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_last.json")
     val outPath = java.nio.file.Paths.get(out).toAbsolutePath
     def artifactJson(complete: Boolean): String = {
@@ -137,7 +150,9 @@ object Bench {
       val coldTotal = if (cold.nonEmpty) cold.values.sum else 0.0
       val failedJson =
         failed.sorted.map(n => s"\"$n\"").mkString("[", ",", "]")
-      s"""{"metric":"total","value":${ms(total)},"unit":"sec","pass":"min","complete":$complete,"queries":${m(results)},"cold_total_sec":${ms(coldTotal)},"queries_p1":${m(cold)},"queries_p2":${m(pass2)},"warmup_sec":${ms(warmup)},"failed":$failedJson,"loadavg_start":${ms(loadStart)},"loadavg_end":${ms(loadavg())},"sf":"$sfDir"}"""
+      def codegen(p: Int): String =
+        s"""{"compiles":${compiles(p)},"compile_ms":${ms(compileNs(p) / 1e6)}}"""
+      s"""{"metric":"total","value":${ms(total)},"unit":"sec","pass":"min","complete":$complete,"queries":${m(results)},"cold_total_sec":${ms(coldTotal)},"queries_p1":${m(cold)},"queries_p2":${m(pass2)},"codegen_p1":${codegen(0)},"codegen_p2":${codegen(1)},"warmup_sec":${ms(warmup)},"failed":$failedJson,"loadavg_start":${ms(loadStart)},"loadavg_end":${ms(loadavg())},"sf":"$sfDir"}"""
     }
     // The artifact is (re)written after every family, flagged
     // complete:false until the final write: with two timed passes per
@@ -175,10 +190,11 @@ object Bench {
           // as the min of two samples, is also the more stable
           // cross-round statistic. Both raw passes are kept in the
           // artifact (`queries_p1`/`queries_p2`) so nothing is hidden.
-          def once(): (Double, Boolean) = {
+          def once(pass: Int): (Double, Boolean) = {
             // Label the query's jobs (guide §1.5): purely cosmetic for
             // the event log / UI, no effect on execution or timing.
             spark.sparkContext.setJobDescription(name)
+            val (c0, n0) = codegenCounters()
             val t0 = System.nanoTime()
             // noop sink, not count(): under count Catalyst prunes
             // computed columns on projection-shaped queries (a
@@ -204,10 +220,14 @@ object Bench {
               if (df != null) Checkpoints.releaseAll(df)
               spark.sparkContext.setJobDescription(null)
             }
-            ((System.nanoTime() - t0) / 1e9, ok)
+            val wall = (System.nanoTime() - t0) / 1e9
+            val (c1, n1) = codegenCounters()
+            compiles(pass) += c1 - c0
+            compileNs(pass) += n1 - n0
+            (wall, ok)
           }
-          val (p1, ok1) = once()
-          val (p2, ok2) = once()
+          val (p1, ok1) = once(0)
+          val (p2, ok2) = once(1)
           cold(name) = p1
           pass2(name) = p2
           // min over the SUCCESSFUL passes only: a pass that failed

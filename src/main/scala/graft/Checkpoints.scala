@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.storage.StorageLevel
 
 /** Deterministic lifecycle for per-iteration plan checkpoints.
   *
@@ -96,7 +97,7 @@ object Checkpoints {
     * storage axis). No-op for non-checkpoint plans. */
   def release(df: DataFrame): Unit =
     df.queryExecution.analyzed match {
-      case lr: LogicalRDD => releaseRdd(df.sparkSession, lr)
+      case lr: LogicalRDD => releaseRdd(df.sparkSession, lr.rdd)
       case _ => ()
     }
 
@@ -105,17 +106,20 @@ object Checkpoints {
     * releases every checkpoint leaf. A long multi-query run (bench,
     * verify, a 100 TB pipeline driver) calls this after each query's
     * sink completes, so final per-query score vectors don't accumulate
-    * as dead blocks between driver GCs. */
+    * as dead blocks between driver GCs. A checkpoint the plan reads more
+    * than once (an L2 normalization scans its input twice) is released
+    * once. */
   def releaseAll(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case lr: LogicalRDD => releaseRdd(df.sparkSession, lr)
-      case _ => ()
-    }
+    df.queryExecution.analyzed.collect { case lr: LogicalRDD => lr.rdd }
+      .distinctBy(_.id).foreach(releaseRdd(df.sparkSession, _))
 
+  /** Idempotent: an RDD already at `StorageLevel.NONE` is not unpersisted
+    * again, so a second release sends no second asynchronous `RemoveRdd`
+    * racing the first for the same blocks. */
   private def releaseRdd(spark: org.apache.spark.sql.SparkSession,
-      lr: LogicalRDD): Unit = {
-    lr.rdd.unpersist(blocking = false)
-    lr.rdd.getCheckpointFile.foreach { dir =>
+      rdd: org.apache.spark.rdd.RDD[_]): Unit = {
+    if (rdd.getStorageLevel != StorageLevel.NONE) rdd.unpersist(blocking = false)
+    rdd.getCheckpointFile.foreach { dir =>
       val p = new org.apache.hadoop.fs.Path(dir)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       try fs.delete(p, true)

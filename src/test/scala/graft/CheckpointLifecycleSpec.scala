@@ -2,6 +2,7 @@ package graft
 
 import graft.operators.{ConnectedComponents, Hits, PageRank, Salsa}
 import org.apache.spark.storage.StorageLevel
+import scala.jdk.CollectionConverters._
 
 /** The round-4 harness died because superseded per-iteration checkpoint
   * blocks were freed only when a driver GC let the ContextCleaner run.
@@ -76,6 +77,56 @@ class CheckpointLifecycleSpec extends SparkSuite {
     assert(rdd.getStorageLevel != StorageLevel.NONE)
     Checkpoints.release(df)
     assert(rdd.getStorageLevel == StorageLevel.NONE)
+  }
+
+  /** Persisted checkpoint RDD ids a plan reads, one per read. */
+  private def checkpointReads(df: org.apache.spark.sql.DataFrame): Seq[Int] =
+    df.queryExecution.analyzed.collect {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
+    }
+
+  /** RDD ids among `of` in the `SparkListenerUnpersistRDD` events posted
+    * while `body` runs (the ContextCleaner unpersists other, dead RDDs
+    * concurrently); the listener bus is drained before the listener
+    * comes off. */
+  private def unpersistEvents(of: Set[Int])(body: => Unit): Seq[Int] = {
+    val ids = new java.util.concurrent.ConcurrentLinkedQueue[Int]
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onUnpersistRDD(
+          e: org.apache.spark.scheduler.SparkListenerUnpersistRDD): Unit =
+        ids.add(e.rddId)
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.sql.graftshim.ListenerBusShim.drain(sc)
+    sc.addSparkListener(l)
+    try {
+      body
+      org.apache.spark.sql.graftshim.ListenerBusShim.drain(sc)
+    } finally sc.removeSparkListener(l)
+    ids.asScala.toSeq.filter(of)
+  }
+
+  test("releaseAll unpersists each distinct checkpoint once, then never") {
+    val r = Hits.run(g1, numIter = 8)
+    val out = r.hubs.unionByName(r.auths)
+    val reads = checkpointReads(out)
+    // L2 normalization scans its checkpoint twice: the plan holds each
+    // result checkpoint more than once
+    assert(reads.size > reads.distinct.size, s"no checkpoint read twice: $reads")
+    val first = unpersistEvents(reads.toSet)(Checkpoints.releaseAll(out))
+    assert(first.sorted == reads.distinct.sorted,
+      s"unpersisted $first, distinct checkpoints ${reads.distinct}")
+    val again = unpersistEvents(reads.toSet) {
+      Checkpoints.releaseAll(out)
+      Checkpoints.releaseAll(r.hubs)
+    }
+    assert(again.isEmpty, s"second release unpersisted $again")
+    val ck = Checkpoints.materialize(g1.edges)
+    val twice = unpersistEvents(checkpointReads(ck).toSet) {
+      Checkpoints.release(ck)
+      Checkpoints.release(ck)
+    }
+    assert(twice.size == 1, s"two releases unpersisted $twice")
   }
 
   test("reliable checkpoint mode produces identical kernel scores") {

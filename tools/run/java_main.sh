@@ -1,17 +1,5 @@
 #!/bin/bash
-# Run a graft main outside sbt (same flags as build.sbt's forked run),
-# so long measurements don't hold the sbt lock while sources evolve.
+# Run a graft main outside sbt against the current build's classes
+# (java_main_cp.sh with its default classes dir).
 # Usage: java_main.sh <MainClass> [args...]   (env: SPARK_GRAFT_SF_DIR etc.)
-set -e
-CLS=$1; shift
-OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
-         java.nio java.util java.util.concurrent java.util.concurrent.atomic; do
-  OPENS="$OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  OPENS="$OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-exec java $OPENS -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -Xmx${SPARK_DRIVER_MEM:-16g} -XX:+UseParallelGC \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" "$CLS" "$@"
+exec "$(dirname "$0")/java_main_cp.sh" "$@"

@@ -1,12 +1,16 @@
 #!/bin/bash
-# java_main.sh with an overridable classes dir (GRAFT_CLASSES), for paired
-# A/B runs: point one invocation at a snapshot of the baseline classes and
-# the next at the current build, alternating, so host drift is shared
-# between the two arms instead of landing on one.
-# Usage: GRAFT_CLASSES=/tmp/classes_base java_main_cp.sh <MainClass> [args...]
+# Run a graft main outside sbt with build.sbt's forked-JVM flags, so long
+# measurements don't hold the sbt lock while sources evolve. The classes
+# dir is overridable (GRAFT_CLASSES) for paired A/B runs: point one
+# invocation at a snapshot of the baseline classes and the next at the
+# current build, alternating, so host drift is shared between the two
+# arms instead of landing on one. Keep the flags below in step with
+# build.sbt's javaOptions.
+# Usage: [GRAFT_CLASSES=/tmp/classes_base] java_main_cp.sh <MainClass> [args...]
 set -e
 CLS=$1; shift
-CLASSES=${GRAFT_CLASSES:-/root/repo/target/scala-2.13/classes}
+REPO=$(cd "$(dirname "$0")/../.." && pwd)
+CLASSES=${GRAFT_CLASSES:-$REPO/target/scala-2.13/classes}
 OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
          java.nio java.util java.util.concurrent java.util.concurrent.atomic; do
@@ -16,6 +20,7 @@ for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   OPENS="$OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
 exec java $OPENS -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
+  -Dspark.sql.codegen.cache.maxEntries=8192 \
   -Xmx${SPARK_DRIVER_MEM:-16g} -XX:+UseParallelGC \
   $GRAFT_JVM_OPTS \
   -cp "$CLASSES:/opt/spark/jars/*" "$CLS" "$@"
