@@ -4,22 +4,22 @@ import org.apache.spark.sql.SparkSession
 
 object Bench {
 
-  /** Which persisted input family a query draws on — used to order the
-    * run so each graph family's persisted blocks can be evicted the
-    * moment its last query finishes, instead of holding all three
-    * graphs (plus a run's worth of residue) for the whole suite. */
-  private[graft] def family(name: String): String =
-    if (name == "hits_weighted_alt") "orderalt"
-    else if (name.startsWith("evt_")) "event"
-    else if (name.startsWith("hits_") || name.startsWith("salsa_") ||
-      name.startsWith("pagerank") || // incl. pagerank_converged — an exact
-      // match here once let it run inside the flat family, re-deriving and
-      // re-persisting the order graph mid-family (r9-r11 bench artifacts)
-      Set("topics_list", "graph_degrees", "rank_topk",
-        "sample_hash", "render_model", "graph_bucketed_write")(name)) "order"
-    else "flat" // documents/embeddings/events parquet — nothing persisted
+  /** The order a run visits the gate families ([[SparkEntry.Gate]]'s
+    * `family`): each graph family's persisted blocks are evicted the
+    * moment its last gate finishes, instead of holding all three graphs
+    * (plus a run's worth of residue) for the whole suite. */
+  private[graft] val familyOrder =
+    Seq(Some("order"), Some("orderalt"), Some("event"), None)
 
-  private[graft] val familyOrder = Seq("order", "orderalt", "event", "flat")
+  /** `gates` grouped by family in [[familyOrder]], each family's gates
+    * in name order (stable across rounds). */
+  private[graft] def familyRuns(gates: Seq[SparkEntry.Gate])
+      : Seq[(Option[String], Seq[SparkEntry.Gate])] = {
+    val byFam = gates.groupBy(_.family)
+    require(byFam.keySet.subsetOf(familyOrder.toSet),
+      s"gate families outside the run order: ${byFam.keySet -- familyOrder}")
+    familyOrder.flatMap(f => byFam.get(f).map(gs => f -> gs.sortBy(_.name)))
+  }
 
   /** The JVM's Janino compiles so far and their total compile nanos
     * (driver and executor threads alike: local mode is one JVM). */
@@ -36,7 +36,8 @@ object Bench {
     * whichever heavy kernel runs first, skewing its number 1.5-2x. Each
     * pass wears its own try/catch so one failure can't silently cancel
     * the rest of the warmup. */
-  private def warm(fam: String, spark: SparkSession, sfDir: String): Unit = {
+  private def warm(fam: Option[String], spark: SparkSession,
+      sfDir: String): Unit = {
     def pass(label: String)(body: => Unit): Unit =
       try body catch { case e: Throwable =>
         System.err.println(s"[bench] warmup $label failed: ${e.getMessage}")
@@ -51,7 +52,7 @@ object Bench {
       Checkpoints.releaseAll(hubs)
     }
     fam match {
-      case "order" =>
+      case Some("order") =>
         pass("order-graph")(GraphIO.orderGraph(spark, sfDir).edges.count())
         pass("hits-base") {
           val r = operators.Hits.run(GraphIO.orderGraph(spark, sfDir),
@@ -74,7 +75,7 @@ object Bench {
           pr.count()
           Checkpoints.releaseAll(pr)
         }
-      case "orderalt" =>
+      case Some("orderalt") =>
         // One throwaway weighted iteration, mirroring the order family's
         // warm: materializes BOTH persisted sides of the graph (the
         // edges.count alone leaves the node union-distinct to land on
@@ -85,7 +86,7 @@ object Bench {
               numIter = 1)
           drain(r.auths, r.hubs)
         }
-      case "event" =>
+      case Some("event") =>
         pass("event-graph")(GraphIO.eventGraph(spark, sfDir).edges.count())
       case _ => ()
     }
@@ -93,27 +94,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Deterministic events.ts NTZ→instant conversion (GraphIO.events)
-      // regardless of host zone.
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Superseded iteration checkpoints are released eagerly by the
-      // kernels themselves ([[Checkpoints]]), so the periodic-GC drain is
-      // belt-and-braces for anything else the ContextCleaner tracks, not
-      // load-bearing heap hygiene.
-      .config("spark.cleaner.periodicGC.interval", "5min")
-      // Headroom so a transient stall (host hiccup, one long GC) degrades
-      // one query's number instead of tripping the in-process executor's
-      // heartbeat kill switch and taking the whole JVM down — the
-      // round-4 failure mode.
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.network.timeout", "600s")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
+    val spark = Sessions.local(Sessions.defaultCpus, "graft-bench")
     // ERROR, not WARN: the per-query WARN spam (FunctionRegistry
     // replacement notices, the by-construction-benign WindowExec
     // single-partition warnings) flooded the driver's bounded stdout
@@ -129,7 +110,6 @@ object Bench {
     val loadStart = loadavg()
     def ms(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    val byFam = SparkEntry.queries.toSeq.groupBy { case (n, _) => family(n) }
     var warmup = 0.0
     var failed = List.empty[String]
     val results = scala.collection.mutable.LinkedHashMap.empty[String, Double]
@@ -167,83 +147,79 @@ object Bench {
         System.err.println(s"[bench] could not write $out: ${e.getMessage}")
         false
       }
-    familyOrder.foreach { fam =>
-      val qs = byFam.getOrElse(fam, Nil)
-      if (qs.nonEmpty) {
-        val w0 = System.nanoTime()
-        warm(fam, spark, sfDir)
-        warmup += (System.nanoTime() - w0) / 1e9
-        // Within a family, run in name order (stable across rounds).
-        qs.sortBy(_._1).foreach { case (name, fn) =>
-          // Two passes, the FASTER one recorded (BenchOne's pattern,
-          // adopted for the suite after the r16 artifact shipped
-          // cold-pass numbers 1.5-2.9x above the r14 bands on unchanged
-          // code — per-query codegen/JIT compilation is a one-time JVM
-          // cost, not an engine property). min(pass1, pass2), not
-          // pass2 unconditionally: for compute-bound plans pass 2 is
-          // the warm number (codegen amortized), but for the write /
-          // checkpointed-restart gates pass 2 does strictly MORE work
-          // or lands on suite residue (overwriting the bucketed layout
-          // pass 1 just wrote measured 38s vs 17s fresh in isolation;
-          // the streaming drains sit on state-store maintenance from
-          // their own pass 1) — min is robust to both asymmetries and,
-          // as the min of two samples, is also the more stable
-          // cross-round statistic. Both raw passes are kept in the
-          // artifact (`queries_p1`/`queries_p2`) so nothing is hidden.
-          def once(pass: Int): (Double, Boolean) = {
-            // Label the query's jobs (guide §1.5): purely cosmetic for
-            // the event log / UI, no effect on execution or timing.
-            spark.sparkContext.setJobDescription(name)
-            val (c0, n0) = codegenCounters()
-            val t0 = System.nanoTime()
-            // noop sink, not count(): under count Catalyst prunes
-            // computed columns on projection-shaped queries (a
-            // text_normalize count never runs the NFC expression),
-            // which under-measures them. The noop write evaluates
-            // every output column of every row.
-            var df: org.apache.spark.sql.DataFrame = null
-            var ok = true
-            try {
-              df = fn(spark, sfDir)
-              df.write.format("noop").mode("overwrite").save()
-            } catch { case e: Throwable =>
-              ok = false
-              if (!failed.contains(name)) failed ::= name
-              System.err.println(s"[bench] $name failed: ${e.getMessage}")
-            } finally {
-              // The sink consumed (or abandoned) the result; its final
-              // per-query score checkpoints (1-2 |V| vectors each) are
-              // dead — release them even on failure instead of letting
-              // ~60 queries' worth wait on GC-timed ContextCleaner
-              // sweeps (and so pass 1's dead blocks can't distort
-              // pass 2's timing).
-              if (df != null) Checkpoints.releaseAll(df)
-              spark.sparkContext.setJobDescription(null)
-            }
-            val wall = (System.nanoTime() - t0) / 1e9
-            val (c1, n1) = codegenCounters()
-            compiles(pass) += c1 - c0
-            compileNs(pass) += n1 - n0
-            (wall, ok)
+    familyRuns(SparkEntry.gates).foreach { case (fam, gs) =>
+      val w0 = System.nanoTime()
+      warm(fam, spark, sfDir)
+      warmup += (System.nanoTime() - w0) / 1e9
+      gs.foreach { case SparkEntry.Gate(name, _, fn, _, _) =>
+        // Two passes, the FASTER one recorded (BenchOne's pattern,
+        // adopted for the suite after the r16 artifact shipped
+        // cold-pass numbers 1.5-2.9x above the r14 bands on unchanged
+        // code — per-query codegen/JIT compilation is a one-time JVM
+        // cost, not an engine property). min(pass1, pass2), not
+        // pass2 unconditionally: for compute-bound plans pass 2 is
+        // the warm number (codegen amortized), but for the write /
+        // checkpointed-restart gates pass 2 does strictly MORE work
+        // or lands on suite residue (overwriting the bucketed layout
+        // pass 1 just wrote measured 38s vs 17s fresh in isolation;
+        // the streaming drains sit on state-store maintenance from
+        // their own pass 1) — min is robust to both asymmetries and,
+        // as the min of two samples, is also the more stable
+        // cross-round statistic. Both raw passes are kept in the
+        // artifact (`queries_p1`/`queries_p2`) so nothing is hidden.
+        def once(pass: Int): (Double, Boolean) = {
+          // Label the query's jobs (guide §1.5): purely cosmetic for
+          // the event log / UI, no effect on execution or timing.
+          spark.sparkContext.setJobDescription(name)
+          val (c0, n0) = codegenCounters()
+          val t0 = System.nanoTime()
+          // noop sink, not count(): under count Catalyst prunes
+          // computed columns on projection-shaped queries (a
+          // text_normalize count never runs the NFC expression),
+          // which under-measures them. The noop write evaluates
+          // every output column of every row.
+          var df: org.apache.spark.sql.DataFrame = null
+          var ok = true
+          try {
+            df = fn(spark, sfDir)
+            df.write.format("noop").mode("overwrite").save()
+          } catch { case e: Throwable =>
+            ok = false
+            if (!failed.contains(name)) failed ::= name
+            System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          } finally {
+            // The sink consumed (or abandoned) the result; its final
+            // per-query score checkpoints (1-2 |V| vectors each) are
+            // dead — release them even on failure instead of letting
+            // ~60 queries' worth wait on GC-timed ContextCleaner
+            // sweeps (and so pass 1's dead blocks can't distort
+            // pass 2's timing).
+            if (df != null) Checkpoints.releaseAll(df)
+            spark.sparkContext.setJobDescription(null)
           }
-          val (p1, ok1) = once(0)
-          val (p2, ok2) = once(1)
-          cold(name) = p1
-          pass2(name) = p2
-          // min over the SUCCESSFUL passes only: a pass that failed
-          // fast must not stand in as the query's score when the other
-          // pass completed (the query is in `failed` either way when
-          // any pass threw, so a both-failed min is visibly flagged).
-          results(name) = (ok1, ok2) match {
-            case (true, false) => p1
-            case (false, true) => p2
-            case _ => math.min(p1, p2)
-          }
+          val wall = (System.nanoTime() - t0) / 1e9
+          val (c1, n1) = codegenCounters()
+          compiles(pass) += c1 - c0
+          compileNs(pass) += n1 - n0
+          (wall, ok)
         }
-        // This family's persisted graph is done — drop its blocks now.
-        if (fam != "flat") GraphIO.evict(spark, sfDir, Seq(fam))
-        writeArtifact(complete = false)
+        val (p1, ok1) = once(0)
+        val (p2, ok2) = once(1)
+        cold(name) = p1
+        pass2(name) = p2
+        // min over the SUCCESSFUL passes only: a pass that failed
+        // fast must not stand in as the query's score when the other
+        // pass completed (the query is in `failed` either way when
+        // any pass threw, so a both-failed min is visibly flagged).
+        results(name) = (ok1, ok2) match {
+          case (true, false) => p1
+          case (false, true) => p2
+          case _ => math.min(p1, p2)
+        }
       }
+      // This family's persisted graph is done — drop its blocks now.
+      fam.foreach(k => GraphIO.evict(spark, sfDir, Seq(k)))
+      writeArtifact(complete = false)
     }
     val total = if (results.nonEmpty) results.values.sum else 0.0
     val coldTotal = if (cold.nonEmpty) cold.values.sum else 0.0

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Single-query profiling harness: times each named query twice (cold
   * including JIT/codegen, then warm) in isolation from the full bench —
@@ -8,15 +7,7 @@ import org.apache.spark.sql.SparkSession
 object BenchOne {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Deterministic events.ts NTZ→instant conversion (GraphIO.events)
-      // regardless of host zone.
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
+    val spark = Sessions.local(Sessions.defaultCpus, "graft-benchone")
     spark.sparkContext.setLogLevel("WARN")
     args.foreach { name =>
       // Same action and lifecycle as Bench: a noop write evaluates

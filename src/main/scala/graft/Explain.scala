@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Dump formatted physical plans for representative queries — the tool
   * used to keep the plans honest (pushdown reaching the parquet scan,
@@ -16,12 +15,7 @@ object Explain {
       else Seq("hits_base", "salsa_simplified", "dedup_minhash_lsh",
         "ann_topk", "events_window", "search_bm25", "corpus_token_cms",
         "dedup_incremental", "layout_zorder")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
+    val spark = Sessions.local(Sessions.defaultCpus, "graft-explain")
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { name =>
       println(s"\n=================== $name ===================")

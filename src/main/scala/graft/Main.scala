@@ -52,17 +52,7 @@ object Main {
 
   def main(args: Array[String]): Unit = {
     if (args.isEmpty) { usage(); sys.exit(1) }
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName(s"graft-${args(0)}")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      // Deterministic events.ts NTZ→instant conversion (GraphIO.events)
-      // regardless of host zone.
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
+    val spark = Sessions.local(Sessions.defaultCpus, s"graft-${args(0)}")
     spark.sparkContext.setLogLevel("WARN")
     // Record the exit code and exit AFTER the finally: System.exit
     // inside the catch would skip spark.stop() (JVM shutdown hooks are

@@ -2,7 +2,8 @@ package graft
 
 import graft.functions.{GraftHash, TextFunctions => TF}
 
-/** DuckDB oracle-SQL generators for every `SparkEntry.queries` entry.
+/** DuckDB oracle-SQL generators for every gate of the
+  * `SparkEntry.gates` registry (each gate's `oracle` calls one).
   *
   * The iterative kernels are unrolled into CTE chains (8 iterations by
   * default), generated programmatically — SURVEY.md §5.2(2). Floating-

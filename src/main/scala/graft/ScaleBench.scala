@@ -492,16 +492,8 @@ object ScaleBench {
     val baseDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val outDir = if (args.length > 1) args(1) else "target/sf1-derived"
     val reps = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Deterministic events.ts NTZ→instant conversion (GraphIO.events)
-      // regardless of host zone.
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
+    val cpus = Sessions.defaultCpus
+    val spark = Sessions.local(cpus, "graft-scalebench")
     spark.sparkContext.setLogLevel("WARN")
 
     if (!new java.io.File(s"$outDir/orders.parquet/_SUCCESS").exists()) {
@@ -993,7 +985,7 @@ object ScaleBench {
             array_join(transform(sequence(lit(0L), lit(nTok - 1)),
               i => concat(lit("w"), pmod(i * lit(2654435761L) +
                 col("id") * lit(7919L), lit(4999L)))), " ").as("text"))
-            .repartition(math.min(nDocs, cpus.toInt))
+            .repartition(math.min(nDocs, cpus))
             .write.mode("overwrite").parquet(s"$dir/documents.parquet")
         }
       val b1 = s"$outDir-book1"

@@ -1,0 +1,37 @@
+package graft
+
+import org.apache.spark.sql.SparkSession
+
+/** The one session conf graft ships: every main and the test fixture
+  * build their session here, so the tests run on the conf the mains
+  * use. */
+object Sessions {
+
+  /** `SPARK_GRAFT_CPUS`, else the host's core count. */
+  def defaultCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** A `local[cpus]` session (`SPARK_MASTER` overrides the master) with
+    * one shuffle partition per core. */
+  def local(cpus: Int, appName: String): SparkSession =
+    SparkSession.builder()
+      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
+      .appName(appName)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      // Deterministic events.ts NTZ→instant conversion (GraphIO.events)
+      // regardless of host zone.
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      // Superseded iteration checkpoints are released eagerly by the
+      // kernels themselves ([[Checkpoints]]), so the periodic-GC drain is
+      // belt-and-braces for anything else the ContextCleaner tracks, not
+      // load-bearing heap hygiene.
+      .config("spark.cleaner.periodicGC.interval", "5min")
+      // Headroom so a transient stall (host hiccup, one long GC) degrades
+      // one query's number instead of tripping the in-process executor's
+      // heartbeat kill switch and taking the whole JVM down.
+      .config("spark.executor.heartbeatInterval", "60s")
+      .config("spark.network.timeout", "600s")
+      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+      .getOrCreate()
+}

@@ -8,10 +8,12 @@ import graft.streaming.{EventPipelines, Tws}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
-  * Every entry in [[queries]] has a DuckDB twin in [[oracleSql]]
-  * (generated in [[Oracles]]); column names and types are aligned on
+  * [[gates]] is the one gate registry: each [[Gate]] declares its
+  * name, the persisted graph family it reads, its Spark query and its
+  * DuckDB twin (generated in [[Oracles]]); [[queries]] and
+  * [[oracleSql]] are views of it. Column names and types are aligned on
   * both sides because the driver's compare sorts columns by name and
   * hashes values. Floating-point scores are rounded identically on both
   * sides (HITS: 6 decimals, SALSA: 9 — see [[Oracles]] scaladoc).
@@ -117,29 +119,54 @@ object SparkEntry {
   private def salsaOut(r: Salsa.Result): DataFrame =
     scoresOut(r.hubs, r.auths, 9)
 
-  /** One per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** One gate: its name, the persisted [[GraphIO]] graph it reads
+    * (`order`, `orderalt`, `event`, or none: [[Bench]] and [[Verify]]
+    * run each family's gates together and evict that graph after the
+    * last one), its Spark query over an sf dir, and its DuckDB oracle,
+    * built on demand. `rederive` rebuilds the oracle of a converged
+    * kernel from the iteration count and verdict the kernel reported
+    * in its marker rows, so [[Verify]] is correct at any scale; their
+    * pinned `oracle` is the sf0.01 one. */
+  final case class Gate(name: String, family: Option[String],
+      query: (SparkSession, String) => DataFrame, oracle: () => String,
+      rederive: Option[(Int, Boolean) => String])
+
+  private def gate(name: String, family: Option[String], oracle: => String,
+      rederive: Option[(Int, Boolean) => String] = None)(
+      query: (SparkSession, String) => DataFrame): Gate =
+    Gate(name, family, query, () => oracle, rederive)
+
+  private val Order = Some("order")
+  private val OrderAlt = Some("orderalt")
+  private val Event = Some("event")
+  /** Reads only the flat parquet tables: nothing persisted to evict. */
+  private val Flat = None
+
+  /** The gate registry, one per implemented operator from SURVEY.md §2. */
+  val gates: Seq[Gate] = Seq(
     // ---- HITS family (K1-K6) on the derived order graph ----
-    "hits_base" -> ((s, dir) =>
+    gate("hits_base", Order, Oracles.hitsBase)((s, dir) =>
       hitsOut(Hits.run(GraphIO.orderGraph(s, dir)))),
-    "hits_weighted" -> ((s, dir) =>
+    gate("hits_weighted", Order, Oracles.hitsWeighted)((s, dir) =>
       hitsOut(Hits.runWeighted(GraphIO.orderGraph(s, dir)))),
-    "hits_weighted_alt" -> ((s, dir) =>
+    gate("hits_weighted_alt", OrderAlt, Oracles.hitsWeightedAlt)((s, dir) =>
       hitsOut(Hits.runWeighted(GraphIO.orderGraphAltWeights(s, dir)))),
-    "hits_teleport" -> ((s, dir) =>
+    gate("hits_teleport", Order, Oracles.hitsTeleport())((s, dir) =>
       hitsOut(Hits.runTeleport(GraphIO.orderGraph(s, dir)))),
-    "hits_topic" -> ((s, dir) =>
+    gate("hits_topic", Order, Oracles.hitsTopic(Topic))((s, dir) =>
       hitsOut(Hits.runTopicSpecific(GraphIO.orderGraph(s, dir), Topic))),
-    "hits_topic_exclusive" -> ((s, dir) =>
+    gate("hits_topic_exclusive", Order,
+      Oracles.hitsTopicExclusive(Topic))((s, dir) =>
       hitsOut(Hits.runTopicExclusive(GraphIO.orderGraph(s, dir), Topic))),
-    "hits_query_dependent" -> ((s, dir) =>
+    gate("hits_query_dependent", Order,
+      Oracles.hitsQueryDependent(Topic))((s, dir) =>
       hitsOut(Hits.runQueryDependent(GraphIO.orderGraph(s, dir), Topic))),
     // One-time bucketed-layout write, gated on its table cardinalities.
     // Runs before hits_bucketed (family order is alphabetical), so the
     // kernel query below measures the amortized zero-shuffle run, not
     // the write — the actual 100 TB proposition (write once, score many
     // times).
-    "graph_bucketed_write" -> ((s, dir) => {
+    gate("graph_bucketed_write", Order, Oracles.bucketedWrite)((s, dir) => {
       import s.implicits._
       // Bucket count = the consumer kernels' scale-adaptive loop width
       // (r20, guide §2.2/§6): data-proportional here, the session's
@@ -158,7 +185,7 @@ object SparkEntry {
     // (the scan itself is the co-partitioning). Writes the layout only
     // if this JVM hasn't already (standalone runs); scores — and so the
     // oracle — are identical to hits_base.
-    "hits_bucketed" -> ((s, dir) => {
+    gate("hits_bucketed", Order, Oracles.hitsBase)((s, dir) => {
       val prefix = bucketedPrefix(s, dir)
       if (!s.catalog.tableExists(s"${prefix}_nodes"))
         GraphIO.writeBucketedGraph(GraphIO.orderGraph(s, dir), prefix,
@@ -170,24 +197,25 @@ object SparkEntry {
     // including the degree aggregations; scores identical to
     // salsa_iterative. Reuses (or writes) the same layout as
     // hits_bucketed.
-    "salsa_bucketed" -> ((s, dir) => {
+    gate("salsa_bucketed", Order, Oracles.salsaIterativeBase)((s, dir) => {
       val prefix = bucketedPrefix(s, dir)
       if (!s.catalog.tableExists(s"${prefix}_nodes"))
         GraphIO.writeBucketedGraph(GraphIO.orderGraph(s, dir), prefix,
           graft.Fixpoint.width(GraphIO.orderGraph(s, dir).edges))
       salsaOut(Salsa.runBucketed(s, prefix))
     }),
-    "salsa_simplified" -> ((s, dir) =>
+    gate("salsa_simplified", Order, Oracles.salsaSimplifiedBase)((s, dir) =>
       salsaOut(Salsa.runSimplified(GraphIO.orderGraph(s, dir).edges))),
-    "salsa_iterative" -> ((s, dir) =>
+    gate("salsa_iterative", Order, Oracles.salsaIterativeBase)((s, dir) =>
       salsaOut(Salsa.run(GraphIO.orderGraph(s, dir)))),
-    "salsa_weighted" -> ((s, dir) =>
+    gate("salsa_weighted", Order, Oracles.salsaWeighted)((s, dir) =>
       salsaOut(Salsa.runWeightedSimplified(GraphIO.orderGraph(s, dir).edges))),
-    "salsa_teleport" -> ((s, dir) =>
+    gate("salsa_teleport", Order, Oracles.salsaTeleport())((s, dir) =>
       salsaOut(Salsa.runTeleport(GraphIO.orderGraph(s, dir)))),
-    "salsa_topic" -> ((s, dir) =>
+    gate("salsa_topic", Order, Oracles.salsaTopic(Topic))((s, dir) =>
       salsaOut(Salsa.runTopicSpecific(GraphIO.orderGraph(s, dir), Topic))),
-    "salsa_query_dependent" -> ((s, dir) =>
+    gate("salsa_query_dependent", Order,
+      Oracles.salsaQueryDependent(Topic))((s, dir) =>
       salsaOut(Salsa.runQueryDependent(GraphIO.orderGraph(s, dir), Topic))),
     // Convergence extension, determinized like hits_converged: the
     // sf0.01 gate corpus stops at iteration 13 (tol 1e-9; delta(12)
@@ -199,7 +227,9 @@ object SparkEntry {
     // Delta checks are batched (firstCheck=7, every 3 → 7,10,13,...):
     // the sf0.01 stop stays at the measured 13, with 3 delta jobs
     // instead of 13.
-    "salsa_converged" -> ((s, dir) => {
+    gate("salsa_converged", Order,
+      Oracles.salsaConverged(numIter = 13),
+      rederive = Some(Oracles.salsaConverged(_, _)))((s, dir) => {
       import s.implicits._
       val fp =
         Salsa.runConverged(GraphIO.orderGraph(s, dir), 1e-9, 20,
@@ -211,9 +241,9 @@ object SparkEntry {
         .orderBy(col("kind"), col("id"))
     }),
     // ---- utility operators (K13, degrees, top-k, sampling) ----
-    "topics_list" -> ((s, dir) =>
+    gate("topics_list", Order, Oracles.topicsList)((s, dir) =>
       Topics.list(GraphIO.orderGraph(s, dir).nodes).orderBy(col("label"))),
-    "graph_degrees" -> ((s, dir) => {
+    gate("graph_degrees", Order, Oracles.degrees)((s, dir) => {
       val e = GraphIO.orderGraph(s, dir).edges
       Degrees.out(e).select(lit("out").as("kind"), col("id"),
           col("out_degree").as("degree"))
@@ -224,13 +254,13 @@ object SparkEntry {
     // Beyond-reference structural signal: per-node triangle counts +
     // local clustering coefficient via the degree-oriented wedge join
     // (hub skew bounded by construction — see `Triangles` scaladoc).
-    "graph_triangles" -> ((s, dir) =>
+    gate("graph_triangles", Order, Oracles.triangles())((s, dir) =>
       Triangles.perNode(GraphIO.orderGraph(s, dir).edges)
         .orderBy(col("id"))),
     // Semi-supervised label propagation: hash-gated 30% seeds carry
     // their node label, 4 clamped synchronous majority rounds (the
     // quality/domain-label spreading primitive — see `LabelProp`).
-    "graph_label_prop" -> ((s, dir) => {
+    gate("graph_label_prop", Order, Oracles.labelProp())((s, dir) => {
       val g = GraphIO.orderGraph(s, dir)
       val seeds = g.nodes
         .filter(GraftHash.graftHash(s, col("id")) % 100 < 30)
@@ -242,7 +272,7 @@ object SparkEntry {
     }),
     // k-core density tier: synchronous peel to the 3-core fixed point
     // (the "train on the dense core" sampling primitive — see `KCore`).
-    "graph_kcore" -> ((s, dir) =>
+    gate("graph_kcore", Order, Oracles.kCore())((s, dir) =>
       KCore.run(GraphIO.orderGraph(s, dir).edges, 3)
         .orderBy(col("id"))),
     // WEIGHTED structural variants (r18): the same wedge join / peel
@@ -253,10 +283,11 @@ object SparkEntry {
     // graph at every SF (the distribution is scale-stable), so the
     // peel is non-trivial and converges in ≤3 rounds — far inside the
     // oracle's 24-round unroll.
-    "graph_triangles_weighted" -> ((s, dir) =>
+    gate("graph_triangles_weighted", Order,
+      Oracles.trianglesWeighted())((s, dir) =>
       Triangles.perNodeWeighted(GraphIO.orderGraph(s, dir).edges)
         .orderBy(col("id"))),
-    "graph_kcore_weighted" -> ((s, dir) =>
+    gate("graph_kcore_weighted", Order, Oracles.kCoreWeighted())((s, dir) =>
       KCore.runWeighted(GraphIO.orderGraph(s, dir).edges, 300000.0)
         .orderBy(col("id"))),
     // DOULION sampled triangle count — the family's cheap 100 TB rung
@@ -265,7 +296,7 @@ object SparkEntry {
     // per 8× edge growth, so expected sampled triangles stay put),
     // wedge work ~p², count scaled by (1000/p)³; the twin replays both
     // the derivation (count-threshold unroll) and the exact subgraph.
-    "graph_triangles_approx" -> ((s, dir) =>
+    gate("graph_triangles_approx", Order, Oracles.trianglesApprox())((s, dir) =>
       Triangles.approxCount(GraphIO.orderGraph(s, dir).edges)),
     // Structural family on the EVENT graph — the natural skew gate:
     // its authorities ('e' event-type nodes) hold hot-key in-degrees
@@ -274,9 +305,11 @@ object SparkEntry {
     // recommender (event types sharing many users — hot-type centers
     // are excluded by the degree cap, users are the wedge centers),
     // and the k-core is the engagement tier.
-    "evt_graph_link_predict" -> ((s, dir) =>
+    gate("evt_graph_link_predict", Event,
+      Oracles.linkPredict(graph = Oracles.eventGraphCtes))((s, dir) =>
       LinkPredict.topCandidates(GraphIO.eventGraph(s, dir).edges)),
-    "evt_graph_kcore" -> ((s, dir) =>
+    gate("evt_graph_kcore", Event,
+      Oracles.kCore(graph = Oracles.eventGraphCtes))((s, dir) =>
       KCore.run(GraphIO.eventGraph(s, dir).edges, 3)
         .orderBy(col("id"))),
     // r19: the remaining structural pair on the event graph, so the
@@ -284,10 +317,12 @@ object SparkEntry {
     // structurally ZERO on a bipartite graph — the gate certifies
     // exactly that (every per-node count 0, clustering 0, under the
     // hot-key in-degree skew), not a vacuous empty result.
-    "evt_graph_triangles" -> ((s, dir) =>
+    gate("evt_graph_triangles", Event,
+      Oracles.triangles(graph = Oracles.eventGraphCtes))((s, dir) =>
       Triangles.perNode(GraphIO.eventGraph(s, dir).edges)
         .orderBy(col("id"))),
-    "evt_graph_label_prop" -> ((s, dir) => {
+    gate("evt_graph_label_prop", Event,
+      Oracles.labelProp(graph = Oracles.eventGraphCtes))((s, dir) => {
       val g = GraphIO.eventGraph(s, dir)
       val seeds = g.nodes
         .filter(GraftHash.graftHash(s, col("id")) % 100 < 30)
@@ -300,7 +335,8 @@ object SparkEntry {
     // weighted majority: a high-engagement neighbor outvotes many weak
     // ones — votes are integer micro-unit edge strengths, so every
     // round is exactly replayed by the unrolled twin
-    "graph_label_prop_weighted" -> ((s, dir) => {
+    gate("graph_label_prop_weighted", Order,
+      Oracles.labelProp(weighted = true))((s, dir) => {
       val g = GraphIO.orderGraph(s, dir)
       val seeds = g.nodes
         .filter(GraftHash.graftHash(s, col("id")) % 100 < 30)
@@ -313,13 +349,14 @@ object SparkEntry {
     // Link-prediction features: top-20 non-adjacent pairs by
     // common-neighbor/Adamic-Adar evidence (center-degree cap 64 — the
     // quadratic-surface contract, see `LinkPredict` scaladoc).
-    "graph_link_predict" -> ((s, dir) =>
+    gate("graph_link_predict", Order, Oracles.linkPredict())((s, dir) =>
       LinkPredict.topCandidates(GraphIO.orderGraph(s, dir).edges)),
     // Weighted link prediction — completes the weighted structural
     // quartet: bottleneck common strength (exact micro-unit integer
     // primary key) + the 1/ln(1+strength) Adamic-Adar discount, same
     // topological center cap as the unweighted operator.
-    "graph_link_predict_weighted" -> ((s, dir) =>
+    gate("graph_link_predict_weighted", Order,
+      Oracles.linkPredictWeighted())((s, dir) =>
       LinkPredict.topCandidatesWeighted(GraphIO.orderGraph(s, dir).edges)),
     // ---- persisted structural projection (StructuralIndex) ----
     // Lifecycle proof, the ann_topk_ivf_persisted pattern: build +
@@ -329,7 +366,7 @@ object SparkEntry {
     // path is proven bit-equal. At 100 TB this is what removes three
     // redundant corpus-scale distinct-shuffles from a one-graph
     // analysis session (VERDICT r17 missing #3).
-    "graph_triangles_indexed" -> ((s, dir) => {
+    gate("graph_triangles_indexed", Order, Oracles.triangles())((s, dir) => {
       val idx = structIdxDir(s, dir)
       Triangles.perNodeOn(StructuralIndex.undirected(s, idx),
           StructuralIndex.degrees(s, idx))
@@ -339,13 +376,14 @@ object SparkEntry {
     // (union into adjacency), so bucket metadata only pins it to a
     // fixed non-AQE layout — measured 35 vs 19 s at 100×; the k-core
     // peel, whose joins ARE on the bucket key, keeps the metadata.
-    "graph_link_predict_indexed" -> ((s, dir) => {
+    gate("graph_link_predict_indexed", Order,
+      Oracles.linkPredict())((s, dir) => {
       val idx = structIdxDir(s, dir)
       LinkPredict.topCandidatesOn(
         StructuralIndex.undirected(s, idx, bucketed = false),
         StructuralIndex.degrees(s, idx, bucketed = false))
     }),
-    "graph_label_prop_indexed" -> ((s, dir) => {
+    gate("graph_label_prop_indexed", Order, Oracles.labelProp())((s, dir) => {
       val idx = structIdxDir(s, dir)
       val seeds = GraphIO.orderGraph(s, dir).nodes
         .filter(GraftHash.graftHash(s, col("id")) % 100 < 30)
@@ -355,7 +393,7 @@ object SparkEntry {
           coalesce(col("label"), lit("unlabeled")).as("label"))
         .orderBy(col("id"))
     }),
-    "graph_kcore_indexed" -> ((s, dir) => {
+    gate("graph_kcore_indexed", Order, Oracles.kCore())((s, dir) => {
       val idx = structIdxDir(s, dir)
       // the index IS round 0: stored degrees replace the peel's first
       // (full-edge-list) aggregate, and the bucketed layout makes the
@@ -368,7 +406,8 @@ object SparkEntry {
     // prune the wt column away at the scan) — one gate proves the
     // weighted family reads it bit-equal too, sharing the weighted
     // oracle verbatim
-    "graph_kcore_weighted_indexed" -> ((s, dir) => {
+    gate("graph_kcore_weighted_indexed", Order,
+      Oracles.kCoreWeighted())((s, dir) => {
       val idx = structIdxDir(s, dir)
       // stored strengths are the weighted peel's round 0, the
       // runPreDegreed pattern on the strength axis
@@ -381,13 +420,15 @@ object SparkEntry {
     // (r19): every weighted operator now has a from-scratch gate AND an
     // indexed twin sharing its oracle verbatim — the one-index-serves-
     // both claim exercised across the whole quartet
-    "graph_triangles_weighted_indexed" -> ((s, dir) => {
+    gate("graph_triangles_weighted_indexed", Order,
+      Oracles.trianglesWeighted())((s, dir) => {
       val idx = structIdxDir(s, dir)
       Triangles.perNodeWeightedOn(StructuralIndex.undirectedWeighted(s, idx),
           StructuralIndex.degrees(s, idx))
         .orderBy(col("id"))
     }),
-    "graph_label_prop_weighted_indexed" -> ((s, dir) => {
+    gate("graph_label_prop_weighted_indexed", Order,
+      Oracles.labelProp(weighted = true))((s, dir) => {
       val idx = structIdxDir(s, dir)
       val seeds = GraphIO.orderGraph(s, dir).nodes
         .filter(GraftHash.graftHash(s, col("id")) % 100 < 30)
@@ -398,7 +439,8 @@ object SparkEntry {
           coalesce(col("label"), lit("unlabeled")).as("label"))
         .orderBy(col("id"))
     }),
-    "graph_link_predict_weighted_indexed" -> ((s, dir) => {
+    gate("graph_link_predict_weighted_indexed", Order,
+      Oracles.linkPredictWeighted())((s, dir) => {
       val idx = structIdxDir(s, dir)
       LinkPredict.topCandidatesWeightedOn(
         StructuralIndex.undirectedWeighted(s, idx, bucketed = false),
@@ -415,29 +457,34 @@ object SparkEntry {
     // quantity-edge modes of the scale-stable bimodal strength
     // distribution), fracturing the graph into thousands of small
     // high-value components — real structure, real size histogram.
-    "graph_components" -> ((s, dir) =>
+    gate("graph_components", Order, Oracles.graphComponents())((s, dir) =>
       ConnectedComponents.componentsOn(
         Triangles.undirected(GraphIO.orderGraph(s, dir).edges))),
-    "graph_components_weighted" -> ((s, dir) =>
+    gate("graph_components_weighted", Order,
+      Oracles.graphComponents(minStrength = ComponentStrengthFloor))((s, dir) =>
       ConnectedComponents.componentsWeightedOn(
         Triangles.undirectedWeighted(GraphIO.orderGraph(s, dir).edges),
         ComponentStrengthFloor)),
     // components on the EVENT graph: bipartite users × event types —
     // every user reaches every other through the hot types, so full
     // engagement connectivity is certified under hot-key skew
-    "evt_graph_components" -> ((s, dir) =>
+    gate("evt_graph_components", Event,
+      Oracles.graphComponents(graph = Oracles.eventGraphCtes))((s, dir) =>
       ConnectedComponents.componentsOn(
         Triangles.undirected(GraphIO.eventGraph(s, dir).edges))),
     // indexed twins: the star-forest contraction re-keys edges every
     // round (x→y orientation flips), so bucket metadata cannot help —
     // read the persisted projection with bucketed = false, the
     // link_predict_indexed precedent
-    "graph_components_indexed" -> ((s, dir) => {
+    gate("graph_components_indexed", Order,
+      Oracles.graphComponents())((s, dir) => {
       val idx = structIdxDir(s, dir)
       ConnectedComponents.componentsOn(
         StructuralIndex.undirected(s, idx, bucketed = false))
     }),
-    "graph_components_weighted_indexed" -> ((s, dir) => {
+    gate("graph_components_weighted_indexed", Order,
+      Oracles.graphComponents(
+        minStrength = ComponentStrengthFloor))((s, dir) => {
       val idx = structIdxDir(s, dir)
       ConnectedComponents.componentsWeightedOn(
         StructuralIndex.undirectedWeighted(s, idx, bucketed = false),
@@ -449,27 +496,27 @@ object SparkEntry {
     // peel with a non-empty truss at every SF; k=5 empties the order
     // graph at sf0.01+). Support peel enumerates triangles
     // degree-oriented per round (the Triangles wedge discipline).
-    "graph_ktruss" -> ((s, dir) =>
+    gate("graph_ktruss", Order, Oracles.kTruss())((s, dir) =>
       KTruss.run(GraphIO.orderGraph(s, dir).edges, 4)
         .orderBy(col("a"), col("b"))),
-    "graph_ktruss_indexed" -> ((s, dir) => {
+    gate("graph_ktruss_indexed", Order, Oracles.kTruss())((s, dir) => {
       val idx = structIdxDir(s, dir)
       KTruss.runOn(StructuralIndex.undirected(s, idx, bucketed = false), 4)
         .orderBy(col("a"), col("b"))
     }),
-    "rank_topk" -> ((s, dir) => {
+    gate("rank_topk", Order, Oracles.rankTopK())((s, dir) => {
       val auths = Salsa.runSimplified(GraphIO.orderGraph(s, dir).edges).auths
       RankOutput.topK(auths, 10)
         .select(col("id"), round(col("score"), 9).as("score"))
     }),
-    "sample_hash" -> ((s, dir) =>
+    gate("sample_hash", Order, Oracles.sampleHash())((s, dir) =>
       GraphIO.orderGraph(s, dir).nodes.select(col("id"))
         .filter(GraftHash.graftHash(s, col("id")) % 100 < 5)
         .orderBy(col("id"))),
     // S5 graph-render model: the annotated (id, color, width) node set
     // behind the reference's HubAndAuthorities PNG view, hash-sampled so
     // DuckDB replays the identical selection.
-    "render_model" -> ((s, dir) => {
+    gate("render_model", Order, Oracles.renderModel())((s, dir) => {
       val g = GraphIO.orderGraph(s, dir)
       val r = Hits.run(g)
       val (nodes, _) = RankOutput.renderModelHash(g.edges, r.hubs, r.auths,
@@ -480,13 +527,14 @@ object SparkEntry {
         round(col("width"), 2).as("width")).orderBy(col("id"))
     }),
     // ---- PageRank extension (kernel-family completeness) ----
-    "pagerank" -> ((s, dir) =>
+    gate("pagerank", Order, Oracles.pageRank())((s, dir) =>
       PageRank.run(GraphIO.orderGraph(s, dir))
         .select(col("id"), round(col("score"), 9).as("score"))
         .orderBy(col("id"))),
     // Personalized variant: teleport uniform over the 'part' seed set
     // — the PageRank analogue of topic-specific HITS.
-    "pagerank_personalized" -> ((s, dir) =>
+    gate("pagerank_personalized", Order,
+      Oracles.pageRankPersonalized(Topic))((s, dir) =>
       PageRank.runPersonalized(GraphIO.orderGraph(s, dir), Topic)
         .select(col("id"), round(col("score"), 9).as("score"))
         .orderBy(col("id"))),
@@ -499,7 +547,9 @@ object SparkEntry {
     // Delta checks batched on 13,16,19,22,25: the sf0.01 stop stays at
     // the measured 25 (delta(22) ≈ delta(24)/0.85² ≈ 1.4e-7 ≥ tol with
     // ~2.4× margin), with 5 delta jobs instead of 25.
-    "pagerank_converged" -> ((s, dir) => {
+    gate("pagerank_converged", Order,
+      Oracles.pageRankConverged(numIter = 25),
+      rederive = Some(Oracles.pageRankConverged(_, _)))((s, dir) => {
       import s.implicits._
       val fp =
         PageRank.runConverged(GraphIO.orderGraph(s, dir), 0.85, 5.8e-8, 60,
@@ -510,9 +560,9 @@ object SparkEntry {
         .orderBy(col("id"))
     }),
     // ---- event-graph kernels (skewed in-degree coverage) ----
-    "evt_hits_base" -> ((s, dir) =>
+    gate("evt_hits_base", Event, Oracles.hitsEventBase)((s, dir) =>
       hitsOut(Hits.run(GraphIO.eventGraph(s, dir)))),
-    "evt_salsa_weighted" -> ((s, dir) =>
+    gate("evt_salsa_weighted", Event, Oracles.salsaEventWeighted)((s, dir) =>
       salsaOut(Salsa.runWeightedSimplified(GraphIO.eventGraph(s, dir).edges))),
     // ---- convergence extension; oracle-gated by determinizing the
     // fixed point: the sf0.01 gate corpus converges at iteration 12,
@@ -526,7 +576,9 @@ object SparkEntry {
     // Delta checks batched on 6,9,12,15: the sf0.01 stop stays at the
     // measured 12 (delta(9) > delta(11) ≥ 1.6e-6 ≥ tol), with 3 delta
     // jobs instead of 12.
-    "hits_converged" -> ((s, dir) => {
+    gate("hits_converged", Order,
+      Oracles.hitsConverged(numIter = 12),
+      rederive = Some(Oracles.hitsConverged(_, _)))((s, dir) => {
       import s.implicits._
       val fp =
         Hits.runConverged(GraphIO.orderGraph(s, dir), 1.2e-6, 16,
@@ -538,31 +590,32 @@ object SparkEntry {
         .orderBy(col("kind"), col("id"))
     }),
     // ---- events: batch twins of the streaming pipeline ----
-    "events_sessionize" -> ((s, dir) =>
+    gate("events_sessionize", Flat, Oracles.sessionize())((s, dir) =>
       EventPipelines.sessionizeBatch(GraphIO.events(s, dir))),
     // Salt-and-merge twin: same sessions from bounded partitions (the
     // hot-user skew posture); gated on the UNCHANGED sessionize oracle
     // — the gate IS the output-equality proof.
-    "events_sessionize_salted" -> ((s, dir) =>
+    gate("events_sessionize_salted", Flat, Oracles.sessionize())((s, dir) =>
       EventPipelines.sessionizeSalted(GraphIO.events(s, dir))),
     // Native session_window twin: the built-in gap-session operator,
     // boundary-aligned (gap+1µs over integer-µs event times), gated on
     // the UNCHANGED sessionize oracle — the gate IS the equality proof.
-    "events_sessionize_native" -> ((s, dir) =>
+    gate("events_sessionize_native", Flat, Oracles.sessionize())((s, dir) =>
       EventPipelines.sessionizeNativeExact(GraphIO.events(s, dir))),
-    "events_window" -> ((s, dir) =>
+    gate("events_window", Flat, Oracles.eventsWindow)((s, dir) =>
       EventPipelines.windowedStatsBatch(GraphIO.events(s, dir))),
-    "events_rollup" -> ((s, dir) =>
+    gate("events_rollup", Flat, Oracles.eventsRollup)((s, dir) =>
       EventPipelines.typeRollup(GraphIO.events(s, dir))),
     // Interval-union engagement time per user (exact integer nanos).
-    "events_active_time" -> ((s, dir) =>
+    gate("events_active_time", Flat, Oracles.eventsActiveTime())((s, dir) =>
       EventPipelines.activeTime(GraphIO.events(s, dir))),
     // Exponentially decayed per-type counts anchored at max ts.
-    "events_decayed" -> ((s, dir) =>
+    gate("events_decayed", Flat, Oracles.eventsDecayedCounts())((s, dir) =>
       EventPipelines.decayedCounts(GraphIO.events(s, dir))),
-    "events_running_totals" -> ((s, dir) =>
+    gate("events_running_totals", Flat,
+      Oracles.eventsRunningTotals())((s, dir) =>
       EventPipelines.runningTotals(GraphIO.events(s, dir))),
-    "skew_salted_join" -> ((s, dir) => {
+    gate("skew_salted_join", Flat, Oracles.skewSaltedJoin)((s, dir) => {
       val ev = GraphIO.events(s, dir)
       val dims = ev.select(col("event_type").as("et2"),
         upper(col("event_type")).as("tag")).distinct()
@@ -573,19 +626,19 @@ object SparkEntry {
           round(sum(col("value")) * lit(100.0)).cast("long").as("cents"))
         .orderBy(col("tag"))
     }),
-    "events_asof" -> ((s, dir) =>
+    gate("events_asof", Flat, Oracles.eventsAsof)((s, dir) =>
       EventPipelines.asofPurchaseView(GraphIO.events(s, dir))),
-    "events_range_join" -> ((s, dir) =>
+    gate("events_range_join", Flat, Oracles.eventsRangeJoin())((s, dir) =>
       EventPipelines.rangeJoinClicksBeforeErrors(GraphIO.events(s, dir))),
-    "events_props_json" -> ((s, dir) =>
+    gate("events_props_json", Flat, Oracles.eventsPropsJson)((s, dir) =>
       EventPipelines.propsJsonStats(GraphIO.events(s, dir))),
-    "events_top_users" -> ((s, dir) =>
+    gate("events_top_users", Flat, Oracles.eventsTopUsers)((s, dir) =>
       EventPipelines.topUsers(GraphIO.events(s, dir))
         .withColumn("rn", col("rn").cast("long"))),
     // Deterministic KMV sketch: the approximate distinct-user count
     // itself is oracle-gated (integer-exact k-smallest sketch +
     // op-order-matched estimator), next to the exact count.
-    "events_kmv_users" -> ((s, dir) => {
+    gate("events_kmv_users", Flat, Oracles.eventsKmvUsers())((s, dir) => {
       val ev = GraphIO.events(s, dir)
       val exact = ev.groupBy(col("event_type"))
         .agg(countDistinct(col("user_id")).as("n_exact"))
@@ -598,7 +651,7 @@ object SparkEntry {
     // The sketch at realistic token-level cardinality: per-source
     // distinct 3-gram shingles — where exact countDistinct shuffles
     // every key and the KMV sketch ships 256 int64s per group.
-    "corpus_shingle_kmv" -> ((s, dir) => {
+    gate("corpus_shingle_kmv", Flat, Oracles.corpusShingleKmv())((s, dir) => {
       val sh = GraphIO.documents(s, dir)
         .select(col("source"), explode(TF.shingles(col("text"), 3)).as("v"))
       val exact = sh.groupBy(col("source"))
@@ -611,21 +664,22 @@ object SparkEntry {
     // Sketch-based source-overlap audit: pairwise Jaccard between the
     // 20 sources' shingle sets from the same sketches — integer set
     // algebra on <=K-element arrays, no raw-data join.
-    "corpus_source_overlap_kmv" -> ((s, dir) =>
+    gate("corpus_source_overlap_kmv", Flat,
+      Oracles.corpusSourceOverlapKmv())((s, dir) =>
       Sketches.kmvPairwiseJaccard(s,
         GraphIO.documents(s, dir)
           .select(col("source"), explode(TF.shingles(col("text"), 3)).as("v")),
         col("source"), col("v"))),
     // ---- sequence packing (LLM batch assembly) ----
-    "pack_sequences" -> ((s, dir) =>
+    gate("pack_sequences", Flat, Oracles.packSequences())((s, dir) =>
       Packing.packDocs(s, GraphIO.documents(s, dir), "doc_id", "text",
         capacity = 2000L, buckets = 8).orderBy(col("doc_id"))),
-    "pack_manifest" -> ((s, dir) =>
+    gate("pack_manifest", Flat, Oracles.packManifest())((s, dir) =>
       Packing.packManifest(
         Packing.packDocs(s, GraphIO.documents(s, dir), "doc_id", "text",
           capacity = 2000L, buckets = 8), "doc_id").orderBy(col("pack"))),
     // ---- text analysis ----
-    "text_stats" -> ((s, dir) =>
+    gate("text_stats", Flat, Oracles.textStats)((s, dir) =>
       GraphIO.documents(s, dir).select(col("doc_id"),
         TF.tokenCount(col("text")).cast("long").as("n_tokens"),
         TF.punctCount(col("text")).cast("long").as("n_punct"),
@@ -633,34 +687,35 @@ object SparkEntry {
         TF.langId(col("text")).as("lang_pred"),
         round(TF.qualityScore(col("text")), 6).as("quality"))
         .orderBy(col("doc_id"))),
-    "text_fingerprint" -> ((s, dir) =>
+    gate("text_fingerprint", Flat, Oracles.textFingerprint)((s, dir) =>
       GraphIO.documents(s, dir).select(col("doc_id"),
         TF.fingerprint(s, col("text")).as("fp"))
         .orderBy(col("doc_id"))),
-    "text_repetition" -> ((s, dir) =>
+    gate("text_repetition", Flat, Oracles.textRepetition)((s, dir) =>
       TextMetrics.repetitionSignals(GraphIO.documents(s, dir))),
-    "text_tfidf" -> ((s, dir) =>
+    gate("text_tfidf", Flat, Oracles.textTfidf)((s, dir) =>
       TextMetrics.tfidf(GraphIO.documents(s, dir))),
-    "text_scrub" -> ((s, dir) =>
+    gate("text_scrub", Flat,
+      Oracles.textScrub("(customer|supplier)", "[X]"))((s, dir) =>
       TextMetrics.scrub(GraphIO.documents(s, dir),
         "(customer|supplier)", "[X]")),
-    "corpus_mixture" -> ((s, dir) =>
+    gate("corpus_mixture", Flat, Oracles.corpusMixture)((s, dir) =>
       TextMetrics.mixtureReport(GraphIO.documents(s, dir))),
-    "sample_quota" -> ((s, dir) =>
+    gate("sample_quota", Flat, Oracles.sampleQuota())((s, dir) =>
       Sampling.quotaPerGroup(s, GraphIO.documents(s, dir),
         "source", "doc_id", 25)),
     // Both split and shuffle now carry the full input row; the gates
     // project one payload column (source) alongside the assignment so
     // the pass-through itself is oracle-checked.
-    "sample_split" -> ((s, dir) =>
+    gate("sample_split", Flat, Oracles.sampleSplit())((s, dir) =>
       Sampling.splitByHash(s, GraphIO.documents(s, dir), "doc_id",
         Seq("train" -> 900, "val" -> 50, "test" -> 50))
         .select(col("doc_id"), col("source"), col("split"))
         .orderBy(col("doc_id"))),
-    "corpus_shuffle" -> ((s, dir) =>
+    gate("corpus_shuffle", Flat, Oracles.corpusShuffle)((s, dir) =>
       Sampling.shuffleByHash(s, GraphIO.documents(s, dir), "doc_id")
         .select(col("doc_id"), col("source"), col("sort_key"))),
-    "decontaminate" -> ((s, dir) => {
+    gate("decontaminate", Flat, Oracles.decontaminate())((s, dir) => {
       val d = GraphIO.documents(s, dir)
       Dedup.benchmarkContamination(s,
         d.filter(col("doc_id") % 10 =!= 7), d.filter(col("doc_id") % 10 === 7))
@@ -669,16 +724,18 @@ object SparkEntry {
     // the exact confirm; n_hits must match `decontaminate` (no false
     // negatives), n_bloom exposes the FP tail. The oracle replays the
     // bitmap bit-for-bit.
-    "decontaminate_bloom" -> ((s, dir) => {
+    gate("decontaminate_bloom", Flat,
+      Oracles.decontaminateBloom())((s, dir) => {
       val d = GraphIO.documents(s, dir)
       Dedup.benchmarkContaminationBloom(s,
         d.filter(col("doc_id") % 10 =!= 7), d.filter(col("doc_id") % 10 === 7))
     }),
-    "events_percentiles" -> ((s, dir) =>
+    gate("events_percentiles", Flat, Oracles.eventsPercentiles)((s, dir) =>
       EventPipelines.typePercentiles(GraphIO.events(s, dir))),
-    "pipeline_clean_corpus" -> ((s, dir) =>
+    gate("pipeline_clean_corpus", Flat,
+      Oracles.pipelineCleanCorpus())((s, dir) =>
       Dedup.cleanCorpus(s, GraphIO.documents(s, dir))),
-    "text_normalize" -> ((s, dir) => {
+    gate("text_normalize", Flat, Oracles.textNormalize)((s, dir) => {
       val norm = TF.normalizeText(s, col("text"))
       GraphIO.documents(s, dir).select(col("doc_id"),
           norm.as("norm_text"),
@@ -686,11 +743,11 @@ object SparkEntry {
         .orderBy(col("doc_id"))
     }),
     // ---- dedup ----
-    "dedup_exact" -> ((s, dir) =>
+    gate("dedup_exact", Flat, Oracles.dedupExact)((s, dir) =>
       Dedup.exact(GraphIO.documents(s, dir))),
-    "dedup_exact_hash" -> ((s, dir) =>
+    gate("dedup_exact_hash", Flat, Oracles.dedupExactHash)((s, dir) =>
       Dedup.exactByHash(s, GraphIO.documents(s, dir))),
-    "text_langid_ngram" -> ((s, dir) =>
+    gate("text_langid_ngram", Flat, Oracles.textLangIdNgram)((s, dir) =>
       GraphIO.documents(s, dir).select(col("doc_id"),
         TF.langIdNgram(col("text")).as("lang_tri"))
         .orderBy(col("doc_id"))),
@@ -701,7 +758,7 @@ object SparkEntry {
     // rounds over the capped word-type dictionary, then the learned
     // K-row merge list is collected (the IVF-centroid pattern) and
     // applied corpus-wide.
-    "text_bpe_tokens" -> ((s, dir) => {
+    gate("text_bpe_tokens", Flat, Oracles.textBpeTokensTrained())((s, dir) => {
       val bpe = new graft.functions.BpeTokenizer(
         graft.pipelines.BpeTrain.trainedVocab(GraphIO.documents(s, dir)))
       GraphIO.documents(s, dir).select(col("doc_id"),
@@ -712,74 +769,75 @@ object SparkEntry {
     // The BPE TRAINER itself, gate-shaped: the learned merge list in
     // rank order, replayed merge-for-merge by the DuckDB oracle
     // (pair-count argmax + leftmost fold per round).
-    "bpe_train" -> ((s, dir) =>
+    gate("bpe_train", Flat, Oracles.bpeTrain())((s, dir) =>
       graft.pipelines.BpeTrain.merges(GraphIO.documents(s, dir))),
     // Driver-local greedy twin at the same merge count — the bounded
     // word dictionary trains on the driver (one corpus job instead of
     // two jobs PER MERGE), and the gate shares bpe_train's greedy
     // oracle verbatim: the speedup is job-count only, never a merge.
-    "bpe_train_fast" -> ((s, dir) =>
+    gate("bpe_train_fast", Flat, Oracles.bpeTrain())((s, dir) =>
       graft.pipelines.BpeTrain.merges(GraphIO.documents(s, dir),
         fast = true)),
-    "dedup_simhash" -> ((s, dir) =>
+    gate("dedup_simhash", Flat, Oracles.dedupSimhash)((s, dir) =>
       Dedup.simhash(s, GraphIO.documents(s, dir))),
-    "dedup_clusters" -> ((s, dir) =>
+    gate("dedup_clusters", Flat, Oracles.dedupClusters)((s, dir) =>
       ConnectedComponents.clusters(
         Dedup.minhashLsh(s, GraphIO.documents(s, dir), ordered = false))),
     // Same clusters via the large-star/small-star engine (O(log d)
     // rounds — the adversarial-chain-safe variant); oracle shared with
     // dedup_clusters because the output contract is identical.
-    "dedup_clusters_star" -> ((s, dir) =>
+    gate("dedup_clusters_star", Flat, Oracles.dedupClusters)((s, dir) =>
       ConnectedComponents.clustersStar(
         Dedup.minhashLsh(s, GraphIO.documents(s, dir), ordered = false))),
-    "pipeline_near_dedup" -> ((s, dir) =>
+    gate("pipeline_near_dedup", Flat, Oracles.pipelineNearDedup)((s, dir) =>
       Dedup.nearDedupCorpus(s, GraphIO.documents(s, dir))),
-    "dedup_minhash_lsh" -> ((s, dir) =>
+    gate("dedup_minhash_lsh", Flat, Oracles.dedupMinHashLsh)((s, dir) =>
       Dedup.minhashLsh(s, GraphIO.documents(s, dir))),
-    "dedup_minhash_signature" -> ((s, dir) =>
+    gate("dedup_minhash_signature", Flat,
+      Oracles.dedupMinHashSignature)((s, dir) =>
       Dedup.minhashSignature(s, GraphIO.documents(s, dir))),
-    "dedup_ngram_jaccard" -> ((s, dir) =>
+    gate("dedup_ngram_jaccard", Flat, Oracles.dedupNgramJaccard())((s, dir) =>
       Dedup.ngramJaccard(GraphIO.documents(s, dir))),
-    "dedup_passages" -> ((s, dir) =>
+    gate("dedup_passages", Flat, Oracles.dedupPassages())((s, dir) =>
       Dedup.repeatedPassages(s, GraphIO.documents(s, dir))),
     // exact-substring span dedup (Lee et al. 2021 shape): maximal
     // cross-document duplicated ≥k-token spans, and the cleaner that
     // cuts them
-    "dedup_spans" -> ((s, dir) =>
+    gate("dedup_spans", Flat, Oracles.dedupSpans())((s, dir) =>
       Dedup.dedupSpans(s, GraphIO.documents(s, dir))),
-    "dedup_spans_occ" -> ((s, dir) =>
+    gate("dedup_spans_occ", Flat, Oracles.dedupSpans(minOcc = 2))((s, dir) =>
       Dedup.dedupSpans(s, GraphIO.documents(s, dir), minOcc = 2)),
-    "dedup_spans_clean" -> ((s, dir) =>
+    gate("dedup_spans_clean", Flat, Oracles.dedupSpansClean())((s, dir) =>
       Dedup.dedupSpansClean(s, GraphIO.documents(s, dir))),
-    "dedup_embedding" -> ((s, dir) =>
+    gate("dedup_embedding", Flat, Oracles.dedupEmbedding(0.3))((s, dir) =>
       Similarity.nearDuplicates(GraphIO.embeddings(s, dir), 0.3)),
     // ---- similarity search ----
     // nlist pinned: the DuckDB twin is static SQL, so the gate fixes
     // the cell count; library callers omitting nlist get the
     // √N-derived default ([[graft.pipelines.Similarity.autoNlist]]).
-    "dedup_semantic" -> ((s, dir) =>
+    gate("dedup_semantic", Flat, Oracles.dedupSemantic(0.3))((s, dir) =>
       Similarity.semanticDuplicates(GraphIO.embeddings(s, dir), 0.3,
         nlist = 8)),
     // The five ANN gates all route through the unified
     // [[graft.pipelines.Similarity.ann]] entry point, so what the
     // oracles certify is the one surface users call.
-    "ann_topk" -> ((s, dir) =>
+    gate("ann_topk", Flat, Oracles.annTopK())((s, dir) =>
       Similarity.ann(GraphIO.embeddings(s, dir), Similarity.AnnStrategy.Exact)
         .withColumn("rn", col("rn").cast("long"))),
     // Cluster-composition report: one broadcast IVF assignment pass +
     // a per-cell hash agg — corpus inspection before mixture choices.
-    "corpus_clusters" -> ((s, dir) =>
+    gate("corpus_clusters", Flat, Oracles.corpusClusters())((s, dir) =>
       Similarity.clusterReport(GraphIO.embeddings(s, dir), nlist = 8)),
-    "ann_topk_lsh" -> ((s, dir) =>
+    gate("ann_topk_lsh", Flat, Oracles.annTopKLsh())((s, dir) =>
       Similarity.ann(GraphIO.embeddings(s, dir), Similarity.AnnStrategy.Lsh)
         .withColumn("rn", col("rn").cast("long"))),
     // matryoshka rung: prefix-cosine candidates (dims/D of the float
     // reads), exact full-vector rerank — the dimension-reduction axis
     // of the ladder
-    "ann_topk_mrl" -> ((s, dir) =>
+    gate("ann_topk_mrl", Flat, Oracles.annTopKMrl())((s, dir) =>
       Similarity.ann(GraphIO.embeddings(s, dir), Similarity.AnnStrategy.Mrl)
         .withColumn("rn", col("rn").cast("long"))),
-    "ann_topk_ivf" -> ((s, dir) =>
+    gate("ann_topk_ivf", Flat, Oracles.annTopKIvf())((s, dir) =>
       Similarity.ann(GraphIO.embeddings(s, dir), Similarity.AnnStrategy.Ivf,
           nlist = 8)
         .withColumn("rn", col("rn").cast("long"))),
@@ -787,7 +845,7 @@ object SparkEntry {
     // cells, rerank pool a fraction of the PROBED population — the
     // sublinear form of the dimension axis (retires autoMrlCand's
     // linear ⌈N/5⌉ asymptote for the deployed default path).
-    "ann_topk_mrl_ivf" -> ((s, dir) =>
+    gate("ann_topk_mrl_ivf", Flat, Oracles.annTopKMrlIvf())((s, dir) =>
       Similarity.ann(GraphIO.embeddings(s, dir),
           Similarity.AnnStrategy.MrlIvf, nlist = 8)
         .withColumn("rn", col("rn").cast("long"))),
@@ -795,7 +853,7 @@ object SparkEntry {
     // comparator sorts result columns with pandas, which cannot order an
     // array-typed column — the native array<bigint> API
     // ([[graft.pipelines.Similarity.quantizeQ8]]) is unchanged.
-    "embed_quantize" -> ((s, dir) =>
+    gate("embed_quantize", Flat, Oracles.embedQuantize)((s, dir) =>
       Similarity.quantizeQ8(GraphIO.embeddings(s, dir))
         .select(col("vec_id"), col("ma"),
           posexplode(col("q")).as(Seq("pos", "qv")))
@@ -806,28 +864,29 @@ object SparkEntry {
     // 10-byte codes (m=16 subspaces × 32 codewords ≈ 26× smaller than
     // the float column), derived rerank pool max(12k, ⌈N/20⌉); the
     // sublinear deployable form is the IVF composition below
-    "ann_topk_pq" -> ((s, dir) =>
+    gate("ann_topk_pq", Flat, Oracles.annTopKPq())((s, dir) =>
       Similarity.ann(GraphIO.embeddings(s, dir), Similarity.AnnStrategy.Pq)
         .withColumn("rn", col("rn").cast("long"))),
     // IVFPQ — the canonical memory-bound 100 TB ANN shape: probed
     // cells shrink the scanned SET, codes shrink the bytes per scanned
     // vector, rerank pool scales with the probed population (raw-
     // vector codes, so ONE code table serves both PQ rungs)
-    "ann_topk_pq_ivf" -> ((s, dir) =>
+    gate("ann_topk_pq_ivf", Flat, Oracles.annTopKPqIvf())((s, dir) =>
       Similarity.ann(GraphIO.embeddings(s, dir),
           Similarity.AnnStrategy.PqIvf, nlist = 8)
         .withColumn("rn", col("rn").cast("long"))),
-    "ann_topk_q8" -> ((s, dir) =>
+    gate("ann_topk_q8", Flat, Oracles.annTopKQ8())((s, dir) =>
       Similarity.ann(GraphIO.embeddings(s, dir), Similarity.AnnStrategy.Q8)
         .withColumn("rn", col("rn").cast("long"))),
-    "ann_topk_q8_ivf" -> ((s, dir) =>
+    gate("ann_topk_q8_ivf", Flat, Oracles.annTopKQ8Ivf())((s, dir) =>
       Similarity.ann(GraphIO.embeddings(s, dir), Similarity.AnnStrategy.Q8Ivf,
           nlist = 8)
         .withColumn("rn", col("rn").cast("long"))),
     // The full 100 TB ANN configuration — cell probe + int8 prefilter +
     // centroid training on the hash-gated half sample — certified
     // end-to-end: the oracle replays the identical training gate.
-    "ann_topk_q8_ivf_sampled" -> ((s, dir) =>
+    gate("ann_topk_q8_ivf_sampled", Flat,
+      Oracles.annTopKQ8Ivf(trainPermille = 500))((s, dir) =>
       Similarity.ann(GraphIO.embeddings(s, dir), Similarity.AnnStrategy.Q8Ivf,
           nlist = 8, trainFraction = 0.5)
         .withColumn("rn", col("rn").cast("long"))),
@@ -835,7 +894,7 @@ object SparkEntry {
     // and the cell-repartitioned assigned corpus), read it back, probe
     // — must equal the in-memory rung, so the gate shares
     // ann_topk_ivf's oracle verbatim.
-    "ann_topk_ivf_persisted" -> ((s, dir) => {
+    gate("ann_topk_ivf_persisted", Flat, Oracles.annTopKIvf())((s, dir) => {
       val idxDir = "target/graft-ivf-" + dir.replaceAll("[^a-zA-Z0-9]", "_")
       Similarity.ivfIndexWrite(GraphIO.embeddings(s, dir), idxDir, nlist = 8)
       Similarity.annTopKIvfPersisted(s, idxDir, GraphIO.embeddings(s, dir))
@@ -853,7 +912,7 @@ object SparkEntry {
     // them to the corpus's trained centroids and proves append+compact
     // reproduce assign-from-scratch — including the cell REASSIGNMENT
     // of every re-ingested vector.
-    "ann_topk_ivf_appended" -> ((s, dir) => {
+    gate("ann_topk_ivf_appended", Flat, Oracles.annTopKIvf())((s, dir) => {
       val base = "target/graft-ivflc-" + dir.replaceAll("[^a-zA-Z0-9]", "_")
       val emb = GraphIO.embeddings(s, dir)
       val updated = col("vec_id") % 7 === 3
@@ -879,7 +938,7 @@ object SparkEntry {
     // recall@k of every approximate rung against the exact rung, both
     // deterministic, so the recall numbers themselves are oracle-checked
     // (the DuckDB twin recomputes each rung and intersects).
-    "ann_recall_audit" -> ((s, dir) =>
+    gate("ann_recall_audit", Flat, Oracles.annRecallAudit())((s, dir) =>
       Similarity.recallAudit(GraphIO.embeddings(s, dir))),
     // Recall DRIFT of the appended index (r13 missing #2): centroids
     // trained when only the first half of the corpus existed, the rest
@@ -887,81 +946,91 @@ object SparkEntry {
     // append+compact ops — recall@k and cell-occupancy imbalance (the
     // documented rebuild trigger) side by side with the fresh rebuild,
     // all four rows recomputed by the DuckDB twin.
-    "ann_recall_audit_appended" -> ((s, dir) =>
+    gate("ann_recall_audit_appended", Flat,
+      Oracles.annRecallAuditAppended())((s, dir) =>
       Similarity.recallAuditAppended(GraphIO.embeddings(s, dir))),
     // ---- multimodal plumbing ----
-    "multimodal_meta" -> ((s, dir) =>
+    gate("multimodal_meta", Flat, Oracles.multimodalMeta)((s, dir) =>
       Multimodal.metaQuery(s, GraphIO.documents(s, dir))),
-    "multimodal_chunks" -> ((s, dir) =>
+    gate("multimodal_chunks", Flat, Oracles.multimodalChunks())((s, dir) =>
       Multimodal.chunkFingerprints(s, GraphIO.documents(s, dir))),
     // REAL codec proof: encode each doc's bytes as a genuine gray-8
     // PNG and decode it back via javax.imageio (pure JDK) — lossless,
     // so the oracle replays the decoded stats from the raw bytes.
-    "multimodal_image_roundtrip" -> ((s, dir) =>
+    gate("multimodal_image_roundtrip", Flat,
+      Oracles.multimodalImageRoundtrip)((s, dir) =>
       graft.pipelines.Images.imageRoundTrip(s, GraphIO.documents(s, dir))),
     // REAL 2-D resize proof: PNG → ImageIoCodec.resize (decode,
     // nearest-neighbor both axes, re-encode) → decode — lossless hops,
     // so the oracle replays the resized stats from raw bytes.
-    "multimodal_resize_real" -> ((s, dir) =>
+    gate("multimodal_resize_real", Flat,
+      Oracles.multimodalResizeReal(factor = 2))((s, dir) =>
       graft.pipelines.Images.resizedRoundTrip(s,
         GraphIO.documents(s, dir), factor = 2)),
     // REAL multi-frame path: animated gray GIF (the JDK's only
     // writable+readable multi-frame container) → per-frame decode →
     // every-2nd-frame sampling — the video-pipeline shape without a
     // JDK video codec.
-    "multimodal_frames" -> ((s, dir) =>
+    gate("multimodal_frames", Flat,
+      Oracles.multimodalFrames(stride = 2))((s, dir) =>
       graft.pipelines.Images.frameSample(s, GraphIO.documents(s, dir),
         stride = 2)),
     // REAL audio codec proof: bytes → 8-bit PCM WAV → AudioSystem
     // decode; lossless, so the oracle replays from raw bytes.
-    "multimodal_audio_roundtrip" -> ((s, dir) =>
+    gate("multimodal_audio_roundtrip", Flat,
+      Oracles.multimodalAudioRoundtrip)((s, dir) =>
       graft.pipelines.Audio.audioRoundTrip(s, GraphIO.documents(s, dir))),
-    "multimodal_features" -> ((s, dir) =>
+    gate("multimodal_features", Flat, Oracles.multimodalFeatures)((s, dir) =>
       featureRows(Multimodal.extractFeatures(s,
         Multimodal.withPayload(GraphIO.documents(s, dir))).toDF())),
-    "multimodal_resize" -> ((s, dir) =>
+    gate("multimodal_resize", Flat, Oracles.multimodalResize())((s, dir) =>
       featureRows(Multimodal.extractFeatures(s,
         Multimodal.resizeAll(s,
           Multimodal.withPayload(GraphIO.documents(s, dir)), 4).toDF())
         .toDF())),
     // Character-entropy garbled/binary-content detector.
-    "text_char_entropy" -> ((s, dir) =>
+    gate("text_char_entropy", Flat, Oracles.textCharEntropy)((s, dir) =>
       TextMetrics.charEntropy(GraphIO.documents(s, dir))),
     // CCNet-style unigram NLL quality signal over the corpus's own
     // unigram distribution (micro-nat-exact cross-engine).
-    "text_unigram_nll" -> ((s, dir) =>
+    gate("text_unigram_nll", Flat, Oracles.textUnigramNll)((s, dir) =>
       TextMetrics.unigramNll(GraphIO.documents(s, dir))),
     // Order-sensitive companion: conditional bigram surprise — high for
     // common tokens in uncommon order (shuffled/stitched text).
-    "text_bigram_nll" -> ((s, dir) =>
+    gate("text_bigram_nll", Flat, Oracles.textBigramNll)((s, dir) =>
       TextMetrics.bigramNll(GraphIO.documents(s, dir))),
     // Model-based filtering: multinomial NB trained on the hash-gated
     // half of the corpus's own labels, scored on the held-out half —
     // micro-nat-exact, so the PREDICTIONS are oracle-gated, not just
     // the scores. Language axis + source/domain axis.
-    "classify_nb" -> ((s, dir) =>
+    gate("classify_nb", Flat, Oracles.classifyNaiveBayes("lang"))((s, dir) =>
       Classify.naiveBayes(s, GraphIO.documents(s, dir), "lang")),
-    "classify_nb_source" -> ((s, dir) =>
+    gate("classify_nb_source", Flat,
+      Oracles.classifyNaiveBayes("source"))((s, dir) =>
       Classify.naiveBayes(s, GraphIO.documents(s, dir), "source")),
     // Stratified curation: each source keeps its own best quantile.
-    "sample_quality_cutoff_by_source" -> ((s, dir) =>
+    gate("sample_quality_cutoff_by_source", Flat,
+      Oracles.sampleQualityCutoffBySource())((s, dir) =>
       TextMetrics.qualityCutoffBySource(GraphIO.documents(s, dir))),
     // Vocabulary induction: the tokenizer-training input (tf/df per
     // term, min-count floor, size-capped deterministic ranking).
-    "text_vocabulary" -> ((s, dir) =>
+    gate("text_vocabulary", Flat, Oracles.textVocabulary())((s, dir) =>
       TextMetrics.vocabulary(GraphIO.documents(s, dir))),
     // Cross-source quotation matrix over winnow fingerprints.
-    "corpus_quote_matrix" -> ((s, dir) =>
+    gate("corpus_quote_matrix", Flat, Oracles.corpusQuoteMatrix())((s, dir) =>
       Dedup.sourceQuoteMatrix(s, GraphIO.documents(s, dir))),
     // Asymmetric containment (quote/inclusion detection).
-    "dedup_containment" -> ((s, dir) =>
+    gate("dedup_containment", Flat,
+      Oracles.dedupContainment(threshold = 0.5))((s, dir) =>
       Dedup.containment(GraphIO.documents(s, dir), threshold = 0.5)),
     // Full curation chain: normalize → gate → dedup → temperature draw.
-    "pipeline_curate" -> ((s, dir) =>
+    gate("pipeline_curate", Flat,
+      Oracles.pipelineCurate(
+        minQuality = 0.5, lang = "en", total = 100, alpha = 0.5))((s, dir) =>
       Dedup.curate(s, GraphIO.documents(s, dir))),
     // Incremental (delta) dedup: odd doc_ids arrive against the even
     // half's fingerprint store.
-    "dedup_incremental" -> ((s, dir) => {
+    gate("dedup_incremental", Flat, Oracles.dedupIncremental)((s, dir) => {
       val d = GraphIO.documents(s, dir)
       Dedup.dedupIncremental(s,
         d.filter(col("doc_id") % 2 === 0), d.filter(col("doc_id") % 2 === 1))
@@ -971,9 +1040,11 @@ object SparkEntry {
     // dedup_incremental — O(delta) probes, no corpus self-join).
     // Candidate triage: estimated Jaccard (matching MinHash slots /
     // 16) per LSH candidate pair — the prune-before-exact-verify rung.
-    "dedup_minhash_estimate" -> ((s, dir) =>
+    gate("dedup_minhash_estimate", Flat,
+      Oracles.dedupMinhashEstimate)((s, dir) =>
       Dedup.minhashEstimate(s, GraphIO.documents(s, dir))),
-    "dedup_incremental_minhash" -> ((s, dir) => {
+    gate("dedup_incremental_minhash", Flat,
+      Oracles.dedupIncrementalMinhash)((s, dir) => {
       val d = GraphIO.documents(s, dir)
       Dedup.incrementalMinhash(s,
         d.filter(col("doc_id") % 2 === 0), d.filter(col("doc_id") % 2 === 1))
@@ -983,7 +1054,8 @@ object SparkEntry {
     // gate shares dedup_clusters' oracle verbatim, so the equality IS
     // the check (including new docs bridging previously separate
     // clusters).
-    "dedup_clusters_incremental" -> ((s, dir) => {
+    gate("dedup_clusters_incremental", Flat,
+      Oracles.dedupClusters)((s, dir) => {
       val d = GraphIO.documents(s, dir)
       Dedup.incrementalClusters(s,
         d.filter(col("doc_id") % 2 === 0), d.filter(col("doc_id") % 2 === 1))
@@ -994,7 +1066,8 @@ object SparkEntry {
     // signatures, the index probe, the delta self-join, and components
     // over star+probe edges. Shares dedup_clusters' from-scratch
     // oracle: the persisted-state path must equal a full rebuild.
-    "dedup_clusters_incremental_indexed" -> ((s, dir) => {
+    gate("dedup_clusters_incremental_indexed", Flat,
+      Oracles.dedupClusters)((s, dir) => {
       val d = GraphIO.documents(s, dir)
       val base = d.filter(col("doc_id") % 2 === 0)
       val tmp = "target/graft-clidx-" + dir.replaceAll("[^a-zA-Z0-9]", "_")
@@ -1015,7 +1088,7 @@ object SparkEntry {
     // computes. Retirement is load-bearing: if compaction failed to
     // drop the superseded signatures, the stale (different-text) sigs
     // would survive and hash-mismatch the rebuild.
-    "band_index_lifecycle" -> ((s, dir) => {
+    gate("band_index_lifecycle", Flat, Oracles.bandIndexLifecycle)((s, dir) => {
       val d = GraphIO.documents(s, dir)
       val updated = d.filter(col("doc_id") % 10 === 0)
       val stale = updated
@@ -1027,42 +1100,48 @@ object SparkEntry {
       Dedup.bandIndexCompact(idx).orderBy(col("doc_id"), col("band"))
     }),
     // Context-window chunking with stride (doc → embedding inputs).
-    "text_chunks" -> ((s, dir) =>
+    gate("text_chunks", Flat,
+      Oracles.textChunks(size = 32, stride = 16))((s, dir) =>
       Packing.chunkTokens(GraphIO.documents(s, dir), size = 32, stride = 16)),
     // Winnowing (MOSS) fingerprint selection over word 3-grams.
-    "dedup_winnow" -> ((s, dir) =>
+    gate("dedup_winnow", Flat, Oracles.dedupWinnow(k = 3, w = 4))((s, dir) =>
       Dedup.winnow(s, GraphIO.documents(s, dir), k = 3, w = 4)),
     // Z-order (Morton) value for the two-dimensional write layout.
-    "layout_zorder" -> ((s, dir) =>
+    gate("layout_zorder", Flat, Oracles.layoutZorder(bits = 8))((s, dir) =>
       GraphIO.documents(s, dir).select(col("doc_id"),
         graft.pipelines.Layout.zValue(col("doc_id"), col("n_chars"), 8)
           .as("z"))
         .orderBy(col("doc_id"))),
     // Per-source best-k curation by the composite quality score.
-    "sample_topk_quality" -> ((s, dir) =>
+    gate("sample_topk_quality", Flat,
+      Oracles.sampleTopkQuality(k = 10))((s, dir) =>
       Sampling.topKPerGroup(GraphIO.documents(s, dir), "source", "doc_id",
         TF.qualityScore(col("text")), k = 10)),
     // Same result via the k-bounded TopKAgg (no full-group sort) —
     // shares the window formulation's oracle, proving partial-agg
     // equivalence under the gate.
-    "sample_topk_quality_agg" -> ((s, dir) =>
+    gate("sample_topk_quality_agg", Flat,
+      Oracles.sampleTopkQuality(k = 10))((s, dir) =>
       Sampling.topKPerGroupAgg(s, GraphIO.documents(s, dir), "source",
         "doc_id", TF.qualityScore(col("text")), k = 10)),
     // Dynamic-threshold curation: keep the best quality quartile.
-    "sample_quality_cutoff" -> ((s, dir) =>
+    gate("sample_quality_cutoff", Flat,
+      Oracles.sampleQualityCutoff())((s, dir) =>
       TextMetrics.qualityCutoff(GraphIO.documents(s, dir))),
     // Efraimidis–Spirakis weighted draw, quality-weighted.
-    "sample_weighted" -> ((s, dir) =>
+    gate("sample_weighted", Flat, Oracles.sampleWeighted(n = 50))((s, dir) =>
       Sampling.weightedSample(s, GraphIO.documents(s, dir), "doc_id",
         TF.qualityScore(col("text")) + lit(0.1), n = 50)),
     // Temperature-scaled (alpha=0.5) mixture draw over sources.
-    "sample_temperature" -> ((s, dir) =>
+    gate("sample_temperature", Flat,
+      Oracles.sampleTemperature(total = 200, alpha = 0.5))((s, dir) =>
       Sampling.temperatureSample(s, GraphIO.documents(s, dir),
         "source", "doc_id", total = 200, alpha = 0.5)),
     // Token-budget curation: per source, the maximal quality-first
     // prefix whose running token total stays within the budget — the
     // selection a mixture builder runs once per-source budgets are set.
-    "sample_token_budget" -> ((s, dir) =>
+    gate("sample_token_budget", Flat,
+      Oracles.sampleTokenBudget(1500L))((s, dir) =>
       Sampling.tokenBudgetPerGroup(GraphIO.documents(s, dir), "source",
         "doc_id", TF.qualityScore(col("text")),
         TF.tokenCount(col("text")), budget = 1500L)),
@@ -1072,7 +1151,8 @@ object SparkEntry {
     // a prefix sum; range slices preserve the global order). Gated on
     // the UNCHANGED window-formulation oracle — the gate IS the
     // output-equality proof.
-    "sample_token_budget_sliced" -> ((s, dir) =>
+    gate("sample_token_budget_sliced", Flat,
+      Oracles.sampleTokenBudget(1500L))((s, dir) =>
       Sampling.tokenBudgetPerGroupSliced(GraphIO.documents(s, dir),
         "source", "doc_id", TF.qualityScore(col("text")),
         TF.tokenCount(col("text")), budget = 1500L)),
@@ -1089,7 +1169,9 @@ object SparkEntry {
     // Spark side but a hard CAST error in DuckDB — outside the
     // contract, the engines intentionally diverge loudly, not
     // silently.
-    "dedup_canonical_priority" -> ((s, dir) =>
+    gate("dedup_canonical_priority", Flat,
+      Oracles.dedupCanonicalPriority(
+        "CAST(substr(source, 4) AS INT) % 5"))((s, dir) =>
       Dedup.canonicalByPriority(s, GraphIO.documents(s, dir),
         expr("substring(source, 4)").cast("int") % 5)),
     // Indexed twin: survivors re-picked from PERSISTED cluster
@@ -1097,7 +1179,9 @@ object SparkEntry {
     // parquet in-gate) — the trust-policy-change path, which re-picks
     // canonicals WITHOUT re-running the corpus-sized dedup. Shares the
     // from-scratch oracle verbatim.
-    "dedup_canonical_priority_indexed" -> ((s, dir) => {
+    gate("dedup_canonical_priority_indexed", Flat,
+      Oracles.dedupCanonicalPriority(
+        "CAST(substr(source, 4) AS INT) % 5"))((s, dir) => {
       val base = "target/graft-canidx-" + dir.replaceAll("[^a-zA-Z0-9]", "_")
       val docs = GraphIO.documents(s, dir)
       ConnectedComponents.clusters(Dedup.minhashLsh(s, docs,
@@ -1108,7 +1192,8 @@ object SparkEntry {
     }),
     // Count-Min point estimates over corpus tokens: probe terms plus
     // one absent probe (exercises the empty-cell → 0 path).
-    "corpus_token_cms" -> ((s, dir) =>
+    gate("corpus_token_cms", Flat,
+      Oracles.corpusTokenCms(CmsProbes))((s, dir) =>
       Sketches.cmsCounts(s,
         GraphIO.documents(s, dir)
           .select(explode(TF.tokens(col("text"))).as("tok")),
@@ -1116,7 +1201,7 @@ object SparkEntry {
     // Exact heavy hitters: Misra-Gries bounded candidate pass + exact
     // recount of the ≤ k candidates — the output is exactly the tokens
     // with frequency > n/(k+1), merge-order-independent.
-    "corpus_heavy_tokens" -> ((s, dir) =>
+    gate("corpus_heavy_tokens", Flat, Oracles.corpusHeavyTokens())((s, dir) =>
       Sketches.heavyHitters(s,
         GraphIO.documents(s, dir)
           .select(explode(TF.tokens(col("text"))).as("tok")),
@@ -1127,7 +1212,7 @@ object SparkEntry {
     // stream length — and the AvailableNow run drains the parquet as
     // one finite stream. The oracle is the batch cells SQL: streaming
     // and batch must produce the identical grid.
-    "stream_token_cms" -> ((s, dir) => {
+    gate("stream_token_cms", Flat, Oracles.streamTokenCms)((s, dir) => {
       val name = "graft_stream_cms_gate"
       val schema = GraphIO.documents(s, dir).schema
       // real directory-shaped file-stream source (GraphIO.streamingDir
@@ -1154,7 +1239,7 @@ object SparkEntry {
     // stream nanos arithmetic and the µs-resolution oracle see the
     // same instants. Oracle: the batch twin restricted to the sessions
     // a finite drain actually closes (see Oracles.streamSessionize).
-    "stream_sessionize" -> ((s, dir) => {
+    gate("stream_sessionize", Flat, Oracles.streamSessionize())((s, dir) => {
       val name = "graft_stream_sessionize_gate"
       val ev = GraphIO.eventsStream(s, dir)
         .withColumn("ts", expr("ts div 1000 * 1000"))
@@ -1180,7 +1265,8 @@ object SparkEntry {
     // drains are backend-portable (off-heap state, the 100 TB
     // deployment default). Passes stream_sessionize's oracle
     // UNCHANGED.
-    "stream_sessionize_tws" -> ((s, dir) => {
+    gate("stream_sessionize_tws", Flat,
+      Oracles.streamSessionize())((s, dir) => {
       val name = "graft_stream_sessionize_tws_gate"
       val ev = GraphIO.eventsStream(s, dir)
         .withColumn("ts", expr("ts div 1000 * 1000"))
@@ -1204,7 +1290,7 @@ object SparkEntry {
     // complete mode (state = windows × types, bounded) drained
     // AvailableNow — the canonical streaming aggregation, gated
     // against the same hour-bucket arithmetic in DuckDB.
-    "stream_window" -> ((s, dir) => {
+    gate("stream_window", Flat, Oracles.streamWindow)((s, dir) => {
       val name = "graft_stream_window_gate"
       val ev = GraphIO.eventsStream(s, dir)
         .withColumn("ts", timestamp_micros(expr("ts div 1000")))
@@ -1226,7 +1312,8 @@ object SparkEntry {
     // drain the fold order equals the batch window's frame order, so
     // the batch oracle passes unchanged (no closed-set restriction —
     // every event emits at arrival, nothing waits on a watermark).
-    "stream_running_totals" -> ((s, dir) => {
+    gate("stream_running_totals", Flat,
+      Oracles.eventsRunningTotals())((s, dir) => {
       val name = "graft_stream_running_gate"
       s.catalog.dropTempView(name) // idempotent re-run in one session
       val q = withDrainWidth(s, GraphIO.events(s, dir)) {
@@ -1256,7 +1343,7 @@ object SparkEntry {
     // union of both outputs at full row fidelity, so the oracle (both
     // batch oracles, union'd under the same tags) catches cross-drain
     // interference in EITHER drain.
-    "stream_two_drains" -> ((s, dir) => {
+    gate("stream_two_drains", Flat, Oracles.streamTwoDrains())((s, dir) => {
       val nameW = "graft_two_drains_window"
       val nameT = "graft_two_drains_totals"
       s.catalog.dropTempView(nameW) // idempotent re-run in one session
@@ -1308,7 +1395,8 @@ object SparkEntry {
     // per-user sequence in exact (ts, event_id) order across BOTH
     // batch and phase boundaries — the general resumed-drain shape,
     // not the r14 one-batch-per-phase crutch.
-    "stream_restart_totals" -> ((s, dir) =>
+    gate("stream_restart_totals", Flat,
+      Oracles.eventsRunningTotals())((s, dir) =>
       graft.streaming.Restart.twoPhaseDrain(s, GraphIO.events(s, dir),
           "totals", dir,
           src => EventPipelines.runningTotalsStream(s, src).toDF())
@@ -1328,7 +1416,8 @@ object SparkEntry {
     // (ts, event_id) order — a skipped odd event that still bumped a
     // total, or a restart that silently rebuilt state from scratch,
     // is a loud hash mismatch.
-    "stream_restart_evolved" -> ((s, dir) =>
+    gate("stream_restart_evolved", Flat,
+      Oracles.eventsRunningTotalsEvolved())((s, dir) =>
       graft.streaming.Restart.twoPhaseDrain(s, GraphIO.events(s, dir),
           "evolved", dir,
           src => EventPipelines.runningTotalsStream(s, src).toDF(),
@@ -1348,7 +1437,8 @@ object SparkEntry {
     // watermark, hence beyond the session's gap deadline).
     // Shares the single-drain stream_sessionize oracle verbatim; ts is
     // µs-floored before the stream like that gate.
-    "stream_restart_sessionize" -> ((s, dir) =>
+    gate("stream_restart_sessionize", Flat,
+      Oracles.streamSessionize())((s, dir) =>
       graft.streaming.Restart.twoPhaseDrain(s,
           GraphIO.events(s, dir)
             .withColumn("ts", expr("ts div 1000 * 1000")),
@@ -1369,7 +1459,8 @@ object SparkEntry {
     // engine ever read the session value instead, phase 2 would route
     // keys to partitions whose restored state lives elsewhere — lost
     // accumulators, wrong totals, loud hash mismatch.
-    "stream_restart_repartitioned" -> ((s, dir) => {
+    gate("stream_restart_repartitioned", Flat,
+      Oracles.eventsRunningTotals())((s, dir) => {
       val key = "spark.sql.shuffle.partitions"
       val orig = s.conf.get(key)
       val altered = (scala.util.Try(orig.toInt)
@@ -1392,7 +1483,7 @@ object SparkEntry {
     // events must extend/close them exactly as the never-stopped
     // drain would. Same µs-floor, same unchanged single-drain
     // stream_sessionize oracle as the fMGWS restart gate.
-    "stream_restart_tws" -> ((s, dir) =>
+    gate("stream_restart_tws", Flat, Oracles.streamSessionize())((s, dir) =>
       Tws.withRocksDbStateStore(s) {
         graft.streaming.Restart.twoPhaseDrain(s,
             GraphIO.events(s, dir)
@@ -1408,7 +1499,8 @@ object SparkEntry {
     // instances are per state-store partition, so the checkpoint-
     // pinned partition count is what lets a resized session reopen
     // the right RocksDB instances (timers included) on resume.
-    "stream_restart_tws_repartitioned" -> ((s, dir) => {
+    gate("stream_restart_tws_repartitioned", Flat,
+      Oracles.streamSessionize())((s, dir) => {
       val key = "spark.sql.shuffle.partitions"
       val orig = s.conf.get(key)
       val altered = (scala.util.Try(orig.toInt)
@@ -1434,7 +1526,7 @@ object SparkEntry {
     // the emitted set is exactly the batch interval join — the oracle is
     // the same range predicate in DuckDB at µs resolution (ts is
     // µs-floored going into the stream, like the batch twin's µs floor).
-    "stream_range_join" -> ((s, dir) => {
+    gate("stream_range_join", Flat, Oracles.streamRangeJoin())((s, dir) => {
       val name = "graft_stream_rangejoin_gate"
       val ev = GraphIO.eventsStream(s, dir)
         .withColumn("ts", timestamp_micros(expr("ts div 1000")))
@@ -1460,7 +1552,7 @@ object SparkEntry {
     // order, so the gate projects only the key columns — the emitted KEY
     // set on a finite drain is exactly the distinct pairs, which is what
     // the DuckDB oracle checks.
-    "stream_dedup" -> ((s, dir) => {
+    gate("stream_dedup", Flat, Oracles.streamDedup)((s, dir) => {
       val name = "graft_stream_dedup_gate"
       val ev = GraphIO.eventsStream(s, dir)
         .withColumn("ts", timestamp_micros(expr("ts div 1000")))
@@ -1483,7 +1575,7 @@ object SparkEntry {
     // streaming quantile state), the drain hands the counted histogram
     // to the shared interpolation tail, and the batch percentiles
     // oracle passes UNCHANGED.
-    "stream_percentiles" -> ((s, dir) => {
+    gate("stream_percentiles", Flat, Oracles.eventsPercentiles)((s, dir) => {
       val name = "graft_stream_pct_gate"
       val ev = GraphIO.eventsStream(s, dir)
       s.catalog.dropTempView(name) // idempotent re-run in one session
@@ -1516,7 +1608,9 @@ object SparkEntry {
     // estimates NEXT TO the exact percentiles plus the observed
     // max-abs error, and asserts the documented width/2 bound — all
     // recomputed independently by the DuckDB oracle.
-    "stream_percentiles_sketch" -> ((s, dir) => {
+    gate("stream_percentiles_sketch", Flat,
+      Oracles.eventsPercentilesSketch(
+        PctSketchBins._1, PctSketchBins._2, PctSketchBins._3))((s, dir) => {
       val name = "graft_stream_pct_sketch_gate"
       val (lo, width, nbins) = PctSketchBins
       val ev = GraphIO.eventsStream(s, dir)
@@ -1580,7 +1674,8 @@ object SparkEntry {
     // (Quantiles.approxRankAudit) and checked against the ε bound; the
     // DuckDB oracle supplies the (event_type × q) universe, n, and the
     // expected all-1 flags, so a bound violation hash-mismatches.
-    "stream_percentiles_gk" -> ((s, dir) => {
+    gate("stream_percentiles_gk", Flat,
+      Oracles.eventsPercentilesGk(Seq(0.5, 0.9, 0.99)))((s, dir) => {
       val name = "graft_stream_pct_gk_gate"
       val acc = 1000 // ε = 1/1000 → rank error ≤ n/1000 + 1
       val qs = Seq(0.5, 0.9, 0.99)
@@ -1620,7 +1715,9 @@ object SparkEntry {
     // the min-doc_id rule, exactly what the DuckDB oracle replays:
     // min-id survivor per class, then the canonical chain over that
     // subset.
-    "stream_ingest_curate" -> ((s, dir) => {
+    gate("stream_ingest_curate", Flat,
+      Oracles.streamIngestCurate("CAST(substr(source, 4) AS INT) % 5",
+        reShift = 1000000000L, everyK = 3))((s, dir) => {
       val name = "graft_stream_ingest_gate"
       val reShift = 1000000000L
       val docs = GraphIO.documents(s, dir)
@@ -1681,14 +1778,29 @@ object SparkEntry {
         expr("substring(source, 4)").cast("int") % 5)
     }),
     // ---- retrieval: keyword, hybrid sparse+dense, inverted index ----
-    "search_bm25" -> ((s, dir) =>
+    gate("search_bm25", Flat, Oracles.bm25Search(SearchTerms))((s, dir) =>
       Retrieval.bm25(GraphIO.documents(s, dir), SearchTerms)),
-    "search_hybrid_rrf" -> ((s, dir) =>
+    gate("search_hybrid_rrf", Flat,
+      Oracles.hybridRrf(SearchTerms, queryVecId = 0L))((s, dir) =>
       Retrieval.hybridRrf(GraphIO.documents(s, dir),
         GraphIO.embeddings(s, dir), SearchTerms, queryVecId = 0L)),
-    "text_inverted_index" -> ((s, dir) =>
+    gate("text_inverted_index", Flat, Oracles.invertedIndex(2, 400))((s, dir) =>
       Retrieval.invertedIndex(GraphIO.documents(s, dir),
         minDf = 2, maxDf = 400)))
+
+  // a repeated name would shadow a gate in the two views below
+  require(gates.map(_.name).distinct.size == gates.size,
+    "duplicate gate names: " + gates.groupBy(_.name).collect {
+      case (n, gs) if gs.size > 1 => n }.mkString(", "))
+
+  /** Each gate's Spark query, by gate name. */
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    gates.map(g => g.name -> g.query).toMap
+
+  /** For each gate, equivalent ANSI SQL runnable by DuckDB on the same
+    * parquet tables. */
+  def oracleSql: Map[String, String] =
+    gates.map(g => g.name -> g.oracle()).toMap
 
   /** The stream_range_join / stream_dedup gates are batch-equivalent
     * ONLY when the AvailableNow drain processes all input files in one
@@ -1726,212 +1838,4 @@ object SparkEntry {
       .select(col("doc_id"), col("n_bytes"), col("byte_mean"),
         col("pos").cast("long").as("pos"), col("hist_v"))
       .orderBy(col("doc_id"), col("pos"))
-
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. */
-  def oracleSql: Map[String, String] = Map(
-    "hits_base" -> Oracles.hitsBase,
-    "hits_weighted" -> Oracles.hitsWeighted,
-    "hits_weighted_alt" -> Oracles.hitsWeightedAlt,
-    "hits_teleport" -> Oracles.hitsTeleport(),
-    "hits_topic" -> Oracles.hitsTopic(Topic),
-    "hits_topic_exclusive" -> Oracles.hitsTopicExclusive(Topic),
-    "hits_query_dependent" -> Oracles.hitsQueryDependent(Topic),
-    "hits_bucketed" -> Oracles.hitsBase,
-    "graph_bucketed_write" -> Oracles.bucketedWrite,
-    "salsa_simplified" -> Oracles.salsaSimplifiedBase,
-    "salsa_iterative" -> Oracles.salsaIterativeBase,
-    "salsa_bucketed" -> Oracles.salsaIterativeBase,
-    "salsa_weighted" -> Oracles.salsaWeighted,
-    "salsa_teleport" -> Oracles.salsaTeleport(),
-    "salsa_topic" -> Oracles.salsaTopic(Topic),
-    "salsa_query_dependent" -> Oracles.salsaQueryDependent(Topic),
-    "topics_list" -> Oracles.topicsList,
-    "graph_degrees" -> Oracles.degrees,
-    "graph_triangles" -> Oracles.triangles(),
-    "evt_graph_triangles" ->
-      Oracles.triangles(graph = Oracles.eventGraphCtes),
-    "evt_graph_label_prop" ->
-      Oracles.labelProp(graph = Oracles.eventGraphCtes),
-    "graph_link_predict" -> Oracles.linkPredict(),
-    "graph_label_prop" -> Oracles.labelProp(),
-    "graph_kcore" -> Oracles.kCore(),
-    // The *_indexed gates share the from-scratch oracles VERBATIM —
-    // that sharing IS the lifecycle proof (persisted projection ==
-    // recomputed projection, bit for bit).
-    "graph_triangles_weighted" -> Oracles.trianglesWeighted(),
-    "graph_kcore_weighted" -> Oracles.kCoreWeighted(),
-    "graph_label_prop_weighted" -> Oracles.labelProp(weighted = true),
-    "graph_triangles_approx" -> Oracles.trianglesApprox(),
-    "evt_graph_link_predict" ->
-      Oracles.linkPredict(graph = Oracles.eventGraphCtes),
-    "evt_graph_kcore" -> Oracles.kCore(graph = Oracles.eventGraphCtes),
-    "graph_link_predict_weighted" -> Oracles.linkPredictWeighted(),
-    "graph_triangles_indexed" -> Oracles.triangles(),
-    "graph_link_predict_indexed" -> Oracles.linkPredict(),
-    "graph_label_prop_indexed" -> Oracles.labelProp(),
-    "graph_kcore_indexed" -> Oracles.kCore(),
-    "graph_kcore_weighted_indexed" -> Oracles.kCoreWeighted(),
-    "graph_triangles_weighted_indexed" -> Oracles.trianglesWeighted(),
-    "graph_label_prop_weighted_indexed" -> Oracles.labelProp(weighted = true),
-    "graph_link_predict_weighted_indexed" -> Oracles.linkPredictWeighted(),
-    "graph_components" -> Oracles.graphComponents(),
-    "graph_components_weighted" ->
-      Oracles.graphComponents(minStrength = ComponentStrengthFloor),
-    "evt_graph_components" ->
-      Oracles.graphComponents(graph = Oracles.eventGraphCtes),
-    "graph_components_indexed" -> Oracles.graphComponents(),
-    "graph_components_weighted_indexed" ->
-      Oracles.graphComponents(minStrength = ComponentStrengthFloor),
-    "graph_ktruss" -> Oracles.kTruss(),
-    "graph_ktruss_indexed" -> Oracles.kTruss(),
-    "rank_topk" -> Oracles.rankTopK(),
-    "sample_hash" -> Oracles.sampleHash(),
-    "render_model" -> Oracles.renderModel(),
-    "evt_hits_base" -> Oracles.hitsEventBase,
-    "pagerank" -> Oracles.pageRank(),
-    "pagerank_personalized" -> Oracles.pageRankPersonalized(Topic),
-    "pagerank_converged" -> Oracles.pageRankConverged(numIter = 25),
-    "evt_salsa_weighted" -> Oracles.salsaEventWeighted,
-    "hits_converged" -> Oracles.hitsConverged(numIter = 12),
-    "salsa_converged" -> Oracles.salsaConverged(numIter = 13),
-    "events_sessionize" -> Oracles.sessionize(),
-    "events_sessionize_native" -> Oracles.sessionize(),
-    "events_sessionize_salted" -> Oracles.sessionize(),
-    "events_window" -> Oracles.eventsWindow,
-    "events_rollup" -> Oracles.eventsRollup,
-    "events_active_time" -> Oracles.eventsActiveTime(),
-    "events_decayed" -> Oracles.eventsDecayedCounts(),
-    "events_running_totals" -> Oracles.eventsRunningTotals(),
-    "skew_salted_join" -> Oracles.skewSaltedJoin,
-    "events_props_json" -> Oracles.eventsPropsJson,
-    "events_asof" -> Oracles.eventsAsof,
-    "events_range_join" -> Oracles.eventsRangeJoin(),
-    "events_top_users" -> Oracles.eventsTopUsers,
-    "events_kmv_users" -> Oracles.eventsKmvUsers(),
-    "corpus_shingle_kmv" -> Oracles.corpusShingleKmv(),
-    "corpus_source_overlap_kmv" -> Oracles.corpusSourceOverlapKmv(),
-    "text_stats" -> Oracles.textStats,
-    "text_repetition" -> Oracles.textRepetition,
-    "text_tfidf" -> Oracles.textTfidf,
-    "text_scrub" -> Oracles.textScrub("(customer|supplier)", "[X]"),
-    "corpus_mixture" -> Oracles.corpusMixture,
-    "sample_quota" -> Oracles.sampleQuota(),
-    "sample_split" -> Oracles.sampleSplit(),
-    "corpus_shuffle" -> Oracles.corpusShuffle,
-    "pack_sequences" -> Oracles.packSequences(),
-    "pack_manifest" -> Oracles.packManifest(),
-    "decontaminate" -> Oracles.decontaminate(),
-    "decontaminate_bloom" -> Oracles.decontaminateBloom(),
-    "embed_quantize" -> Oracles.embedQuantize,
-    "ann_topk_q8" -> Oracles.annTopKQ8(),
-    "ann_topk_pq" -> Oracles.annTopKPq(),
-    "ann_topk_pq_ivf" -> Oracles.annTopKPqIvf(),
-    "ann_topk_q8_ivf" -> Oracles.annTopKQ8Ivf(),
-    "ann_topk_q8_ivf_sampled" -> Oracles.annTopKQ8Ivf(trainPermille = 500),
-    "events_percentiles" -> Oracles.eventsPercentiles,
-    "stream_percentiles" -> Oracles.eventsPercentiles,
-    "stream_percentiles_sketch" -> Oracles.eventsPercentilesSketch(
-      PctSketchBins._1, PctSketchBins._2, PctSketchBins._3),
-    "stream_percentiles_gk" -> Oracles.eventsPercentilesGk(
-      Seq(0.5, 0.9, 0.99)),
-    "text_fingerprint" -> Oracles.textFingerprint,
-    "text_normalize" -> Oracles.textNormalize,
-    "pipeline_clean_corpus" -> Oracles.pipelineCleanCorpus(),
-    "dedup_exact" -> Oracles.dedupExact,
-    "dedup_exact_hash" -> Oracles.dedupExactHash,
-    "text_langid_ngram" -> Oracles.textLangIdNgram,
-    "text_bpe_tokens" -> Oracles.textBpeTokensTrained(),
-    "bpe_train" -> Oracles.bpeTrain(),
-    "bpe_train_fast" -> Oracles.bpeTrain(),
-    "dedup_simhash" -> Oracles.dedupSimhash,
-    "dedup_clusters" -> Oracles.dedupClusters,
-    "dedup_canonical_priority" -> Oracles.dedupCanonicalPriority(
-      "CAST(substr(source, 4) AS INT) % 5"),
-    "stream_ingest_curate" -> Oracles.streamIngestCurate(
-      "CAST(substr(source, 4) AS INT) % 5", reShift = 1000000000L,
-      everyK = 3),
-    "dedup_canonical_priority_indexed" -> Oracles.dedupCanonicalPriority(
-      "CAST(substr(source, 4) AS INT) % 5"),
-    "sample_token_budget" -> Oracles.sampleTokenBudget(1500L),
-    "sample_token_budget_sliced" -> Oracles.sampleTokenBudget(1500L),
-    "dedup_clusters_star" -> Oracles.dedupClusters,
-    "pipeline_near_dedup" -> Oracles.pipelineNearDedup,
-    "dedup_minhash_lsh" -> Oracles.dedupMinHashLsh,
-    "dedup_minhash_signature" -> Oracles.dedupMinHashSignature,
-    "dedup_ngram_jaccard" -> Oracles.dedupNgramJaccard(),
-    "dedup_passages" -> Oracles.dedupPassages(),
-    "dedup_spans" -> Oracles.dedupSpans(),
-    "dedup_spans_occ" -> Oracles.dedupSpans(minOcc = 2),
-    "dedup_spans_clean" -> Oracles.dedupSpansClean(),
-    "dedup_embedding" -> Oracles.dedupEmbedding(0.3),
-    "dedup_semantic" -> Oracles.dedupSemantic(0.3),
-    "ann_topk" -> Oracles.annTopK(),
-    "ann_recall_audit" -> Oracles.annRecallAudit(),
-    "ann_recall_audit_appended" -> Oracles.annRecallAuditAppended(),
-    "ann_topk_ivf_persisted" -> Oracles.annTopKIvf(),
-    "ann_topk_ivf_appended" -> Oracles.annTopKIvf(),
-    "corpus_clusters" -> Oracles.corpusClusters(),
-    "ann_topk_mrl" -> Oracles.annTopKMrl(),
-    "ann_topk_mrl_ivf" -> Oracles.annTopKMrlIvf(),
-    "ann_topk_lsh" -> Oracles.annTopKLsh(),
-    "ann_topk_ivf" -> Oracles.annTopKIvf(),
-    "multimodal_chunks" -> Oracles.multimodalChunks(),
-    "multimodal_meta" -> Oracles.multimodalMeta,
-    "multimodal_features" -> Oracles.multimodalFeatures,
-    "multimodal_image_roundtrip" -> Oracles.multimodalImageRoundtrip,
-    "multimodal_audio_roundtrip" -> Oracles.multimodalAudioRoundtrip,
-    "multimodal_resize" -> Oracles.multimodalResize(),
-    "multimodal_resize_real" -> Oracles.multimodalResizeReal(factor = 2),
-    "multimodal_frames" -> Oracles.multimodalFrames(stride = 2),
-    "corpus_quote_matrix" -> Oracles.corpusQuoteMatrix(),
-    "dedup_containment" -> Oracles.dedupContainment(threshold = 0.5),
-    "pipeline_curate" -> Oracles.pipelineCurate(
-      minQuality = 0.5, lang = "en", total = 100, alpha = 0.5),
-    "dedup_incremental" -> Oracles.dedupIncremental,
-    "dedup_incremental_minhash" -> Oracles.dedupIncrementalMinhash,
-    "band_index_lifecycle" -> Oracles.bandIndexLifecycle,
-    "dedup_clusters_incremental" -> Oracles.dedupClusters,
-    "dedup_clusters_incremental_indexed" -> Oracles.dedupClusters,
-    "dedup_minhash_estimate" -> Oracles.dedupMinhashEstimate,
-    "text_chunks" -> Oracles.textChunks(size = 32, stride = 16),
-    "dedup_winnow" -> Oracles.dedupWinnow(k = 3, w = 4),
-    "layout_zorder" -> Oracles.layoutZorder(bits = 8),
-    "sample_topk_quality" -> Oracles.sampleTopkQuality(k = 10),
-    "sample_topk_quality_agg" -> Oracles.sampleTopkQuality(k = 10),
-    "text_char_entropy" -> Oracles.textCharEntropy,
-    "text_unigram_nll" -> Oracles.textUnigramNll,
-    "classify_nb" -> Oracles.classifyNaiveBayes("lang"),
-    "classify_nb_source" -> Oracles.classifyNaiveBayes("source"),
-    "text_bigram_nll" -> Oracles.textBigramNll,
-    "sample_quality_cutoff_by_source" ->
-      Oracles.sampleQualityCutoffBySource(),
-    "text_vocabulary" -> Oracles.textVocabulary(),
-    "sample_temperature" -> Oracles.sampleTemperature(total = 200, alpha = 0.5),
-    "sample_weighted" -> Oracles.sampleWeighted(n = 50),
-    "sample_quality_cutoff" -> Oracles.sampleQualityCutoff(),
-    "corpus_token_cms" -> Oracles.corpusTokenCms(CmsProbes),
-    "stream_token_cms" -> Oracles.streamTokenCms,
-    "stream_sessionize" -> Oracles.streamSessionize(),
-    "stream_sessionize_tws" -> Oracles.streamSessionize(),
-    "stream_running_totals" -> Oracles.eventsRunningTotals(),
-    "stream_restart_evolved" -> Oracles.eventsRunningTotalsEvolved(),
-    // restart gates share the single-drain oracles VERBATIM: state
-    // restore across a checkpointed restart must be indistinguishable
-    // from never having stopped
-    "stream_restart_totals" -> Oracles.eventsRunningTotals(),
-    "stream_restart_sessionize" -> Oracles.streamSessionize(),
-    // resized-session restart: state partitioning is pinned by the
-    // checkpoint, so the oracle is again the never-stopped fold
-    "stream_restart_repartitioned" -> Oracles.eventsRunningTotals(),
-    "stream_restart_tws" -> Oracles.streamSessionize(),
-    "stream_restart_tws_repartitioned" -> Oracles.streamSessionize(),
-    "stream_window" -> Oracles.streamWindow,
-    "stream_two_drains" -> Oracles.streamTwoDrains(),
-    "stream_range_join" -> Oracles.streamRangeJoin(),
-    "stream_dedup" -> Oracles.streamDedup,
-    "corpus_heavy_tokens" -> Oracles.corpusHeavyTokens(),
-    "search_bm25" -> Oracles.bm25Search(SearchTerms),
-    "search_hybrid_rrf" -> Oracles.hybridRrf(SearchTerms, queryVecId = 0L),
-    "text_inverted_index" -> Oracles.invertedIndex(2, 400))
 }

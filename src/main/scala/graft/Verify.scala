@@ -1,8 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
+/** Driver-run correctness dump: each SparkEntry.gates query → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
   *
   * Usage: `Verify <sfDir> <outDir> [query ...]` — extra args restrict the
@@ -13,36 +12,20 @@ object Verify {
     require(args.length >= 2, "usage: Verify <sfDir> <outDir> [query ...]")
     val (sfDir, outDir) = (args(0), args(1))
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Same rationale as Bench: the kernels release superseded
-      // checkpoints eagerly; the periodic drain and the timeout headroom
-      // are belt-and-braces so a transient stall degrades one query
-      // instead of killing the JVM.
-      .config("spark.cleaner.periodicGC.interval", "5min")
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.network.timeout", "600s")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
+    val spark = Sessions.local(Sessions.defaultCpus, "graft-verify")
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Family-ordered like Bench: each graph family's persisted blocks are
     // dropped as soon as its last query is dumped.
-    val byFam = SparkEntry.queries.toSeq
-      .filter { case (n, _) => only.isEmpty || only(n) }
-      .groupBy { case (n, _) => Bench.family(n) }
-    Bench.familyOrder.foreach { fam =>
-      byFam.getOrElse(fam, Nil).sortBy(_._1).foreach { case (name, fn) =>
+    val gates = SparkEntry.gates.filter(g => only.isEmpty || only(g.name))
+    Bench.familyRuns(gates).foreach { case (fam, gs) =>
+      gs.foreach { g =>
         var df: org.apache.spark.sql.DataFrame = null
         try {
-          df = fn(spark, sfDir)
-          df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+          df = g.query(spark, sfDir)
+          df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/${g.name}")
         } catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          System.err.println(s"[verify] ${g.name} failed: ${e.getMessage}")
         } finally {
           // Release the query's score checkpoints whether or not the dump
           // succeeded — a failed write must not leak its materialized
@@ -50,7 +33,7 @@ object Verify {
           if (df != null) Checkpoints.releaseAll(df)
         }
       }
-      if (fam != "flat") GraphIO.evict(spark, sfDir, Seq(fam))
+      fam.foreach(k => GraphIO.evict(spark, sfDir, Seq(k)))
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -68,44 +51,38 @@ object Verify {
     // iteration count, which is a property of the corpus (e.g. HITS: 12
     // at sf0.01, 14 at sf0.001). Each kernel appends its actual count as
     // a marker row, so read the count it just reported for THIS sfDir
-    // and re-derive the oracle — Verify is then scale-correct with no
-    // per-sf constant edits. The marker's score column is selected BY
-    // NAME (a schema reorder must fail loudly, not misread a value), and
-    // a fallback to the pinned sf0.01 oracle is logged.
+    // and re-derive the oracle (the gate's `rederive`) — Verify is then
+    // scale-correct with no per-sf constant edits. The marker's score
+    // column is selected BY NAME (a schema reorder must fail loudly, not
+    // misread a value), and a fallback to the pinned sf0.01 oracle is
+    // logged.
     // Two marker rows per converged kernel: the iteration count (id =
     // 'n_iter') and the kernel's own converged verdict (0|1 under id =
-    // 'converged'). hits/salsa carry a 'kind' column whose marker rows
-    // are tagged 'iter' — filter on it too so a node literally named
-    // "n_iter" could never shadow the marker. Both feed the re-derived
-    // oracle.
-    def reportedMarker(name: String, hasKind: Boolean,
-        markerVal: String): Option[Double] =
+    // 'converged'). Where the dump has a 'kind' column (hits/salsa) the
+    // marker rows are tagged 'iter' — filter on it too so a node
+    // literally named "n_iter" could never shadow the marker.
+    def reportedMarker(name: String, markerVal: String): Option[Double] =
       try {
         val base = spark.read.parquet(s"$outDir/$name")
-        val filtered =
-          if (hasKind) base.where(col("kind") === "iter" &&
-            col("id") === markerVal)
-          else base.where(col("id") === markerVal)
-        Some(filtered.select(col("score")).head.getDouble(0))
+        val marker =
+          if (base.columns.contains("kind")) col("kind") === "iter" &&
+            col("id") === markerVal
+          else col("id") === markerVal
+        Some(base.where(marker).select(col("score")).head.getDouble(0))
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name: could not read reported " +
           s"'$markerVal' marker (${e.getMessage}); " +
           "keeping the pinned sf0.01 oracle")
         None
       }
-    val adaptive: Seq[(String, Boolean, (Int, Boolean) => String)] = Seq(
-      ("hits_converged", true, (n, c) => Oracles.hitsConverged(n, c)),
-      ("salsa_converged", true, (n, c) => Oracles.salsaConverged(n, c)),
-      ("pagerank_converged", false,
-        (n, c) => Oracles.pageRankConverged(n, c)))
-    val oracles = adaptive.foldLeft(SparkEntry.oracleSql) {
-      case (acc, (name, hasKind, gen)) =>
-        if (only.nonEmpty && !only(name)) acc
-        else (for {
-          n <- reportedMarker(name, hasKind, "n_iter")
-          c <- reportedMarker(name, hasKind, "converged")
-        } yield acc.updated(name, gen(n.toInt, c != 0.0))).getOrElse(acc)
-    }
+    val oracles = SparkEntry.gates.map { g =>
+      val rederived = g.rederive.filter(_ => only.isEmpty || only(g.name))
+        .flatMap(gen => for {
+          n <- reportedMarker(g.name, "n_iter")
+          c <- reportedMarker(g.name, "converged")
+        } yield gen(n.toInt, c != 0.0))
+      g.name -> rederived.getOrElse(g.oracle())
+    }.toMap
     val json = oracles
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

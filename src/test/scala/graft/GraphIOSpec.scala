@@ -140,5 +140,22 @@ class GraphIOSpec extends SparkSuite {
     // by unrolling to the gate corpus's converged iteration count.
     assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
     assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet)
+    // one registry entry per gate: a repeated name would shadow a gate
+    val names = SparkEntry.gates.map(_.name)
+    assert(names.diff(names.distinct).isEmpty)
+    assert(names.size == 182)
+    // a family Bench does not run would drop its gates from the run
+    assert(SparkEntry.gates.map(_.family).toSet
+      .subsetOf(Bench.familyOrder.toSet))
+  }
+
+  test("the session factory carries the shipped conf") {
+    // TestSpark is Sessions.local(4, ...): the conf every main ships
+    assert(spark.sparkContext.master == "local[4]")
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+    assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
+    val rules = spark.sessionState.optimizer.extendedOperatorOptimizationRules
+    assert(rules.contains(plans.DisjunctiveSemiJoinRewrite))
+    assert(rules.contains(plans.TokenContainsPushdown))
   }
 }

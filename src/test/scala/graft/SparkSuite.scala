@@ -5,14 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared session for the whole test run (SparkSessions are heavy). */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4, "graft-test")
 }
 
 trait SparkSuite extends AnyFunSuite {

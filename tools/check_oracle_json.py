@@ -5,35 +5,14 @@ oracle_rows, err}}.
 
 Usage: check_oracle_json.py <sf_dir> <verify_out_dir> <json_out> [query ...]
 """
-import sys, time, json, glob, os, hashlib
-import duckdb
-
-TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]
-
-
-def canon(rows, cols):
-    idx = sorted(range(len(cols)), key=lambda i: cols[i])
-    out = []
-    for r in rows:
-        vals = []
-        for i in idx:
-            v = r[i]
-            if isinstance(v, float):
-                v = repr(round(v, 12))
-            vals.append(str(v))
-        out.append("|".join(vals))
-    return sorted(out)
+import sys, time, json, glob, hashlib
+from check_oracle import canon, connect
 
 
 def main():
     sf_dir, out_dir, json_out = sys.argv[1], sys.argv[2], sys.argv[3]
     only = set(sys.argv[4:])
-    con = duckdb.connect()
-    for t in TABLES:
-        p = f"{sf_dir}/{t}.parquet"
-        if os.path.exists(p):
-            con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    con = connect(sf_dir)
     oracles = json.load(open(f"{out_dir}/oracle_sql.json"))
     results = {}
     for name, sql in sorted(oracles.items()):
