@@ -264,8 +264,8 @@ object GraphIO {
     * FILES, so those are byte-copied once per (sfDir, table) into
     * `target/stream-src/…/<table>/` and the copy's directory returned
     * (length-checked so a regenerated testdata file refreshes the
-    * copy). A table that is already a directory — every derived
-    * ScaleBench corpus, every production layout — streams in place. */
+    * copy). A table that is already a directory — the reps× corpus
+    * ScaleBench derives, every production layout — streams in place. */
   def streamingDir(sfDir: String, table: String): String = {
     val src = new java.io.File(s"$sfDir/$table.parquet")
     require(src.exists, s"no $table.parquet under $sfDir")

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.logging.log4j.Level
+import org.apache.logging.log4j.core.config.Configurator
 import org.apache.spark.sql.SparkSession
 
 /** The one session conf graft ships: every main and the test fixture
@@ -13,8 +15,8 @@ object Sessions {
 
   /** A `local[cpus]` session (`SPARK_MASTER` overrides the master) with
     * one shuffle partition per core. */
-  def local(cpus: Int, appName: String): SparkSession =
-    SparkSession.builder()
+  def local(cpus: Int, appName: String): SparkSession = {
+    val spark = SparkSession.builder()
       .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
       .appName(appName)
       .config("spark.sql.shuffle.partitions", cpus.toString)
@@ -34,4 +36,13 @@ object Sessions {
       .config("spark.network.timeout", "600s")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .getOrCreate()
+    // Both checkpoint paths localCheckpoint a `.map(_.copy())` RDD, and
+    // unpersisting one logs a WARN that its lineage is truncated — one
+    // benign line per release, half of a Verify log. Set after
+    // getOrCreate: Spark installs its default log4j2 profile on first
+    // use, which would reset an earlier level; a later setLogLevel only
+    // moves the root logger.
+    Configurator.setLevel("org.apache.spark.rdd.MapPartitionsRDD", Level.ERROR)
+    spark
+  }
 }

@@ -147,6 +147,8 @@ class GraphIOSpec extends SparkSuite {
     // a family Bench does not run would drop its gates from the run
     assert(SparkEntry.gates.map(_.family).toSet
       .subsetOf(Bench.familyOrder.toSet))
+    // ScaleBench times registered gates only
+    assert(ScaleBench.sweep.toSet.subsetOf(names.toSet))
   }
 
   test("the session factory carries the shipped conf") {
@@ -157,5 +159,9 @@ class GraphIOSpec extends SparkSuite {
     val rules = spark.sessionState.optimizer.extendedOperatorOptimizationRules
     assert(rules.contains(plans.DisjunctiveSemiJoinRewrite))
     assert(rules.contains(plans.TokenContainsPushdown))
+    // the per-release "locally checkpointed" warning is quieted
+    assert(org.apache.logging.log4j.LogManager
+      .getLogger("org.apache.spark.rdd.MapPartitionsRDD").getLevel ==
+      org.apache.logging.log4j.Level.ERROR)
   }
 }

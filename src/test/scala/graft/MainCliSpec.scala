@@ -630,6 +630,15 @@ class MainCliSpec extends SparkSuite {
     intercept[Main.CliArgError] {
       Main.run(spark, "split", Array(docsPath, s"$tmp/x", "doc_id", "9k"))
     }
+    // per-mille weights that are not a partition of 1000
+    intercept[Main.CliArgError] {
+      Main.run(spark, "split",
+        Array(docsPath, s"$tmp/x", "doc_id", "900", "50", "40"))
+    }
+    // a by_source flag that is not a boolean
+    intercept[Main.CliArgError] {
+      Main.run(spark, "quality_cut", Array(docsPath, s"$tmp/x", "0.5", "yes"))
+    }
     // missing in/out, unknown method, unknown verb, missing topic
     intercept[Main.CliArgError] { Main.run(spark, "dedup", Array(docsPath)) }
     intercept[Main.CliArgError] {
@@ -639,6 +648,18 @@ class MainCliSpec extends SparkSuite {
     intercept[Main.CliArgError] {
       Main.run(spark, "topic_specific_hits", Array())
     }
+  }
+
+  test("usage names every declared verb exactly once") {
+    val names = Main.verbs.flatMap(_.names)
+    assert(names.size == 72)
+    val usage = Main.usageText
+    names.foreach { n =>
+      val hits = s"(?<!\\w)${java.util.regex.Pattern.quote(n)}(?!\\w)".r
+        .findAllIn(usage).size
+      assert(hits == 1, s"$n appears $hits times in the usage text")
+    }
+    intercept[Main.CliArgError] { Main.run(spark, "no_such_verb", Array()) }
   }
 
   test("pack verb: custom id/text column names (documented args 4/5)") {
