@@ -62,7 +62,10 @@ object AdaptiveWidth {
   /** Runs `body` with `spark.sql.shuffle.partitions` set to `k`, so the
     * loop's aggregation exchanges plan at the same width as its caches
     * and checkpoints — every per-iteration join is then co-partitioned
-    * at `k` (restored in `finally`). Session-global, like the planner
+    * at `k` (restored in `finally`). Its one operator caller is
+    * [[Fixpoint]], whose kernel loop and structural round loop run
+    * under it; the streaming drains (`SparkEntry.withDrainWidth`,
+    * `Restart`) are the others. Session-global, like the planner
     * hints the kernels already scope per loop: the graft drivers run
     * queries sequentially on one thread; a session shared across
     * threads would need a cloned session instead (documented

@@ -6,18 +6,19 @@ import org.apache.spark.storage.StorageLevel
 
 /** Deterministic lifecycle for per-iteration plan checkpoints.
   *
-  * Every iterative kernel (HITS, SALSA, PageRank, connected components)
-  * truncates its growing logical plan by checkpointing the fresh score
-  * vector each iteration. Spark frees a checkpoint's storage blocks only
+  * Every iterative operator on [[Fixpoint]]'s two loops (the kernels;
+  * components, label propagation and the peels) truncates its growing
+  * logical plan by checkpointing the fresh vector or edge set each
+  * iteration. Spark frees a checkpoint's storage blocks only
   * when the ContextCleaner notices the dead RDD reference — which
   * requires a driver GC to run first. Over a long multi-query run
   * (exactly what a 100 TB pipeline is) the superseded MEMORY_AND_DISK
   * blocks accumulate between GCs and heap health becomes a GC-timing
   * lottery; round 4's scoring harness died of it. The fix is
-  * structural, not JVM flags: each loop keeps a handle to the previous
-  * iteration's checkpointed plan and [[release]]s its blocks as soon as
-  * the next one is materialized, so the live block set per kernel stays
-  * O(2·|V|) regardless of run length.
+  * structural, not JVM flags: each of the two loops keeps a handle to
+  * the previous iteration's checkpointed plan and [[release]]s its
+  * blocks as soon as the next one is materialized, so the live block
+  * set per operator stays two generations regardless of run length.
   *
   * [[materialize]] also carries the fault-tolerance knob for real
   * clusters: `localCheckpoint` stores blocks on the executors and is NOT
@@ -110,8 +111,18 @@ object Checkpoints {
     * than once (an L2 normalization scans its input twice) is released
     * once. */
   def releaseAll(df: DataFrame): Unit =
+    leaves(df).distinctBy(_.id).foreach(releaseRdd(df.sparkSession, _))
+
+  /** Whether `result` reads the checkpoint `df` (false when `df` is not a
+    * checkpoint). */
+  private[graft] def reads(result: DataFrame)(df: DataFrame): Boolean =
+    df.queryExecution.analyzed match {
+      case lr: LogicalRDD => leaves(result).exists(_.id == lr.rdd.id)
+      case _ => false
+    }
+
+  private def leaves(df: DataFrame): Seq[org.apache.spark.rdd.RDD[_]] =
     df.queryExecution.analyzed.collect { case lr: LogicalRDD => lr.rdd }
-      .distinctBy(_.id).foreach(releaseRdd(df.sparkSession, _))
 
   /** Idempotent: an RDD already at `StorageLevel.NONE` is not unpersisted
     * again, so a second release sends no second asynchronous `RemoveRdd`

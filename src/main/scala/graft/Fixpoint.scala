@@ -21,8 +21,9 @@ import org.apache.spark.sql.functions._
   */
 case class Fixpoint[A](result: A, iterations: Int, converged: Boolean)
 
-/** The one iteration loop of the link-analysis kernels (HITS, SALSA,
-  * PageRank): a superstep of equi-join + hash aggregate over a
+/** The iteration loops. The structural operators run on [[rounds]]; the
+  * rest of this doc is the one loop of the link-analysis kernels (HITS,
+  * SALSA, PageRank): a superstep of equi-join + hash aggregate over a
   * persisted edge set, repeated on a fixed or a converged schedule.
   * The kernels supply only what differs — edge annotation,
   * contribution expression, norm, teleport — as a [[Program]]; the
@@ -141,10 +142,7 @@ object Fixpoint {
     try AdaptiveWidth.withWidth(e.bySrc.sparkSession, e.width) {
       val p = program(e)
       try iterate(p, schedule)
-      finally p.owned.foreach { df =>
-        df.unpersist(false)
-        Checkpoints.release(df)
-      }
+      finally p.owned.foreach(drop)
     } finally {
       // The loop runs eager actions, so exceptions mid-loop are real;
       // results live on their own checkpoints, so the caches can go
@@ -194,6 +192,79 @@ object Fixpoint {
     val sideOut = side.map(v => if (fixed) p.norm(v) else checkpoint(v))
     if (held != null) Checkpoints.release(held)
     Fixpoint(p.result(sideOut.orNull, carried), it, done)
+  }
+
+  /** A structural round plan's view of the loop: the loop [[width]], and
+    * the operator's choice of checkpoint for each frame it makes, which
+    * the loop tracks to release. */
+  private[graft] final class Rounds private[Fixpoint] (val width: Int) {
+    private[Fixpoint] var made = Vector.empty[DataFrame]
+    def materialize(df: DataFrame): DataFrame =
+      track(Checkpoints.materialize(df))
+    def materializeKeyed(df: DataFrame): DataFrame =
+      track(Checkpoints.materializeKeyed(df))
+    private def track(df: DataFrame): DataFrame = { made :+= df; df }
+  }
+
+  /** The one round loop of the structural operators (components, label
+    * propagation, the k-core and k-truss peels). `start` makes the first
+    * generation `S`; each `round` makes the next (`Right`) or returns the
+    * result (`Left`), so the round plan holds the stop test. The loop
+    * owns the rest:
+    *  - width: [[AdaptiveWidth.of]] on `widthOf`, the frame the rounds
+    *    re-read, handed to them as [[Rounds.width]] and set for every
+    *    round by the one [[AdaptiveWidth.withWidth]];
+    *  - the cap: a round that still makes a generation after `maxRounds`
+    *    such rounds fails loudly, since a SQL oracle that unrolls the same
+    *    bound would see a partial result;
+    *  - storage: after `start` and after each round, every frame the loop
+    *    holds (`widthOf`, the carried ones, the ones the round made) that
+    *    the new generation does not carry is dropped — checkpoint
+    *    released, cache unpersisted — so at most two generations are ever
+    *    stored; at the end, every one whose checkpoint the result does not
+    *    read; on failure, all.
+    * Returns the result and the number of rounds run, the last included.
+    */
+  private[graft] def rounds[S](widthOf: DataFrame, maxRounds: Int,
+      what: String)(carried: S => Seq[DataFrame])(start: Rounds => S)(
+      round: (Rounds, S) => Either[DataFrame, S]): (DataFrame, Int) = {
+    val r = new Rounds(AdaptiveWidth.of(widthOf))
+    var live = Seq(widthOf)
+    def keep(read: DataFrame => Boolean): Unit = {
+      (live ++ r.made).filterNot(read).foreach(drop)
+      r.made = Vector.empty
+    }
+    def carry(s: S): S = {
+      val next = carried(s)
+      keep(f => next.exists(_ eq f))
+      live = next
+      s
+    }
+    try AdaptiveWidth.withWidth(widthOf.sparkSession, r.width) {
+      @annotation.tailrec
+      def loop(s: S, n: Int): (DataFrame, Int) = round(r, s) match {
+        case Left(result) =>
+          keep(Checkpoints.reads(result))
+          (result, n)
+        case Right(next) =>
+          require(n <= maxRounds,
+            s"$what did not converge within $maxRounds rounds (raise the " +
+              "round cap; a SQL oracle that unrolls the same bound would " +
+              "see a partial result)")
+          loop(carry(next), n + 1)
+      }
+      loop(carry(start(r)), 1)
+    } catch {
+      case t: Throwable =>
+        keep(_ => false)
+        throw t
+    }
+  }
+
+  /** Frees what the loop owns of `df`: its cache and its checkpoint. */
+  private def drop(df: DataFrame): Unit = {
+    df.unpersist(false)
+    Checkpoints.release(df)
   }
 
   /** Max |Δscore| between two `(id, score)` vectors; a node missing on

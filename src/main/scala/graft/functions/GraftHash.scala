@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -138,12 +139,19 @@ object GraftHash {
   /** Register `graft_hash`/`graft_hash2`/`graft_wide_hash` for SQL and
     * `call_function`. */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_hash", exprs => GraftHash(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_hash2", exprs => GraftHash2(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_wide_hash", exprs => GraftWideHash(exprs.head), "built-in")
+    registerOnce(spark, "graft_hash")(exprs => GraftHash(exprs.head))
+    registerOnce(spark, "graft_hash2")(exprs => GraftHash2(exprs.head))
+    registerOnce(spark, "graft_wide_hash")(exprs => GraftWideHash(exprs.head))
+  }
+
+  /** Registers `name` only where the session lacks it: every column-API
+    * call lands here, and a re-registration replaces the function (and
+    * logs a WARN) for nothing. */
+  private[functions] def registerOnce(spark: SparkSession, name: String)(
+      build: Seq[Expression] => Expression): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    if (!registry.functionExists(FunctionIdentifier(name)))
+      registry.createOrReplaceTempFunction(name, build, "built-in")
   }
 
   /** Column-API entry point (registers lazily on the active session). */

@@ -53,8 +53,8 @@ object NfcNormalize {
   }
 
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "nfc_normalize", exprs => NfcNormalize(exprs.head), "built-in")
+    GraftHash.registerOnce(spark, "nfc_normalize")(
+      exprs => NfcNormalize(exprs.head))
 
   def nfcNormalize(spark: SparkSession, c: Column): Column = {
     register(spark)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Checkpoints
+import graft.Fixpoint
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -19,8 +19,9 @@ import org.apache.spark.sql.functions._
   * the |V|-sized label vector plus one hash aggregation — the same
   * join/agg discipline as the link-analysis kernel loop
   * ([[graft.Fixpoint]]), so the big edge side is shuffled once and only
-  * the label vector moves per round. Labels are `localCheckpoint`ed per
-  * round to truncate lineage.
+  * the label vector moves per round. Both engines run on
+  * [[graft.Fixpoint.rounds]], which owns the loop width, the round cap
+  * and the release of superseded label checkpoints.
   *
   * Convergence detection is one in-plan scalar per round: labels only
   * ever decrease, so `sum(comp)` is strictly monotone until the fixed
@@ -46,40 +47,32 @@ object ConnectedComponents {
     // reads the edge side co-partitioned instead of re-exchanging the
     // symmetric edge list every round, and the keyed label checkpoint
     // (hash-partitioned on id) makes the probe side exchange-free too.
-    val spark = pairs.sparkSession
     val sym = pairs.select(col(a).as("x"), col(b).as("y"))
       .unionAll(pairs.select(col(b).as("x"), col(a).as("y")))
-    // Scale-adaptive loop width — see [[graft.Fixpoint]]: the
-    // per-round stages run at the width of the symmetric edge cache,
-    // data-proportional at gate scale, `shuffle.partitions` at 100 TB.
-    val np = graft.AdaptiveWidth.of(sym)
-    val e = sym.repartition(np, col("y")).persist()
-    try graft.AdaptiveWidth.withWidth(spark, np) {
-      var comp = Checkpoints.materializeKeyed(e.groupBy(col("x").as("id"))
+    // Labels only decrease, so the checksum falls every round until the
+    // fixed point: the loop always ends, and needs no cap.
+    Fixpoint.rounds[Labels](sym, Int.MaxValue, "min-label propagation")(
+        l => Seq(l.e, l.comp)) { r =>
+      val e = sym.repartition(r.width, col("y")).persist()
+      val comp = r.materializeKeyed(e.groupBy(col("x").as("id"))
         .agg(min(col("y")).as("nmin"))
         .select(col("id"), least(col("id"), col("nmin")).as("comp")))
-      var prevSum = checksum(comp)
-      var converged = false
-      while (!converged) {
-        val nbrMin = e
-          .join(comp.select(col("id").as("y"), col("comp").as("yc"))
-            .hint("SHUFFLE_HASH"), Seq("y"))
-          .groupBy(col("x").as("id")).agg(min(col("yc")).as("nmin"))
-        val next = Checkpoints.materializeKeyed(
-          comp.join(nbrMin.hint("SHUFFLE_HASH"), Seq("id"))
-            .select(col("id"), least(col("comp"), col("nmin")).as("comp")))
-        val s = checksum(next)
-        // `next` is materialized and checksummed: the previous round's
-        // label checkpoint is unreachable — release eagerly (see
-        // [[graft.Checkpoints]]).
-        Checkpoints.release(comp)
-        converged = s == prevSum
-        prevSum = s
-        comp = next
-      }
-      comp
-    } finally e.unpersist(false)
+      Labels(e, comp, checksum(comp))
+    } { (r, l) =>
+      val nbrMin = l.e
+        .join(l.comp.select(col("id").as("y"), col("comp").as("yc"))
+          .hint("SHUFFLE_HASH"), Seq("y"))
+        .groupBy(col("x").as("id")).agg(min(col("yc")).as("nmin"))
+      val next = r.materializeKeyed(
+        l.comp.join(nbrMin.hint("SHUFFLE_HASH"), Seq("id"))
+          .select(col("id"), least(col("comp"), col("nmin")).as("comp")))
+      val s = checksum(next)
+      if (s == l.sum) Left(next) else Right(l.copy(comp = next, sum = s))
+    }._1
   }
+
+  /** [[run]]'s generation: edge cache, label vector and its checksum. */
+  private final case class Labels(e: DataFrame, comp: DataFrame, sum: Long)
 
   /** Null-safe: an empty label vector (zero candidate pairs — a real
     * outcome of a clean corpus) sums to NULL, which must read as a
@@ -98,9 +91,9 @@ object ConnectedComponents {
     * Each round is two groupBy-min aggregations + two joins over the
     * current edge set — all equi-keyed, nothing quadratic; the edge set
     * only shrinks toward the star forest. Every round's edge set is
-    * checkpointed ([[graft.Checkpoints]] lifecycle: superseded rounds
-    * released eagerly), and convergence is one in-plan scalar per round
-    * (edge multiset checksum — stars are the fixed point of both steps). */
+    * checkpointed (the loop releases superseded rounds eagerly), and
+    * convergence is one in-plan scalar per round (edge multiset checksum
+    * — stars are the fixed point of both steps). */
   def runStar(pairs: DataFrame, a: String = "a", b: String = "b"): DataFrame =
     runStarCounted(pairs, a, b)._1
 
@@ -157,61 +150,54 @@ object ConnectedComponents {
 
     // One pass over the upstream pairs plan (often a full LSH candidate
     // pipeline): both the canonical edge set and the node universe
-    // derive from this cache, not from re-executions of `pairs`.
+    // derive from this cache, not from re-executions of `pairs`. The
+    // star rounds keep STOCK checkpoints (AQE coalescing stays
+    // load-bearing here, the r19 4× lesson); only their exchanges plan
+    // at the loop width, proportional to the edge set.
+    // Cached first: the loop width is the cache's size estimate.
     val p0 = pairs.select(col(a).as("x"), col(b).as("y")).persist()
-    // Scale-adaptive round width (guide §2.2) — the star rounds keep
-    // STOCK checkpoints (AQE coalescing stays load-bearing here, the
-    // r19 4× lesson), but their exchanges plan at a width proportional
-    // to the edge set instead of the session's cluster-scale constant.
-    try graft.AdaptiveWidth.withWidth(pairs.sparkSession,
-      graft.AdaptiveWidth.of(p0)) {
+    // Distances to the component min halve per round, so any real graph
+    // converges in well under 64 rounds; exceeding the cap means the
+    // convergence test is being dodged.
+    Fixpoint.rounds[Star](p0, 100, "large-star/small-star")(
+        s => Seq(p0, s.e)) { r =>
       // assumeSimple: input is already a simple canonical edge set —
       // orient to the (hi, lo) convention without the re-distinct
       // exchange (set-identical by the caller's contract).
-      var e = Checkpoints.materialize(
+      val e = r.materialize(
         if (assumeSimple)
           p0.select(greatest(col("x"), col("y")).as("x"),
             least(col("x"), col("y")).as("y"))
         else canonical(p0))
-      var prevSum = edgeChecksum(e)
-      var rounds = 0
-      var converged = false
-      while (!converged) {
-        rounds += 1
-        // Distances to the component min halve per round, so any real
-        // graph converges in well under 64 rounds; exceeding the cap
-        // means the convergence test is being dodged — fail loudly
-        // rather than spin or return unconverged labels.
-        require(rounds <= 100,
-          "large-star/small-star did not reach a star forest in 100 rounds")
-        val next = Checkpoints.materialize(smallStar(largeStar(e)))
-        val s = edgeChecksum(next)
-        Checkpoints.release(e)
-        // The (count, hash-sum) checksum is a fast filter, not proof —
-        // two different edge sets can collide. Before declaring the
-        // fixed point, confirm structurally that `next` IS a star
-        // forest (one parent per child, no center is a child): one
-        // extra agg+join job that normally runs exactly once, at the
-        // real fixed point.
-        converged = s == prevSum && isStarForest(next)
-        prevSum = s
-        e = next
+      Star(e, edgeChecksum(e))
+    } { (r, s) =>
+      val next = r.materialize(smallStar(largeStar(s.e)))
+      val sum = edgeChecksum(next)
+      // The (count, hash-sum) checksum is a fast filter, not proof —
+      // two different edge sets can collide. Before declaring the
+      // fixed point, confirm structurally that `next` IS a star forest
+      // (one parent per child, no center is a child): one extra
+      // agg+join job that normally runs exactly once, at the real fixed
+      // point.
+      if (sum != s.sum || !isStarForest(next)) Right(Star(next, sum))
+      else {
+        // Star forest: every non-center node appears as `x` pointing at
+        // its component min. The node universe comes from the full pair
+        // set so nodes seen only in self-pairs (dropped by `canonical`)
+        // still map to themselves, like [[run]].
+        val nodes = p0.select(col("x").as("id"))
+          .unionAll(p0.select(col("y").as("id"))).distinct()
+        val parent = next.select(col("x").as("id"), col("y").as("c"))
+        Left(r.materialize(
+          nodes.join(parent.hint("SHUFFLE_HASH"), Seq("id"), "left")
+            .groupBy(col("id"))
+            .agg(least(min(col("c")), first(col("id"))).as("comp"))))
       }
-      // Star forest: every non-center node appears as `x` pointing at
-      // its component min. The node universe comes from the full pair
-      // set so nodes seen only in self-pairs (dropped by `canonical`)
-      // still map to themselves, like [[run]].
-      val nodes = p0.select(col("x").as("id"))
-        .unionAll(p0.select(col("y").as("id"))).distinct()
-      val parent = e.select(col("x").as("id"), col("y").as("c"))
-      val comp = Checkpoints.materialize(
-        nodes.join(parent.hint("SHUFFLE_HASH"), Seq("id"), "left")
-          .groupBy(col("id"))
-          .agg(least(min(col("c")), first(col("id"))).as("comp")))
-      Checkpoints.release(e) // comp is materialized; the star forest is dead
-      (comp, rounds)
-    } finally p0.unpersist(false)
+    }
   }
+
+  /** [[runStarCounted]]'s generation: the edge set and its checksum. */
+  private final case class Star(e: DataFrame, sum: (Long, Long))
 
   /** True iff `e` (canonical (hi, lo) pairs) is a star forest: every
     * child `x` has exactly one parent and no parent is itself a child.

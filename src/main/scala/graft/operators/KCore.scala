@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Checkpoints
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** k-core decomposition over the undirected simple projection:
@@ -39,9 +39,9 @@ import org.apache.spark.sql.functions._
   * `deg == Triangles.degrees(e)` exactly — same node set, same counts.
   * Convergence is `|drop| == 0`, one cheap count on the |V|-sized
   * frame instead of an edge-list count. The edge list shrinks
-  * monotonically and is checkpointed per round with the superseded
-  * generation released (the kernel discipline); per-round exchanges
-  * plan at the scale-adaptive loop width ([[graft.AdaptiveWidth]]).
+  * monotonically and is checkpointed per round on
+  * [[graft.Fixpoint.rounds]]; the weighted peel is the same peel over
+  * other tracked degree columns ([[Tracked]]).
   */
 object KCore {
 
@@ -56,8 +56,9 @@ object KCore {
     * a lazy plan). Bit-equal to the from-scratch path; the
     * `*_indexed` gate shares its oracle verbatim. */
   def runOn(und: DataFrame, k: Int, maxRounds: Int = 24): DataFrame = {
+    val t = byDegree(k)
     val e0 = Checkpoints.materialize(und.select(col("a"), col("b")))
-    peel(e0, Triangles.degrees(e0), k, maxRounds)
+    peel(e0, Triangles.degrees(e0), t, maxRounds)
   }
 
   /** The peel over a STABLE projection whose degrees are ALREADY
@@ -73,7 +74,7 @@ object KCore {
   def runPreDegreed(und: DataFrame, deg: DataFrame, k: Int,
       maxRounds: Int = 24): DataFrame =
     peel(und.select(col("a"), col("b")),
-      deg.select(col("id"), col("deg")), k, maxRounds)
+      deg.select(col("id"), col("deg")), byDegree(k), maxRounds)
 
   /** Broadcast the drop side when its measured cardinality fits the
     * session broadcast threshold (guide §3.1: hint when you KNOW a
@@ -94,70 +95,78 @@ object KCore {
     else drop
   }
 
-  private def peel(e0: DataFrame, deg0: DataFrame, k: Int,
-      maxRounds: Int): DataFrame = {
+  /** What a peel tracks per node. `drops` picks the nodes to drop; `cols`
+    * are the tracked columns, each with the aggregate a survivor loses
+    * over its removed edges — the last one counts the node's remaining
+    * edges, and a node leaves the frame when it reaches 0; `result`
+    * builds the output from the fixed point's edges. */
+  private final case class Tracked(what: String, drops: Column,
+      cols: Seq[(String, Column)], result: DataFrame => DataFrame)
+
+  /** Peel by edge count: the tracked frame is `(id, deg)`. The final
+    * within-core degrees ARE `deg` (the invariant), but they are
+    * recomputed from the surviving edges so the OUTPUT never depends on
+    * the decrement bookkeeping. */
+  private def byDegree(k: Int): Tracked = {
     require(k >= 1, s"need k >= 1, got $k")
+    Tracked("k-core peel", col("deg") < k, Seq("deg" -> count(lit(1))),
+      e => Triangles.degrees(e)
+        .select(col("id"), col("deg").as("core_degree")))
+  }
+
+  /** A generation: surviving edges and their tracked degree frame. */
+  private final case class Peel(e: DataFrame, deg: DataFrame)
+
+  private def peel(e0: DataFrame, deg0: DataFrame, t: Tracked,
+      maxRounds: Int): DataFrame = {
     require(maxRounds >= 1, s"need maxRounds >= 1, got $maxRounds")
-    val spark = e0.sparkSession
-    graft.AdaptiveWidth.withWidth(spark, graft.AdaptiveWidth.of(e0)) {
-      var e = e0
+    // The edge columns past (a, b) — the weight — ride along unchanged.
+    val weights = e0.columns.drop(2).map(col).toSeq
+    graft.Fixpoint.rounds[Peel](e0, maxRounds, t.what)(
+        p => Seq(p.e, p.deg)) { r =>
       // Materialized once: the drop filter reads `deg` several times a
       // round, and for the from-scratch path deg0 is a full-edge-list
       // aggregate that must not re-run per reference. For the indexed
       // path this copies the stored |V|-row table — one small job that
       // buys every round's reads.
-      var deg = Checkpoints.materialize(deg0) // == degrees(e), exactly
-      var rounds = 0
-      var result: DataFrame = null
-      while (result == null) {
-        val drop = deg.where(col("deg") < k).select(col("id"))
-        val nDrop = drop.count()
-        if (nDrop == 0L) {
-          // Fixed point: every surviving node clears k. The final
-          // within-core degrees ARE `deg` (the invariant), but they are
-          // recomputed from the surviving edges so the OUTPUT never
-          // depends on the decrement bookkeeping.
-          result = Triangles.degrees(e)
-            .select(col("id"), col("deg").as("core_degree"))
-        } else {
-          require(rounds < maxRounds,
-            s"k-core peel did not converge within $maxRounds shrinking " +
-              "rounds (raise maxRounds; the SQL oracle unrolls the same " +
-              "bound)")
-          rounds += 1
-          val da = maybeBroadcast(drop.withColumnRenamed("id", "a"), nDrop)
-          val db = maybeBroadcast(drop.withColumnRenamed("id", "b"), nDrop)
-          // Surviving edges: neither endpoint dropped.
-          val next = Checkpoints.materialize(
-            e.join(da, Seq("a"), "left_anti")
-              .join(db, Seq("b"), "left_anti")
-              .select(col("a"), col("b")))
-          // Decrements: each removed edge with EXACTLY ONE dropped
-          // endpoint costs its surviving endpoint one degree (an edge
-          // with both endpoints dropped decrements nobody who remains).
-          val dec = e.join(da, Seq("a"), "left_semi")
-              .join(db, Seq("b"), "left_anti").select(col("b").as("id"))
-            .unionAll(
-              e.join(db, Seq("b"), "left_semi")
-                .join(da, Seq("a"), "left_anti").select(col("a").as("id")))
-            .groupBy(col("id")).agg(count(lit(1)).as("d"))
-          // deg - removed incident edges, for survivors that still have
-          // an edge — exactly degrees(next) (the round invariant).
-          val nextDeg = Checkpoints.materialize(
-            deg.join(maybeBroadcast(drop, nDrop), Seq("id"), "left_anti")
-              .join(dec, Seq("id"), "left")
-              .select(col("id"),
-                (col("deg") - coalesce(col("d"), lit(0L))).as("deg"))
-              .where(col("deg") > 0))
-          Checkpoints.release(e) // no-op when e is the stable round-0 input
-          Checkpoints.release(deg)
-          e = next
-          deg = nextDeg
-        }
+      Peel(e0, r.materialize(deg0))
+    } { (r, p) =>
+      val e = p.e
+      val drop = p.deg.where(t.drops).select(col("id"))
+      val nDrop = drop.count()
+      // Fixed point: every surviving node clears the threshold.
+      if (nDrop == 0L) Left(t.result(e))
+      else {
+        val da = maybeBroadcast(drop.withColumnRenamed("id", "a"), nDrop)
+        val db = maybeBroadcast(drop.withColumnRenamed("id", "b"), nDrop)
+        // Surviving edges: neither endpoint dropped.
+        val next = r.materialize(
+          e.join(da, Seq("a"), "left_anti")
+            .join(db, Seq("b"), "left_anti")
+            .select(e.columns.map(col).toSeq: _*))
+        // Decrements: each removed edge with EXACTLY ONE dropped
+        // endpoint costs its surviving endpoint that edge (an edge with
+        // both endpoints dropped decrements nobody who remains).
+        val aggs = t.cols.map { case (c, agg) => agg.as(s"d_$c") }
+        val dec = e.join(da, Seq("a"), "left_semi")
+            .join(db, Seq("b"), "left_anti")
+            .select(col("b").as("id") +: weights: _*)
+          .unionAll(
+            e.join(db, Seq("b"), "left_semi")
+              .join(da, Seq("a"), "left_anti")
+              .select(col("a").as("id") +: weights: _*))
+          .groupBy(col("id")).agg(aggs.head, aggs.tail: _*)
+        // deg - removed incident edges, for survivors that still have
+        // an edge — exactly the degrees of `next` (the round invariant).
+        val nextDeg = r.materialize(
+          p.deg.join(maybeBroadcast(drop, nDrop), Seq("id"), "left_anti")
+            .join(dec, Seq("id"), "left")
+            .select(col("id") +: t.cols.map { case (c, _) =>
+              (col(c) - coalesce(col(s"d_$c"), lit(0L))).as(c) }: _*)
+            .where(col(t.cols.last._1) > 0))
+        Right(Peel(next, nextDeg))
       }
-      Checkpoints.release(deg) // the result recomputes from `e` alone
-      result
-    }
+    }._1
   }
 
   /** WEIGHTED k-core: peel by weighted degree (strength = Σ incident
@@ -167,14 +176,9 @@ object KCore {
     * its within-core strength ≥ `minStrength`; returns
     * `(id, core_strength)` (strength rounded to 6 decimals from the
     * exact micro-unit sum — see [[Triangles.undirectedWeighted]]).
-    * Same monotone-peel parity contract as [[run]] and the same
-    * degree-decrement round shape, with one extra column: strengths
-    * alone cannot tell "lost every edge" from "only zero-weight edges
-    * remain" (l_discount-weighted edges genuinely carry wt = 0), so
-    * the tracked frame is `(id, wd, cnt)` — micro-unit strength AND
-    * remaining-edge count, both decremented from removed edges only —
-    * and survivors leave the frame exactly when `cnt` reaches 0,
-    * keeping the round-boundary invariant exact on both columns. */
+    * Same monotone-peel parity contract as [[run]] and the same peel,
+    * tracking micro-unit strength AND remaining-edge count
+    * ([[byStrength]]), both decremented from removed edges only. */
   def runWeighted(edges: DataFrame, minStrength: Double,
       maxRounds: Int = 24): DataFrame =
     runWeightedOn(Triangles.undirectedWeighted(edges), minStrength,
@@ -184,6 +188,7 @@ object KCore {
     * `(a, b, wt)` (micro-unit weights). */
   def runWeightedOn(undW: DataFrame, minStrength: Double,
       maxRounds: Int = 24): DataFrame = {
+    val t = byStrength(minStrength)
     val e0 = Checkpoints.materialize(
       undW.select(col("a"), col("b"), col("wt")))
     // One aggregate computes BOTH round-0 columns (strength + count);
@@ -192,7 +197,7 @@ object KCore {
       .unionAll(e0.select(col("b").as("id"), col("wt")))
       .groupBy(col("id"))
       .agg(sum(col("wt")).as("wd"), count(lit(1)).as("cnt"))
-    peelWeighted(e0, wdeg0, minStrength, maxRounds)
+    peel(e0, wdeg0, t, maxRounds)
   }
 
   /** The WEIGHTED peel over a stable projection whose strengths are
@@ -205,66 +210,21 @@ object KCore {
     * [[runWeightedOn]]. */
   def runWeightedPreDegreed(undW: DataFrame, wdeg: DataFrame,
       minStrength: Double, maxRounds: Int = 24): DataFrame =
-    peelWeighted(undW.select(col("a"), col("b"), col("wt")),
-      wdeg.select(col("id"), col("wd"), col("cnt")), minStrength, maxRounds)
+    peel(undW.select(col("a"), col("b"), col("wt")),
+      wdeg.select(col("id"), col("wd"), col("cnt")), byStrength(minStrength),
+      maxRounds)
 
-  private def peelWeighted(e0: DataFrame, wdeg0: DataFrame,
-      minStrength: Double, maxRounds: Int): DataFrame = {
+  /** Peel by strength: the tracked frame is `(id, wd, cnt)`. Strengths
+    * alone cannot tell "lost every edge" from "only zero-weight edges
+    * remain" (l_discount-weighted edges genuinely carry wt = 0), so the
+    * remaining-edge count rides along and decides when a survivor
+    * leaves the frame, keeping the round invariant exact on both
+    * columns. */
+  private def byStrength(minStrength: Double): Tracked = {
     require(minStrength > 0, s"need minStrength > 0, got $minStrength")
-    require(maxRounds >= 1, s"need maxRounds >= 1, got $maxRounds")
-    val kMicro = math.round(minStrength * 1e6)
-    val spark = e0.sparkSession
-    graft.AdaptiveWidth.withWidth(spark, graft.AdaptiveWidth.of(e0)) {
-      var e = e0
-      var wdeg = Checkpoints.materialize(wdeg0) // == (strength, degree) of e
-      var rounds = 0
-      var result: DataFrame = null
-      while (result == null) {
-        val drop = wdeg.where(col("wd") < kMicro).select(col("id"))
-        val nDrop = drop.count()
-        if (nDrop == 0L) {
-          result = Triangles.weightedDegrees(e)
-            .select(col("id"),
-              round(col("wd").cast("double") / lit(1e6), 6)
-                .as("core_strength"))
-        } else {
-          require(rounds < maxRounds,
-            s"weighted k-core peel did not converge within $maxRounds " +
-              "shrinking rounds (raise maxRounds; the SQL oracle unrolls " +
-              "the same bound)")
-          rounds += 1
-          val da = maybeBroadcast(drop.withColumnRenamed("id", "a"), nDrop)
-          val db = maybeBroadcast(drop.withColumnRenamed("id", "b"), nDrop)
-          val next = Checkpoints.materialize(
-            e.join(da, Seq("a"), "left_anti")
-              .join(db, Seq("b"), "left_anti")
-              .select(col("a"), col("b"), col("wt")))
-          // Removed edges with exactly one dropped endpoint: the
-          // survivor loses the edge's strength AND one edge count.
-          val dec = e.join(da, Seq("a"), "left_semi")
-              .join(db, Seq("b"), "left_anti")
-              .select(col("b").as("id"), col("wt"))
-            .unionAll(
-              e.join(db, Seq("b"), "left_semi")
-                .join(da, Seq("a"), "left_anti")
-                .select(col("a").as("id"), col("wt")))
-            .groupBy(col("id"))
-            .agg(sum(col("wt")).as("dw"), count(lit(1)).as("dc"))
-          val nextWdeg = Checkpoints.materialize(
-            wdeg.join(maybeBroadcast(drop, nDrop), Seq("id"), "left_anti")
-              .join(dec, Seq("id"), "left")
-              .select(col("id"),
-                (col("wd") - coalesce(col("dw"), lit(0L))).as("wd"),
-                (col("cnt") - coalesce(col("dc"), lit(0L))).as("cnt"))
-              .where(col("cnt") > 0))
-          Checkpoints.release(e) // no-op when e is the stable round-0 input
-          Checkpoints.release(wdeg)
-          e = next
-          wdeg = nextWdeg
-        }
-      }
-      Checkpoints.release(wdeg)
-      result
-    }
+    Tracked("weighted k-core peel", col("wd") < math.round(minStrength * 1e6),
+      Seq("wd" -> sum(col("wt")), "cnt" -> count(lit(1))),
+      e => Triangles.weightedDegrees(e).select(col("id"),
+        round(col("wd").cast("double") / lit(1e6), 6).as("core_strength")))
   }
 }

@@ -31,8 +31,9 @@ import org.apache.spark.sql.functions._
   * one explode + partial-aggregating hash agg credits supports and one
   * equi-join drops the light edges. No windows, no sorts, nothing
   * quadratic; the edge list shrinks monotonically, checkpointed per
-  * round with the superseded generation released (the kernel
-  * discipline). Degrees are recomputed per round from the shrinking
+  * round on [[graft.Fixpoint.rounds]] (stock checkpoints: the r19 4×
+  * lesson; the loop width also bounds the per-round wedge aggregation's
+  * partial-agg fanout). Degrees are recomputed per round from the shrinking
   * frame — orientation only needs to be consistent WITHIN a round, so
   * any per-round total order yields the same triangle SET.
   */
@@ -52,44 +53,23 @@ object KTruss {
     require(k >= 3, s"need k >= 3 (k - 2 triangles per edge), got $k")
     require(maxRounds >= 1, s"need maxRounds >= 1, got $maxRounds")
     val minSup = k - 2
-    var e = Checkpoints.materialize(und.select(col("a"), col("b")))
-    var n = e.count()
-    // an edge set with no possible triangle is already the fixed point
-    var result: DataFrame = null
-    var rounds = 0
-    // Scale-adaptive round width (guide §2.2) — stock checkpoints and
-    // AQE coalescing stay (the r19 4× lesson); only the planned
-    // exchange width becomes data-proportional instead of the
-    // session's cluster-scale constant, which at gate scale also
-    // bounds the per-round wedge aggregation's partial-agg fanout.
-    graft.AdaptiveWidth.withWidth(e.sparkSession,
-        graft.AdaptiveWidth.of(e)) {
-    while (result == null) {
-      val sup = Checkpoints.materialize(support(e))
-      val next = Checkpoints.materialize(
+    val e0 = Checkpoints.materialize(und.select(col("a"), col("b")))
+    graft.Fixpoint.rounds[(DataFrame, Long)](e0, maxRounds, "k-truss peel")(
+        en => Seq(en._1))(_ => (e0, e0.count())) { case (r, (e, n)) =>
+      val sup = r.materialize(support(e))
+      val next = r.materialize(
         e.join(sup.where(col("support") >= minSup), Seq("a", "b"),
             "left_semi")
           .select(col("a"), col("b")))
       val m = next.count()
-      if (m == n) {
-        // `sup` was computed over the fixed-point edge set: it IS the
-        // final per-edge support (edges below minSup were already
-        // absent from `e`, or `m` would have shrunk).
-        result = e.join(sup, Seq("a", "b"))
-          .select(col("a"), col("b"), col("support"))
-        Checkpoints.release(next)
-      } else {
-        require(rounds < maxRounds,
-          s"k-truss peel did not converge within $maxRounds shrinking " +
-            "rounds (raise maxRounds; the SQL oracle unrolls the same " +
-            "bound)")
-        Checkpoints.release(e)
-        Checkpoints.release(sup)
-        e = next; n = m; rounds += 1
-      }
-    }
-    }
-    result
+      // `sup` was computed over the fixed-point edge set: it IS the
+      // final per-edge support (edges below minSup were already absent
+      // from `e`, or `m` would have shrunk).
+      if (m == n)
+        Left(e.join(sup, Seq("a", "b"))
+          .select(col("a"), col("b"), col("support")))
+      else Right((next, m))
+    }._1
   }
 
   /** Per-edge triangle support of a canonical `(a, b)` edge frame:

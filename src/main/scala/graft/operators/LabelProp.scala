@@ -30,8 +30,8 @@ import org.apache.spark.sql.functions._
   * `(node, label)` count, and a per-node argmax window whose partitions
   * are bounded by the DISTINCT LABEL count (not by degree — the
   * count aggregation collapses a hot node's votes map-side first).
-  * Same per-iteration discipline as the kernels: the label vector is
-  * checkpointed each round and the superseded one released.
+  * The label vector is checkpointed each round on
+  * [[graft.Fixpoint.rounds]], for a fixed count of rounds.
   */
 object LabelProp {
 
@@ -84,43 +84,45 @@ object LabelProp {
     require(iters >= 0, s"need iters >= 0, got $iters")
     val und = Checkpoints.materialize(undIn)
     val vote = if (weighted) col("wt") else lit(1L)
-    // symmetric neighbor list: votes flow both ways across each edge
-    val nbrs = Checkpoints.materialize(
-      und.select(col("a").as("src"), col("b").as("id"), vote.as("wt"))
-        .unionAll(
-          und.select(col("b").as("src"), col("a").as("id"), vote.as("wt"))))
-    Checkpoints.release(und) // nbrs is materialized; und has no other use
-    val nodes = nbrs.select(col("id")).distinct()
-    var lab = Checkpoints.materialize(
-      nodes.join(seeds, Seq("id"), "left")
-        .select(col("id"), col("label")))
     val byVotes = Window.partitionBy(col("id"))
       .orderBy(col("c").desc, col("label"))
-    (0 until iters).foreach { _ =>
-      // Votes only matter for still-unlabeled destinations (clamping
-      // discards the rest), so gate the aggregate's input on them — the
-      // per-round work shrinks as coverage grows, same output.
-      val votes = nbrs
-        .join(lab.where(col("label").isNull).select(col("id")),
-          Seq("id"), "left_semi")
-        .join(lab.where(col("label").isNotNull)
-          .select(col("id").as("src"), col("label")), Seq("src"))
-        .groupBy(col("id"), col("label"))
-        .agg(sum(col("wt")).as("c"))
-      val best = votes
-        .select(col("id"), col("label"), row_number().over(byVotes).as("rn"))
-        .where(col("rn") === 1)
-        .select(col("id"), col("label").as("vote"))
-      val next = Checkpoints.materialize(
-        lab.join(best, Seq("id"), "left")
-          .select(col("id"), coalesce(col("label"), col("vote")).as("label")))
-      Checkpoints.release(lab)
-      lab = next
-    }
-    // lab is itself a checkpoint, so the caller's releaseAll on the
-    // result can never reach nbrs — free it here (the kernel
-    // discipline: no block set may outlive its last consumer).
-    Checkpoints.release(nbrs)
-    lab
+    graft.Fixpoint.rounds[Labels](und, iters, "label propagation")(
+        l => Seq(l.nbrs, l.lab)) { r =>
+      // symmetric neighbor list: votes flow both ways across each edge
+      val nbrs = r.materialize(
+        und.select(col("a").as("src"), col("b").as("id"), vote.as("wt"))
+          .unionAll(
+            und.select(col("b").as("src"), col("a").as("id"), vote.as("wt"))))
+      val nodes = nbrs.select(col("id")).distinct()
+      Labels(nbrs, r.materialize(nodes.join(seeds, Seq("id"), "left")
+        .select(col("id"), col("label"))), iters)
+    } { (r, l) =>
+      if (l.left == 0) Left(l.lab)
+      else {
+        // Votes only matter for still-unlabeled destinations (clamping
+        // discards the rest), so gate the aggregate's input on them —
+        // the per-round work shrinks as coverage grows, same output.
+        val votes = l.nbrs
+          .join(l.lab.where(col("label").isNull).select(col("id")),
+            Seq("id"), "left_semi")
+          .join(l.lab.where(col("label").isNotNull)
+            .select(col("id").as("src"), col("label")), Seq("src"))
+          .groupBy(col("id"), col("label"))
+          .agg(sum(col("wt")).as("c"))
+        val best = votes
+          .select(col("id"), col("label"),
+            row_number().over(byVotes).as("rn"))
+          .where(col("rn") === 1)
+          .select(col("id"), col("label").as("vote"))
+        Right(l.copy(lab = r.materialize(
+          l.lab.join(best, Seq("id"), "left")
+            .select(col("id"),
+              coalesce(col("label"), col("vote")).as("label"))),
+          left = l.left - 1))
+      }
+    }._1
   }
+
+  /** A generation: neighbor list, label vector, rounds still to run. */
+  private final case class Labels(nbrs: DataFrame, lab: DataFrame, left: Int)
 }

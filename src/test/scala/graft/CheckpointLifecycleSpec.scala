@@ -1,6 +1,7 @@
 package graft
 
-import graft.operators.{ConnectedComponents, Hits, PageRank, Salsa}
+import graft.operators.{ConnectedComponents, Hits, KCore, KTruss, LabelProp,
+  PageRank, Salsa}
 import org.apache.spark.storage.StorageLevel
 import scala.jdk.CollectionConverters._
 
@@ -57,13 +58,45 @@ class CheckpointLifecycleSpec extends SparkSuite {
     assert(added.size <= 2, s"leaked checkpoint RDDs: $added")
   }
 
-  test("ConnectedComponents leaves only the final label checkpoint") {
+  private def pairs = {
     import spark.implicits._
-    val pairs = Seq((1L, 2L), (2L, 3L), (4L, 5L), (6L, 6L)).toDF("a", "b")
+    Seq((1L, 2L), (2L, 3L), (4L, 5L), (6L, 6L)).toDF("a", "b")
+  }
+
+  test("ConnectedComponents leaves only the final label checkpoint") {
     val added = addedPersistentRdds {
       assert(ConnectedComponents.run(pairs).count() == 6)
     }
     assert(added.size <= 1, s"leaked checkpoint RDDs: $added")
+    // The other structural operators: after each run only the checkpoints
+    // its result reads are stored, and none after releaseAll.
+    val ring = graph(Seq(("a", "b", 1.0), ("b", "c", 1.0), ("c", "a", 1.0),
+      ("c", "d", 1.0), ("d", "e", 1.0), ("e", "c", 1.0), ("e", "f", 1.0)))
+    val seeds = {
+      import spark.implicits._
+      Seq(("a", "x"), ("f", "y")).toDF("id", "label")
+    }
+    Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "ConnectedComponents.run" -> (() => ConnectedComponents.run(pairs)),
+      "ConnectedComponents.runStar" -> (() =>
+        ConnectedComponents.runStar(pairs)),
+      "KCore.run" -> (() => KCore.run(ring.edges, 2)),
+      "KTruss.run" -> (() => KTruss.run(ring.edges, 3)),
+      "LabelProp.run" -> (() => LabelProp.run(spark, ring.edges, seeds, 3))
+    ).foreach { case (name, op) =>
+      var result: org.apache.spark.sql.DataFrame = null
+      val stored = addedPersistentRdds {
+        result = op()
+        assert(result.count() > 0, s"$name: empty result")
+      }
+      val reads = checkpointReads(result).toSet
+      assert(stored.subsetOf(reads),
+        s"$name stored ${stored -- reads} that its result does not read")
+      Checkpoints.releaseAll(result)
+      val left = stored.intersect(
+        spark.sparkContext.getPersistentRDDs.keySet.toSet)
+      assert(left.isEmpty, s"$name left $left stored after releaseAll")
+    }
   }
 
   test("released blocks are MEMORY_AND_DISK no more: storage drains") {
@@ -134,6 +167,10 @@ class CheckpointLifecycleSpec extends SparkSuite {
     val (lh, la) = (scoresMap(local.hubs), scoresMap(local.auths))
     val localConv = scoresMap(
       Hits.runConverged(g1, tol = 1e-9, maxIter = 20).result.auths)
+    // one peel and one components engine under reliable mode too
+    def structural() = (KCore.run(g1.edges, 2).collect().toSet,
+      ConnectedComponents.run(pairs).collect().toSet)
+    val localStructural = structural()
     val dir = java.nio.file.Files
       .createTempDirectory("graft-ckpt-spec").toString
     spark.conf.set(Checkpoints.ReliableKey, "true")
@@ -157,6 +194,7 @@ class CheckpointLifecycleSpec extends SparkSuite {
       val fpc = Hits.runConverged(g1, tol = 1e-9, maxIter = 20)
       assert(fpc.iterations > 1)
       assertApprox(scoresMap(fpc.result.auths), localConv, 1e-15)
+      assert(structural() == localStructural)
     } finally {
       spark.conf.unset(Checkpoints.ReliableKey)
       spark.conf.unset(Checkpoints.DirKey)

@@ -1,14 +1,15 @@
 package graft
 
-import graft.operators.{Hits, PageRank, Salsa}
+import graft.operators.{ConnectedComponents, Hits, KCore, KTruss,
+  LabelProp, PageRank, Salsa, Triangles}
 
-/** Kernel scores must not depend on the loop width. The fixtures are
-  * small enough that the default bytes-per-task target derives width 1,
-  * so every kernel here runs twice: with the target forced huge (width
-  * 1) and forced to one byte (width = the session's
-  * `shuffle.partitions` cap), via [[AdaptiveWidth.BytesPerTaskKey]].
-  * The loop's width flip must also leave `shuffle.partitions` as it
-  * found it after every call.
+/** Kernel scores and structural-operator results must not depend on the
+  * loop width. The fixtures are small enough that the default
+  * bytes-per-task target derives width 1, so every operator here runs
+  * twice: with the target forced huge (width 1) and forced to one byte
+  * (width = the session's `shuffle.partitions` cap), via
+  * [[AdaptiveWidth.BytesPerTaskKey]]. The loop's width flip must also
+  * leave `shuffle.partitions` as it found it after every call.
   */
 class WidthInvarianceSpec extends SparkSuite {
 
@@ -21,7 +22,9 @@ class WidthInvarianceSpec extends SparkSuite {
     Map("a" -> "t", "c" -> "t", "f" -> "t", "b" -> "other"))
 
   /** Scores (and, for the converged kernels, iterations and verdict) of
-    * every iterative kernel entry point, keyed by name. */
+    * every iterative kernel entry point, keyed by name; a structural
+    * operator's rows are the keys of its score map, so they must match
+    * exactly. */
   private def runAll(): Map[String, (Map[String, Double], Int, Boolean)] = {
     val cap = spark.conf.get(ShufflePartitions)
     def check[T](name: String)(body: => T): T = {
@@ -59,8 +62,36 @@ class WidthInvarianceSpec extends SparkSuite {
       conv("Salsa.runConverged")(Salsa.runConverged(g, 1e-9, 30))(r =>
         Seq("hubs" -> r.hubs, "auths" -> r.auths)) ++
       conv("PageRank.runConverged")(PageRank.runConverged(g, 0.85, 1e-7, 80))(
-        r => Seq("scores" -> r))).toMap
+        r => Seq("scores" -> r)) ++
+      Seq[(String, () => org.apache.spark.sql.DataFrame)](
+        "ConnectedComponents.run" -> (() => ConnectedComponents.run(pairs)),
+        "ConnectedComponents.componentsOn" -> (() =>
+          ConnectedComponents.componentsOn(Triangles.undirected(g.edges))),
+        "KCore.run" -> (() => KCore.run(g.edges, 2)),
+        "KCore.runWeighted" -> (() => KCore.runWeighted(g.edges, 3.0)),
+        "KTruss.run" -> (() => KTruss.run(g.edges, 3)),
+        "LabelProp.run" -> (() => LabelProp.run(spark, g.edges, seeds, 3)),
+        "LabelProp.runWeighted" -> (() =>
+          LabelProp.runWeighted(spark, g.edges, seeds, 3))).map {
+        case (name, op) => name -> rows(check(name)(op()))
+      }).toMap
   }
+
+  /** `g`'s undirected edges with numeric ids (a = 1 … h = 8), the shape
+    * the min-label components engine takes. */
+  private def pairs = {
+    import spark.implicits._
+    Seq((1L, 3L), (1L, 4L), (2L, 3L), (3L, 4L), (4L, 1L), (5L, 1L),
+      (5L, 6L), (6L, 3L), (7L, 8L), (8L, 7L), (2L, 5L)).toDF("a", "b")
+  }
+
+  private def seeds = {
+    import spark.implicits._
+    Seq(("a", "x"), ("f", "y"), ("g", "x")).toDF("id", "label")
+  }
+
+  private def rows(df: org.apache.spark.sql.DataFrame) =
+    (df.collect().map(_.mkString("|") -> 0.0).toMap, 0, false)
 
   private def atBytesPerTask[T](bytes: String)(body: => T): T = {
     val prev = spark.conf.getOption(AdaptiveWidth.BytesPerTaskKey)
