@@ -120,6 +120,9 @@ object Bench {
     // generated-class cache is smaller than the suite's working set.
     val compiles = Array(0L, 0L)
     val compileNs = Array(0L, 0L)
+    // Pass 2's compiles per gate, the non-zero ones only: what a warm
+    // pass still compiles, attributed to the gate that compiled it.
+    val compilesQ2 = scala.collection.mutable.LinkedHashMap.empty[String, Long]
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_last.json")
     val outPath = java.nio.file.Paths.get(out).toAbsolutePath
     def artifactJson(complete: Boolean): String = {
@@ -132,7 +135,9 @@ object Bench {
         failed.sorted.map(n => s"\"$n\"").mkString("[", ",", "]")
       def codegen(p: Int): String =
         s"""{"compiles":${compiles(p)},"compile_ms":${ms(compileNs(p) / 1e6)}}"""
-      s"""{"metric":"total","value":${ms(total)},"unit":"sec","pass":"min","complete":$complete,"queries":${m(results)},"cold_total_sec":${ms(coldTotal)},"queries_p1":${m(cold)},"queries_p2":${m(pass2)},"codegen_p1":${codegen(0)},"codegen_p2":${codegen(1)},"warmup_sec":${ms(warmup)},"failed":$failedJson,"loadavg_start":${ms(loadStart)},"loadavg_end":${ms(loadavg())},"sf":"$sfDir"}"""
+      val q2 = compilesQ2.map { case (k, v) => "\"" + k + "\":" + v }
+        .mkString("{", ",", "}")
+      s"""{"metric":"total","value":${ms(total)},"unit":"sec","pass":"min","complete":$complete,"queries":${m(results)},"cold_total_sec":${ms(coldTotal)},"queries_p1":${m(cold)},"queries_p2":${m(pass2)},"codegen_p1":${codegen(0)},"codegen_p2":${codegen(1)},"codegen_q2":$q2,"warmup_sec":${ms(warmup)},"failed":$failedJson,"loadavg_start":${ms(loadStart)},"loadavg_end":${ms(loadavg())},"sf":"$sfDir"}"""
     }
     // The artifact is (re)written after every family, flagged
     // complete:false until the final write: with two timed passes per
@@ -201,6 +206,7 @@ object Bench {
           val (c1, n1) = codegenCounters()
           compiles(pass) += c1 - c0
           compileNs(pass) += n1 - n0
+          if (pass == 1 && c1 > c0) compilesQ2(name) = c1 - c0
           (wall, ok)
         }
         val (p1, ok1) = once(0)

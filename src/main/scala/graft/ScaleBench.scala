@@ -27,11 +27,11 @@ import org.apache.spark.sql.functions._
   * sweep with its order shuffled by the seed, so family placement —
   * who pays the cold scan or the first-in-family warm — rotates between
   * runs) and `one:<gate>` (any registered gate alone on both corpora).
-  * Every mode times each gate cold then warm after the standard
-  * warm-up ([[benchDir]]). The sweep prints one JSON line per corpus
-  * with per-gate warm seconds, then one warm/warm ratio per swept gate;
-  * `one:` prints one `scale_one` line with both passes. Results land in
-  * SCALING.md by hand.
+  * Every mode times each gate cold then warm on both corpora, back to
+  * back, after the standard warm-up ([[benchPaired]]). The sweep prints
+  * one JSON line per corpus with per-gate warm seconds, then one
+  * warm/warm ratio per swept gate; `one:` prints one `scale_one` line
+  * with both passes. Results land in SCALING.md by hand.
   */
 object ScaleBench {
 
@@ -135,21 +135,32 @@ object ScaleBench {
     Hits.run(GraphIO.orderGraph(spark, dir), numIter = 1).auths.count()
   }
 
-  /** Each gate of `names` timed twice on `dir` after [[warm]] — (first,
-    * warm) seconds; the corpus's graph caches are evicted before
-    * returning. The sweep compares warm passes: a first pass also pays
-    * the gate's first-touch codegen and JIT, which the base corpus would
-    * carry alone, since it runs first. */
-  private def benchDir(spark: SparkSession, dir: String,
-      names: Seq[String]): Map[String, (Double, Double)] = {
-    warm(spark, dir)
-    val r = names.map { name =>
-      val (first, warmPass) = timedTwice(queries(name)(spark, dir))
-      println(f"[scale] $dir $name $first%.2f s first, $warmPass%.2f s warm")
-      name -> (first, warmPass)
-    }.toMap
-    GraphIO.evict(spark, dir) // release before the next corpus
-    r
+  /** Each gate of `names` timed twice on both corpora after [[warm]]ing
+    * both — per corpus, (first, warm) seconds by gate. A gate's four
+    * passes run back to back, and which corpus goes first alternates
+    * gate by gate, so both arms share the JVM's warmth instead of the
+    * derived corpus running after a whole base sweep. The sweep compares
+    * warm passes: a first pass also pays the gate's first-touch codegen
+    * and JIT, which only the corpus that goes first would carry. Both
+    * corpora's graph caches are evicted before returning. */
+  private def benchPaired(spark: SparkSession, baseDir: String,
+      bigDir: String, names: Seq[String])
+      : Map[String, Map[String, (Double, Double)]] = {
+    warm(spark, baseDir)
+    warm(spark, bigDir)
+    val rows = names.zipWithIndex.flatMap { case (name, i) =>
+      val dirs = if (i % 2 == 0) Seq(baseDir, bigDir) else Seq(bigDir, baseDir)
+      dirs.map { dir =>
+        val (first, warmPass) = timedTwice(queries(name)(spark, dir))
+        println(f"[scale] $dir $name $first%.2f s first, $warmPass%.2f s warm")
+        (dir, name, (first, warmPass))
+      }
+    }
+    GraphIO.evict(spark, baseDir)
+    GraphIO.evict(spark, bigDir)
+    rows.groupBy(_._1).map { case (dir, rs) =>
+      dir -> rs.map(r => r._2 -> r._3).toMap
+    }
   }
 
   def main(args: Array[String]): Unit = {
@@ -183,17 +194,16 @@ object ScaleBench {
         f"${(System.nanoTime() - t0) / 1e9}%.1f s")
     }
 
+    val timed = benchPaired(spark, baseDir, outDir, one.fold(order)(Seq(_)))
+    val (base, big) = (timed(baseDir), timed(outDir))
     one match {
       case Some(name) =>
-        val (bf, bw) = benchDir(spark, baseDir, Seq(name))(name)
-        val (gf, gw) = benchDir(spark, outDir, Seq(name))(name)
+        val ((bf, bw), (gf, gw)) = (base(name), big(name))
         println(f"""{"metric":"scale_one","query":"$name",""" +
           f""""base_first":$bf%.2f,"base_warm":$bw%.2f,""" +
           f""""big_first":$gf%.2f,"big_warm":$gw%.2f,""" +
           f""""warm_ratio":${gw / bw}%.2f}""")
       case None =>
-        val base = benchDir(spark, baseDir, order)
-        val big = benchDir(spark, outDir, order)
         def js(m: Map[String, (Double, Double)]): String =
           m.map { case (k, (_, v)) => f""""$k":$v%.3f""" }
             .mkString("{", ",", "}")

@@ -136,6 +136,11 @@ object Restart {
       }
   }
 
+  /** Where [[twoPhaseDrain]] keeps `tag`'s source files, checkpoint
+    * (`ckpt`, one `commits` entry per micro-batch) and sink for `dir`. */
+  private[graft] def workDir(tag: String, dir: String): String =
+    s"target/graft-restart/$tag-${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
+
   /** Run `pipeline` over the `events` corpus (ts = epoch-nanos BIGINT)
     * as two checkpointed `AvailableNow` drains with a query restart
     * between them (see object scaladoc), each phase admitted as
@@ -157,8 +162,7 @@ object Restart {
       slicesPerPhase: Int = 4,
       betweenPhases: SparkSession => Unit = _ => (),
       pipeline2: Option[DataFrame => DataFrame] = None): DataFrame = {
-    val safe = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val base = s"target/graft-restart/$tag-$safe"
+    val base = workDir(tag, dir)
     rmRf(new java.io.File(base))
     val src = s"$base/src"
     val ckpt = s"$base/ckpt"

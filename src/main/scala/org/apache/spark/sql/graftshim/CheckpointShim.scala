@@ -59,25 +59,30 @@ object CheckpointShim {
       try {
         spark.conf.set(CoalesceKey, "false")
         val physical = ds.queryExecution.executedPlan
-        // finalPhysicalPlan forces the adaptive stages to execute and
-        // returns the re-optimized plan whose outputPartitioning is the
-        // one the materialized rows actually have.
-        val finalPlan = physical match {
-          case a: AdaptiveSparkPlanExec => a.finalPhysicalPlan
-          case p => p
-        }
-        // Same row copy as Dataset.checkpoint: the scan reuses row
-        // buffers, so the persisted blocks must own their bytes.
-        val rdd = finalPlan.execute().map(_.copy())
-        rdd.localCheckpoint()
-        // The materializing count runs under the checkpointed query's
-        // execution id, like stock Dataset.checkpoint — the job then
-        // attributes to this query in the SQL tab / event-log SQL
-        // metrics instead of an anonymous call site (ADVICE r19).
-        if (eager) org.apache.spark.sql.execution.SQLExecution
-          .withNewExecutionId(ds.queryExecution)(rdd.count())
-        (rdd, remap(finalPlan.outputPartitioning,
-          finalPlan.output, ds.queryExecution.analyzed.output))
+        // Every job below runs under the checkpointed query's one
+        // execution id, like stock Dataset.checkpoint: the adaptive
+        // stage jobs that finalPhysicalPlan drives as well as the
+        // materializing count, so all of them attribute to this query
+        // in the SQL tab, the event log and a listener's per-query
+        // totals instead of to an anonymous call site.
+        org.apache.spark.sql.execution.SQLExecution
+          .withNewExecutionId(ds.queryExecution) {
+            // finalPhysicalPlan forces the adaptive stages to execute
+            // and returns the re-optimized plan whose
+            // outputPartitioning is the one the materialized rows
+            // actually have.
+            val finalPlan = physical match {
+              case a: AdaptiveSparkPlanExec => a.finalPhysicalPlan
+              case p => p
+            }
+            // Same row copy as Dataset.checkpoint: the scan reuses row
+            // buffers, so the persisted blocks must own their bytes.
+            val rdd = finalPlan.execute().map(_.copy())
+            rdd.localCheckpoint()
+            if (eager) rdd.count()
+            (rdd, remap(finalPlan.outputPartitioning,
+              finalPlan.output, ds.queryExecution.analyzed.output))
+          }
       } finally spark.conf.set(CoalesceKey, prev)
     // Statistics from the optimized plan, like LogicalRDD.fromDataset —
     // without them the planner sizes the checkpoint at

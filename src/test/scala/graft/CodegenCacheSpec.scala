@@ -1,12 +1,19 @@
 package graft
 
-/** Spark caches generated classes by (class loader, source), and in local
-  * mode the driver and the executor compile under different loaders. The
-  * default 100-entry cache is smaller than graft's working set, so each
-  * pass evicted what the previous one compiled and recompiled it in
-  * Janino. build.sbt sizes the cache (`spark.sql.codegen.cache.maxEntries`)
-  * for every forked JVM, this one included; this spec pins that a
-  * repeated pass reuses the classes its first run compiled.
+/** Spark caches generated classes by (class loader, source). build.sbt
+  * starts every forked JVM, this one included, with the three flags that
+  * let a warm pass hit that cache: a cache larger than graft's working
+  * set (`spark.sql.codegen.cache.maxEntries`), one executor class loader
+  * for every cloned session (`spark.sql.artifact.isolation.enabled`), and
+  * class names without the whole-stage codegen id
+  * (`spark.sql.codegen.useIdInClassName`). This spec pins that a warm
+  * pass reuses the classes an earlier pass compiled.
+  *
+  * Compiles are read from `Bench.codegenCounters`, which initializes
+  * Spark's `CodeGenerator` object. That object sizes its cache from the
+  * conf in effect when it loads, so each test runs a query before its
+  * first count: loaded before any session exists, the cache would keep
+  * Spark's default of 100 entries.
   */
 class CodegenCacheSpec extends SparkSuite {
 
@@ -14,36 +21,57 @@ class CodegenCacheSpec extends SparkSuite {
     * them. */
   private val sfDir = sys.props("user.home") + "/testdata/sf0.001"
 
+  /** Janino compiles while running `gates` once through the noop sink. */
+  private def compilesOfPass(gates: String*): Long = {
+    val before = Bench.codegenCounters()._1
+    gates.foreach { q =>
+      val df = SparkEntry.queries(q)(spark, sfDir)
+      df.write.format("noop").mode("overwrite").save()
+      Checkpoints.releaseAll(df)
+    }
+    Bench.codegenCounters()._1 - before
+  }
+
   test("a second pass of hits_base + graph_kcore reuses compiled classes") {
     assume(new java.io.File(sfDir).isDirectory, s"no test tables in $sfDir")
-    def compilesOfPass(): Long = {
-      val before = Bench.codegenCounters()._1
-      Seq("hits_base", "graph_kcore").foreach { q =>
-        val df = SparkEntry.queries(q)(spark, sfDir)
-        df.write.format("noop").mode("overwrite").save()
-        Checkpoints.releaseAll(df)
-      }
-      Bench.codegenCounters()._1 - before
-    }
     try {
-      // Both passes plan against the materialized graph: its size
+      // Every pass plans against the materialized graph: its size
       // statistics pick the join strategies, so a first pass that
       // materialized it would plan (and compile) different bodies.
       val g = GraphIO.orderGraph(spark, sfDir)
       g.edges.count()
       g.nodes.count()
-      val first = compilesOfPass()
-      val second = compilesOfPass()
+      val first = compilesOfPass("hits_base", "graph_kcore")
+      val warm = Seq.fill(2)(compilesOfPass("hits_base", "graph_kcore"))
       assert(first > 0, "the first pass compiled nothing: nothing to reuse")
-      // Not zero: Spark builds each persisted plan (the loop's two edge
-      // copies per HITS run) under a clone of the session, whose jobs get
-      // a fresh executor class loader and so compile their few bodies
-      // again on every run (5-11 of ~105 here). A cache smaller than the
-      // working set recompiles over half of the pass (58 of 108 at the
-      // default 100 entries).
-      assert(second <= first / 4,
-        s"second pass compiled $second classes (first: $first): the " +
-          "generated-class cache is smaller than the working set")
+      // Two warm passes usually compile nothing. Without the flags each
+      // one recompiles: 58 of 108 classes at the default 100-entry
+      // cache, 5-11 under per-clone executor loaders, 0-14 while the
+      // codegen id (which AQE assigns in stage-completion order) was in
+      // the class name. 6 leaves room for one rare AQE plan variant of
+      // the HITS normalize step (3 bodies, each under the driver's and
+      // the executor's loader).
+      assert(warm.sum <= 6, s"warm passes compiled ${warm.mkString(" + ")} " +
+        s"classes (first: $first): a warm pass recompiles what the " +
+        "first compiled")
     } finally GraphIO.evict(spark, sfDir, Seq("order"))
+  }
+
+  test("a warm stream_restart_sessionize pass compiles at most one " +
+      "class per micro-batch") {
+    assume(new java.io.File(sfDir).isDirectory, s"no test tables in $sfDir")
+    val gate = "stream_restart_sessionize"
+    SparkEntry.queries(gate)(spark, sfDir).write.format("noop")
+      .mode("overwrite").save()
+    val warm = compilesOfPass(gate)
+    val batches = new java.io.File(
+      graft.streaming.Restart.workDir("sessionize", sfDir), "ckpt/commits")
+      .list().count(_.forall(_.isDigit))
+    assert(batches > 0, "the drain committed no micro-batch")
+    // Spark bakes each batch's watermark into the generated eviction
+    // predicate (`ts <= <watermark literal>`), so a batch that moves the
+    // watermark compiles one new class; everything else is cached.
+    assert(warm <= batches, s"warm pass compiled $warm classes over " +
+      s"$batches micro-batches")
   }
 }

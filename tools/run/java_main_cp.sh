@@ -5,7 +5,7 @@
 # invocation at a snapshot of the baseline classes and the next at the
 # current build, alternating, so host drift is shared between the two
 # arms instead of landing on one. Keep the flags below in step with
-# build.sbt's javaOptions.
+# build.sbt's javaOptions (LauncherFlagsSpec checks the -Dspark.* ones).
 # Usage: [GRAFT_CLASSES=/tmp/classes_base] java_main_cp.sh <MainClass> [args...]
 set -e
 CLS=$1; shift
@@ -21,6 +21,8 @@ for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
 done
 exec java $OPENS -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -Dspark.sql.codegen.cache.maxEntries=8192 \
+  -Dspark.sql.artifact.isolation.enabled=false \
+  -Dspark.sql.codegen.useIdInClassName=false \
   -Xmx${SPARK_DRIVER_MEM:-16g} -XX:+UseParallelGC \
   $GRAFT_JVM_OPTS \
   -cp "$CLASSES:/opt/spark/jars/*" "$CLS" "$@"
