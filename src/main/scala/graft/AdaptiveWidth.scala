@@ -62,15 +62,18 @@ object AdaptiveWidth {
   /** Runs `body` with `spark.sql.shuffle.partitions` set to `k`, so the
     * loop's aggregation exchanges plan at the same width as its caches
     * and checkpoints — every per-iteration join is then co-partitioned
-    * at `k` (restored in `finally`). Its one operator caller is
-    * [[Fixpoint]], whose kernel loop and structural round loop run
-    * under it; the streaming drains (`SparkEntry.withDrainWidth`,
-    * `Restart`) are the others. Session-global, like the planner
+    * at `k` (restored in `finally`). Its one caller is [[Fixpoint]],
+    * whose kernel loop and structural round loop run under it (the
+    * streaming drains set their width on a session of their own,
+    * [[graft.streaming.Drain]]). Session-global, like the planner
     * hints the kernels already scope per loop: the graft drivers run
-    * queries sequentially on one thread; a session shared across
-    * threads would need a cloned session instead (documented
+    * queries sequentially on one thread (documented
     * single-threaded-session assumption, same as
-    * [[org.apache.spark.sql.graftshim.CheckpointShim]]). */
+    * [[org.apache.spark.sql.graftshim.CheckpointShim]]). The width is
+    * not put into the plans as `repartition(k, key)`: under a `groupBy`
+    * that moves the partial aggregate after the exchange, so each HITS
+    * gather on the order graph would shuffle its ~120k edge rows
+    * instead of ≤18.5k partial sums (sf0.01). */
   def withWidth[T](spark: SparkSession, k: Int)(body: => T): T = {
     val prev = spark.conf.get(ShufflePartitionsKey)
     try {

@@ -289,25 +289,47 @@ object GraphIO {
   }
 
   /** `readStream` twin of [[events]]: same directory contract as
-    * [[streamingDir]], same epoch-nanos `ts` normalization. The file
-    * schema comes from a one-footer batch read (the stream source
-    * requires an explicit schema). For TIMESTAMP(NANOS) files the
-    * legacy `nanosAsLong` conf must be visible to the STREAM's
-    * analysis, and a streaming query cannot run on a cloned session's
-    * conf alone — so for that layout only, the conf is set on the
-    * caller's session (documented side effect; every graft entry point
-    * reads events through the normalizing accessors, so the semantics
-    * are unchanged). */
+    * [[streamingDir]], same epoch-nanos `ts`. The file schema comes from
+    * a one-footer batch read (the stream source requires an explicit
+    * schema). Build it on a [[graft.streaming.Drain]] session: a stream
+    * is analyzed on the session that runs it, and the drain session
+    * reads TIMESTAMP(NANOS) files with `nanosAsLong` on. */
   def eventsStream(spark: SparkSession, sfDir: String): DataFrame = {
     val dir = streamingDir(sfDir, "events")
-    val batch =
-      try spark.read.parquet(dir)
+    epochNanosTs(spark.readStream.schema(spark.read.parquet(dir).schema)
+      .parquet(dir))
+  }
+
+  /** The legacy conf under which Spark reads a TIMESTAMP(NANOS) column
+    * as its epoch-nanos BIGINT instead of rejecting the file. */
+  private[graft] val NanosAsLongKey = "spark.sql.legacy.parquet.nanosAsLong"
+
+  /** Events table with `ts` normalized to epoch-nanos BIGINT regardless
+    * of the file's parquet timestamp unit (see [[epochNanosTs]]). A
+    * TIMESTAMP(NANOS) file is rejected by Spark's schema inference
+    * unless `nanosAsLong` is on; that legacy conf is scoped to a session
+    * of its own ([[Sessions.scoped]]), so the caller's session is never
+    * mutated. */
+  def events(spark: SparkSession, sfDir: String): DataFrame = {
+    val path = s"$sfDir/events.parquet"
+    epochNanosTs(
+      try spark.read.parquet(path)
       catch {
         case _: org.apache.spark.sql.AnalysisException =>
-          spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-          spark.read.parquet(dir)
-      }
-    val raw = spark.readStream.schema(batch.schema).parquet(dir)
+          Sessions.scoped(spark, NanosAsLongKey -> "true").read.parquet(path)
+      })
+  }
+
+  /** `raw` with `ts` as epoch-nanos BIGINT, so every downstream
+    * pipeline sees one stable integer-nanos contract (nanos exceed
+    * double precision, so no FP conversion is safe):
+    *
+    *  - TIMESTAMP(NANOS) under `nanosAsLong` is already epoch-nanos;
+    *  - TIMESTAMP(MICROS/MILLIS) reads as a (possibly NTZ) timestamp and
+    *    is converted with exact integer arithmetic (`unix_micros * 1000`;
+    *    NTZ is rebased through the session zone, UTC in every graft
+    *    entry point). */
+  private def epochNanosTs(raw: DataFrame): DataFrame =
     raw.schema("ts").dataType match {
       case LongType => raw
       case TimestampType =>
@@ -319,42 +341,4 @@ object GraphIO {
         s"events.ts has unsupported type $other; expected a timestamp " +
           "or epoch-nanos BIGINT")
     }
-  }
-
-  /** Events table with `ts` normalized to epoch-nanos BIGINT regardless
-    * of the file's parquet timestamp unit, so every downstream pipeline
-    * sees one stable integer-nanos contract (nanos exceed double
-    * precision, so no FP conversion is safe):
-    *
-    *  - TIMESTAMP(MICROS/MILLIS) reads as a (possibly NTZ) timestamp and
-    *    is converted with exact integer arithmetic (`unix_micros * 1000`;
-    *    NTZ is rebased through the session zone, UTC in every graft
-    *    entry point).
-    *  - TIMESTAMP(NANOS) is rejected by Spark's schema inference unless
-    *    `nanosAsLong` is on; that legacy conf is scoped to a cloned
-    *    session (`newSession` shares the SparkContext but not the conf),
-    *    so the caller's session is never mutated — another reader of
-    *    nanos parquet in the same session keeps its own semantics. */
-  def events(spark: SparkSession, sfDir: String): DataFrame = {
-    val path = s"$sfDir/events.parquet"
-    val raw =
-      try spark.read.parquet(path)
-      catch {
-        case _: org.apache.spark.sql.AnalysisException =>
-          val scoped = spark.newSession()
-          scoped.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-          scoped.read.parquet(path)
-      }
-    raw.schema("ts").dataType match {
-      case LongType => raw // TIMESTAMP(NANOS) under nanosAsLong: already epoch-nanos
-      case TimestampType =>
-        raw.withColumn("ts", unix_micros(col("ts")) * lit(1000L))
-      case TimestampNTZType =>
-        raw.withColumn("ts",
-          unix_micros(col("ts").cast(TimestampType)) * lit(1000L))
-      case other => throw new IllegalArgumentException(
-        s"events.ts has unsupported type $other; expected a timestamp " +
-          "or epoch-nanos BIGINT")
-    }
-  }
 }

@@ -693,24 +693,20 @@ object Main {
       // the canonical verb's cross-source pick.
       val (in, out) = c.io
       val spark = c.spark
-      val name = "graft_cli_ingest"
       val docs = c.parquet(in).select(col("doc_id"), col("source"), col("text"))
-      spark.catalog.dropTempView(name) // idempotent re-run
-      val q = spark.readStream.schema(c.parquet(in).schema).parquet(in)
-        .select(col("doc_id"), col("source"), col("text"))
-        .withColumn("norm_text",
-          functions.TextFunctions.normalizeText(spark, col("text")))
-        .withColumn("event_time", timestamp_micros(col("doc_id")))
-        .withWatermark("event_time", "1 hour")
-        .dropDuplicatesWithinWatermark("norm_text")
-        .writeStream.outputMode("append").format("memory").queryName(name)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      val drained = streaming.Drain(spark, docs, "append") { ds =>
+        ds.readStream.schema(c.parquet(in).schema).parquet(in)
+          .select(col("doc_id"), col("source"), col("text"))
+          .withColumn("norm_text",
+            functions.TextFunctions.normalizeText(ds, col("text")))
+          .withColumn("event_time", timestamp_micros(col("doc_id")))
+          .withWatermark("event_time", "1 hour")
+          .dropDuplicatesWithinWatermark("norm_text")
+      }
       val survivors = docs
         .withColumn("norm_text",
           functions.TextFunctions.normalizeText(spark, col("text")))
-        .join(spark.table(name).select(col("norm_text")).distinct(),
+        .join(drained.select(col("norm_text")).distinct(),
           Seq("norm_text"))
         .groupBy(col("norm_text")).agg(min(col("doc_id")).as("doc_id"))
         .select(col("doc_id"))

@@ -45,4 +45,19 @@ object Sessions {
     Configurator.setLevel("org.apache.spark.rdd.MapPartitionsRDD", Level.ERROR)
     spark
   }
+
+  /** A session of its own for code that needs a different conf: a
+    * `newSession` (same SparkContext and cached data, its own conf, temp
+    * views and temp functions) carrying every conf `parent` sets at
+    * runtime, then `conf` on top. `parent` is never mutated, so two
+    * threads can scope different values off one session. Entries the
+    * new session already holds with the same value (those it inherits
+    * from the SparkContext, static ones included) are left alone. */
+  def scoped(parent: SparkSession, conf: (String, String)*): SparkSession = {
+    val s = parent.newSession()
+    (parent.conf.getAll.toSeq ++ conf).foreach { case (k, v) =>
+      if (!s.conf.getOption(k).contains(v)) s.conf.set(k, v)
+    }
+    s
+  }
 }

@@ -4,7 +4,7 @@ import graft.functions.{GraftHash, TextFunctions => TF}
 import graft.operators._
 import graft.pipelines.{Classify, Dedup, Multimodal, Packing, Retrieval,
   Sampling, Similarity, Sketches, TextMetrics}
-import graft.streaming.{EventPipelines, Tws}
+import graft.streaming.{Drain, EventPipelines, Restart, Tws}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -67,24 +67,35 @@ object SparkEntry {
     })
   }
 
-  /** Scale-adaptive STATEFUL-DRAIN width for the streaming gates (r20,
-    * guide §2.2 — the [[graft.AdaptiveWidth]] discipline on the
-    * streaming axis): a stateful micro-batch commits one state-store
-    * instance per shuffle partition (an HDFS-backed delta/snapshot, or
-    * a whole RocksDB instance on the TWS path), so at gate scale a
-    * drain over a few MB of input spent its wall on 32 near-empty
-    * store commits per batch (r20 event log: 2-stage/33-task jobs over
-    * ~0.35 MB of shuffle each). The drain runs with
-    * `spark.sql.shuffle.partitions` derived from the BATCH corpus the
-    * stream reads — data-proportional here, capped at the session
-    * value, so at 100 TB the cap wins and cluster behavior is
-    * unchanged. Results are width-independent: aggregation state is
-    * merge-commutative per key, and the per-key fold/session operators
-    * group by key before folding — partition count never reorders a
-    * key's own sequence. */
-  private def withDrainWidth[T](s: SparkSession,
-      sized: org.apache.spark.sql.DataFrame)(body: => T): T =
-    graft.AdaptiveWidth.withWidth(s, graft.AdaptiveWidth.of(sized))(body)
+  /** The events stream with `ts` as a µs-truncated TIMESTAMP, for the
+    * event-time streaming operators (window, interval join, dedup). */
+  private def eventsStreamTs(ds: SparkSession, dir: String): DataFrame =
+    GraphIO.eventsStream(ds, dir)
+      .withColumn("ts", timestamp_micros(expr("ts div 1000")))
+
+  /** The events stream with `ts` floored to whole µs (still epoch-nanos),
+    * so stream nanos arithmetic and the µs-resolution oracle see the
+    * same instants; [[eventsUs]] is its batch twin. */
+  private def eventsStreamUs(ds: SparkSession, dir: String): DataFrame =
+    GraphIO.eventsStream(ds, dir).withColumn("ts", expr("ts div 1000 * 1000"))
+
+  private def eventsUs(s: SparkSession, dir: String): DataFrame =
+    GraphIO.events(s, dir).withColumn("ts", expr("ts div 1000 * 1000"))
+
+  /** A sessionizer's drained sessions, in the µs units of its oracle. */
+  private def sessionRows(sessions: DataFrame): DataFrame =
+    sessions.select(col("user_id"), col("n_events"),
+        expr("dur_ns div 1000").as("dur_us"))
+      .orderBy(col("user_id"), col("n_events"), col("dur_us"))
+
+  /** `betweenPhases` of the repartitioned restart gates: the drain
+    * session resized to 2k+1 partitions, k the caller's width. */
+  private def resized(s: SparkSession): SparkSession => Unit = {
+    val key = "spark.sql.shuffle.partitions"
+    val altered = (scala.util.Try(s.conf.get(key).toInt)
+      .getOrElse(s.sparkContext.defaultParallelism) * 2 + 1).toString
+    ds => ds.conf.set(key, altered)
+  }
 
   /** Probe values for the Count-Min gate: the search terms plus one
     * token absent from the corpus. */
@@ -1213,24 +1224,16 @@ object SparkEntry {
     // one finite stream. The oracle is the batch cells SQL: streaming
     // and batch must produce the identical grid.
     gate("stream_token_cms", Flat, Oracles.streamTokenCms)((s, dir) => {
-      val name = "graft_stream_cms_gate"
       val schema = GraphIO.documents(s, dir).schema
       // real directory-shaped file-stream source (GraphIO.streamingDir
       // byte-copies a single-file testdata table into a directory once;
       // directory-shaped corpora stream in place)
-      val docs = s.readStream.schema(schema)
-        .parquet(GraphIO.streamingDir(dir, "documents"))
-      val toks = docs.select(explode(TF.tokens(col("text"))).as("tok"))
-      s.catalog.dropTempView(name) // idempotent re-run in one session
-      withDrainWidth(s, GraphIO.documents(s, dir)) {
-        val q = Sketches.cmsSketch(s, toks, col("tok"))
-          .writeStream.outputMode("complete").format("memory")
-          .queryName(name)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      s.table(name).orderBy(col("r"), col("bucket"))
+      Drain(s, GraphIO.documents(s, dir), "complete") { ds =>
+        val docs = ds.readStream.schema(schema)
+          .parquet(GraphIO.streamingDir(dir, "documents"))
+        Sketches.cmsSketch(ds,
+          docs.select(explode(TF.tokens(col("text"))).as("tok")), col("tok"))
+      }.orderBy(col("r"), col("bucket"))
     }),
     // STREAMING sessionization twin: the explicit-state
     // flatMapGroupsWithState sessionizer (bounded state: one open
@@ -1239,25 +1242,11 @@ object SparkEntry {
     // stream nanos arithmetic and the µs-resolution oracle see the
     // same instants. Oracle: the batch twin restricted to the sessions
     // a finite drain actually closes (see Oracles.streamSessionize).
-    gate("stream_sessionize", Flat, Oracles.streamSessionize())((s, dir) => {
-      val name = "graft_stream_sessionize_gate"
-      val ev = GraphIO.eventsStream(s, dir)
-        .withColumn("ts", expr("ts div 1000 * 1000"))
-      s.catalog.dropTempView(name) // idempotent re-run in one session
-      withDrainWidth(s, GraphIO.events(s, dir)) {
-        val q = EventPipelines.sessionizeStream(s, ev,
-            watermarkDelay = "0 seconds")
-          .toDF()
-          .writeStream.outputMode("append").format("memory").queryName(name)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      s.table(name)
-        .select(col("user_id"), col("n_events"),
-          expr("dur_ns div 1000").as("dur_us"))
-        .orderBy(col("user_id"), col("n_events"), col("dur_us"))
-    }),
+    gate("stream_sessionize", Flat, Oracles.streamSessionize())((s, dir) =>
+      sessionRows(Drain(s, GraphIO.events(s, dir), "append") { ds =>
+        EventPipelines.sessionizeStream(ds, eventsStreamUs(ds, dir),
+          watermarkDelay = "0 seconds").toDF()
+      })),
     // Arbitrary-state-API sessionization twin: the SAME session
     // semantics on Spark 4's transformWithState (StatefulProcessor +
     // explicit event-time timers) — which only runs on the RocksDB
@@ -1266,72 +1255,34 @@ object SparkEntry {
     // deployment default). Passes stream_sessionize's oracle
     // UNCHANGED.
     gate("stream_sessionize_tws", Flat,
-      Oracles.streamSessionize())((s, dir) => {
-      val name = "graft_stream_sessionize_tws_gate"
-      val ev = GraphIO.eventsStream(s, dir)
-        .withColumn("ts", expr("ts div 1000 * 1000"))
-      s.catalog.dropTempView(name) // idempotent re-run in one session
-      Tws.withRocksDbStateStore(s) {
-        withDrainWidth(s, GraphIO.events(s, dir)) {
-          val q = Tws.sessionizeStreamTws(s, ev, watermarkDelay = "0 seconds")
-            .toDF()
-            .writeStream.outputMode("append").format("memory").queryName(name)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
-      }
-      s.table(name)
-        .select(col("user_id"), col("n_events"),
-          expr("dur_ns div 1000").as("dur_us"))
-        .orderBy(col("user_id"), col("n_events"), col("dur_us"))
-    }),
+      Oracles.streamSessionize())((s, dir) =>
+      sessionRows(Drain(s, GraphIO.events(s, dir), "append") { ds =>
+        Tws.sessionizeStreamTws(ds, eventsStreamUs(ds, dir),
+          watermarkDelay = "0 seconds").toDF()
+      })),
     // STREAMING tumbling-window stats: watermark + hourly window in
     // complete mode (state = windows × types, bounded) drained
     // AvailableNow — the canonical streaming aggregation, gated
     // against the same hour-bucket arithmetic in DuckDB.
-    gate("stream_window", Flat, Oracles.streamWindow)((s, dir) => {
-      val name = "graft_stream_window_gate"
-      val ev = GraphIO.eventsStream(s, dir)
-        .withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      s.catalog.dropTempView(name) // idempotent re-run in one session
-      withDrainWidth(s, GraphIO.events(s, dir)) {
-        val q = EventPipelines.windowedStats(ev)
-          .writeStream.outputMode("complete").format("memory").queryName(name)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      s.table(name)
-        .select(col("window.start").cast("long").as("hour_ts"),
+    gate("stream_window", Flat, Oracles.streamWindow)((s, dir) =>
+      Drain(s, GraphIO.events(s, dir), "complete") { ds =>
+        EventPipelines.windowedStats(eventsStreamTs(ds, dir))
+      }.select(col("window.start").cast("long").as("hour_ts"),
           col("event_type"), col("n"), round(col("total"), 6).as("total"))
-        .orderBy(col("hour_ts"), col("event_type"))
-    }),
+        .orderBy(col("hour_ts"), col("event_type"))),
     // STREAMING running totals: per-event emission from one
     // accumulator double per user; on the single-batch AvailableNow
     // drain the fold order equals the batch window's frame order, so
     // the batch oracle passes unchanged (no closed-set restriction —
     // every event emits at arrival, nothing waits on a watermark).
+    // Across batches the per-group (ts, event_id) sort is per-batch, not
+    // global, so the drain asserts one batch.
     gate("stream_running_totals", Flat,
-      Oracles.eventsRunningTotals())((s, dir) => {
-      val name = "graft_stream_running_gate"
-      s.catalog.dropTempView(name) // idempotent re-run in one session
-      val q = withDrainWidth(s, GraphIO.events(s, dir)) {
-        val q0 = EventPipelines
-          .runningTotalsStream(s, GraphIO.eventsStream(s, dir))
+      Oracles.eventsRunningTotals())((s, dir) =>
+      Drain(s, GraphIO.events(s, dir), "append", singleBatch = true) { ds =>
+        EventPipelines.runningTotalsStream(ds, GraphIO.eventsStream(ds, dir))
           .toDF()
-          .writeStream.outputMode("append").format("memory").queryName(name)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q0.awaitTermination()
-        q0
-      }
-      // batch-oracle equality leans on the single-batch fold order
-      // (across batches the per-group (ts, event_id) sort is per-batch,
-      // not global) — same loud guard as stream_range_join/stream_dedup
-      requireSingleBatch(q, "stream_running_totals")
-      s.table(name).orderBy(col("user_id"), col("event_id"))
-    }),
+      }.orderBy(col("user_id"), col("event_id"))),
     // CONCURRENT streaming drains: two structured-streaming queries —
     // the complete-mode windowed rollup and the append-mode
     // flatMapGroupsWithState running-totals fold — run AT THE SAME
@@ -1344,38 +1295,20 @@ object SparkEntry {
     // batch oracles, union'd under the same tags) catches cross-drain
     // interference in EITHER drain.
     gate("stream_two_drains", Flat, Oracles.streamTwoDrains())((s, dir) => {
-      val nameW = "graft_two_drains_window"
-      val nameT = "graft_two_drains_totals"
-      s.catalog.dropTempView(nameW) // idempotent re-run in one session
-      s.catalog.dropTempView(nameT)
-      val evW = GraphIO.eventsStream(s, dir)
-        .withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      val qT = withDrainWidth(s, GraphIO.events(s, dir)) {
-        val qW = EventPipelines.windowedStats(evW)
-          .writeStream.outputMode("complete").format("memory")
-          .queryName(nameW)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        val qT0 = EventPipelines
-          .runningTotalsStream(s, GraphIO.eventsStream(s, dir)).toDF()
-          .writeStream.outputMode("append").format("memory")
-          .queryName(nameT)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        // both live before either drains — genuinely concurrent
-        qW.awaitTermination()
-        qT0.awaitTermination()
-        qT0
-      }
       // the totals leg has stream_running_totals' single-batch
       // fold-order dependence; the window leg is complete-mode
       // (batch-count-insensitive), no guard needed there
-      requireSingleBatch(qT, "stream_two_drains/totals")
-      val w = s.table(nameW).select(lit("window").as("drain"),
+      val Seq(win, totals) = Drain.concurrently(s, GraphIO.events(s, dir),
+        Drain.Leg("complete",
+          ds => EventPipelines.windowedStats(eventsStreamTs(ds, dir))),
+        Drain.Leg("append", ds => EventPipelines
+          .runningTotalsStream(ds, GraphIO.eventsStream(ds, dir)).toDF(),
+          singleBatch = true))
+      val w = win.select(lit("window").as("drain"),
         concat(col("window.start").cast("long").cast("string"), lit("|"),
           col("event_type")).as("key"),
         col("n"), round(col("total"), 6).as("v"))
-      val t = s.table(nameT).select(lit("totals").as("drain"),
+      val t = totals.select(lit("totals").as("drain"),
         concat(col("user_id").cast("string"), lit("|"),
           col("event_id").cast("string")).as("key"),
         col("running_cents").as("n"), lit(0.0).as("v"))
@@ -1397,8 +1330,7 @@ object SparkEntry {
     // not the r14 one-batch-per-phase crutch.
     gate("stream_restart_totals", Flat,
       Oracles.eventsRunningTotals())((s, dir) =>
-      graft.streaming.Restart.twoPhaseDrain(s, GraphIO.events(s, dir),
-          "totals", dir,
+      Restart.twoPhaseDrain(s, GraphIO.events(s, dir), "totals", dir,
           src => EventPipelines.runningTotalsStream(s, src).toDF())
         .orderBy(col("user_id"), col("event_id"))),
     // CHECKPOINTED RESTART across a CHANGED OPERATOR (VERDICT r16 next
@@ -1418,8 +1350,7 @@ object SparkEntry {
     // is a loud hash mismatch.
     gate("stream_restart_evolved", Flat,
       Oracles.eventsRunningTotalsEvolved())((s, dir) =>
-      graft.streaming.Restart.twoPhaseDrain(s, GraphIO.events(s, dir),
-          "evolved", dir,
+      Restart.twoPhaseDrain(s, GraphIO.events(s, dir), "evolved", dir,
           src => EventPipelines.runningTotalsStream(s, src).toDF(),
           pipeline2 = Some(src => EventPipelines.runningTotalsStream(s,
             src.filter(col("event_id") % 2 === 0)).toDF()))
@@ -1439,42 +1370,27 @@ object SparkEntry {
     // µs-floored before the stream like that gate.
     gate("stream_restart_sessionize", Flat,
       Oracles.streamSessionize())((s, dir) =>
-      graft.streaming.Restart.twoPhaseDrain(s,
-          GraphIO.events(s, dir)
-            .withColumn("ts", expr("ts div 1000 * 1000")),
-          "sessionize", dir,
-          src => EventPipelines.sessionizeStream(s, src,
-            watermarkDelay = "0 seconds").toDF())
-        .select(col("user_id"), col("n_events"),
-          expr("dur_ns div 1000").as("dur_us"))
-        .orderBy(col("user_id"), col("n_events"), col("dur_us"))),
+      sessionRows(Restart.twoPhaseDrain(s, eventsUs(s, dir), "sessionize",
+        dir, src => EventPipelines.sessionizeStream(s, src,
+          watermarkDelay = "0 seconds").toDF()))),
     // CHECKPOINTED RESTART under CHANGED PARALLELISM: the one knob a
     // deployment must not have to freeze across restarts. Spark pins
     // the stateful operators' shuffle-partition count in the
     // checkpoint's offset-log metadata and applies the CHECKPOINTED
     // value on resume (`OffsetSeqMetadata.relevantSQLConfs`), so a
     // restart under a resized session must WORK — this gate flips
-    // `spark.sql.shuffle.partitions` between the two drains and hashes
-    // the combined sink against the same never-stopped oracle. If the
-    // engine ever read the session value instead, phase 2 would route
-    // keys to partitions whose restored state lives elsewhere — lost
-    // accumulators, wrong totals, loud hash mismatch.
+    // the drain session's `spark.sql.shuffle.partitions` between the
+    // two drains and hashes the combined sink against the same
+    // never-stopped oracle. If the engine ever read the session value
+    // instead, phase 2 would route keys to partitions whose restored
+    // state lives elsewhere — lost accumulators, wrong totals, loud
+    // hash mismatch.
     gate("stream_restart_repartitioned", Flat,
-      Oracles.eventsRunningTotals())((s, dir) => {
-      val key = "spark.sql.shuffle.partitions"
-      val orig = s.conf.get(key)
-      val altered = (scala.util.Try(orig.toInt)
-        .getOrElse(s.sparkContext.defaultParallelism) * 2 + 1).toString
-      val out =
-        try graft.streaming.Restart.twoPhaseDrain(s, GraphIO.events(s, dir),
-          "repart", dir,
+      Oracles.eventsRunningTotals())((s, dir) =>
+      Restart.twoPhaseDrain(s, GraphIO.events(s, dir), "repart", dir,
           src => EventPipelines.runningTotalsStream(s, src).toDF(),
-          betweenPhases = sess => sess.conf.set(key, altered))
-        // restore BEFORE any action on `out`: the session serves every
-        // later gate in this JVM
-        finally s.conf.set(key, orig)
-      out.orderBy(col("user_id"), col("event_id"))
-    }),
+          betweenPhases = resized(s))
+        .orderBy(col("user_id"), col("event_id"))),
     // CHECKPOINTED RESTART on the transformWithState/RocksDB path:
     // the deployment-grade state backend's restart is where RocksDB
     // CHANGELOG CHECKPOINTING actually differs from the HDFS-backed
@@ -1484,41 +1400,19 @@ object SparkEntry {
     // drain would. Same µs-floor, same unchanged single-drain
     // stream_sessionize oracle as the fMGWS restart gate.
     gate("stream_restart_tws", Flat, Oracles.streamSessionize())((s, dir) =>
-      Tws.withRocksDbStateStore(s) {
-        graft.streaming.Restart.twoPhaseDrain(s,
-            GraphIO.events(s, dir)
-              .withColumn("ts", expr("ts div 1000 * 1000")),
-            "tws", dir,
-            src => Tws.sessionizeStreamTws(s, src,
-              watermarkDelay = "0 seconds").toDF())
-          .select(col("user_id"), col("n_events"),
-            expr("dur_ns div 1000").as("dur_us"))
-          .orderBy(col("user_id"), col("n_events"), col("dur_us"))
-      }),
+      sessionRows(Restart.twoPhaseDrain(s, eventsUs(s, dir), "tws", dir,
+        src => Tws.sessionizeStreamTws(s, src,
+          watermarkDelay = "0 seconds").toDF()))),
     // ...and the same restart under CHANGED PARALLELISM: RocksDB
     // instances are per state-store partition, so the checkpoint-
     // pinned partition count is what lets a resized session reopen
     // the right RocksDB instances (timers included) on resume.
     gate("stream_restart_tws_repartitioned", Flat,
-      Oracles.streamSessionize())((s, dir) => {
-      val key = "spark.sql.shuffle.partitions"
-      val orig = s.conf.get(key)
-      val altered = (scala.util.Try(orig.toInt)
-        .getOrElse(s.sparkContext.defaultParallelism) * 2 + 1).toString
-      val out =
-        try Tws.withRocksDbStateStore(s) {
-          graft.streaming.Restart.twoPhaseDrain(s,
-            GraphIO.events(s, dir)
-              .withColumn("ts", expr("ts div 1000 * 1000")),
-            "twsrepart", dir,
-            src => Tws.sessionizeStreamTws(s, src,
-              watermarkDelay = "0 seconds").toDF(),
-            betweenPhases = sess => sess.conf.set(key, altered))
-        } finally s.conf.set(key, orig)
-      out.select(col("user_id"), col("n_events"),
-          expr("dur_ns div 1000").as("dur_us"))
-        .orderBy(col("user_id"), col("n_events"), col("dur_us"))
-    }),
+      Oracles.streamSessionize())((s, dir) =>
+      sessionRows(Restart.twoPhaseDrain(s, eventsUs(s, dir), "twsrepart",
+        dir, src => Tws.sessionizeStreamTws(s, src,
+          watermarkDelay = "0 seconds").toDF(),
+        betweenPhases = resized(s)))),
     // STREAMING stream-stream interval join twin of events_range_join:
     // both sides watermarked, event-time-bounded join condition → Spark
     // derives a state-retention horizon for both buffers. The single
@@ -1526,49 +1420,24 @@ object SparkEntry {
     // the emitted set is exactly the batch interval join — the oracle is
     // the same range predicate in DuckDB at µs resolution (ts is
     // µs-floored going into the stream, like the batch twin's µs floor).
-    gate("stream_range_join", Flat, Oracles.streamRangeJoin())((s, dir) => {
-      val name = "graft_stream_rangejoin_gate"
-      val ev = GraphIO.eventsStream(s, dir)
-        .withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      s.catalog.dropTempView(name) // idempotent re-run in one session
-      val q = withDrainWidth(s, GraphIO.events(s, dir)) {
-        val q0 = EventPipelines.rangeJoinStream(ev)
-          .writeStream.outputMode("append").format("memory").queryName(name)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q0.awaitTermination()
-        q0
-      }
-      requireSingleBatch(q, "stream_range_join")
-      s.table(name)
-        .select(col("err_id"), col("click_id"),
+    gate("stream_range_join", Flat, Oracles.streamRangeJoin())((s, dir) =>
+      Drain(s, GraphIO.events(s, dir), "append", singleBatch = true) { ds =>
+        EventPipelines.rangeJoinStream(eventsStreamTs(ds, dir))
+      }.select(col("err_id"), col("click_id"),
           (unix_micros(col("err_ts")) - unix_micros(col("click_ts")))
             .as("lag_us"))
-        .orderBy(col("err_id"), col("click_id"))
-    }),
+        .orderBy(col("err_id"), col("click_id"))),
     // STREAMING exact dedup: dropDuplicatesWithinWatermark keeps one
     // row per (user_id, event_type) with state bounded by the watermark
     // horizon. Which payload row survives depends on intra-batch arrival
     // order, so the gate projects only the key columns — the emitted KEY
     // set on a finite drain is exactly the distinct pairs, which is what
     // the DuckDB oracle checks.
-    gate("stream_dedup", Flat, Oracles.streamDedup)((s, dir) => {
-      val name = "graft_stream_dedup_gate"
-      val ev = GraphIO.eventsStream(s, dir)
-        .withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      s.catalog.dropTempView(name) // idempotent re-run in one session
-      val q = withDrainWidth(s, GraphIO.events(s, dir)) {
-        val q0 = EventPipelines.streamingDedup(ev)
-          .writeStream.outputMode("append").format("memory").queryName(name)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q0.awaitTermination()
-        q0
-      }
-      requireSingleBatch(q, "stream_dedup")
-      s.table(name).select(col("user_id"), col("event_type"))
-        .orderBy(col("user_id"), col("event_type"))
-    }),
+    gate("stream_dedup", Flat, Oracles.streamDedup)((s, dir) =>
+      Drain(s, GraphIO.events(s, dir), "append", singleBatch = true) { ds =>
+        EventPipelines.streamingDedup(eventsStreamTs(ds, dir))
+      }.select(col("user_id"), col("event_type"))
+        .orderBy(col("user_id"), col("event_type"))),
     // STREAMING percentiles: the integer-cents histogram aggregates in
     // complete mode (state = the VALUE DOMAIN, the same bound that
     // makes the batch formulation spill-proof — the histogram IS the
@@ -1576,20 +1445,12 @@ object SparkEntry {
     // to the shared interpolation tail, and the batch percentiles
     // oracle passes UNCHANGED.
     gate("stream_percentiles", Flat, Oracles.eventsPercentiles)((s, dir) => {
-      val name = "graft_stream_pct_gate"
-      val ev = GraphIO.eventsStream(s, dir)
-      s.catalog.dropTempView(name) // idempotent re-run in one session
-      val hist = ev.select(col("event_type"),
-          round(col("value") * lit(100.0)).cast("long").as("c"))
-        .groupBy(col("event_type"), col("c")).agg(count(lit(1)).as("cnt"))
-      withDrainWidth(s, GraphIO.events(s, dir)) {
-        val q = hist
-          .writeStream.outputMode("complete").format("memory").queryName(name)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+      val hist = Drain(s, GraphIO.events(s, dir), "complete") { ds =>
+        GraphIO.eventsStream(ds, dir).select(col("event_type"),
+            round(col("value") * lit(100.0)).cast("long").as("c"))
+          .groupBy(col("event_type"), col("c")).agg(count(lit(1)).as("cnt"))
       }
-      val p = graft.pipelines.Quantiles.contFromCounts(s.table(name),
+      val p = graft.pipelines.Quantiles.contFromCounts(hist,
         Seq("event_type"), "c", "cnt", Seq(0.5, 0.9, 0.99))
       p.groupBy(col("event_type"))
         .agg(max(col("n")).as("n"),
@@ -1611,25 +1472,19 @@ object SparkEntry {
     gate("stream_percentiles_sketch", Flat,
       Oracles.eventsPercentilesSketch(
         PctSketchBins._1, PctSketchBins._2, PctSketchBins._3))((s, dir) => {
-      val name = "graft_stream_pct_sketch_gate"
       val (lo, width, nbins) = PctSketchBins
-      val ev = GraphIO.eventsStream(s, dir)
-      s.catalog.dropTempView(name) // idempotent re-run in one session
       val sketch =
         graft.functions.FixedBinHistogramAgg.asUdaf(lo, width, nbins)
       // NaN filtered next to NULL on BOTH legs: the aggregator skips
       // NaN (no meaningful bin), so the exact twin below must not count
       // it either — and the DuckDB oracle's least/greatest clamp would
       // place NaN differently anyway (ADVICE r13).
-      withDrainWidth(s, GraphIO.events(s, dir)) {
-        val q = ev.filter(col("value").isNotNull && !isnan(col("value")))
+      val bins = Drain(s, GraphIO.events(s, dir), "complete") { ds =>
+        GraphIO.eventsStream(ds, dir)
+          .filter(col("value").isNotNull && !isnan(col("value")))
           .groupBy(col("event_type")).agg(sketch(col("value")).as("bins"))
-          .writeStream.outputMode("complete").format("memory").queryName(name)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
       }
-      val binned = s.table(name)
+      val binned = bins
         .select(col("event_type"),
           posexplode(col("bins")).as(Seq("bin", "cnt")))
         .filter(col("cnt") > 0)
@@ -1676,27 +1531,18 @@ object SparkEntry {
     // expected all-1 flags, so a bound violation hash-mismatches.
     gate("stream_percentiles_gk", Flat,
       Oracles.eventsPercentilesGk(Seq(0.5, 0.9, 0.99)))((s, dir) => {
-      val name = "graft_stream_pct_gk_gate"
       val acc = 1000 // ε = 1/1000 → rank error ≤ n/1000 + 1
       val qs = Seq(0.5, 0.9, 0.99)
-      val ev = GraphIO.eventsStream(s, dir)
-      s.catalog.dropTempView(name) // idempotent re-run in one session
       // drain-width note: the GK estimate is merge-order (hence
       // width-) dependent, but the gate's OUTPUT is the ε-bound audit
       // over the (event_type × q) universe — a theorem for any merge
       // order, so the emitted flags are width-independent.
-      withDrainWidth(s, GraphIO.events(s, dir)) {
-        val q = ev.filter(col("value").isNotNull)
+      val est = Drain(s, GraphIO.events(s, dir), "complete") { ds =>
+        GraphIO.eventsStream(ds, dir).filter(col("value").isNotNull)
           .groupBy(col("event_type"))
           .agg(percentile_approx(col("value"), array(qs.map(lit): _*),
             lit(acc)).as("est"))
-          .writeStream.outputMode("complete").format("memory").queryName(name)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      val est = s.table(name).select(col("event_type"),
-        posexplode(col("est")).as(Seq("qi", "est")))
+      }.select(col("event_type"), posexplode(col("est")).as(Seq("qi", "est")))
       graft.pipelines.Quantiles.approxRankAudit(
         GraphIO.events(s, dir), "event_type", col("value"), est, qs, acc)
     }),
@@ -1718,7 +1564,6 @@ object SparkEntry {
     gate("stream_ingest_curate", Flat,
       Oracles.streamIngestCurate("CAST(substr(source, 4) AS INT) % 5",
         reShift = 1000000000L, everyK = 3))((s, dir) => {
-      val name = "graft_stream_ingest_gate"
       val reShift = 1000000000L
       val docs = GraphIO.documents(s, dir)
         .select(col("doc_id"), col("source"), col("text"))
@@ -1728,20 +1573,14 @@ object SparkEntry {
       val srcDir = "target/graft-ingest-" + dir.replaceAll("[^a-zA-Z0-9]", "_")
       ingest.coalesce(1).write.mode("overwrite").parquet(srcDir)
       val schema = s.read.parquet(srcDir).schema
-      s.catalog.dropTempView(name) // idempotent re-run in one session
-      val q = withDrainWidth(s, GraphIO.documents(s, dir)) {
-        val q0 = s.readStream.schema(schema).parquet(srcDir)
-          .withColumn("norm_text", TF.normalizeText(s, col("text")))
+      val drained = Drain(s, GraphIO.documents(s, dir), "append",
+          singleBatch = true) { ds =>
+        ds.readStream.schema(schema).parquet(srcDir)
+          .withColumn("norm_text", TF.normalizeText(ds, col("text")))
           .withColumn("event_time", timestamp_micros(col("doc_id")))
           .withWatermark("event_time", "1 hour")
           .dropDuplicatesWithinWatermark("norm_text")
-          .writeStream.outputMode("append").format("memory").queryName(name)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q0.awaitTermination()
-        q0
       }
-      requireSingleBatch(q, "stream_ingest_curate")
       // The batch tail re-reads the LANDED source instead of replaying
       // the union-and-shift plan (r20, guide §1.2): `ingest` was just
       // written to srcDir verbatim, and the tail referenced the
@@ -1749,7 +1588,7 @@ object SparkEntry {
       // class table, the survivor join) — each reference re-running
       // the normalize/union work. One parquet scan feeds everything.
       val landed = s.read.parquet(srcDir)
-      val drainedKeys = s.table(name).select(col("norm_text"))
+      val drainedKeys = drained.select(col("norm_text"))
       // per-class min-id survivors — the deterministic identity rule;
       // materialized once (tiny: one row per class), consumed by the
       // three conservation counts below AND the returned survivor join
@@ -1801,23 +1640,6 @@ object SparkEntry {
     * parquet tables. */
   def oracleSql: Map[String, String] =
     gates.map(g => g.name -> g.oracle()).toMap
-
-  /** The stream_range_join / stream_dedup gates are batch-equivalent
-    * ONLY when the AvailableNow drain processes all input files in one
-    * micro-batch: a watermark advance between batches would silently
-    * drop cross-batch pairs/keys and diverge from the batch oracle. The
-    * parquet source does that today (no maxFilesPerTrigger set); this
-    * assertion makes a future source-config change fail loudly instead
-    * of corrupting the gate. */
-  private def requireSingleBatch(
-      q: org.apache.spark.sql.streaming.StreamingQuery,
-      gate: String): Unit = {
-    val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-    require(dataBatches == 1,
-      s"$gate: expected ONE data micro-batch on the AvailableNow drain " +
-        s"(cross-batch watermark eviction would corrupt the gate); " +
-        s"saw $dataBatches")
-  }
 
   /** sfDir-scoped table prefix for the bucketed layout, so one JVM
     * touching several scale factors can never read a stale layout. */

@@ -201,15 +201,19 @@ object ConnectedComponents {
 
   /** True iff `e` (canonical (hi, lo) pairs) is a star forest: every
     * child `x` has exactly one parent and no parent is itself a child.
-    * Sound convergence evidence where the checksum is probabilistic. */
+    * Sound convergence evidence where the checksum is probabilistic.
+    * Both checks are full aggregates, not `limit(1)` probes: at the
+    * fixed point they scan every partition anyway, and a codegen'd
+    * limit names its counter from a JVM-wide sequence, so its classes
+    * compiled anew on every run. */
   private def isStarForest(e: DataFrame): Boolean = {
-    val children = e.groupBy(col("x")).agg(count(lit(1)).as("n"))
-    val multiParent = children.filter(col("n") > 1).limit(1).count()
-    val centerIsChild = e.select(col("y"))
+    val maxParents = e.groupBy(col("x")).agg(count(lit(1)).as("n"))
+      .agg(coalesce(max(col("n")), lit(0L))).head().getLong(0)
+    lazy val centerIsChild = e.select(col("y"))
       .join(e.select(col("x").as("y")).hint("SHUFFLE_HASH"), Seq("y"),
         "left_semi")
-      .limit(1).count()
-    multiParent == 0L && centerIsChild == 0L
+      .count()
+    maxParents <= 1L && centerIsChild == 0L
   }
 
   /** (cardinality, content-hash sum) folded into one comparable long —

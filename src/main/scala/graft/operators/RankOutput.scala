@@ -82,10 +82,6 @@ object RankOutput {
       .select(col("line"))
   }
 
-  def writeDot(edges: DataFrame, scores: DataFrame, dir: String,
-      k: Int = 50): Unit =
-    dotLines(edges, scores, k).coalesce(1).write.mode("overwrite").text(dir)
-
   /** Color-coded DOT render with the reference's exact view semantics
     * (reference `src/draw_graphs.py:4-89`) and exact render inputs
     * (reference `src/base_hits.py:74-79`): top-k of each score vector,

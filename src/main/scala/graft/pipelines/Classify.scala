@@ -54,7 +54,7 @@ object Classify {
     // the unshared plans cost four corpus passes per call)
     val classCnt = trainToks.groupBy(col("cls"), col("term"))
       .agg(count(lit(1)).as("cnt"))
-      .localCheckpoint(true)
+      .transform(graft.Checkpoints.materialize(_))
     val classTot = classCnt.groupBy(col("cls"))
       .agg(sum(col("cnt")).as("tok_c"))
     val vocab = classCnt.select(col("term")).distinct().count()
@@ -62,7 +62,8 @@ object Classify {
     // BOTH the training total and the priors (same round/log
     // expression as before, so the micro-nat values are bit-identical)
     val clsDocs = train.groupBy(col(labelCol).as("cls"))
-      .agg(count(lit(1)).as("n")).localCheckpoint(true)
+      .agg(count(lit(1)).as("n"))
+      .transform(graft.Checkpoints.materialize(_))
     val nTrain = clsDocs.agg(coalesce(sum(col("n")), lit(0L)))
       .head().getLong(0)
     val priors = clsDocs

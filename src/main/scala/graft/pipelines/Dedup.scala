@@ -705,7 +705,7 @@ object Dedup {
         .select(col("quoted"), col("container"),
           round(col("cont"), 6).as("containment"))
         .orderBy(col("quoted"), col("container"))
-        .localCheckpoint(true)
+        .transform(graft.Checkpoints.materialize(_))
     } finally sh.unpersist(false)
   }
 
@@ -751,7 +751,7 @@ object Dedup {
       jac.filter(col("jac") >= lit(threshold))
         .select(col("a"), col("b"), round(col("jac"), 6).as("jaccard"))
         .orderBy(col("a"), col("b"))
-        .localCheckpoint(true)
+        .transform(graft.Checkpoints.materialize(_))
     } finally sh.unpersist(false)
   }
 

@@ -627,7 +627,7 @@ object Similarity {
       // nlist rows; eagerly materialized so the training subtree (seed
       // assignment + Lloyd means over the full corpus) runs once, not
       // once per downstream consumer (index + probes).
-      .localCheckpoint(true)
+      .transform(graft.Checkpoints.materialize(_))
   }
 
   /** Corpus cluster-composition report — the k-means "what is in my
@@ -1110,7 +1110,7 @@ object Similarity {
       .agg(transform(array_sort(collect_list(struct(col("pos"), col("mv")))),
         x => round(x.getField("mv"), 6)).as("cvec"))
       // m·ksub rows; materialized once, feeds encode + the ADC tables
-      .localCheckpoint(true)
+      .transform(graft.Checkpoints.materialize(_))
   }
 
   /** PQ codes: nearest codeword per (vector, subspace) →

@@ -64,9 +64,9 @@ import org.apache.spark.sql.streaming.Trigger
   * conf (`OffsetSeqMetadata.relevantSQLConfs`). A deployment may
   * therefore resize the session freely across restarts; the one knob
   * that cannot move is honored by the engine itself. The
-  * `betweenPhases` hook exists to gate exactly this: flip the session
-  * conf between the drains and the output must still match the
-  * never-stopped oracle (`stream_restart_repartitioned`).
+  * `betweenPhases` hook exists to gate exactly this: flip the drain
+  * session's conf between the drains and the output must still match
+  * the never-stopped oracle (`stream_restart_repartitioned`).
   *
   * At scale this harness IS the deployed shape — checkpoint + file
   * sink + AvailableNow is the standard incremental-batch pipeline
@@ -147,16 +147,18 @@ object Restart {
     * `slicesPerPhase` time-ordered micro-batches, returning the
     * combined parquet-sink output. `tag`/`dir` scope the on-disk
     * source, sink, and checkpoint directories (wiped at entry —
-    * idempotent re-run). `betweenPhases` runs after the phase-1 query
-    * terminates and before phase 2's files land — the hook for
-    * perturbing session state (e.g. `spark.sql.shuffle.partitions`)
-    * across the restart boundary. `pipeline2`, when set, is the
-    * pipeline the RESTARTED query runs instead of `pipeline` — the
-    * hook for restarting across a CHANGED OPERATOR (deploying evolved
-    * code against an existing checkpoint). Spark's recovery rules
-    * scope what may change: stateless filters/projections upstream of
-    * an unchanged stateful operator are allowed; the stateful
-    * operator layout and state schema are pinned by the checkpoint. */
+    * idempotent re-run). Both phases run on one [[Drain]] session,
+    * sized by `events`. `betweenPhases` runs on that session after the
+    * phase-1 query terminates and before phase 2's files land — the
+    * hook for perturbing session state (e.g.
+    * `spark.sql.shuffle.partitions`) across the restart boundary.
+    * `pipeline2`, when set, is the pipeline the RESTARTED query runs
+    * instead of `pipeline` — the hook for restarting across a CHANGED
+    * OPERATOR (deploying evolved code against an existing checkpoint).
+    * Spark's recovery rules scope what may change: stateless
+    * filters/projections upstream of an unchanged stateful operator are
+    * allowed; the stateful operator layout and state schema are pinned
+    * by the checkpoint. */
   def twoPhaseDrain(spark: SparkSession, events: DataFrame, tag: String,
       dir: String, pipeline: DataFrame => DataFrame,
       slicesPerPhase: Int = 4,
@@ -193,15 +195,17 @@ object Restart {
     // exactly the nullability/typing the files round-trip to. Lazy —
     // first touched inside drainOnce, after phase 1's files landed.
     lazy val schema = spark.read.parquet(src).schema
+    val ds = Drain.session(spark, events)
     def drainOnce(phase: String, freshFiles: Seq[String],
         pipe: DataFrame => DataFrame): Unit = {
       val loggedBefore = sourceLog(ckpt).size
       // a NEW query object each time — phase 2 is a genuine restart
       // (fresh StreamExecution resuming from the checkpoint's offset
       // log, state store, and commit log), not a paused query
-      val q = pipe(spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(src))
-        .writeStream.outputMode("append").format("parquet")
+      val out = pipe(ds.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1).parquet(src))
+      Drain.useStateStoreFor(ds, out)
+      val q = out.writeStream.outputMode("append").format("parquet")
         .option("path", sink).option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
@@ -233,29 +237,15 @@ object Restart {
           s"non-decreasing (${maxes.mkString(", ")}) — file admission " +
           "was not time-ordered")
     }
-    // Scale-adaptive STATE width (guide §2.2; r20): every micro-batch's
-    // stateful stage runs one task — and commits one state store
-    // instance (an HDFS-backed delta/snapshot or a whole RocksDB
-    // instance) — per shuffle partition, and the checkpoint pins the
-    // count at the phase-1 session value. At the measured scale the
-    // harness is state-commit-bound, not data-bound (r20 event log,
-    // plans/r20/stream_restart_stages_*.txt: 16-20 micro-batch jobs of
-    // 33 tasks over ~0.35 MB shuffle each), so the width derives from
-    // the corpus like the batch kernels' loop width: data-proportional
-    // here, capped at `shuffle.partitions` — at 100 TB the cap wins and
-    // cluster behavior is unchanged. phase 2's SESSION value is
-    // whatever `betweenPhases` set (the repartitioned gates flip it);
-    // the engine must still honor the checkpoint-pinned phase-1 width,
-    // so the contract those gates exercise is intact.
-    graft.AdaptiveWidth.withWidth(spark, graft.AdaptiveWidth.of(events)) {
-      drainOnce("phase1", landPhase(events.filter(col("ts") <= mid),
-        "overwrite"), pipeline)
-      betweenPhases(spark)
-      // phase-2 arrival: the rest of the corpus lands as new files; the
-      // restarted query runs the (possibly evolved) phase-2 pipeline
-      drainOnce("phase2", landPhase(events.filter(col("ts") > mid), "append"),
-        pipeline2.getOrElse(pipeline))
-    }
+    // the checkpoint pins the phase-1 width; phase 2's session value is
+    // whatever `betweenPhases` set (the repartitioned gates flip it)
+    drainOnce("phase1", landPhase(events.filter(col("ts") <= mid),
+      "overwrite"), pipeline)
+    betweenPhases(ds)
+    // phase-2 arrival: the rest of the corpus lands as new files; the
+    // restarted query runs the (possibly evolved) phase-2 pipeline
+    drainOnce("phase2", landPhase(events.filter(col("ts") > mid), "append"),
+      pipeline2.getOrElse(pipeline))
     spark.read.parquet(sink)
   }
 }

@@ -99,7 +99,8 @@ object Tws {
     * rides a µs-truncated TimestampType twin while session arithmetic
     * stays exact integer nanos — identical to the fMGWS twin, so both
     * share one oracle. Requires the RocksDB state store provider
-    * (Spark rejects the HDFS-backed default for this operator). */
+    * (Spark rejects the HDFS-backed default for this operator), which a
+    * [[Drain]] sets when its plan holds this operator. */
   def sessionizeStreamTws(spark: SparkSession, events: DataFrame,
       gapNs: Long = 30L * 60 * 1000000000L,
       watermarkDelay: String = "1 hour"): Dataset[Session] = {
@@ -113,22 +114,5 @@ object Tws {
       .groupByKey(_.user_id)
       .transformWithState(new SessionProcessor(gapNs),
         TimeMode.EventTime(), OutputMode.Append())
-  }
-
-  /** Runs `body` with the RocksDB state store provider set on the
-    * session conf, restoring the previous value after — the provider
-    * is snapshotted per query START, so scoping it around
-    * start+awaitTermination is exact, and the session's other drains
-    * keep their configured default. */
-  def withRocksDbStateStore[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
   }
 }

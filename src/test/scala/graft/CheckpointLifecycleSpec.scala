@@ -171,6 +171,16 @@ class CheckpointLifecycleSpec extends SparkSuite {
     def structural() = (KCore.run(g1.edges, 2).collect().toSet,
       ConnectedComponents.run(pairs).collect().toSet)
     val localStructural = structural()
+    // a pipeline's one-off checkpoints go through the same switch
+    def naiveBayes() = {
+      import spark.implicits._
+      val docs = (1L to 30L).map { id =>
+        val lang = Seq("en", "es", "de")((id % 3).toInt)
+        (id, lang, s"$lang w${id % 4} w${id % 5} shared")
+      }.toDF("doc_id", "lang", "text")
+      pipelines.Classify.naiveBayes(spark, docs).collect().toSeq
+    }
+    val localBayes = naiveBayes()
     val dir = java.nio.file.Files
       .createTempDirectory("graft-ckpt-spec").toString
     spark.conf.set(Checkpoints.ReliableKey, "true")
@@ -195,6 +205,7 @@ class CheckpointLifecycleSpec extends SparkSuite {
       assert(fpc.iterations > 1)
       assertApprox(scoresMap(fpc.result.auths), localConv, 1e-15)
       assert(structural() == localStructural)
+      assert(naiveBayes() == localBayes)
     } finally {
       spark.conf.unset(Checkpoints.ReliableKey)
       spark.conf.unset(Checkpoints.DirKey)

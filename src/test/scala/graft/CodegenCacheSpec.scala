@@ -57,6 +57,23 @@ class CodegenCacheSpec extends SparkSuite {
     } finally GraphIO.evict(spark, sfDir, Seq("order"))
   }
 
+  test("warm graph_components passes do not recompile the star-forest " +
+      "check") {
+    assume(new java.io.File(sfDir).isDirectory, s"no test tables in $sfDir")
+    try {
+      val g = GraphIO.orderGraph(spark, sfDir)
+      g.edges.count()
+      g.nodes.count()
+      compilesOfPass("graph_components")
+      val warm = Seq.fill(2)(compilesOfPass("graph_components"))
+      // A `limit(1).count()` probe names its counter field from a
+      // JVM-wide sequence, so its bodies are new source on every run: the
+      // check's two probes compiled 4 classes a pass, 8 over two passes.
+      assert(warm.sum < 8, s"warm passes compiled ${warm.mkString(" + ")} " +
+        "classes")
+    } finally GraphIO.evict(spark, sfDir, Seq("order"))
+  }
+
   test("a warm stream_restart_sessionize pass compiles at most one " +
       "class per micro-batch") {
     assume(new java.io.File(sfDir).isDirectory, s"no test tables in $sfDir")

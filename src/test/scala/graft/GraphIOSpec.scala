@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class GraphIOSpec extends SparkSuite {
@@ -109,6 +110,48 @@ class GraphIOSpec extends SparkSuite {
     // the caller's session conf is never mutated
     assert(spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
       == before)
+  }
+
+  test("events and a drained eventsStream read TIMESTAMP(NANOS) parquet " +
+      "as epoch-nanos BIGINT without touching session conf") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val dir = Files.createTempDirectory("graft-events-nanos").toString
+    val schema = MessageTypeParser.parseMessageType(
+      """message events {
+        |  required int64 event_id;
+        |  required int64 ts (TIMESTAMP(NANOS,true));
+        |  required int64 user_id;
+        |  required binary event_type (UTF8);
+        |  required double value;
+        |}""".stripMargin)
+    // nanosecond digits a micros read would lose
+    val nanos = Seq(1767323045123456789L, 1767323046000000001L)
+    val w = ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(s"$dir/events.parquet"))
+      .withType(schema).build()
+    try nanos.zipWithIndex.foreach { case (ts, i) =>
+      w.write(new SimpleGroupFactory(schema).newGroup()
+        .append("event_id", i.toLong).append("ts", ts)
+        .append("user_id", 7L).append("event_type", "click")
+        .append("value", 1.5))
+    } finally w.close()
+    val before = spark.conf.getAll
+    // without nanosAsLong Spark rejects the file outright
+    intercept[org.apache.spark.sql.AnalysisException](
+      spark.read.parquet(s"$dir/events.parquet").schema)
+    def tsOf(df: DataFrame): Seq[Long] =
+      df.orderBy(col("event_id")).select(col("ts")).collect()
+        .map(_.getLong(0)).toSeq
+    val batch = GraphIO.events(spark, dir)
+    assert(batch.schema("ts").dataType ==
+      org.apache.spark.sql.types.LongType)
+    assert(tsOf(batch) == nanos)
+    val drained = streaming.Drain(spark, batch, "append")(ds =>
+      GraphIO.eventsStream(ds, dir).select(col("event_id"), col("ts")))
+    assert(tsOf(drained) == nanos)
+    assert(spark.conf.getAll == before)
   }
 
   test("documentsJsonl: permissive parse, corrupt lines audited verbatim") {

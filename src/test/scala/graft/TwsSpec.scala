@@ -1,6 +1,7 @@
 package graft
 
-import graft.streaming.{EventPipelines, Tws}
+import graft.streaming.{Drain, EventPipelines, Tws}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.Trigger
 import java.nio.file.Files
 
@@ -12,22 +13,16 @@ class TwsSpec extends SparkSuite {
 
   private val MsNs = 1000000L
 
-  private def drain(dir: String, name: String,
-      maxFilesPerTrigger: Option[Int] = None): Unit = {
-    val schema = spark.read.parquet(dir).schema
-    val base = spark.readStream.schema(schema)
-    val src = maxFilesPerTrigger
-      .fold(base)(n => base.option("maxFilesPerTrigger", n))
-      .parquet(dir)
-    spark.catalog.dropTempView(name)
-    Tws.withRocksDbStateStore(spark) {
-      val q = Tws.sessionizeStreamTws(spark, src,
-          watermarkDelay = "0 seconds")
-        .toDF().writeStream.outputMode("append").format("memory")
-        .queryName(name).trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination(120000)
+  /** The TWS sessionizer drained over the parquet files in `dir`; the
+    * drain sets the RocksDB state store itself. */
+  private def drain(dir: String,
+      maxFilesPerTrigger: Option[Int] = None): DataFrame =
+    Drain(spark, spark.read.parquet(dir), "append") { ds =>
+      val base = ds.readStream.schema(ds.read.parquet(dir).schema)
+      Tws.sessionizeStreamTws(ds, maxFilesPerTrigger
+          .fold(base)(n => base.option("maxFilesPerTrigger", n))
+          .parquet(dir), watermarkDelay = "0 seconds").toDF()
     }
-  }
 
   test("boundary: deadline == watermark does NOT flush (strict <), " +
     "deadline < watermark does — same invariant as the fMGWS twin") {
@@ -43,8 +38,7 @@ class TwsSpec extends SparkSuite {
     dir.deleteOnExit()
     rows.toDF("user_id", "ts", "event_id")
       .coalesce(1).write.mode("overwrite").parquet(dir.getAbsolutePath)
-    drain(dir.getAbsolutePath, "graft_tws_bnd")
-    val flushed = spark.sql("SELECT user_id FROM graft_tws_bnd")
+    val flushed = drain(dir.getAbsolutePath).select("user_id")
       .collect().map(_.getLong(0)).toSet
     assert(flushed == Set(2L),
       s"expected only user 2 flushed, got $flushed")
@@ -85,8 +79,7 @@ class TwsSpec extends SparkSuite {
     f1Parts.foreach(f => require(f.setLastModified(t0)))
     f2Parts.foreach(f => require(f.setLastModified(t0 + 2000)))
 
-    drain(p, "graft_tws_mb", maxFilesPerTrigger = Some(1))
-    val got = spark.sql("SELECT * FROM graft_tws_mb").collect()
+    val got = drain(p, maxFilesPerTrigger = Some(1)).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     // user 1: ONE 3-event session (0..2 min) — state merged across
     // batches; user 2: idle 1-event session flushed by the timer;
@@ -132,8 +125,7 @@ class TwsSpec extends SparkSuite {
     val t0 = System.currentTimeMillis() - 600000
     f2Parts.foreach(f => require(f.setLastModified(t0)))
     f1Parts.foreach(f => require(f.setLastModified(t0 + 2000)))
-    drain(p, "graft_tws_repro", maxFilesPerTrigger = Some(1))
-    val got = spark.sql("SELECT * FROM graft_tws_repro").collect()
+    val got = drain(p, maxFilesPerTrigger = Some(1)).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     // f2's 120-min event advances the watermark before f1 is read, so
     // every f1 row is late-dropped: user 2 never appears and user 1's
