@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.graftshim.CheckpointShim
 import org.apache.spark.storage.StorageLevel
 
 /** Deterministic lifecycle for per-iteration plan checkpoints.
@@ -29,6 +30,12 @@ import org.apache.spark.storage.StorageLevel
   * survives executor loss at the cost of writing each iteration's
   * |V|-sized vector to the checkpoint dir (and recomputing it once for
   * the write — the standard reliable-checkpoint trade).
+  *
+  * A materializing call can also TALLY its frame ([[Tallied]]):
+  * aggregate columns over the checkpointed rows, computed by the
+  * checkpoint's own job. The iterative operators read each generation's
+  * scalar this way (the kernels' norms, the peels' drop and edge counts,
+  * the components' checksums), so that scalar costs no job of its own.
   */
 object Checkpoints {
 
@@ -38,27 +45,67 @@ object Checkpoints {
     * storage on a real cluster). */
   val DirKey = "spark.graft.checkpoint.dir"
 
+  /** A materialized frame and its tally: the values of the aggregate
+    * columns asked for, over the frame's rows, in the order asked. */
+  final case class Tallied(df: DataFrame, tally: Row)
+
   /** Eagerly materialize `df` with truncated lineage: `localCheckpoint`
     * by default, reliable `checkpoint` when [[ReliableKey]] is set. */
   def materialize(df: DataFrame): DataFrame =
     materialize(df, eager = true)
+
+  /** [[materialize]], also returning the values of the aggregate columns
+    * `tally` (declarative aggregates: `sum`, `count`, `max`, ...) over
+    * the materialized rows. A local checkpoint computes them in its own
+    * materializing job, folding each partition's rows as the job stores
+    * them and merging the partitions in index order: no second job, and
+    * the values are deterministic (bit-equal to a separate `agg` over
+    * the checkpoint at one partition). A reliable checkpoint writes its
+    * files first and then runs `tally` as a separate aggregate over
+    * them. An empty frame tallies to the aggregates' empty values
+    * (`count` 0, `sum` and `max` NULL). */
+  def materialize(df: DataFrame, tally: Seq[Column]): Tallied =
+    if (reliable(df.sparkSession)) {
+      val ck = materialize(df, eager = true)
+      Tallied(ck, if (tally.isEmpty) Row.empty
+        else ck.agg(tally.head, tally.tail: _*).head())
+    } else {
+      val ck = df.localCheckpoint(eager = false)
+      Tallied(ck, CheckpointShim.materialize(ck, tally))
+    }
 
   /** [[materialize]] with the caller choosing the materializing action:
     * `eager = false` returns the lazily-checkpointed frame, and the
     * caller MUST immediately run a FULL-SCAN action on it (a global
     * aggregate — never `limit`/`head`, which compute only some
     * partitions). That action computes every partition and thereby
-    * persists the checkpoint — so a required audit aggregate can double
-    * as the materializing pass instead of costing a dedicated job
-    * (ADVICE r9 on [[graft.pipelines.Similarity.semanticDuplicates]]). */
-  def materialize(df: DataFrame, eager: Boolean): DataFrame = {
-    val spark = df.sparkSession
-    if (spark.conf.get(ReliableKey, "false").toBoolean) {
-      if (spark.sparkContext.getCheckpointDir.isEmpty)
-        spark.sparkContext.setCheckpointDir(spark.conf.get(DirKey,
-          sys.props("java.io.tmpdir") + "/graft-checkpoints"))
+    * persists the checkpoint. Where the action is an aggregate over the
+    * checkpoint alone, a tally ([[materialize]]) is one job fewer. */
+  def materialize(df: DataFrame, eager: Boolean): DataFrame =
+    if (reliable(df.sparkSession)) {
+      useCheckpointDir(df.sparkSession)
       df.checkpoint(eager = eager)
     } else df.localCheckpoint(eager = eager)
+
+  private def reliable(spark: SparkSession): Boolean =
+    spark.conf.get(ReliableKey, "false").toBoolean
+
+  /** Points the context's reliable checkpoints at [[DirKey]]'s directory
+    * (Spark writes them to a fresh subdirectory of it), also when an
+    * earlier checkpoint used another one; without the key, at a default
+    * directory unless the context already has one. */
+  private def useCheckpointDir(spark: SparkSession): Unit = {
+    val sc = spark.sparkContext
+    spark.conf.getOption(DirKey) match {
+      case Some(dir) =>
+        val p = new org.apache.hadoop.fs.Path(dir)
+        val q = p.getFileSystem(sc.hadoopConfiguration).makeQualified(p)
+        if (!sc.getCheckpointDir.exists(
+            c => new org.apache.hadoop.fs.Path(c).getParent == q))
+          sc.setCheckpointDir(dir)
+      case None => if (sc.getCheckpointDir.isEmpty)
+        sc.setCheckpointDir(sys.props("java.io.tmpdir") + "/graft-checkpoints")
+    }
   }
 
   /** [[materialize]] for KERNEL-SHAPED loops — a |V|-sized keyed vector
@@ -81,12 +128,15 @@ object Checkpoints {
     * Falls back to [[materialize]] under the reliable-checkpoint conf
     * (cluster fault-tolerance mode — partitioning preservation is an
     * optimization, not a contract). */
-  def materializeKeyed(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    if (spark.conf.get(ReliableKey, "false").toBoolean) materialize(df)
-    else org.apache.spark.sql.graftshim.CheckpointShim
-      .localCheckpoint(df, eager = true)
-  }
+  def materializeKeyed(df: DataFrame): DataFrame = materializeKeyed(df, Nil).df
+
+  /** [[materializeKeyed]] with a tally, as [[materialize]]'s. */
+  def materializeKeyed(df: DataFrame, tally: Seq[Column]): Tallied =
+    if (reliable(df.sparkSession)) materialize(df, tally)
+    else {
+      val (ck, values) = CheckpointShim.localCheckpoint(df, tally)
+      Tallied(ck, values)
+    }
 
   /** Eagerly release the storage behind a [[materialize]]d (or
     * `localCheckpoint`ed) DataFrame. Callers guarantee the plan is never
@@ -108,8 +158,8 @@ object Checkpoints {
     * verify, a 100 TB pipeline driver) calls this after each query's
     * sink completes, so final per-query score vectors don't accumulate
     * as dead blocks between driver GCs. A checkpoint the plan reads more
-    * than once (an L2 normalization scans its input twice) is released
-    * once. */
+    * than once (a self-union; [[operators.Normalize.l2]]'s cross join) is
+    * released once. */
   def releaseAll(df: DataFrame): Unit =
     leaves(df).distinctBy(_.id).foreach(releaseRdd(df.sparkSession, _))
 

@@ -1,8 +1,11 @@
 package graft
 
+import graft.Checkpoints.Tallied
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.CheckpointShim
+import org.apache.spark.sql.types.DoubleType
 
 /** Outcome of a fixed-point kernel run ([[operators.Hits.runConverged]],
   * [[operators.Salsa.runConverged]],
@@ -46,6 +49,15 @@ case class Fixpoint[A](result: A, iterations: Int, converged: Boolean)
   *    released eagerly, so live storage stays O(|V|) however long the
   *    run (see [[Checkpoints]]); the final side vector is
   *    materialized before the edge caches drop.
+  *  - Norms: every vector is checkpointed raw, and the checkpoint's
+  *    own job tallies the program's norm; the normalized vector is the
+  *    checkpoint divided by that value, a projection that keeps its
+  *    hash layout. The value enters the plan as a run-time constant
+  *    ([[org.apache.spark.sql.graftshim.CheckpointShim.scalar]]), not a
+  *    `lit`, whose value would be compiled into the generated code: a
+  *    new class per iteration per graph. A HITS iteration so runs
+  *    three jobs (its two aggregate exchanges and the checkpoint), none
+  *    for the norm.
   *  - Schedule: a fixed count, or delta checks on the
   *    `firstCheck, firstCheck+checkEvery, ...` schedule — the delta is
   *    a second |V|-sized job, so checking every iteration would double
@@ -77,11 +89,14 @@ object Fixpoint {
   /** One kernel's iteration. `side` (HITS/SALSA hubs) maps the carried
     * vector to the side vector and `step` maps that (or, without a
     * side, the carried vector) to the next carried vector, both
-    * un-normalized; `norm` normalizes either. `owned` are the program's
-    * own caches and checkpoints, dropped when the loop ends. */
+    * un-normalized. `norm` is the aggregate over a vector's `score`s
+    * that each score is divided by ([[operators.Normalize.L2]],
+    * [[operators.Normalize.L1]]); None carries vectors as computed.
+    * `owned` are the program's own caches and checkpoints, dropped when
+    * the loop ends. */
   private[graft] final case class Program[A](init: DataFrame,
       side: Option[DataFrame => DataFrame], step: DataFrame => DataFrame,
-      norm: DataFrame => DataFrame, result: (DataFrame, DataFrame) => A,
+      norm: Option[Column], result: (DataFrame, DataFrame) => A,
       owned: Seq[DataFrame])
 
   /** The loop width for a kernel over these edges: data-proportional at
@@ -152,18 +167,26 @@ object Fixpoint {
     }
 
   private def iterate[A](p: Program[A], s: Schedule): Fixpoint[A] = {
+    // Checkpoints `v` and returns it with its normalized view: the norm
+    // is tallied by the checkpoint's own job, and the view divides the
+    // checkpoint by it (no second pass over the vector).
+    def checkpoint(v: DataFrame): (DataFrame, DataFrame) = p.norm match {
+      case None =>
+        val ck = Checkpoints.materializeKeyed(v)
+        (ck, ck)
+      case Some(norm) =>
+        val t = Checkpoints.materializeKeyed(v, Seq(norm))
+        (t.df, t.df.select(col("id"), (col("score") /
+          CheckpointShim.scalar(t.tally.get(0), DoubleType)).as("score")))
+    }
     val fixed = s.tol.isEmpty
-    // A converged run compares normalized vectors, so it checkpoints them
-    // normalized; a fixed run checkpoints the raw aggregate and
-    // normalizes lazily on top. Either way one eager job per iteration.
-    def checkpoint(v: DataFrame) =
-      Checkpoints.materializeKeyed(if (fixed) v else p.norm(v))
     // Only a converged run's side vector stays lazy past its iteration
     // (the last iteration is unknown in advance); it reads the previous
     // checkpoint, which is then held one iteration longer.
     val lazySide = !fixed && p.side.nonEmpty
     var carried = p.init
-    var side: Option[DataFrame] = None
+    var side: Option[DataFrame] = None    // the last side vector, raw
+    var sideOut: Option[DataFrame] = None // normalized, once checkpointed
     var ck: DataFrame = null   // checkpoint behind `carried`
     var held: DataFrame = null // superseded, still read by the lazy side
     var it = 0
@@ -174,24 +197,23 @@ object Fixpoint {
       // computed: the step below consumes the checkpoint instead of
       // re-running the side aggregate (no extra job), and intermediate
       // side vectors stay lazy subtrees of the step's checkpoint job.
-      val sideU = p.side.map { f =>
-        val v = f(carried)
-        if (fixed && it == s.maxIter) Checkpoints.materializeKeyed(v) else v
-      }
-      val cur = checkpoint(p.step(sideU.getOrElse(carried)))
+      side = p.side.map(f => f(carried))
+      val sideCk = if (fixed && it == s.maxIter) side.map(checkpoint) else None
+      val (raw, cur) =
+        checkpoint(p.step(sideCk.map(_._1).orElse(side).getOrElse(carried)))
       if (s.checks(it)) done = maxDelta(cur, carried) < s.tol.get
       val stale = if (lazySide) held else ck
       if (lazySide) held = ck
       if (stale != null) Checkpoints.release(stale)
-      ck = cur
-      carried = if (fixed) p.norm(cur) else cur
-      side = sideU
+      ck = raw
+      carried = cur
+      sideOut = sideCk.map(_._2)
     }
     // Materialize the lazy side before the edge caches drop; the
     // checkpoint it read is unreachable after that.
-    val sideOut = side.map(v => if (fixed) p.norm(v) else checkpoint(v))
+    val out = sideOut.orElse(side.map(v => checkpoint(v)._2))
     if (held != null) Checkpoints.release(held)
-    Fixpoint(p.result(sideOut.orNull, carried), it, done)
+    Fixpoint(p.result(out.orNull, carried), it, done)
   }
 
   /** A structural round plan's view of the loop: the loop [[width]], and
@@ -201,9 +223,12 @@ object Fixpoint {
     private[Fixpoint] var made = Vector.empty[DataFrame]
     def materialize(df: DataFrame): DataFrame =
       track(Checkpoints.materialize(df))
-    def materializeKeyed(df: DataFrame): DataFrame =
-      track(Checkpoints.materializeKeyed(df))
+    def materialize(df: DataFrame, tally: Seq[Column]): Tallied =
+      track(Checkpoints.materialize(df, tally))
+    def materializeKeyed(df: DataFrame, tally: Seq[Column]): Tallied =
+      track(Checkpoints.materializeKeyed(df, tally))
     private def track(df: DataFrame): DataFrame = { made :+= df; df }
+    private def track(t: Tallied): Tallied = { made :+= t.df; t }
   }
 
   /** The one round loop of the structural operators (components, label

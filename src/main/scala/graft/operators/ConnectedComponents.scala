@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Checkpoints.Tallied
 import graft.Fixpoint
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -23,10 +24,10 @@ import org.apache.spark.sql.functions._
   * [[graft.Fixpoint.rounds]], which owns the loop width, the round cap
   * and the release of superseded label checkpoints.
   *
-  * Convergence detection is one in-plan scalar per round: labels only
-  * ever decrease, so `sum(comp)` is strictly monotone until the fixed
-  * point — equal consecutive sums IS convergence (no row-wise diff join
-  * needed).
+  * Convergence detection is one scalar per round, tallied by the job
+  * that checkpoints the round's labels: labels only ever decrease, so
+  * `sum(comp)` is strictly monotone until the fixed point — equal
+  * consecutive sums IS convergence (no row-wise diff join needed).
   *
   * Scale note: propagation rounds equal the component diameter. Dedup
   * clusters are dense and shallow (diameter ≤ 3-4 in practice), so this
@@ -56,8 +57,9 @@ object ConnectedComponents {
       val e = sym.repartition(r.width, col("y")).persist()
       val comp = r.materializeKeyed(e.groupBy(col("x").as("id"))
         .agg(min(col("y")).as("nmin"))
-        .select(col("id"), least(col("id"), col("nmin")).as("comp")))
-      Labels(e, comp, checksum(comp))
+        .select(col("id"), least(col("id"), col("nmin")).as("comp")),
+        Checksum)
+      Labels(e, comp.df, comp.tally.getLong(0))
     } { (r, l) =>
       val nbrMin = l.e
         .join(l.comp.select(col("id").as("y"), col("comp").as("yc"))
@@ -65,20 +67,22 @@ object ConnectedComponents {
         .groupBy(col("x").as("id")).agg(min(col("yc")).as("nmin"))
       val next = r.materializeKeyed(
         l.comp.join(nbrMin.hint("SHUFFLE_HASH"), Seq("id"))
-          .select(col("id"), least(col("comp"), col("nmin")).as("comp")))
-      val s = checksum(next)
-      if (s == l.sum) Left(next) else Right(l.copy(comp = next, sum = s))
+          .select(col("id"), least(col("comp"), col("nmin")).as("comp")),
+        Checksum)
+      val s = next.tally.getLong(0)
+      if (s == l.sum) Left(next.df)
+      else Right(l.copy(comp = next.df, sum = s))
     }._1
   }
 
   /** [[run]]'s generation: edge cache, label vector and its checksum. */
   private final case class Labels(e: DataFrame, comp: DataFrame, sum: Long)
 
-  /** Null-safe: an empty label vector (zero candidate pairs — a real
+  /** The label checksum, tallied by each label checkpoint's own job.
+    * Null-safe: an empty label vector (zero candidate pairs — a real
     * outcome of a clean corpus) sums to NULL, which must read as a
     * stable 0, not an NPE. */
-  private def checksum(comp: DataFrame): Long =
-    comp.agg(coalesce(sum(col("comp")), lit(0L))).head.getLong(0)
+  private val Checksum = Seq(coalesce(sum(col("comp")), lit(0L)))
 
   /** Alternating large-star/small-star connected components (Kiveris et
     * al., "Connected Components in MapReduce and Beyond") — the
@@ -92,8 +96,9 @@ object ConnectedComponents {
     * current edge set — all equi-keyed, nothing quadratic; the edge set
     * only shrinks toward the star forest. Every round's edge set is
     * checkpointed (the loop releases superseded rounds eagerly), and
-    * convergence is one in-plan scalar per round (edge multiset checksum
-    * — stars are the fixed point of both steps). */
+    * convergence is one scalar per round, tallied by that checkpoint's
+    * job (edge multiset checksum — stars are the fixed point of both
+    * steps). */
   def runStar(pairs: DataFrame, a: String = "a", b: String = "b"): DataFrame =
     runStarCounted(pairs, a, b)._1
 
@@ -168,11 +173,12 @@ object ConnectedComponents {
         if (assumeSimple)
           p0.select(greatest(col("x"), col("y")).as("x"),
             least(col("x"), col("y")).as("y"))
-        else canonical(p0))
-      Star(e, edgeChecksum(e))
+        else canonical(p0), EdgeChecksum)
+      Star(e.df, edgeChecksum(e))
     } { (r, s) =>
-      val next = r.materialize(smallStar(largeStar(s.e)))
-      val sum = edgeChecksum(next)
+      val t = r.materialize(smallStar(largeStar(s.e)), EdgeChecksum)
+      val next = t.df
+      val sum = edgeChecksum(t)
       // The (count, hash-sum) checksum is a fast filter, not proof —
       // two different edge sets can collide. Before declaring the
       // fixed point, confirm structurally that `next` IS a star forest
@@ -216,13 +222,13 @@ object ConnectedComponents {
     maxParents <= 1L && centerIsChild == 0L
   }
 
-  /** (cardinality, content-hash sum) folded into one comparable long —
-    * set equality evidence for the convergence check. */
-  private def edgeChecksum(e: DataFrame): (Long, Long) = {
-    val r = e.agg(count(lit(1)),
-      coalesce(sum(hash(col("x"), col("y")).cast("long")), lit(0L))).head
-    (r.getLong(0), r.getLong(1))
-  }
+  /** (cardinality, content-hash sum) — set equality evidence for the
+    * convergence check, tallied by each edge checkpoint's own job. */
+  private val EdgeChecksum = Seq(count(lit(1)),
+    coalesce(sum(hash(col("x"), col("y")).cast("long")), lit(0L)))
+
+  private def edgeChecksum(e: Tallied): (Long, Long) =
+    (e.tally.getLong(0), e.tally.getLong(1))
 
   /** Duplicate-cluster view over near-dup candidate `(a, b)` pairs:
     * `(doc_id, cluster_id, n_members)`, cluster_id = the canonical

@@ -75,7 +75,8 @@ object Hits {
       : Fixpoint[Result] =
     Fixpoint.run(g.edges, Cols,
       Schedule(maxIter, Some(tol), checkEvery, firstCheck))(
-      program((uniform(g.nodes), Nil), weighted = false, _ => Identity))
+      program((uniform(g.nodes, g.nodes.count()), Nil), weighted = false,
+        _ => Identity))
 
   /** K5 topic-exclusive HITS: base kernel on the induced topic subgraph
     * (intent semantics by default — SURVEY.md §2 note E;
@@ -117,23 +118,23 @@ object Hits {
     // Both copies are re-probed every iteration: cache them (the parquet
     // scan of a bucketed layout then also stays out of the loop).
     mutual(auths, e.byDst.persist(), contribution, e.bySrc.persist(),
-      contribution, post(e.width), Normalize.l2, Result, owned)
+      contribution, post(e.width), Normalize.L2, Result, owned)
   }
 
-  /** Uniform `1/√N` init over `nodes`. */
-  private[operators] def uniform(nodes: DataFrame): DataFrame = {
-    val n = nodes.count()
+  /** Uniform `1/√N` init over `nodes`, `n` of them. */
+  private[operators] def uniform(nodes: DataFrame, n: Long): DataFrame =
     nodes.select(col("id"), lit(1.0 / math.sqrt(n)).as("score"))
-  }
 
   /** [[uniform]] over the node ids, materialized once: for the subgraph
     * kernels (K5/K6) `nodes` is a semi/anti-join plan over the edges that
     * would otherwise run for the count AND again when iteration 1
     * consumes the init. A checkpoint, not a cache: against a cached init
-    * iteration 1 also re-shuffles its edge side (measured at sf0.01). */
+    * iteration 1 also re-shuffles its edge side (measured at sf0.01).
+    * The checkpoint's own job counts the ids. */
   private def idsUniform(nodes: DataFrame): (DataFrame, Seq[DataFrame]) = {
-    val ids = Checkpoints.materialize(nodes.select(col("id")))
-    (uniform(ids), Seq(ids))
+    val ids = Checkpoints.materialize(nodes.select(col("id")),
+      Seq(count(lit(1))))
+    (uniform(ids.df, ids.tally.getLong(0)), Seq(ids.df))
   }
 
   /** Topic teleport with the flags pre-hashed on id at the loop width
@@ -156,7 +157,7 @@ object Hits {
     * normalized, and only to aggregated nodes (dropout semantics). */
   private[operators] def mutual[A](init: DataFrame, byDst: DataFrame,
       toHub: Column, bySrc: DataFrame, toAuth: Column, post: Post,
-      norm: DataFrame => DataFrame, result: (DataFrame, DataFrame) => A,
+      norm: Column, result: (DataFrame, DataFrame) => A,
       owned: Seq[DataFrame]): Program[A] = {
     val flags = post match {
       case TopicTeleport(_, _, f) => Seq(f)
@@ -165,7 +166,7 @@ object Hits {
     Program(init,
       Some(v => applyPost(Fixpoint.gather(byDst, "dst", toHub)(v), post)),
       v => applyPost(Fixpoint.gather(bySrc, "src", toAuth)(v), post),
-      norm, result, owned ++ flags)
+      Some(norm), result, owned ++ flags)
   }
 
   private def applyPost(scores: DataFrame, post: Post): DataFrame = post match {

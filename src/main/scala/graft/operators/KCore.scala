@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Checkpoints
+import graft.Checkpoints.Tallied
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -37,9 +38,9 @@ import org.apache.spark.sql.functions._
   * making every post-round-1 edge pass map-only. Round-boundary
   * invariant (KCoreSpec pins it against a from-first-principles peel):
   * `deg == Triangles.degrees(e)` exactly — same node set, same counts.
-  * Convergence is `|drop| == 0`, one cheap count on the |V|-sized
-  * frame instead of an edge-list count. The edge list shrinks
-  * monotonically and is checkpointed per round on
+  * Convergence is `|drop| == 0`, counted by the job that checkpoints
+  * the |V|-sized degree frame (a tally, no job of its own). The edge
+  * list shrinks monotonically and is checkpointed per round on
   * [[graft.Fixpoint.rounds]]; the weighted peel is the same peel over
   * other tracked degree columns ([[Tracked]]).
   */
@@ -114,14 +115,19 @@ object KCore {
         .select(col("id"), col("deg").as("core_degree")))
   }
 
-  /** A generation: surviving edges and their tracked degree frame. */
-  private final case class Peel(e: DataFrame, deg: DataFrame)
+  /** A generation: surviving edges, their tracked degree frame, and how
+    * many of its nodes the next round drops (tallied by the degree
+    * frame's checkpoint job). */
+  private final case class Peel(e: DataFrame, deg: DataFrame, nDrop: Long)
 
   private def peel(e0: DataFrame, deg0: DataFrame, t: Tracked,
       maxRounds: Int): DataFrame = {
     require(maxRounds >= 1, s"need maxRounds >= 1, got $maxRounds")
     // The edge columns past (a, b) — the weight — ride along unchanged.
     val weights = e0.columns.drop(2).map(col).toSeq
+    val dropCount = Seq(count(when(t.drops, lit(1))))
+    def peeled(e: DataFrame, deg: Tallied) =
+      Peel(e, deg.df, deg.tally.getLong(0))
     graft.Fixpoint.rounds[Peel](e0, maxRounds, t.what)(
         p => Seq(p.e, p.deg)) { r =>
       // Materialized once: the drop filter reads `deg` several times a
@@ -129,11 +135,11 @@ object KCore {
       // aggregate that must not re-run per reference. For the indexed
       // path this copies the stored |V|-row table — one small job that
       // buys every round's reads.
-      Peel(e0, r.materialize(deg0))
+      peeled(e0, r.materialize(deg0, dropCount))
     } { (r, p) =>
       val e = p.e
+      val nDrop = p.nDrop
       val drop = p.deg.where(t.drops).select(col("id"))
-      val nDrop = drop.count()
       // Fixed point: every surviving node clears the threshold.
       if (nDrop == 0L) Left(t.result(e))
       else {
@@ -163,8 +169,8 @@ object KCore {
             .join(dec, Seq("id"), "left")
             .select(col("id") +: t.cols.map { case (c, _) =>
               (col(c) - coalesce(col(s"d_$c"), lit(0L))).as(c) }: _*)
-            .where(col(t.cols.last._1) > 0))
-        Right(Peel(next, nextDeg))
+            .where(col(t.cols.last._1) > 0), dropCount)
+        Right(peeled(next, nextDeg))
       }
     }._1
   }

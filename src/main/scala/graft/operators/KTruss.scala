@@ -53,22 +53,25 @@ object KTruss {
     require(k >= 3, s"need k >= 3 (k - 2 triangles per edge), got $k")
     require(maxRounds >= 1, s"need maxRounds >= 1, got $maxRounds")
     val minSup = k - 2
-    val e0 = Checkpoints.materialize(und.select(col("a"), col("b")))
-    graft.Fixpoint.rounds[(DataFrame, Long)](e0, maxRounds, "k-truss peel")(
-        en => Seq(en._1))(_ => (e0, e0.count())) { case (r, (e, n)) =>
+    // Edge counts are tallied by the jobs that checkpoint the edges.
+    val edges = Seq(count(lit(1)))
+    val e0 = Checkpoints.materialize(und.select(col("a"), col("b")), edges)
+    graft.Fixpoint.rounds[(DataFrame, Long)](e0.df, maxRounds,
+        "k-truss peel")(en => Seq(en._1))(
+        _ => (e0.df, e0.tally.getLong(0))) { case (r, (e, n)) =>
       val sup = r.materialize(support(e))
       val next = r.materialize(
         e.join(sup.where(col("support") >= minSup), Seq("a", "b"),
             "left_semi")
-          .select(col("a"), col("b")))
-      val m = next.count()
+          .select(col("a"), col("b")), edges)
+      val m = next.tally.getLong(0)
       // `sup` was computed over the fixed-point edge set: it IS the
       // final per-edge support (edges below minSup were already absent
       // from `e`, or `m` would have shrunk).
       if (m == n)
         Left(e.join(sup, Seq("a", "b"))
           .select(col("a"), col("b"), col("support")))
-      else Right((next, m))
+      else Right((next.df, m))
     }._1
   }
 

@@ -95,6 +95,6 @@ object PageRank {
           .hint("SHUFFLE_HASH"), Seq("id"), "left")
         .select(col("id"), (floor +
           lit(damping) * coalesce(col("score"), lit(0.0))).as("score")),
-        identity, (_, p) => p, Seq(eOut, tele))
+        None, (_, p) => p, Seq(eOut, tele))
     }
 }

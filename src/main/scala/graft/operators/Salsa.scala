@@ -140,10 +140,10 @@ object Salsa {
       case Hits.TopicTeleport(_, twoNTopic, flags) => flags.select(col("id"),
         when(col("flag") === 0, lit(0.0)).otherwise(lit(1.0 / twoNTopic))
           .as("score"))
-      case _ => Hits.uniform(nodes)
+      case _ => Hits.uniform(nodes, nodes.count())
     }
     Hits.mutual(init, eIn, col("score") / col("in_degree"),
-      eOut, col("score") / col("out_degree"), p, Normalize.l1, Result,
+      eOut, col("score") / col("out_degree"), p, Normalize.L1, Result,
       Seq(eIn, eOut))
   }
 }

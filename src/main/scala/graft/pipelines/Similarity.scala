@@ -875,14 +875,14 @@ object Similarity {
     val indexed =
       nearestCellsHier(corpus, ivfCentroids(corpus, nl, trainFraction), nl)
     val wCell = Window.partitionBy(col("cid")).orderBy(col("vec_id"))
-    // Lazy checkpoint: the overflow-audit aggregate below is the
-    // materializing action (a global max computes every partition), so
-    // the audit costs zero extra jobs in the common no-overflow case
-    // (ADVICE r9); the precise beyond-cap count is only worth a second
-    // job once the cheap max-rank check says overflow actually happened.
-    val ranked = graft.Checkpoints.materialize(
-      indexed.withColumn("rn", row_number().over(wCell)), eager = false)
-    val maxRnRow = ranked.agg(max(col("rn"))).head()
+    // The overflow audit's max rank is tallied by the checkpoint's own
+    // job, so the audit costs zero extra jobs in the common no-overflow
+    // case (ADVICE r9); the precise beyond-cap count is only worth a
+    // second job once the max-rank check says overflow actually happened.
+    val tallied = graft.Checkpoints.materialize(
+      indexed.withColumn("rn", row_number().over(wCell)), Seq(max(col("rn"))))
+    val ranked = tallied.df
+    val maxRnRow = tallied.tally
     val overflow = !maxRnRow.isNullAt(0) && maxRnRow.getInt(0) > maxCellCompare
     if (overflow) {
       val nBeyond = ranked.filter(col("rn") > maxCellCompare).count()

@@ -1,12 +1,21 @@
 package org.apache.spark.sql.graftshim
 
-import org.apache.spark.sql.Row
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeMap}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeMap,
+  BindReferences, InterpretedMutableProjection, JoinedRow, LeafExpression,
+  NamedExpression, SpecificInternalRow}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{
+  AggregateExpression, Complete, DeclarativeAggregate}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.plans.logical.Aggregate
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning,
   Partitioning, PartitioningCollection, UnknownPartitioning}
-import org.apache.spark.sql.classic.Dataset
+import org.apache.spark.sql.classic.{Dataset, ExpressionUtils}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
 /** Partitioning-preserving `localCheckpoint` (optimization guide §2.4 —
   * "remove shuffles outright").
@@ -40,6 +49,12 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
   * longer be hash-routable. Both halves only claim what is physically
   * true: the declared partitioning is the executed final plan's.
   *
+  * The job that materializes a checkpoint also returns its TALLY: the
+  * values of aggregate columns over the checkpointed rows, folded while
+  * the job computes them ([[materialize]]). An iterative operator that
+  * needs one scalar of each generation (a norm, a drop count, a
+  * checksum) gets it without a second job over the checkpoint.
+  *
   * Lives under `org.apache.spark.sql` because `Dataset.ofRows` is
   * `private[sql]` — same access level Spark's own checkpoint uses; no
   * behavior is patched, only the partitioning metadata Spark drops.
@@ -48,21 +63,22 @@ object CheckpointShim {
 
   private val CoalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"
 
-  /** `df.localCheckpoint(eager)` with the executed plan's hash
-    * partitioning preserved on the checkpointed frame. */
-  def localCheckpoint(df: org.apache.spark.sql.DataFrame,
-      eager: Boolean): org.apache.spark.sql.DataFrame = {
+  /** `df.localCheckpoint()` with the executed plan's hash partitioning
+    * preserved on the checkpointed frame, and the values of the
+    * aggregate columns `tally` over its rows: one materializing job
+    * ([[materialize]]) makes both. */
+  def localCheckpoint(df: DataFrame, tally: Seq[Column]): (DataFrame, Row) = {
     val ds = df.asInstanceOf[Dataset[Row]]
     val spark = ds.sparkSession
     val prev = spark.conf.get(CoalesceKey, "true")
-    val (rdd, part) =
+    val (rdd, part, values) =
       try {
         spark.conf.set(CoalesceKey, "false")
         val physical = ds.queryExecution.executedPlan
         // Every job below runs under the checkpointed query's one
         // execution id, like stock Dataset.checkpoint: the adaptive
         // stage jobs that finalPhysicalPlan drives as well as the
-        // materializing count, so all of them attribute to this query
+        // materializing job, so all of them attribute to this query
         // in the SQL tab, the event log and a listener's per-query
         // totals instead of to an anonymous call site.
         org.apache.spark.sql.execution.SQLExecution
@@ -79,9 +95,9 @@ object CheckpointShim {
             // buffers, so the persisted blocks must own their bytes.
             val rdd = finalPlan.execute().map(_.copy())
             rdd.localCheckpoint()
-            if (eager) rdd.count()
             (rdd, remap(finalPlan.outputPartitioning,
-              finalPlan.output, ds.queryExecution.analyzed.output))
+              finalPlan.output, ds.queryExecution.analyzed.output),
+              run(rdd, ds, tally))
           }
       } finally spark.conf.set(CoalesceKey, prev)
     // Statistics from the optimized plan, like LogicalRDD.fromDataset —
@@ -101,8 +117,50 @@ object CheckpointShim {
     }.toOption
     val lr = LogicalRDD(ds.queryExecution.analyzed.output, rdd, part,
       Nil, false, None)(spark, stats, None)
-    Dataset.ofRows(spark, lr)
+    (Dataset.ofRows(spark, lr), values)
   }
+
+  /** Materializes `ck`, a lazily `localCheckpoint`ed frame, and returns
+    * the values of the aggregate columns `tally` over its rows. */
+  def materialize(ck: DataFrame, tally: Seq[Column]): Row =
+    ck.queryExecution.analyzed match {
+      case lr: LogicalRDD => run(lr.rdd, ck.asInstanceOf[Dataset[Row]], tally)
+      case other => throw new IllegalArgumentException(
+        s"not a checkpoint: ${other.nodeName}")
+    }
+
+  /** The one job that materializes a checkpoint: it computes every
+    * partition of `rdd` (rows laid out as `of`'s output), which stores
+    * them, and folds `tally` over each partition's rows on the way.
+    * The driver merges the partitions' buffers in partition-index order,
+    * so the values are deterministic and, at one partition, bit-equal
+    * to a separate `agg` over the checkpoint (`Dataset.observe` would
+    * merge in task-completion order). Then, as after any job, Spark
+    * marks the RDD checkpointed. The tasks see the session's SQL confs,
+    * as a Dataset action's do. */
+  private def run(rdd: RDD[InternalRow], of: Dataset[Row],
+      tally: Seq[Column]): Row = {
+    val t = new Tally(if (tally.isEmpty) Nil else
+      of.agg(tally.head, tally.tail: _*).queryExecution.analyzed match {
+        case a: Aggregate => a.aggregateExpressions
+        case p => throw new IllegalStateException(
+          s"a tally analyzes to an aggregate, not ${p.nodeName}")
+      }, of.queryExecution.analyzed.output)
+    t.result(org.apache.spark.sql.execution.SQLExecution
+      .withSQLConfPropagated(of.sparkSession) {
+        of.sparkSession.sparkContext.runJob(rdd, t.fold _)
+      })
+  }
+
+  /** A value of `dataType` that the plan reads at run time instead of
+    * inlining it: the kernel loop divides every iteration's vector by
+    * that iteration's norm, and a `lit` would put each norm into the
+    * generated source, so every iteration on every graph would compile a
+    * new class. This expression's value rides the generated code's
+    * references array; the source is the same for every value. */
+  def scalar(value: Any, dataType: DataType): Column =
+    ExpressionUtils.column(
+      Scalar(CatalystTypeConverters.convertToCatalyst(value), dataType))
 
   /** The final plan's partitioning, rewritten onto the checkpoint's
     * output attributes. Only plain hash partitionings are claimed; a
@@ -130,4 +188,77 @@ object CheckpointShim {
       case _ => UnknownPartitioning(0)
     }
   }
+}
+
+/** Global aggregates folded over rows without a shuffle: each partition
+  * folds its rows into aggregation buffers ([[fold]]), and [[result]]
+  * merges the buffers in the order given. Interpreted, so it compiles
+  * nothing. Only declarative aggregates (sum, count, min, max, ...),
+  * without DISTINCT or FILTER, are supported.
+  *
+  * @param exprs the analyzed aggregate columns
+  * @param input the attributes the rows are laid out as */
+private final class Tally(exprs: Seq[NamedExpression], input: Seq[Attribute])
+    extends Serializable {
+  private val fns = exprs.flatMap(_.collect {
+    case AggregateExpression(f: DeclarativeAggregate, Complete, false, None,
+        _) => f
+    case a: AggregateExpression => throw new IllegalArgumentException(
+      s"a tally folds declarative aggregates only, not $a")
+  })
+  private val buffer = fns.flatMap(_.aggBufferAttributes)
+  private val types = buffer.map(_.dataType)
+  private val initial = fns.flatMap(_.initialValues)
+  private val update = BindReferences.bindReferences(
+    fns.flatMap(_.updateExpressions), buffer ++ input)
+  private val merge = BindReferences.bindReferences(
+    fns.flatMap(_.mergeExpressions),
+    buffer ++ fns.flatMap(_.inputAggBufferAttributes))
+  private val results = BindReferences.bindReferences(
+    exprs.map(_.transform { case AggregateExpression(
+        f: DeclarativeAggregate, _, _, _, _) => f.evaluateExpression }),
+    buffer)
+  private val schema = StructType(exprs.map(e =>
+    StructField(e.name, e.dataType, e.nullable)))
+
+  private def fresh(): SpecificInternalRow = {
+    val b = new SpecificInternalRow(types)
+    InterpretedMutableProjection.createProjection(initial).target(b)(
+      InternalRow.empty)
+    b
+  }
+
+  /** Folds `rows` (every row is read, so every row is computed) into
+    * one partition's buffer. */
+  def fold(rows: Iterator[InternalRow]): InternalRow = {
+    val b = fresh()
+    val step = InterpretedMutableProjection.createProjection(update).target(b)
+    val joined = new JoinedRow
+    while (rows.hasNext) step(joined(b, rows.next()))
+    b
+  }
+
+  /** The tally's values, from the partitions' buffers merged in order. */
+  def result(parts: Array[InternalRow]): Row = {
+    val b = fresh()
+    val step = InterpretedMutableProjection.createProjection(merge).target(b)
+    val joined = new JoinedRow
+    parts.foreach(p => step(joined(b, p)))
+    val out = InterpretedMutableProjection.createProjection(results)
+      .target(new SpecificInternalRow(schema.map(_.dataType)))(b)
+    CatalystTypeConverters.createToScalaConverter(schema)(out)
+      .asInstanceOf[Row]
+  }
+}
+
+/** A run-time constant: not foldable, so the optimizer leaves it in the
+  * plan, and generated code reads it through the references array
+  * ([[CodegenFallback]]). Nullable whatever the value, so the generated
+  * code does not depend on the value either. */
+private case class Scalar(value: Any, dataType: DataType)
+    extends LeafExpression with CodegenFallback {
+  override def nullable: Boolean = true
+  override def foldable: Boolean = false
+  override def eval(input: InternalRow): Any = value
+  override def toString: String = s"scalar($value)"
 }

@@ -141,10 +141,10 @@ class CheckpointLifecycleSpec extends SparkSuite {
 
   test("releaseAll unpersists each distinct checkpoint once, then never") {
     val r = Hits.run(g1, numIter = 8)
-    val out = r.hubs.unionByName(r.auths)
+    // A self-union: the plan holds each result checkpoint twice
+    val once = r.hubs.unionByName(r.auths)
+    val out = once.unionByName(once)
     val reads = checkpointReads(out)
-    // L2 normalization scans its checkpoint twice: the plan holds each
-    // result checkpoint more than once
     assert(reads.size > reads.distinct.size, s"no checkpoint read twice: $reads")
     val first = unpersistEvents(reads.toSet)(Checkpoints.releaseAll(out))
     assert(first.sorted == reads.distinct.sorted,

@@ -11,7 +11,9 @@ import org.apache.spark.sql.functions._
   * `localCheckpoint`, but the checkpointed frame keeps the executed
   * plan's hash partitioning, so the iterative kernels' per-iteration
   * score join no longer re-exchanges the |V|-sized vector (r19
-  * optimization — guide §2.4). */
+  * optimization — guide §2.4). Every checkpoint can also tally its rows
+  * in the job that materializes it; the tally specs pin that the values
+  * are a separate aggregate's. */
 class CheckpointShimSpec extends SparkSuite {
 
   private def np = spark.conf.get("spark.sql.shuffle.partitions").toInt
@@ -97,5 +99,89 @@ class CheckpointShimSpec extends SparkSuite {
     assert(ck.orderBy(desc("k")).as[(Long, String)].collect().toSeq ==
       (1 to 20).map(i => (i.toLong, s"v$i")).sortBy(-_._1))
     Checkpoints.release(ck)
+  }
+
+  /** Longs and doubles whose double sums depend on the summation order. */
+  private def frame(width: Int) = {
+    import spark.implicits._
+    (1 to 400).map(i => (i.toLong % 37, i * 1234567L,
+        math.sin(i) * math.pow(10, i % 9 - 4)))
+      .toDF("id", "k", "x").repartition(width, col("id"))
+  }
+
+  private val tally = Seq(count(lit(1)), sum(col("k")), max(col("k")),
+    coalesce(sum(col("k")), lit(0L)), sum(col("x")),
+    sqrt(sum(col("x") * col("x"))), max(col("x")))
+
+  /** The tally against a separate `agg` over the returned checkpoint:
+    * longs exactly, doubles bit for bit when `bitEqual`, else within
+    * 1e-12 of the magnitude. Also checks the checkpoint kept the rows. */
+  private def assertTally(t: Checkpoints.Tallied, rows: Long,
+      bitEqual: Boolean): Unit = {
+    assert(t.df.count() == rows)
+    val want = t.df.agg(tally.head, tally.tail: _*).head()
+    assert(t.tally.length == tally.size)
+    t.tally.toSeq.zip(want.toSeq).zipWithIndex.foreach {
+      case ((got: Double, w: Double), i) if bitEqual =>
+        assert(java.lang.Double.doubleToRawLongBits(got) ==
+          java.lang.Double.doubleToRawLongBits(w), s"column $i: $got vs $w")
+      case ((got: Double, w: Double), i) =>
+        assert(math.abs(got - w) <= 1e-12 * math.max(1.0, math.abs(w)),
+          s"column $i: $got vs $w")
+      case ((got, w), i) => assert(got == w, s"column $i: $got vs $w")
+    }
+  }
+
+  private def eachCheckpoint(body: (String,
+      (org.apache.spark.sql.DataFrame, Seq[org.apache.spark.sql.Column]) =>
+        Checkpoints.Tallied) => Unit): Unit = {
+    body("local", Checkpoints.materialize(_, _))
+    body("keyed", Checkpoints.materializeKeyed(_, _))
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft-tally-spec").toString
+    spark.conf.set(Checkpoints.ReliableKey, "true")
+    spark.conf.set(Checkpoints.DirKey, dir)
+    try body("reliable", Checkpoints.materialize(_, _))
+    finally {
+      spark.conf.unset(Checkpoints.ReliableKey)
+      spark.conf.unset(Checkpoints.DirKey)
+    }
+  }
+
+  test("a tally equals a separate aggregate over its checkpoint: bit-equal " +
+      "at width 1, longs exact and doubles within 1e-12 at width 4") {
+    eachCheckpoint { (kind, materialize) =>
+      withClue(s"$kind checkpoint: ") {
+        val one = materialize(frame(1), tally)
+        assert(one.df.rdd.getNumPartitions == 1)
+        assertTally(one, 400, bitEqual = true)
+        Checkpoints.release(one.df)
+        val four = materialize(frame(4), tally)
+        assert(four.df.rdd.getNumPartitions == 4)
+        assertTally(four, 400, bitEqual = false)
+        Checkpoints.release(four.df)
+      }
+    }
+  }
+
+  test("an empty frame tallies to the aggregates' empty values") {
+    eachCheckpoint { (kind, materialize) =>
+      withClue(s"$kind checkpoint: ") {
+        val t = materialize(frame(4).where(col("k") < 0), tally)
+        assertTally(t, 0, bitEqual = true)
+        assert(t.tally.getLong(0) == 0L && t.tally.isNullAt(1) &&
+          t.tally.getLong(3) == 0L && t.tally.isNullAt(4))
+        Checkpoints.release(t.df)
+      }
+    }
+  }
+
+  test("materializing with a tally runs one job, like without") {
+    import spark.implicits._
+    val df = (1 to 100).map(i => (i.toLong, i.toDouble)).toDF("id", "x")
+    val plain = jobsOf(Checkpoints.release(Checkpoints.materialize(df)))
+    val tallied = jobsOf(Checkpoints.release(
+      Checkpoints.materialize(df, tally.take(1)).df))
+    assert(plain == 1 && tallied == 1, s"$plain vs $tallied jobs")
   }
 }

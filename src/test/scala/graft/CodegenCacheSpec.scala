@@ -1,5 +1,7 @@
 package graft
 
+import graft.operators.Hits
+
 /** Spark caches generated classes by (class loader, source). build.sbt
   * starts every forked JVM, this one included, with the three flags that
   * let a warm pass hit that cache: a cache larger than graft's working
@@ -55,6 +57,30 @@ class CodegenCacheSpec extends SparkSuite {
         s"classes (first: $first): a warm pass recompiles what the " +
         "first compiled")
     } finally GraphIO.evict(spark, sfDir, Seq("order"))
+  }
+
+  test("HITS and the k-core peel on a second graph with other weights " +
+      "compile no class") {
+    // One topology, two weightings: every HITS norm and every peel round's
+    // strengths differ between the graphs. A value compiled into the
+    // generated code (a `lit` norm) would make each iteration a new class.
+    def weighted(w: Int => Double) = graph((0 until 80).map(i =>
+      (s"n${i % 29}", s"n${(i * 7 + 3) % 29}", w(i))))
+    val (a, b) = (weighted(i => 1.0 + i % 5), weighted(i => 0.5 + i % 7))
+    def pass(g: Graph): Long = {
+      val before = Bench.codegenCounters()._1
+      val h = Hits.runWeighted(g, numIter = 8)
+      val core = operators.KCore.runWeighted(g.edges, 4.0)
+      Seq(h.hubs, h.auths, core).foreach { df =>
+        assert(df.collect().nonEmpty)
+        Checkpoints.releaseAll(df)
+      }
+      Bench.codegenCounters()._1 - before
+    }
+    val first = pass(a)
+    val other = pass(b)
+    assert(other == 0, s"the second graph compiled $other classes " +
+      s"(the first: $first)")
   }
 
   test("warm graph_components passes do not recompile the star-forest " +

@@ -21,6 +21,28 @@ class HitsSpec extends SparkSuite {
       Map("c" -> 0.7071067811865475, "d" -> 0.7071067811865475))
   }
 
+  test("an iteration runs three jobs: no job of its own for the norm") {
+    val g = graph(Seq(("a", "c", 1.0), ("a", "d", 2.0), ("b", "c", 1.0),
+      ("c", "d", 3.0), ("d", "a", 1.0), ("e", "a", 1.0)))
+    def jobsOfRun(n: Int): Int = {
+      var r: Hits.Result = null
+      val jobs = jobsOf { r = Hits.run(g, numIter = n) }
+      Checkpoints.releaseAll(r.hubs)
+      Checkpoints.releaseAll(r.auths)
+      jobs
+    }
+    // At the shuffle.partitions cap every exchange runs as a job of its
+    // own (at width 1 adaptive execution may fold one into another).
+    spark.conf.set(AdaptiveWidth.BytesPerTaskKey, "1b")
+    try Seq(3, 8).foreach { n =>
+      val (a, b) = (jobsOfRun(n), jobsOfRun(n + 1))
+      // The two aggregate exchanges and the checkpoint. The norm,
+      // tallied by the checkpoint's job, once cost two more: its
+      // aggregate exchange and the broadcast of a cross join.
+      assert(b - a == 3, s"$n iterations ran $a jobs, ${n + 1} ran $b")
+    } finally spark.conf.unset(AdaptiveWidth.BytesPerTaskKey)
+  }
+
   test("G1 dropout semantics: d never a hub, a/b never authorities") {
     val r = Hits.run(g1, numIter = 8)
     val hubs = scoresMap(r.hubs)

@@ -23,6 +23,24 @@ trait SparkSuite extends AnyFunSuite {
     Graph(n, e)
   }
 
+  /** Spark jobs started while `body` runs. */
+  def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.sql.graftshim.ListenerBusShim.drain(sc)
+    sc.addSparkListener(l)
+    try {
+      body
+      org.apache.spark.sql.graftshim.ListenerBusShim.drain(sc)
+    } finally sc.removeSparkListener(l)
+    jobs.get()
+  }
+
   def scoresMap(df: DataFrame): Map[String, Double] =
     df.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
 
