@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.network.util.JavaUtils
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Scale-adaptive partition width for kernel-shaped loops (optimization
   * guide §2.2/§2.4: "size partitions in the 100 MB-1 GB range rather
@@ -10,8 +10,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * The iterative kernels run every per-iteration stage at the width of
   * their co-partitioned caches, and checkpoints preserve that width
-  * ([[Checkpoints.materializeKeyed]] disables AQE coalescing for the
-  * checkpointed query so there is a hash layout to preserve). Taking
+  * ([[Checkpoints.materializeKeyed]] plans the checkpointed query with
+  * AQE coalescing off so there is a hash layout to preserve). Each loop
+  * runs on a session of its own whose `shuffle.partitions` is this
+  * width ([[Fixpoint]]; the streaming drains likewise,
+  * [[graft.streaming.Drain]]), so the caller's session keeps its conf.
+  * The width is not put into the plans as `repartition(k, key)`: under
+  * a `groupBy` that moves the partial aggregate after the exchange, so
+  * each HITS gather on the order graph would shuffle its ~120k edge
+  * rows instead of ≤18.5k partial sums (sf0.01). Taking
   * that width verbatim from `spark.sql.shuffle.partitions` is right at
   * cluster scale but pathological when the loop's data is small: a
   * converged HITS run at sf0.1 executed ~50 stages of 32 tasks over a
@@ -57,28 +64,5 @@ object AdaptiveWidth {
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
     val ideal = (bytes + perTask - 1) / perTask
     ideal.min(BigInt(cap)).max(BigInt(1)).toInt
-  }
-
-  /** Runs `body` with `spark.sql.shuffle.partitions` set to `k`, so the
-    * loop's aggregation exchanges plan at the same width as its caches
-    * and checkpoints — every per-iteration join is then co-partitioned
-    * at `k` (restored in `finally`). Its one caller is [[Fixpoint]],
-    * whose kernel loop and structural round loop run under it (the
-    * streaming drains set their width on a session of their own,
-    * [[graft.streaming.Drain]]). Session-global, like the planner
-    * hints the kernels already scope per loop: the graft drivers run
-    * queries sequentially on one thread (documented
-    * single-threaded-session assumption, same as
-    * [[org.apache.spark.sql.graftshim.CheckpointShim]]). The width is
-    * not put into the plans as `repartition(k, key)`: under a `groupBy`
-    * that moves the partial aggregate after the exchange, so each HITS
-    * gather on the order graph would shuffle its ~120k edge rows
-    * instead of ≤18.5k partial sums (sf0.01). */
-  def withWidth[T](spark: SparkSession, k: Int)(body: => T): T = {
-    val prev = spark.conf.get(ShufflePartitionsKey)
-    try {
-      spark.conf.set(ShufflePartitionsKey, k.toString)
-      body
-    } finally spark.conf.set(ShufflePartitionsKey, prev)
   }
 }

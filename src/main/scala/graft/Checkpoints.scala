@@ -113,9 +113,12 @@ object Checkpoints {
     * against a co-clustered cached side. Stock `localCheckpoint` drops
     * the hash partitioning under AQE (`AdaptiveSparkPlanExec` reports
     * `UnknownPartitioning`), which cost every such loop one |V|-sized
-    * Exchange per iteration; this path preserves it — and disables AQE
-    * partition coalescing for the checkpointed query only, so there IS
-    * a hash layout to preserve (guide §2.4; see
+    * Exchange per iteration; this path preserves it — and plans the
+    * checkpointed query with AQE partition coalescing off, so there IS
+    * a hash layout to preserve (guide §2.4). A kernel loop's session has
+    * coalescing off already ([[Fixpoint]]); for a frame on any other
+    * session the query is planned on a scoped sibling session, and no
+    * session's conf is changed (see
     * [[org.apache.spark.sql.graftshim.CheckpointShim]]).
     *
     * NOT the default: for checkpoints whose consumers re-key anyway
@@ -124,7 +127,8 @@ object Checkpoints {
     * endpoint orientations), the preserved partitioning buys nothing
     * while the coalesce-off runs every tiny late-round stage at full
     * `shuffle.partitions` width — measured 4× slower on the k-truss
-    * peel at sf0.1. Keyed checkpoints are for vectors consumed BY KEY.
+    * peel at sf0.1, which is why the structural round loop keeps
+    * coalescing on. Keyed checkpoints are for vectors consumed BY KEY.
     * Falls back to [[materialize]] under the reliable-checkpoint conf
     * (cluster fault-tolerance mode — partitioning preservation is an
     * optimization, not a contract). */
@@ -158,8 +162,7 @@ object Checkpoints {
     * verify, a 100 TB pipeline driver) calls this after each query's
     * sink completes, so final per-query score vectors don't accumulate
     * as dead blocks between driver GCs. A checkpoint the plan reads more
-    * than once (a self-union; [[operators.Normalize.l2]]'s cross join) is
-    * released once. */
+    * than once (a self-union) is released once. */
   def releaseAll(df: DataFrame): Unit =
     leaves(df).distinctBy(_.id).foreach(releaseRdd(df.sparkSession, _))
 

@@ -1,11 +1,12 @@
 package graft
 
 import graft.Checkpoints.Tallied
+import graft.operators.Normalize
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim.CheckpointShim
-import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.sql.graftshim.Rebind
+import org.apache.spark.sql.internal.SQLConf
 
 /** Outcome of a fixed-point kernel run ([[operators.Hits.runConverged]],
   * [[operators.Salsa.runConverged]],
@@ -39,10 +40,16 @@ case class Fixpoint[A](result: A, iterations: Int, converged: Boolean)
   *    run, or read from the bucketed tables with no shuffle at all —
   *    dropped, with every cache and checkpoint the program made, when
   *    the loop ends.
-  *  - The width flip: the aggregation exchanges plan at
-  *    `shuffle.partitions`, so the loop runs under
-  *    [[AdaptiveWidth.withWidth]] and every per-iteration join reads
-  *    both sides co-partitioned.
+  *  - The loop session: the loop plans on a session of its own
+  *    ([[Sessions.scoped]], one per run) whose `shuffle.partitions` is
+  *    the loop width, so every aggregation exchange plans at that width
+  *    and every per-iteration join reads both sides co-partitioned. AQE
+  *    partition coalescing is off on it: every shuffle of the loop
+  *    feeds a keyed checkpoint, whose layout must stay hash-routable.
+  *    The edges and nodes are rebound onto it from their analyzed plans
+  *    (a join runs on its left input's session), and the results are
+  *    rebound onto the caller's session, so later queries plan under the
+  *    caller's conf, which the loop never changes.
   *  - Checkpoints: each iteration's carried vector is truncated with
   *    [[Checkpoints.materializeKeyed]] (one eager job, hash layout
   *    preserved for the next join); superseded checkpoints are
@@ -51,11 +58,8 @@ case class Fixpoint[A](result: A, iterations: Int, converged: Boolean)
   *    materialized before the edge caches drop.
   *  - Norms: every vector is checkpointed raw, and the checkpoint's
   *    own job tallies the program's norm; the normalized vector is the
-  *    checkpoint divided by that value, a projection that keeps its
-  *    hash layout. The value enters the plan as a run-time constant
-  *    ([[org.apache.spark.sql.graftshim.CheckpointShim.scalar]]), not a
-  *    `lit`, whose value would be compiled into the generated code: a
-  *    new class per iteration per graph. A HITS iteration so runs
+  *    checkpoint divided by that value ([[operators.Normalize.divide]]),
+  *    a projection that keeps its hash layout. A HITS iteration so runs
   *    three jobs (its two aggregate exchanges and the checkpoint), none
   *    for the norm.
   *  - Schedule: a fixed count, or delta checks on the
@@ -80,11 +84,12 @@ object Fixpoint {
   }
 
   /** The kernel's edge projection, hash-clustered on `dst` / `src` at the
-    * loop `width`. Plans, not caches: a program persists the copies it
-    * re-reads every iteration, `byDst` first — `bySrc` derives from it,
-    * so a cached `byDst` runs an upstream subgraph derivation once. */
+    * loop `width`, and the graph's nodes, all on the loop session. Plans,
+    * not caches: a program persists the copies it re-reads every
+    * iteration, `byDst` first — `bySrc` derives from it, so a cached
+    * `byDst` runs an upstream subgraph derivation once. */
   private[graft] final case class Edges(byDst: DataFrame, bySrc: DataFrame,
-      width: Int)
+      nodes: DataFrame, width: Int)
 
   /** One kernel's iteration. `side` (HITS/SALSA hubs) maps the carried
     * vector to the side vector and `step` maps that (or, without a
@@ -121,13 +126,13 @@ object Fixpoint {
       .agg(sum(contrib).as("score"))
   }
 
-  /** Runs `program` over a derived edge set, projected to `cols`. */
-  private[graft] def run[A](edges: DataFrame, cols: Seq[Column],
+  /** Runs `program` over `g`, its edges projected to `cols`. */
+  private[graft] def run[A](g: Graph, cols: Seq[Column],
       schedule: Schedule)(program: Edges => Program[A]): Fixpoint[A] = {
-    val np = width(edges)
-    val byDst = edges.select(cols: _*).repartition(np, col("dst"))
-    drive(Edges(byDst, byDst.repartition(np, col("src")), np), schedule,
-      program)
+    val np = width(g.edges)
+    val byDst = g.edges.select(cols: _*).repartition(np, col("dst"))
+    drive(Edges(byDst, byDst.repartition(np, col("src")), g.nodes, np),
+      schedule, program)
   }
 
   /** Runs `program` over a [[GraphIO.writeBucketedGraph]] layout: the
@@ -149,24 +154,41 @@ object Fixpoint {
         "zero-edge-Exchange plan")
     def table(key: String): DataFrame =
       spark.table(s"${prefix}_edges_by_$key").select(cols: _*)
-    drive(Edges(table("dst"), table("src"), buckets.get), schedule, program)
+    drive(Edges(table("dst"), table("src"), spark.table(s"${prefix}_nodes"),
+      buckets.get), schedule, program)
   }
 
+  /** Runs `program` on the loop session: `caller` (the edges' session)
+    * at the loop width, with AQE coalescing off. */
   private def drive[A](e: Edges, schedule: Schedule,
-      program: Edges => Program[A]): Fixpoint[A] =
-    try AdaptiveWidth.withWidth(e.bySrc.sparkSession, e.width) {
-      val p = program(e)
-      try iterate(p, schedule)
+      program: Edges => Program[A]): Fixpoint[A] = {
+    val caller = e.bySrc.sparkSession
+    val s = session(caller, e.width,
+      SQLConf.COALESCE_PARTITIONS_ENABLED.key -> "false")
+    val on = Edges(Rebind(e.byDst, s), Rebind(e.bySrc, s),
+      Rebind(e.nodes, s), e.width)
+    try {
+      val p = program(on)
+      try iterate(p, schedule, Rebind(_, caller))
       finally p.owned.foreach(drop)
     } finally {
       // The loop runs eager actions, so exceptions mid-loop are real;
       // results live on their own checkpoints, so the caches can go
       // (non-blocking) without recompute risk.
-      e.byDst.unpersist(false)
-      e.bySrc.unpersist(false)
+      on.byDst.unpersist(false)
+      on.bySrc.unpersist(false)
     }
+  }
 
-  private def iterate[A](p: Program[A], s: Schedule): Fixpoint[A] = {
+  /** A loop's session: `caller`'s conf at the loop `width`, and `conf`. */
+  private def session(caller: SparkSession, width: Int,
+      conf: (String, String)*): SparkSession =
+    Sessions.scoped(caller,
+      (SQLConf.SHUFFLE_PARTITIONS.key -> width.toString) +: conf: _*)
+
+  /** `back` rebinds the result frames onto the caller's session. */
+  private def iterate[A](p: Program[A], s: Schedule,
+      back: DataFrame => DataFrame): Fixpoint[A] = {
     // Checkpoints `v` and returns it with its normalized view: the norm
     // is tallied by the checkpoint's own job, and the view divides the
     // checkpoint by it (no second pass over the vector).
@@ -176,8 +198,7 @@ object Fixpoint {
         (ck, ck)
       case Some(norm) =>
         val t = Checkpoints.materializeKeyed(v, Seq(norm))
-        (t.df, t.df.select(col("id"), (col("score") /
-          CheckpointShim.scalar(t.tally.get(0), DoubleType)).as("score")))
+        (t.df, Normalize.divide(t))
     }
     val fixed = s.tol.isEmpty
     // Only a converged run's side vector stays lazy past its iteration
@@ -213,13 +234,21 @@ object Fixpoint {
     // checkpoint it read is unreachable after that.
     val out = sideOut.orElse(side.map(v => checkpoint(v)._2))
     if (held != null) Checkpoints.release(held)
-    Fixpoint(p.result(out.orNull, carried), it, done)
+    Fixpoint(p.result(out.map(back).orNull, back(carried)), it, done)
   }
 
-  /** A structural round plan's view of the loop: the loop [[width]], and
-    * the operator's choice of checkpoint for each frame it makes, which
-    * the loop tracks to release. */
-  private[graft] final class Rounds private[Fixpoint] (val width: Int) {
+  /** A structural round plan's view of the loop: the loop [[width]], the
+    * loop's `input` (its `widthOf`) and any other frame made outside the
+    * loop ([[on]]) on the loop session, and the operator's choice of
+    * checkpoint for each frame it makes, which the loop tracks to
+    * release. */
+  private[graft] final class Rounds private[Fixpoint] (widthOf: DataFrame) {
+    val width: Int = AdaptiveWidth.of(widthOf)
+    private val session = Fixpoint.session(widthOf.sparkSession, width)
+    /** `widthOf` on the loop session. */
+    val input: DataFrame = on(widthOf)
+    /** `df` on the loop session: the rounds read only frames on it. */
+    def on(df: DataFrame): DataFrame = Rebind(df, session)
     private[Fixpoint] var made = Vector.empty[DataFrame]
     def materialize(df: DataFrame): DataFrame =
       track(Checkpoints.materialize(df))
@@ -237,8 +266,14 @@ object Fixpoint {
     * result (`Left`), so the round plan holds the stop test. The loop
     * owns the rest:
     *  - width: [[AdaptiveWidth.of]] on `widthOf`, the frame the rounds
-    *    re-read, handed to them as [[Rounds.width]] and set for every
-    *    round by the one [[AdaptiveWidth.withWidth]];
+    *    re-read, handed to them as [[Rounds.width]];
+    *  - the loop session: every round plans on one session of its own
+    *    ([[Sessions.scoped]]) whose `shuffle.partitions` is that width.
+    *    AQE coalescing stays on there: the peels' stock checkpoints need
+    *    it (see [[Checkpoints.materializeKeyed]]). `start` reads
+    *    `widthOf` as [[Rounds.input]] and rebinds any other frame made
+    *    outside the loop with [[Rounds.on]]; the result comes back on
+    *    the caller's session, whose conf the loop never changes;
     *  - the cap: a round that still makes a generation after `maxRounds`
     *    such rounds fails loudly, since a SQL oracle that unrolls the same
     *    bound would see a partial result;
@@ -253,8 +288,8 @@ object Fixpoint {
   private[graft] def rounds[S](widthOf: DataFrame, maxRounds: Int,
       what: String)(carried: S => Seq[DataFrame])(start: Rounds => S)(
       round: (Rounds, S) => Either[DataFrame, S]): (DataFrame, Int) = {
-    val r = new Rounds(AdaptiveWidth.of(widthOf))
-    var live = Seq(widthOf)
+    val r = new Rounds(widthOf)
+    var live = Seq(r.input)
     def keep(read: DataFrame => Boolean): Unit = {
       (live ++ r.made).filterNot(read).foreach(drop)
       r.made = Vector.empty
@@ -265,12 +300,12 @@ object Fixpoint {
       live = next
       s
     }
-    try AdaptiveWidth.withWidth(widthOf.sparkSession, r.width) {
+    try {
       @annotation.tailrec
       def loop(s: S, n: Int): (DataFrame, Int) = round(r, s) match {
         case Left(result) =>
           keep(Checkpoints.reads(result))
-          (result, n)
+          (Rebind(result, widthOf.sparkSession), n)
         case Right(next) =>
           require(n <= maxRounds,
             s"$what did not converge within $maxRounds rounds (raise the " +

@@ -168,18 +168,6 @@ object GraphIO {
       Graph(nodes, edges)
     })
 
-  /** Parquet round-trip for derived graphs: persist a graph once, read
-    * it back without re-deriving — the handoff format between pipeline
-    * stages at scale (columnar, splittable, schema-carrying). */
-  def writeGraph(g: Graph, dir: String): Unit = {
-    g.nodes.write.mode("overwrite").parquet(s"$dir/nodes.parquet")
-    g.edges.write.mode("overwrite").parquet(s"$dir/edges.parquet")
-  }
-
-  def readGraph(spark: SparkSession, dir: String): Graph =
-    Graph(spark.read.parquet(s"$dir/nodes.parquet"),
-      spark.read.parquet(s"$dir/edges.parquet"))
-
   /** Bucketed handoff layout for iterative workloads: edges are written
     * twice, bucketed + sorted by each join key (`dst` for the hub
     * update, `src` for the authority update), nodes bucketed by id.
@@ -209,13 +197,6 @@ object GraphIO {
     write(g.edges, s"${prefix}_edges_by_src", "src")
     write(g.nodes, s"${prefix}_nodes", "id")
   }
-
-  /** Reads a [[writeBucketedGraph]] layout. `edges` is the dst-bucketed
-    * copy; callers needing the src-bucketed copy read
-    * `<prefix>_edges_by_src` directly. */
-  def readBucketedGraph(spark: SparkSession, prefix: String): Graph =
-    Graph(spark.table(s"${prefix}_nodes"),
-      spark.table(s"${prefix}_edges_by_dst"))
 
   def documents(spark: SparkSession, sfDir: String): DataFrame =
     spark.read.parquet(s"$sfDir/documents.parquet")

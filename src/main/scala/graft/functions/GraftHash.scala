@@ -160,12 +160,6 @@ object GraftHash {
     call_function("graft_hash", c)
   }
 
-  /** Column-API entry point for the second fold. */
-  def graftHash2(spark: SparkSession, c: Column): Column = {
-    register(spark)
-    call_function("graft_hash2", c)
-  }
-
   /** The ~60-bit combined hash `graft_hash(c)·(1e9+9) + graft_hash2(c)`
     * as ONE int64 — the pairing is a bijection (the low component is
     * `mod` 1e9+9, the high one `div`), so equality of the wide value is

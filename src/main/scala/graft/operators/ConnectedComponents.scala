@@ -54,7 +54,7 @@ object ConnectedComponents {
     // fixed point: the loop always ends, and needs no cap.
     Fixpoint.rounds[Labels](sym, Int.MaxValue, "min-label propagation")(
         l => Seq(l.e, l.comp)) { r =>
-      val e = sym.repartition(r.width, col("y")).persist()
+      val e = r.input.repartition(r.width, col("y")).persist()
       val comp = r.materializeKeyed(e.groupBy(col("x").as("id"))
         .agg(min(col("y")).as("nmin"))
         .select(col("id"), least(col("id"), col("nmin")).as("comp")),
@@ -165,16 +165,16 @@ object ConnectedComponents {
     // converges in well under 64 rounds; exceeding the cap means the
     // convergence test is being dodged.
     Fixpoint.rounds[Star](p0, 100, "large-star/small-star")(
-        s => Seq(p0, s.e)) { r =>
+        s => Seq(s.p0, s.e)) { r =>
       // assumeSimple: input is already a simple canonical edge set —
       // orient to the (hi, lo) convention without the re-distinct
       // exchange (set-identical by the caller's contract).
       val e = r.materialize(
         if (assumeSimple)
-          p0.select(greatest(col("x"), col("y")).as("x"),
+          r.input.select(greatest(col("x"), col("y")).as("x"),
             least(col("x"), col("y")).as("y"))
-        else canonical(p0), EdgeChecksum)
-      Star(e.df, edgeChecksum(e))
+        else canonical(r.input), EdgeChecksum)
+      Star(r.input, e.df, edgeChecksum(e))
     } { (r, s) =>
       val t = r.materialize(smallStar(largeStar(s.e)), EdgeChecksum)
       val next = t.df
@@ -185,14 +185,15 @@ object ConnectedComponents {
       // (one parent per child, no center is a child): one extra
       // agg+join job that normally runs exactly once, at the real fixed
       // point.
-      if (sum != s.sum || !isStarForest(next)) Right(Star(next, sum))
+      if (sum != s.sum || !isStarForest(next))
+        Right(s.copy(e = next, sum = sum))
       else {
         // Star forest: every non-center node appears as `x` pointing at
         // its component min. The node universe comes from the full pair
         // set so nodes seen only in self-pairs (dropped by `canonical`)
         // still map to themselves, like [[run]].
-        val nodes = p0.select(col("x").as("id"))
-          .unionAll(p0.select(col("y").as("id"))).distinct()
+        val nodes = s.p0.select(col("x").as("id"))
+          .unionAll(s.p0.select(col("y").as("id"))).distinct()
         val parent = next.select(col("x").as("id"), col("y").as("c"))
         Left(r.materialize(
           nodes.join(parent.hint("SHUFFLE_HASH"), Seq("id"), "left")
@@ -202,8 +203,10 @@ object ConnectedComponents {
     }
   }
 
-  /** [[runStarCounted]]'s generation: the edge set and its checksum. */
-  private final case class Star(e: DataFrame, sum: (Long, Long))
+  /** [[runStarCounted]]'s generation: the pair cache (the loop's input,
+    * kept for the node universe), the edge set and its checksum. */
+  private final case class Star(p0: DataFrame, e: DataFrame,
+      sum: (Long, Long))
 
   /** True iff `e` (canonical (hi, lo) pairs) is a star forest: every
     * child `x` has exactly one parent and no parent is itself a child.

@@ -62,7 +62,7 @@ object Hits {
     * only to topic nodes (reference `src/topic_specific_hits.py:54-87`). */
   def runTopicSpecific(g: Graph, topic: String, beta: Double = 0.8,
       numIter: Int = 8): Result =
-    fixed(g, numIter)(topicTeleport(g, topic, beta, 1))
+    fixed(g, numIter)(topicTeleport(topic, beta, 1))
 
   /** Fixed-point extension (not in the reference, which always runs a
     * fixed 8 iterations): stop when the max absolute change of the
@@ -73,9 +73,9 @@ object Hits {
   def runConverged(g: Graph, tol: Double = 1e-9,
       maxIter: Int = 50, checkEvery: Int = 3, firstCheck: Int = 3)
       : Fixpoint[Result] =
-    Fixpoint.run(g.edges, Cols,
+    Fixpoint.run(g, Cols,
       Schedule(maxIter, Some(tol), checkEvery, firstCheck))(
-      program((uniform(g.nodes, g.nodes.count()), Nil), weighted = false,
+      program(n => (uniform(n, n.count()), Nil), weighted = false,
         _ => Identity))
 
   /** K5 topic-exclusive HITS: base kernel on the induced topic subgraph
@@ -97,8 +97,7 @@ object Hits {
   def runBucketed(spark: SparkSession, prefix: String,
       numIter: Int = 8): Result =
     Fixpoint.runBucketed(spark, prefix, Cols, Schedule(numIter))(
-      program(idsUniform(spark.table(s"${prefix}_nodes")),
-        weighted = false, _ => Identity)).result
+      program(idsUniform, weighted = false, _ => Identity)).result
 
   // -----------------------------------------------------------------
 
@@ -106,19 +105,20 @@ object Hits {
     Seq(col("src"), col("dst"), col("weight").cast("double").as("w"))
 
   private def fixed(g: Graph, numIter: Int, weighted: Boolean = false)(
-      post: Int => Post): Result =
-    Fixpoint.run(g.edges, Cols, Schedule(numIter))(
-      program(idsUniform(g.nodes), weighted, post)).result
+      post: Edges => Post): Result =
+    Fixpoint.run(g, Cols, Schedule(numIter))(
+      program(idsUniform, weighted, post)).result
 
-  /** `init`: the initial authority vector and what it materialized. */
-  private def program(init: => (DataFrame, Seq[DataFrame]),
-      weighted: Boolean, post: Int => Post)(e: Edges): Program[Result] = {
+  /** `init`: the initial authority vector over the nodes, and what it
+    * materialized. */
+  private def program(init: DataFrame => (DataFrame, Seq[DataFrame]),
+      weighted: Boolean, post: Edges => Post)(e: Edges): Program[Result] = {
     val contribution = if (weighted) col("w") * col("score") else col("score")
-    val (auths, owned) = init
+    val (auths, owned) = init(e.nodes)
     // Both copies are re-probed every iteration: cache them (the parquet
     // scan of a bucketed layout then also stays out of the loop).
     mutual(auths, e.byDst.persist(), contribution, e.bySrc.persist(),
-      contribution, post(e.width), Normalize.L2, Result, owned)
+      contribution, post(e), Normalize.L2, Result, owned)
   }
 
   /** Uniform `1/√N` init over `nodes`, `n` of them. */
@@ -141,11 +141,11 @@ object Hits {
     * and cached for the run, so the per-iteration flag join is
     * shuffle-free on both sides. `scale` multiplies N_topic (SALSA's
     * reference denominator is 2·N_topic). */
-  private[operators] def topicTeleport(g: Graph, topic: String, beta: Double,
-      scale: Long)(width: Int): TopicTeleport = {
-    val flags = g.nodes.select(col("id"),
+  private[operators] def topicTeleport(topic: String, beta: Double,
+      scale: Long)(e: Edges): TopicTeleport = {
+    val flags = e.nodes.select(col("id"),
         when(col("label") === topic, 1).otherwise(0).as("flag"))
-      .repartition(width, col("id")).persist()
+      .repartition(e.width, col("id")).persist()
     TopicTeleport(beta, scale * flags.filter(col("flag") === 1).count(), flags)
   }
 

@@ -135,7 +135,7 @@ object KCore {
       // aggregate that must not re-run per reference. For the indexed
       // path this copies the stored |V|-row table — one small job that
       // buys every round's reads.
-      peeled(e0, r.materialize(deg0, dropCount))
+      peeled(r.input, r.materialize(r.on(deg0), dropCount))
     } { (r, p) =>
       val e = p.e
       val nDrop = p.nDrop

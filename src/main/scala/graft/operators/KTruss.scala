@@ -58,7 +58,7 @@ object KTruss {
     val e0 = Checkpoints.materialize(und.select(col("a"), col("b")), edges)
     graft.Fixpoint.rounds[(DataFrame, Long)](e0.df, maxRounds,
         "k-truss peel")(en => Seq(en._1))(
-        _ => (e0.df, e0.tally.getLong(0))) { case (r, (e, n)) =>
+        r => (r.input, e0.tally.getLong(0))) { case (r, (e, n)) =>
       val sup = r.materialize(support(e))
       val next = r.materialize(
         e.join(sup.where(col("support") >= minSup), Seq("a", "b"),

@@ -89,12 +89,13 @@ object LabelProp {
     graft.Fixpoint.rounds[Labels](und, iters, "label propagation")(
         l => Seq(l.nbrs, l.lab)) { r =>
       // symmetric neighbor list: votes flow both ways across each edge
+      val e = r.input
       val nbrs = r.materialize(
-        und.select(col("a").as("src"), col("b").as("id"), vote.as("wt"))
+        e.select(col("a").as("src"), col("b").as("id"), vote.as("wt"))
           .unionAll(
-            und.select(col("b").as("src"), col("a").as("id"), vote.as("wt"))))
+            e.select(col("b").as("src"), col("a").as("id"), vote.as("wt"))))
       val nodes = nbrs.select(col("id")).distinct()
-      Labels(nbrs, r.materialize(nodes.join(seeds, Seq("id"), "left")
+      Labels(nbrs, r.materialize(nodes.join(r.on(seeds), Seq("id"), "left")
         .select(col("id"), col("label"))), iters)
     } { (r, l) =>
       if (l.left == 0) Left(l.lab)

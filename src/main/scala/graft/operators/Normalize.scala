@@ -1,21 +1,22 @@
 package graft.operators
 
+import graft.Checkpoints.Tallied
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.CheckpointShim
+import org.apache.spark.sql.types.DoubleType
 
 /** Score-vector normalization (reference `src/base_hits.py:16-19` for L2,
   * `src/base_salsa.py:13-15` for L1).
   *
   * The reference collects the norm scalar to the driver every iteration
-  * (an extra Spark action per vector per iteration). The kernel loop
-  * ([[graft.Fixpoint]]) instead tallies [[L2]] or [[L1]] in the job
-  * that checkpoints the vector, and divides the checkpoint by the value.
-  * [[l2]] and [[l1]] normalize a frame outside the loop: the norm stays
-  * in the plan as a broadcast 1-row cross join, so no value goes through
-  * the driver. Under adaptive execution that join is two jobs of the
-  * consumer's query (the norm's aggregate exchange and the broadcast),
-  * which is why the loop does not use it. Same numeric semantics either
-  * way: sum, then divide.
+  * (an extra Spark action per vector per iteration). graft has one
+  * mechanism instead, in the kernel loop ([[graft.Fixpoint]]) and out of
+  * it ([[Salsa.runSimplified]]): the job that checkpoints a vector
+  * tallies [[L2]] or [[L1]] over it ([[graft.Checkpoints.materialize]]),
+  * and [[divide]] divides the checkpoint by the value, so the norm costs
+  * no job of its own. Same numeric semantics as the reference: sum, then
+  * divide.
   *
   * `score*score` (not `pow(score,2)`) keeps bit-parity with the oracle:
   * `pow` is not guaranteed identical to multiplication for all inputs.
@@ -28,13 +29,13 @@ object Normalize {
   /** The L1 mass of a vector's scores: Σ score (SALSA family). */
   val L1: Column = sum(col("score"))
 
-  /** Divide by the L2 norm: score / √(Σ score²). */
-  def l2(scores: DataFrame): DataFrame = by(scores, L2)
-
-  /** Divide by the L1 mass: score / Σ score. */
-  def l1(scores: DataFrame): DataFrame = by(scores, L1)
-
-  private def by(scores: DataFrame, norm: Column): DataFrame =
-    scores.crossJoin(broadcast(scores.agg(norm.as("__norm"))))
-      .select(col("id"), (col("score") / col("__norm")).as("score"))
+  /** The normalized view of an `(id, score)` checkpoint tallied with its
+    * norm: score / norm, a projection that keeps the checkpoint's hash
+    * layout. The norm enters the plan as a run-time constant
+    * ([[CheckpointShim.scalar]]), not a `lit`, whose value would be
+    * compiled into the generated code: a new class per vector per
+    * graph. */
+  def divide(t: Tallied): DataFrame =
+    t.df.select(col("id"), (col("score") /
+      CheckpointShim.scalar(t.tally.get(0), DoubleType)).as("score"))
 }

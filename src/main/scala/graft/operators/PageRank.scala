@@ -72,7 +72,7 @@ object PageRank {
     * table, or None for the uniform `(1-d)/N`. */
   private def iterate(g: Graph, damping: Double, s: Schedule,
       seeds: Option[Column]): Fixpoint[DataFrame] =
-    Fixpoint.run(g.edges, Seq(col("src"), col("dst")), s) { e =>
+    Fixpoint.run(g, Seq(col("src"), col("dst")), s) { e =>
       // Per-join SHUFFLE_HASH hints (not a session-wide planner flag) —
       // the degree/score sides are the |V|-sized build sides.
       val dOut = Degrees.out(e.bySrc).hint("SHUFFLE_HASH")
@@ -81,11 +81,11 @@ object PageRank {
       // node universe (+ teleport column), pre-hashed once: the per-
       // iteration left join that gives rankless nodes their teleport
       // floor is then shuffle-free on both sides
-      val tele = g.nodes.select(col("id") +: seeds.map(_.as("t")).toSeq: _*)
+      val tele = e.nodes.select(col("id") +: seeds.map(_.as("t")).toSeq: _*)
         .repartition(e.width, col("id")).persist()
-      lazy val n = g.nodes.count()
+      lazy val n = e.nodes.count()
       val (init, floor) = seeds match {
-        case None => (g.nodes.select(col("id"), lit(1.0 / n).as("score")),
+        case None => (e.nodes.select(col("id"), lit(1.0 / n).as("score")),
           lit((1.0 - damping) / n))
         case Some(_) => (tele.select(col("id"), col("t").as("score")),
           lit(1.0 - damping) * col("t"))

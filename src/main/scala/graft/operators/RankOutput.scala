@@ -55,33 +55,6 @@ object RankOutput {
       .coalesce(1)
       .write.mode("overwrite").text(dir)
 
-  /** GraphViz/DOT text export — the engine-side replacement for the
-    * reference's driver-side networkx PNG rendering (reference
-    * `src/draw_graphs.py:77-89`): same inputs (sampled edges + top-k
-    * scores for node sizing), emitted as a text sink any DOT renderer
-    * consumes. Node size attribute ∝ score like the reference's
-    * `node_size` scaling. */
-  def dotLines(edges: DataFrame, scores: DataFrame, k: Int = 50): DataFrame = {
-    val top = topK(scores, k)
-    val nodeLines = top.select(
-      concat(lit("  \""), col("id"), lit("\" [width="),
-        format_number(col("score") * 20, 4), lit("];")).as("line"),
-      lit(1).as("ord"))
-    val keep = top.select(col("id"))
-    val edgeLines = edges
-      .join(keep, edges("src") === keep("id"), "left_semi")
-      .select(concat(lit("  \""), col("src"), lit("\" -> \""), col("dst"),
-        lit("\";")).as("line"), lit(2).as("ord"))
-    import edges.sparkSession.implicits._
-    // Explicit section ordering: union partition order is not the
-    // logical order once children collapse partitions (e.g. top-k).
-    Seq(("digraph G {", 0)).toDF("line", "ord")
-      .unionAll(nodeLines).unionAll(edgeLines)
-      .unionAll(Seq(("}", 3)).toDF("line", "ord"))
-      .orderBy(col("ord"), col("line"))
-      .select(col("line"))
-  }
-
   /** Color-coded DOT render with the reference's exact view semantics
     * (reference `src/draw_graphs.py:4-89`) and exact render inputs
     * (reference `src/base_hits.py:74-79`): top-k of each score vector,

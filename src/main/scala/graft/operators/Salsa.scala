@@ -31,19 +31,24 @@ object Salsa {
   final case class Result(hubs: DataFrame, auths: DataFrame)
 
   /** K7 simplified SALSA: degree mass, L1-normalized. Integer degree
-    * counts divide as doubles, matching Python true division. */
+    * counts divide as doubles, matching Python true division. Each
+    * vector is checkpointed, and the checkpoint's job tallies its mass
+    * ([[Normalize.divide]]). */
   def runSimplified(edges: DataFrame): Result = Result(
-    Normalize.l1(Degrees.out(edges)
+    l1(Degrees.out(edges)
       .select(col("id"), col("out_degree").cast("double").as("score"))),
-    Normalize.l1(Degrees.in(edges)
+    l1(Degrees.in(edges)
       .select(col("id"), col("in_degree").cast("double").as("score"))))
 
   /** K9 weighted simplified SALSA: Σ weight instead of counts. */
   def runWeightedSimplified(edges: DataFrame): Result = Result(
-    Normalize.l1(Degrees.outWeighted(edges)
+    l1(Degrees.outWeighted(edges)
       .select(col("id"), col("out_degree").as("score"))),
-    Normalize.l1(Degrees.inWeighted(edges)
+    l1(Degrees.inWeighted(edges)
       .select(col("id"), col("in_degree").as("score"))))
+
+  private def l1(scores: DataFrame): DataFrame =
+    Normalize.divide(Checkpoints.materialize(scores, Seq(Normalize.L1)))
 
   /** K8 iterative SALSA (rank-equivalent to K7; reference
     * `src/base_salsa_2.py:1-2`). */
@@ -63,26 +68,17 @@ object Salsa {
     * teleport each update. */
   def runTopicSpecific(g: Graph, topic: String, beta: Double = 0.8,
       numIter: Int = 8): Result =
-    fixed(g, numIter)(Hits.topicTeleport(g, topic, beta, 2))
+    fixed(g, numIter)(Hits.topicTeleport(topic, beta, 2))
 
   /** K12 query-dependent SALSA: simplified SALSA on the neighborhood
     * subgraph (reference `src/query_dependent_salsa.py:36-55`). The
     * subgraph's semi/anti-join edge derivation is persisted so the two
     * degree aggregations (out + in) execute it once, not twice; both
-    * score vectors are materialized before the cache drops. */
+    * score vectors are checkpointed before the cache drops. */
   def runQueryDependent(g: Graph, topic: String): Result = {
     val e = Subgraph.queryDependent(g, topic).edges.persist()
-    try {
-      val r = runSimplified(e)
-      val out =
-        Result(Checkpoints.materialize(r.hubs), Checkpoints.materialize(r.auths))
-      // The re-materialized copies supersede any checkpoint under the
-      // simplified vectors; release those now rather than leaving
-      // |V|-sized blocks to the GC-timed ContextCleaner path.
-      Checkpoints.releaseAll(r.hubs)
-      Checkpoints.releaseAll(r.auths)
-      out
-    } finally e.unpersist(false)
+    try runSimplified(e)
+    finally e.unpersist(false)
   }
 
   /** Fixed-point extension mirroring [[Hits.runConverged]] (the
@@ -96,9 +92,9 @@ object Salsa {
   def runConverged(g: Graph, tol: Double = 1e-9,
       maxIter: Int = 50, checkEvery: Int = 3, firstCheck: Int = 3)
       : Fixpoint[Result] =
-    Fixpoint.run(g.edges, Cols,
+    Fixpoint.run(g, Cols,
       Schedule(maxIter, Some(tol), checkEvery, firstCheck))(
-      program(g.nodes, _ => Hits.Identity))
+      program(_ => Hits.Identity))
 
   /** K8 over a [[graft.GraphIO.writeBucketedGraph]] layout — the SALSA
     * twin of [[Hits.runBucketed]]: the degree aggregations, the
@@ -107,7 +103,7 @@ object Salsa {
   def runBucketed(spark: SparkSession, prefix: String,
       numIter: Int = 8): Result =
     Fixpoint.runBucketed(spark, prefix, Cols, Schedule(numIter))(
-      program(spark.table(s"${prefix}_nodes"), _ => Hits.Identity)).result
+      program(_ => Hits.Identity)).result
 
   // -----------------------------------------------------------------
 
@@ -115,17 +111,16 @@ object Salsa {
 
   /** `post` reuses the HITS transforms; for SALSA the teleport `n` slot
     * carries 2N / 2·N_topic (the reference's denominators). */
-  private def fixed(g: Graph, numIter: Int)(post: Int => Hits.Post): Result =
-    Fixpoint.run(g.edges, Cols, Schedule(numIter))(program(g.nodes, post))
-      .result
+  private def fixed(g: Graph, numIter: Int)(post: Edges => Hits.Post)
+      : Result =
+    Fixpoint.run(g, Cols, Schedule(numIter))(program(post)).result
 
   /** The mutual update over degree-annotated edge caches. Each degree
     * aggregation groups by its copy's clustering key and each
     * degree-attach join matches it, so neither adds an edge Exchange;
     * SHUFFLE_HASH hints on the (small) degree sides keep the joins
     * hash-based without touching session-wide planner flags. */
-  private def program(nodes: DataFrame, post: Int => Hits.Post)(
-      e: Edges): Program[Result] = {
+  private def program(post: Edges => Hits.Post)(e: Edges): Program[Result] = {
     // A derived edge set's upstream derivation runs exactly ONCE, into
     // the cached by-dst copy the by-src copy derives from.
     val eBase = e.byDst.persist()
@@ -135,12 +130,12 @@ object Salsa {
     val dOut = Degrees.out(e.bySrc).hint("SHUFFLE_HASH")
     val eOut = e.bySrc.join(dOut, col("src") === dOut("id"))
       .select(col("src"), col("dst"), col("out_degree")).persist()
-    val p = post(e.width)
+    val p = post(e)
     val init = p match {
       case Hits.TopicTeleport(_, twoNTopic, flags) => flags.select(col("id"),
         when(col("flag") === 0, lit(0.0)).otherwise(lit(1.0 / twoNTopic))
           .as("score"))
-      case _ => Hits.uniform(nodes, nodes.count())
+      case _ => Hits.uniform(e.nodes, e.nodes.count())
     }
     Hits.mutual(init, eIn, col("score") / col("in_degree"),
       eOut, col("score") / col("out_degree"), p, Normalize.L1, Result,

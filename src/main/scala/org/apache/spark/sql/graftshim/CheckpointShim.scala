@@ -15,6 +15,7 @@ import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning,
 import org.apache.spark.sql.classic.{Dataset, ExpressionUtils}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
 /** Partitioning-preserving `localCheckpoint` (optimization guide §2.4 —
@@ -39,15 +40,20 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   * partitioning from the ADAPTIVE FINAL plan and carries it into the
   * [[LogicalRDD]] explicitly (remapped onto the analyzed output
   * attributes; anything that isn't a plain hash partitioning falls back
-  * to `UnknownPartitioning`, i.e. exactly the old behavior). It also
-  * disables AQE partition coalescing FOR THE CHECKPOINTED QUERY ONLY
-  * (restored in `finally`): the final shuffle before a checkpoint has
-  * no downstream requirement inside its own plan — the consumer is the
-  * NEXT query, which the optimizer cannot see — so AQE would otherwise
-  * coalesce it (observed: `AQEShuffleRead coalesced` on the kernel agg
-  * exchanges at sf0.1) and the materialized layout would genuinely no
-  * longer be hash-routable. Both halves only claim what is physically
-  * true: the declared partitioning is the executed final plan's.
+  * to `UnknownPartitioning`, i.e. exactly the old behavior). The
+  * checkpointed query also runs with AQE partition coalescing OFF: the
+  * final shuffle before a checkpoint has no downstream requirement
+  * inside its own plan — the consumer is the NEXT query, which the
+  * optimizer cannot see — so AQE would otherwise coalesce it
+  * (observed: `AQEShuffleRead coalesced` on the kernel agg exchanges at
+  * sf0.1) and the materialized layout would genuinely no longer be
+  * hash-routable. No conf is set for that: a frame whose session
+  * already has coalescing off (every kernel loop's,
+  * [[graft.Fixpoint]]) is checkpointed there; any other is planned on
+  * a scoped sibling of its session ([[graft.Sessions.scoped]]), and the
+  * checkpoint comes back on the frame's own session. Both halves only
+  * claim what is physically true: the declared partitioning is the
+  * executed final plan's.
   *
   * The job that materializes a checkpoint also returns its TALLY: the
   * values of aggregate columns over the checkpointed rows, folded while
@@ -61,45 +67,40 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   */
 object CheckpointShim {
 
-  private val CoalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"
-
   /** `df.localCheckpoint()` with the executed plan's hash partitioning
     * preserved on the checkpointed frame, and the values of the
     * aggregate columns `tally` over its rows: one materializing job
     * ([[materialize]]) makes both. */
   def localCheckpoint(df: DataFrame, tally: Seq[Column]): (DataFrame, Row) = {
-    val ds = df.asInstanceOf[Dataset[Row]]
-    val spark = ds.sparkSession
-    val prev = spark.conf.get(CoalesceKey, "true")
-    val (rdd, part, values) =
-      try {
-        spark.conf.set(CoalesceKey, "false")
-        val physical = ds.queryExecution.executedPlan
-        // Every job below runs under the checkpointed query's one
-        // execution id, like stock Dataset.checkpoint: the adaptive
-        // stage jobs that finalPhysicalPlan drives as well as the
-        // materializing job, so all of them attribute to this query
-        // in the SQL tab, the event log and a listener's per-query
-        // totals instead of to an anonymous call site.
-        org.apache.spark.sql.execution.SQLExecution
-          .withNewExecutionId(ds.queryExecution) {
-            // finalPhysicalPlan forces the adaptive stages to execute
-            // and returns the re-optimized plan whose
-            // outputPartitioning is the one the materialized rows
-            // actually have.
-            val finalPlan = physical match {
-              case a: AdaptiveSparkPlanExec => a.finalPhysicalPlan
-              case p => p
-            }
-            // Same row copy as Dataset.checkpoint: the scan reuses row
-            // buffers, so the persisted blocks must own their bytes.
-            val rdd = finalPlan.execute().map(_.copy())
-            rdd.localCheckpoint()
-            (rdd, remap(finalPlan.outputPartitioning,
-              finalPlan.output, ds.queryExecution.analyzed.output),
-              run(rdd, ds, tally))
-          }
-      } finally spark.conf.set(CoalesceKey, prev)
+    val spark = df.asInstanceOf[Dataset[Row]].sparkSession
+    val coalesce = SQLConf.COALESCE_PARTITIONS_ENABLED.key
+    val ds = (if (spark.conf.get(coalesce).toBoolean)
+      Rebind(df, graft.Sessions.scoped(spark, coalesce -> "false"))
+    else df).asInstanceOf[Dataset[Row]]
+    val physical = ds.queryExecution.executedPlan
+    // Every job below runs under the checkpointed query's one execution
+    // id, like stock Dataset.checkpoint: the adaptive stage jobs that
+    // finalPhysicalPlan drives as well as the materializing job, so all
+    // of them attribute to this query in the SQL tab, the event log and
+    // a listener's per-query totals instead of to an anonymous call
+    // site.
+    val (rdd, part, values) = org.apache.spark.sql.execution.SQLExecution
+      .withNewExecutionId(ds.queryExecution) {
+        // finalPhysicalPlan forces the adaptive stages to execute and
+        // returns the re-optimized plan whose outputPartitioning is the
+        // one the materialized rows actually have.
+        val finalPlan = physical match {
+          case a: AdaptiveSparkPlanExec => a.finalPhysicalPlan
+          case p => p
+        }
+        // Same row copy as Dataset.checkpoint: the scan reuses row
+        // buffers, so the persisted blocks must own their bytes.
+        val rdd = finalPlan.execute().map(_.copy())
+        rdd.localCheckpoint()
+        (rdd, remap(finalPlan.outputPartitioning,
+          finalPlan.output, ds.queryExecution.analyzed.output),
+          run(rdd, ds, tally))
+      }
     // Statistics from the optimized plan, like LogicalRDD.fromDataset —
     // without them the planner sizes the checkpoint at
     // defaultSizeInBytes and never broadcasts it. Column-level stats

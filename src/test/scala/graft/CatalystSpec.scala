@@ -46,7 +46,7 @@ class CatalystSpec extends SparkSuite {
     val got = df.select(
       GraftHash.widePair(spark, col("s")).as("w"),
       GraftHash.graftHash(spark, col("s")).as("h1"),
-      GraftHash.graftHash2(spark, col("s")).as("h2"),
+      call_function("graft_hash2", col("s")).as("h2"),
       expr(s"graft_wide_hash(s) div ${GraftHash.Mod2}L").as("d"),
       (call_function("graft_wide_hash", col("s")) % GraftHash.Mod2).as("m"))
       .collect()
@@ -245,8 +245,8 @@ class CatalystSpec extends SparkSuite {
     Seq("_edges_by_dst", "_edges_by_src", "_nodes").foreach(sfx =>
       spark.sql(s"DROP TABLE IF EXISTS graft_spec_mismatch$sfx"))
     // layout written under 2 buckets; the session runs 4 shuffle
-    // partitions — the kernel must ADAPT to the layout (loop width = 2
-    // via AdaptiveWidth.withWidth, r20) rather than fail fast or
+    // partitions — the kernel must ADAPT to the layout (loop width = 2,
+    // the loop session's shuffle.partitions) rather than fail fast or
     // silently reintroduce the per-iteration edge shuffles: scores
     // stay identical to the repartition-based kernel, and the session
     // conf is untouched afterwards.

@@ -90,19 +90,6 @@ class FunctionsSpec extends SparkSuite {
     assert(a == b && a.nonEmpty && a.size < 200)
   }
 
-  test("DOT export emits valid digraph lines sized by score") {
-    import spark.implicits._
-    val scores = Seq(("a", 0.9), ("b", 0.1)).toDF("id", "score")
-    val edges = Seq(("a", "b", 1.0), ("b", "a", 1.0), ("x", "a", 1.0))
-      .toDF("src", "dst", "weight")
-    val lines = RankOutput.dotLines(edges, scores, 2).collect()
-      .map(_.getString(0))
-    assert(lines.head == "digraph G {" && lines.last == "}")
-    assert(lines.exists(_.contains("\"a\" [width=")))
-    assert(lines.contains("  \"a\" -> \"b\";"))
-    assert(!lines.contains("  \"x\" -> \"a\";")) // x not in top-k
-  }
-
   test("dotGraph emits the reference's three color-coded views") {
     import spark.implicits._
     val hubs = Seq(("h", 0.9), ("hb", 0.8), ("z", 0.001)).toDF("id", "score")

@@ -46,23 +46,14 @@ class GraphIOSpec extends SparkSuite {
     assert(pp > 0)
   }
 
-  test("graph parquet round-trip preserves nodes and edges") {
-    val g = GraphIO.orderGraph(spark, "/root/testdata/sf0.001")
-    val dir = Files.createTempDirectory("graft-graph").toFile
-    dir.deleteOnExit()
-    GraphIO.writeGraph(g, dir.getAbsolutePath)
-    val g2 = GraphIO.readGraph(spark, dir.getAbsolutePath)
-    assert(g2.nodes.count() == g.nodes.count())
-    assert(g2.edges.count() == g.edges.count())
-    assert(g2.edges.columns.toSeq == Seq("src", "dst", "weight"))
-  }
-
   test("bucketed graph layout round-trips and exposes bucket metadata") {
     val g = GraphIO.orderGraph(spark, "/root/testdata/sf0.001")
     GraphIO.writeBucketedGraph(g, "giospec", buckets = 4)
     try {
-      val g2 = GraphIO.readBucketedGraph(spark, "giospec")
+      val g2 = Graph(spark.table("giospec_nodes"),
+        spark.table("giospec_edges_by_dst"))
       assert(g2.edges.count() == g.edges.count())
+      assert(spark.table("giospec_edges_by_src").count() == g.edges.count())
       assert(g2.nodes.count() == g.nodes.count())
       val desc = spark.sql("DESCRIBE TABLE EXTENDED giospec_edges_by_dst")
         .collect().map(r => r.getString(0) + " " + r.getString(1)).mkString("\n")
@@ -199,9 +190,15 @@ class GraphIOSpec extends SparkSuite {
     assert(spark.sparkContext.master == "local[4]")
     assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
     assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
-    val rules = spark.sessionState.optimizer.extendedOperatorOptimizationRules
-    assert(rules.contains(plans.DisjunctiveSemiJoinRewrite))
-    assert(rules.contains(plans.TokenContainsPushdown))
+    // every loop and drain plans on a scoped session, so it must carry
+    // graft's optimizer rules too
+    val scoped = Sessions.scoped(spark, "spark.sql.shuffle.partitions" -> "1")
+    assert(scoped.conf.get("spark.sql.session.timeZone") == "UTC")
+    Seq(spark, scoped).foreach { s =>
+      val rules = s.sessionState.optimizer.extendedOperatorOptimizationRules
+      assert(rules.contains(plans.DisjunctiveSemiJoinRewrite))
+      assert(rules.contains(plans.TokenContainsPushdown))
+    }
     // the per-release "locally checkpointed" warning is quieted
     assert(org.apache.logging.log4j.LogManager
       .getLogger("org.apache.spark.rdd.MapPartitionsRDD").getLevel ==

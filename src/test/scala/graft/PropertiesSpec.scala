@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.{Hits, Normalize, Salsa}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -115,9 +116,10 @@ class PropertiesSpec extends SparkSuite {
     import spark.implicits._
     samples(4).foreach { edges =>
       val scores = edges.map(e => (e._1, e._3)).distinct.toDF("id", "score")
-      val a = scoresMap(Normalize.l2(scores))
-      val b = scoresMap(Normalize.l2(
-        scores.select(col("id"), (col("score") * 7.5).as("score"))))
+      def l2(v: DataFrame) = scoresMap(
+        Normalize.divide(Checkpoints.materialize(v, Seq(Normalize.L2))))
+      val a = l2(scores)
+      val b = l2(scores.select(col("id"), (col("score") * 7.5).as("score")))
       a.foreach { case (k, v) => assert(math.abs(v - b(k)) < 1e-9) }
     }
   }

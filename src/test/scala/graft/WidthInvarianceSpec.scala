@@ -8,8 +8,8 @@ import graft.operators.{ConnectedComponents, Hits, KCore, KTruss,
   * bytes-per-task target derives width 1, so every operator here runs
   * twice: with the target forced huge (width 1) and forced to one byte
   * (width = the session's `shuffle.partitions` cap), via
-  * [[AdaptiveWidth.BytesPerTaskKey]]. The loop's width flip must also
-  * leave `shuffle.partitions` as it found it after every call.
+  * [[AdaptiveWidth.BytesPerTaskKey]]. Each loop runs on a session of its
+  * own, so `shuffle.partitions` must read as it did after every call.
   */
 class WidthInvarianceSpec extends SparkSuite {
 

@@ -8,4 +8,8 @@ object ListenerBusShim {
 
   /** Blocks until every event posted so far reached every listener. */
   def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+
+  /** The listeners on the context's bus (query listener buses among
+    * them). */
+  def listeners(sc: SparkContext): Int = sc.listenerBus.listeners.size()
 }
