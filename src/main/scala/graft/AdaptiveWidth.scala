@@ -10,11 +10,11 @@ import org.apache.spark.sql.DataFrame
   *
   * The iterative kernels run every per-iteration stage at the width of
   * their co-partitioned caches, and checkpoints preserve that width
-  * ([[Checkpoints.materializeKeyed]] plans the checkpointed query with
-  * AQE coalescing off so there is a hash layout to preserve). Each loop
-  * runs on a session of its own whose `shuffle.partitions` is this
-  * width ([[Fixpoint]]; the streaming drains likewise,
-  * [[graft.streaming.Drain]]), so the caller's session keeps its conf.
+  * ([[Checkpoints.materializeKeyed]]). Each loop runs on a session of
+  * its own whose `shuffle.partitions` is this width ([[Fixpoint]]; the
+  * streaming drains likewise, [[graft.streaming.Drain]]), so the
+  * caller's session keeps its conf; the kernel loop's session also has
+  * AQE coalescing off, so there is a hash layout to preserve.
   * The width is not put into the plans as `repartition(k, key)`: under
   * a `groupBy` that moves the partial aggregate after the exchange, so
   * each HITS gather on the order graph would shuffle its ~120k edge

@@ -108,6 +108,9 @@ object Bench {
     def loadavg(): Double = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
     val loadStart = loadavg()
+    // The cores the run had, recorded next to the loadavg: a time is
+    // only comparable with one taken on as many cores.
+    val cores = spark.sparkContext.defaultParallelism
     def ms(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     var warmup = 0.0
@@ -137,7 +140,7 @@ object Bench {
         s"""{"compiles":${compiles(p)},"compile_ms":${ms(compileNs(p) / 1e6)}}"""
       val q2 = compilesQ2.map { case (k, v) => "\"" + k + "\":" + v }
         .mkString("{", ",", "}")
-      s"""{"metric":"total","value":${ms(total)},"unit":"sec","pass":"min","complete":$complete,"queries":${m(results)},"cold_total_sec":${ms(coldTotal)},"queries_p1":${m(cold)},"queries_p2":${m(pass2)},"codegen_p1":${codegen(0)},"codegen_p2":${codegen(1)},"codegen_q2":$q2,"warmup_sec":${ms(warmup)},"failed":$failedJson,"loadavg_start":${ms(loadStart)},"loadavg_end":${ms(loadavg())},"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${ms(total)},"unit":"sec","pass":"min","complete":$complete,"queries":${m(results)},"cold_total_sec":${ms(coldTotal)},"queries_p1":${m(cold)},"queries_p2":${m(pass2)},"codegen_p1":${codegen(0)},"codegen_p2":${codegen(1)},"codegen_q2":$q2,"warmup_sec":${ms(warmup)},"failed":$failedJson,"loadavg_start":${ms(loadStart)},"loadavg_end":${ms(loadavg())},"cores":$cores,"sf":"$sfDir"}"""
     }
     // The artifact is (re)written after every family, flagged
     // complete:false until the final write: with two timed passes per
@@ -156,7 +159,8 @@ object Bench {
       val w0 = System.nanoTime()
       warm(fam, spark, sfDir)
       warmup += (System.nanoTime() - w0) / 1e9
-      gs.foreach { case SparkEntry.Gate(name, _, fn, _, _) =>
+      gs.foreach { g =>
+        val name = g.name
         // Two passes, the FASTER one recorded (BenchOne's pattern,
         // adopted for the suite after the r16 artifact shipped
         // cold-pass numbers 1.5-2.9x above the r14 bands on unchanged
@@ -173,34 +177,15 @@ object Bench {
         // cross-round statistic. Both raw passes are kept in the
         // artifact (`queries_p1`/`queries_p2`) so nothing is hidden.
         def once(pass: Int): (Double, Boolean) = {
-          // Label the query's jobs (guide §1.5): purely cosmetic for
-          // the event log / UI, no effect on execution or timing.
-          spark.sparkContext.setJobDescription(name)
           val (c0, n0) = codegenCounters()
           val t0 = System.nanoTime()
-          // noop sink, not count(): under count Catalyst prunes
-          // computed columns on projection-shaped queries (a
-          // text_normalize count never runs the NFC expression),
-          // which under-measures them. The noop write evaluates
-          // every output column of every row.
-          var df: org.apache.spark.sql.DataFrame = null
-          var ok = true
-          try {
-            df = fn(spark, sfDir)
-            df.write.format("noop").mode("overwrite").save()
+          val ok = try {
+            g.run(spark, sfDir, Some(name))(SparkEntry.Gate.noop)
+            true
           } catch { case e: Throwable =>
-            ok = false
             if (!failed.contains(name)) failed ::= name
             System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          } finally {
-            // The sink consumed (or abandoned) the result; its final
-            // per-query score checkpoints (1-2 |V| vectors each) are
-            // dead — release them even on failure instead of letting
-            // ~60 queries' worth wait on GC-timed ContextCleaner
-            // sweeps (and so pass 1's dead blocks can't distort
-            // pass 2's timing).
-            if (df != null) Checkpoints.releaseAll(df)
-            spark.sparkContext.setJobDescription(null)
+            false
           }
           val wall = (System.nanoTime() - t0) / 1e9
           val (c1, n1) = codegenCounters()
@@ -230,7 +215,7 @@ object Bench {
     val total = if (results.nonEmpty) results.values.sum else 0.0
     val coldTotal = if (cold.nonEmpty) cold.values.sum else 0.0
     val failedJson = failed.sorted.map(n => s"\"$n\"").mkString("[", ",", "]")
-    val load = s""""loadavg_start":${ms(loadStart)},"loadavg_end":${ms(loadavg())}"""
+    val load = s""""loadavg_start":${ms(loadStart)},"loadavg_end":${ms(loadavg())},"cores":$cores"""
     // The FULL per-query map goes to disk; stdout gets a SHORT line.
     // Downstream stdout capture keeps only a bounded tail, and three
     // rounds of driver artifacts shipped "parsed": null because the

@@ -10,22 +10,10 @@ object BenchOne {
     val spark = Sessions.local(Sessions.defaultCpus, "graft-benchone")
     spark.sparkContext.setLogLevel("WARN")
     args.foreach { name =>
-      // Same action and lifecycle as Bench: a noop write evaluates
-      // every output column (count() would let Catalyst prune computed
-      // columns), and the run's checkpoints are released afterwards so
-      // the first pass's dead blocks can't distort the second's timing.
-      def once(pass: String): Unit = {
-        // Label every job of this query (guide §1.5) so event-log /
-        // UI stages attribute to a (query, pass) instead of an
-        // anonymous CompletableFuture call site.
-        spark.sparkContext.setJobDescription(s"$name:$pass")
-        val df = SparkEntry.queries(name)(spark, sfDir)
-        try df.write.format("noop").mode("overwrite").save()
-        finally {
-          Checkpoints.releaseAll(df)
-          spark.sparkContext.setJobDescription(null)
-        }
-      }
+      // Same sink and lifecycle as Bench; every job is labeled with
+      // its (query, pass).
+      def once(pass: String): Unit = SparkEntry.byName(name)
+        .run(spark, sfDir, Some(s"$name:$pass"))(SparkEntry.Gate.noop)
       val t0 = System.nanoTime()
       once("first")
       println(f"[benchone] $name first ${(System.nanoTime()-t0)/1e9}%.2f s")

@@ -5,8 +5,9 @@ import graft.operators.Normalize
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim.Rebind
+import org.apache.spark.sql.graftshim.{CheckpointShim, Rebind}
 import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.DoubleType
 
 /** Outcome of a fixed-point kernel run ([[operators.Hits.runConverged]],
   * [[operators.Salsa.runConverged]],
@@ -40,6 +41,12 @@ case class Fixpoint[A](result: A, iterations: Int, converged: Boolean)
   *    run, or read from the bucketed tables with no shuffle at all —
   *    dropped, with every cache and checkpoint the program made, when
   *    the loop ends.
+  *  - Nodes and `N`: the node frame is checkpointed once per run,
+  *    hash-partitioned on `id` at the loop width, and that job tallies
+  *    `N` ([[Edges]]). Inits, teleport columns and topic flags are
+  *    projections of it; per-graph constants (`1/√N`, `(1-β)/N`) enter
+  *    the plans as run-time values ([[constant]]): no driver count, no
+  *    class compiled per graph.
   *  - The loop session: the loop plans on a session of its own
   *    ([[Sessions.scoped]], one per run) whose `shuffle.partitions` is
   *    the loop width, so every aggregation exchange plans at that width
@@ -84,12 +91,15 @@ object Fixpoint {
   }
 
   /** The kernel's edge projection, hash-clustered on `dst` / `src` at the
-    * loop `width`, and the graph's nodes, all on the loop session. Plans,
-    * not caches: a program persists the copies it re-reads every
-    * iteration, `byDst` first — `bySrc` derives from it, so a cached
-    * `byDst` runs an upstream subgraph derivation once. */
+    * loop width, and the graph's nodes, all on the loop session. The edge
+    * copies are plans, not caches: a program persists the copies it
+    * re-reads every iteration, `byDst` first — `bySrc` derives from it,
+    * so a cached `byDst` runs an upstream subgraph derivation once.
+    * `nodes` is the loop's node checkpoint, hash-partitioned on `id`;
+    * its job tallied `n` nodes, `counts(i)` of them satisfying the run's
+    * `counted(i)` ([[run]]). */
   private[graft] final case class Edges(byDst: DataFrame, bySrc: DataFrame,
-      nodes: DataFrame, width: Int)
+      nodes: DataFrame, n: Long, counts: Seq[Long])
 
   /** One kernel's iteration. `side` (HITS/SALSA hubs) maps the carried
     * vector to the side vector and `step` maps that (or, without a
@@ -126,12 +136,14 @@ object Fixpoint {
       .agg(sum(contrib).as("score"))
   }
 
-  /** Runs `program` over `g`, its edges projected to `cols`. */
-  private[graft] def run[A](g: Graph, cols: Seq[Column],
-      schedule: Schedule)(program: Edges => Program[A]): Fixpoint[A] = {
+  /** Runs `program` over `g`, its edges projected to `cols`; `counted`
+    * are node predicates whose counts the node checkpoint tallies
+    * ([[Edges]]`.counts`). */
+  private[graft] def run[A](g: Graph, cols: Seq[Column], schedule: Schedule,
+      counted: Seq[Column] = Nil)(program: Edges => Program[A]): Fixpoint[A] = {
     val np = width(g.edges)
     val byDst = g.edges.select(cols: _*).repartition(np, col("dst"))
-    drive(Edges(byDst, byDst.repartition(np, col("src")), g.nodes, np),
+    drive(byDst, byDst.repartition(np, col("src")), g.nodes, np, counted,
       schedule, program)
   }
 
@@ -154,31 +166,41 @@ object Fixpoint {
         "zero-edge-Exchange plan")
     def table(key: String): DataFrame =
       spark.table(s"${prefix}_edges_by_$key").select(cols: _*)
-    drive(Edges(table("dst"), table("src"), spark.table(s"${prefix}_nodes"),
-      buckets.get), schedule, program)
+    drive(table("dst"), table("src"), spark.table(s"${prefix}_nodes"),
+      buckets.get, Nil, schedule, program)
   }
 
-  /** Runs `program` on the loop session: `caller` (the edges' session)
-    * at the loop width, with AQE coalescing off. */
-  private def drive[A](e: Edges, schedule: Schedule,
+  /** Runs `program` on the loop session: the edges' session at the loop
+    * `width`, with AQE coalescing off. The node checkpoint is made there
+    * first, and dropped with the edge copies when the loop ends. */
+  private def drive[A](byDst: DataFrame, bySrc: DataFrame, nodes: DataFrame,
+      width: Int, counted: Seq[Column], schedule: Schedule,
       program: Edges => Program[A]): Fixpoint[A] = {
-    val caller = e.bySrc.sparkSession
-    val s = session(caller, e.width,
+    val caller = bySrc.sparkSession
+    val s = session(caller, width,
       SQLConf.COALESCE_PARTITIONS_ENABLED.key -> "false")
-    val on = Edges(Rebind(e.byDst, s), Rebind(e.bySrc, s),
-      Rebind(e.nodes, s), e.width)
+    val ids = Checkpoints.materializeKeyed(
+      Rebind(nodes, s).repartition(width, col("id")),
+      count(lit(1)) +: counted.map(p => count(when(p, true))))
+    val counts = Seq.tabulate(ids.tally.length)(ids.tally.getLong)
+    val e = Edges(Rebind(byDst, s), Rebind(bySrc, s), ids.df, counts.head,
+      counts.tail)
     try {
-      val p = program(on)
+      val p = program(e)
       try iterate(p, schedule, Rebind(_, caller))
       finally p.owned.foreach(drop)
     } finally {
       // The loop runs eager actions, so exceptions mid-loop are real;
-      // results live on their own checkpoints, so the caches can go
-      // (non-blocking) without recompute risk.
-      on.byDst.unpersist(false)
-      on.bySrc.unpersist(false)
+      // results live on their own checkpoints, so the caches and the
+      // node checkpoint can go (non-blocking) without recompute risk.
+      Seq(e.byDst, e.bySrc, e.nodes).foreach(drop)
     }
   }
+
+  /** A per-graph constant of a kernel plan as a run-time value, as the
+    * norms are: a `lit` would compile each graph's value into a class. */
+  private[graft] def constant(v: Double): Column =
+    CheckpointShim.scalar(v, DoubleType)
 
   /** A loop's session: `caller`'s conf at the loop `width`, and `conf`. */
   private def session(caller: SparkSession, width: Int,

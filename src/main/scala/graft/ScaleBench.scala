@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * event graph's hot authorities stress AQE skew handling.
   *
   * Every timed query is a registered gate, resolved through
-  * [[SparkEntry.queries]], so a row measures exactly what the oracle
+  * [[SparkEntry.byName]], so a row measures exactly what the oracle
   * certifies.
   *
   * {{{
@@ -69,7 +69,7 @@ object ScaleBench {
     "multimodal_image_roundtrip", "multimodal_audio_roundtrip",
     "multimodal_resize_real")
 
-  private lazy val queries = SparkEntry.queries
+  private lazy val gates = SparkEntry.byName
 
   private def replicate(spark: SparkSession, baseDir: String,
       outDir: String, reps: Int): Unit = {
@@ -110,22 +110,17 @@ object ScaleBench {
       .write.mode("overwrite").parquet(s"$outDir/embeddings.parquet")
   }
 
-  /** Time ONE evaluation of `df` through the noop sink (evaluates every
-    * output column of every row — `count()` would let Catalyst prune
-    * unreferenced Window/projection work), releasing the result's
-    * checkpoints before returning so accumulated dead blocks can't
-    * distort the next measurement. The per-pass shape of `Bench`. */
-  private def timeNoop(df: => DataFrame): Double = {
-    val t0 = System.nanoTime()
-    val d = df
-    try d.write.format("noop").mode("overwrite").save()
-    finally Checkpoints.releaseAll(d)
-    (System.nanoTime() - t0) / 1e9
+  /** Two back-to-back runs of `name` over `dir` through the noop sink,
+    * the per-pass shape of `Bench` — (first, warm) seconds. */
+  private def timedTwice(spark: SparkSession, name: String, dir: String)
+      : (Double, Double) = {
+    def timeNoop(): Double = {
+      val t0 = System.nanoTime()
+      gates(name).run(spark, dir, None)(SparkEntry.Gate.noop)
+      (System.nanoTime() - t0) / 1e9
+    }
+    (timeNoop(), timeNoop())
   }
-
-  /** Two back-to-back [[timeNoop]] passes — (first, warm). */
-  private def timedTwice(df: => DataFrame): (Double, Double) =
-    (timeNoop(df), timeNoop(df))
 
   /** Warm the shared graph caches AND the kernel codegen/JIT paths
     * (same rationale as Bench: one-time JVM cost, not operator cost). */
@@ -151,7 +146,7 @@ object ScaleBench {
     val rows = names.zipWithIndex.flatMap { case (name, i) =>
       val dirs = if (i % 2 == 0) Seq(baseDir, bigDir) else Seq(bigDir, baseDir)
       dirs.map { dir =>
-        val (first, warmPass) = timedTwice(queries(name)(spark, dir))
+        val (first, warmPass) = timedTwice(spark, name, dir)
         println(f"[scale] $dir $name $first%.2f s first, $warmPass%.2f s warm")
         (dir, name, (first, warmPass))
       }
@@ -168,14 +163,14 @@ object ScaleBench {
     val outDir = if (args.length > 1) args(1) else "target/sf1-derived"
     val reps = if (args.length > 2) args(2).toInt else 10
     val mode = if (args.length > 3) args(3) else "all"
-    require(sweep.forall(queries.contains),
+    require(sweep.forall(gates.contains),
       "ScaleBench sweeps unregistered gates: " +
-        sweep.filterNot(queries.contains).mkString(", "))
+        sweep.filterNot(gates.contains).mkString(", "))
     val one = if (mode.startsWith("one:")) Some(mode.stripPrefix("one:"))
       else None
-    one.foreach(name => require(queries.contains(name),
+    one.foreach(name => require(gates.contains(name),
       s"unknown gate '$name' for one: mode; valid names: " +
-        queries.keys.toSeq.sorted.mkString(", ")))
+        gates.keys.toSeq.sorted.mkString(", ")))
     val order =
       if (mode.startsWith("seed:"))
         new scala.util.Random(mode.stripPrefix("seed:").toLong).shuffle(sweep)

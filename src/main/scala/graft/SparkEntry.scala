@@ -140,7 +140,32 @@ object SparkEntry {
     * pinned `oracle` is the sf0.01 one. */
   final case class Gate(name: String, family: Option[String],
       query: (SparkSession, String) => DataFrame, oracle: () => String,
-      rederive: Option[(Int, Boolean) => String])
+      rederive: Option[(Int, Boolean) => String]) {
+
+    /** Runs this gate once over `sfDir`: labels its jobs `label` (event
+      * log and UI only), builds its frame, writes it with `sink`, and
+      * releases the frame's checkpoints even if the write failed, so a
+      * long run's dead score vectors never wait on GC-timed cleanup. */
+    def run(spark: SparkSession, sfDir: String, label: Option[String])(
+        sink: DataFrame => Unit): Unit = {
+      spark.sparkContext.setJobDescription(label.orNull)
+      var df: DataFrame = null
+      try {
+        df = query(spark, sfDir)
+        sink(df)
+      } finally {
+        if (df != null) Checkpoints.releaseAll(df)
+        spark.sparkContext.setJobDescription(null)
+      }
+    }
+  }
+
+  object Gate {
+    /** The timing sink: evaluates every output column of every row
+      * (under `count()` Catalyst prunes computed columns). */
+    def noop(df: DataFrame): Unit =
+      df.write.format("noop").mode("overwrite").save()
+  }
 
   private def gate(name: String, family: Option[String], oracle: => String,
       rederive: Option[(Int, Boolean) => String] = None)(
@@ -1631,6 +1656,9 @@ object SparkEntry {
   require(gates.map(_.name).distinct.size == gates.size,
     "duplicate gate names: " + gates.groupBy(_.name).collect {
       case (n, gs) if gs.size > 1 => n }.mkString(", "))
+
+  /** Each gate, by name. */
+  def byName: Map[String, Gate] = gates.map(g => g.name -> g).toMap
 
   /** Each gate's Spark query, by gate name. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =

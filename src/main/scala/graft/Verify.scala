@@ -20,17 +20,10 @@ object Verify {
     val gates = SparkEntry.gates.filter(g => only.isEmpty || only(g.name))
     Bench.familyRuns(gates).foreach { case (fam, gs) =>
       gs.foreach { g =>
-        var df: org.apache.spark.sql.DataFrame = null
-        try {
-          df = g.query(spark, sfDir)
-          df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/${g.name}")
-        } catch { case e: Throwable =>
+        try g.run(spark, sfDir, None)(
+          _.coalesce(1).write.mode("overwrite").parquet(s"$outDir/${g.name}"))
+        catch { case e: Throwable =>
           System.err.println(s"[verify] ${g.name} failed: ${e.getMessage}")
-        } finally {
-          // Release the query's score checkpoints whether or not the dump
-          // succeeded — a failed write must not leak its materialized
-          // blocks into the remaining 60+ queries' heap budget.
-          if (df != null) Checkpoints.releaseAll(df)
         }
       }
       fam.foreach(k => GraphIO.evict(spark, sfDir, Seq(k)))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Checkpoints, Fixpoint, Graph}
+import graft.{Fixpoint, Graph}
 import graft.Fixpoint.{Edges, Program, Schedule}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -53,16 +53,15 @@ object Hits {
     fixed(g, numIter, weighted = true)(_ => Identity)
 
   /** K3 random-teleport HITS (reference `src/random_teleport_hits.py`). */
-  def runTeleport(g: Graph, beta: Double = 0.8, numIter: Int = 8): Result = {
-    val n = g.nodes.count()
-    fixed(g, numIter)(_ => Teleport(beta, n))
-  }
+  def runTeleport(g: Graph, beta: Double = 0.8, numIter: Int = 8): Result =
+    fixed(g, numIter)(e => Teleport(beta, e.n))
 
   /** K4 topic-specific HITS: uniform init over all nodes, teleport mass
     * only to topic nodes (reference `src/topic_specific_hits.py:54-87`). */
   def runTopicSpecific(g: Graph, topic: String, beta: Double = 0.8,
       numIter: Int = 8): Result =
-    fixed(g, numIter)(topicTeleport(topic, beta, 1))
+    fixed(g, numIter, counted = Seq(labeled(topic)))(
+      topicTeleport(topic, beta, 1))
 
   /** Fixed-point extension (not in the reference, which always runs a
     * fixed 8 iterations): stop when the max absolute change of the
@@ -75,8 +74,7 @@ object Hits {
       : Fixpoint[Result] =
     Fixpoint.run(g, Cols,
       Schedule(maxIter, Some(tol), checkEvery, firstCheck))(
-      program(n => (uniform(n, n.count()), Nil), weighted = false,
-        _ => Identity))
+      program(weighted = false, _ => Identity))
 
   /** K5 topic-exclusive HITS: base kernel on the induced topic subgraph
     * (intent semantics by default — SURVEY.md §2 note E;
@@ -97,57 +95,46 @@ object Hits {
   def runBucketed(spark: SparkSession, prefix: String,
       numIter: Int = 8): Result =
     Fixpoint.runBucketed(spark, prefix, Cols, Schedule(numIter))(
-      program(idsUniform, weighted = false, _ => Identity)).result
+      program(weighted = false, _ => Identity)).result
 
   // -----------------------------------------------------------------
 
   private val Cols =
     Seq(col("src"), col("dst"), col("weight").cast("double").as("w"))
 
-  private def fixed(g: Graph, numIter: Int, weighted: Boolean = false)(
-      post: Edges => Post): Result =
-    Fixpoint.run(g, Cols, Schedule(numIter))(
-      program(idsUniform, weighted, post)).result
+  private def fixed(g: Graph, numIter: Int, weighted: Boolean = false,
+      counted: Seq[Column] = Nil)(post: Edges => Post): Result =
+    Fixpoint.run(g, Cols, Schedule(numIter), counted)(
+      program(weighted, post)).result
 
-  /** `init`: the initial authority vector over the nodes, and what it
-    * materialized. */
-  private def program(init: DataFrame => (DataFrame, Seq[DataFrame]),
-      weighted: Boolean, post: Edges => Post)(e: Edges): Program[Result] = {
+  private def program(weighted: Boolean, post: Edges => Post)(e: Edges)
+      : Program[Result] = {
     val contribution = if (weighted) col("w") * col("score") else col("score")
-    val (auths, owned) = init(e.nodes)
     // Both copies are re-probed every iteration: cache them (the parquet
     // scan of a bucketed layout then also stays out of the loop).
-    mutual(auths, e.byDst.persist(), contribution, e.bySrc.persist(),
-      contribution, post(e), Normalize.L2, Result, owned)
+    mutual(uniform(e), e.byDst.persist(), contribution, e.bySrc.persist(),
+      contribution, post(e), Normalize.L2, Result, Nil)
   }
 
-  /** Uniform `1/√N` init over `nodes`, `n` of them. */
-  private[operators] def uniform(nodes: DataFrame, n: Long): DataFrame =
-    nodes.select(col("id"), lit(1.0 / math.sqrt(n)).as("score"))
+  /** Uniform `1/√N` init over the loop's node checkpoint, hash-partitioned
+    * on `id`, so iteration 1 shuffles no init (and a K5/K6 subgraph's
+    * node plan runs once). */
+  private[operators] def uniform(e: Edges): DataFrame =
+    e.nodes.select(col("id"),
+      Fixpoint.constant(1.0 / math.sqrt(e.n.toDouble)).as("score"))
 
-  /** [[uniform]] over the node ids, materialized once: for the subgraph
-    * kernels (K5/K6) `nodes` is a semi/anti-join plan over the edges that
-    * would otherwise run for the count AND again when iteration 1
-    * consumes the init. A checkpoint, not a cache: against a cached init
-    * iteration 1 also re-shuffles its edge side (measured at sf0.01).
-    * The checkpoint's own job counts the ids. */
-  private def idsUniform(nodes: DataFrame): (DataFrame, Seq[DataFrame]) = {
-    val ids = Checkpoints.materialize(nodes.select(col("id")),
-      Seq(count(lit(1))))
-    (uniform(ids.df, ids.tally.getLong(0)), Seq(ids.df))
-  }
+  /** The nodes labeled `topic`, which the topic kernels' runs count. */
+  private[operators] def labeled(topic: String): Column =
+    col("label") === topic
 
-  /** Topic teleport with the flags pre-hashed on id at the loop width
-    * and cached for the run, so the per-iteration flag join is
-    * shuffle-free on both sides. `scale` multiplies N_topic (SALSA's
-    * reference denominator is 2·N_topic). */
+  /** Topic teleport with the flags projected from the loop's node
+    * checkpoint (hash-partitioned on id), so the per-iteration flag join
+    * is shuffle-free on both sides. N_topic is the run's count of
+    * [[labeled]], times `scale` (SALSA's denominator is 2·N_topic). */
   private[operators] def topicTeleport(topic: String, beta: Double,
-      scale: Long)(e: Edges): TopicTeleport = {
-    val flags = e.nodes.select(col("id"),
-        when(col("label") === topic, 1).otherwise(0).as("flag"))
-      .repartition(e.width, col("id")).persist()
-    TopicTeleport(beta, scale * flags.filter(col("flag") === 1).count(), flags)
-  }
+      scale: Long)(e: Edges): TopicTeleport =
+    TopicTeleport(beta, scale * e.counts.head, e.nodes.select(col("id"),
+      when(labeled(topic), 1).otherwise(0).as("flag")))
 
   /** The HITS/SALSA mutual update as a loop program. Gauss-Seidel
     * ordering (reference `src/base_hits.py:57-60`): hubs from the
@@ -158,36 +145,33 @@ object Hits {
   private[operators] def mutual[A](init: DataFrame, byDst: DataFrame,
       toHub: Column, bySrc: DataFrame, toAuth: Column, post: Post,
       norm: Column, result: (DataFrame, DataFrame) => A,
-      owned: Seq[DataFrame]): Program[A] = {
-    val flags = post match {
-      case TopicTeleport(_, _, f) => Seq(f)
-      case _ => Nil
-    }
+      owned: Seq[DataFrame]): Program[A] =
     Program(init,
       Some(v => applyPost(Fixpoint.gather(byDst, "dst", toHub)(v), post)),
       v => applyPost(Fixpoint.gather(bySrc, "src", toAuth)(v), post),
-      Some(norm), result, owned ++ flags)
-  }
+      Some(norm), result, owned)
 
   private def applyPost(scores: DataFrame, post: Post): DataFrame = post match {
     case Identity => scores
     case Teleport(beta, n) =>
       scores.select(col("id"),
-        (lit(beta) * col("score") + lit((1.0 - beta) / n)).as("score"))
+        (lit(beta) * col("score") + Fixpoint.constant((1.0 - beta) / n))
+          .as("score"))
     case TopicTeleport(beta, nTopic, flags) =>
       // Inner join against the full flag table: agg keys are edge
       // endpoints, all present in the node set — same as the reference's
       // `.join(nodes_label)` (`src/topic_specific_hits.py:76`).
       // SHUFFLE_HASH, not the planner's broadcast pick (guide §3.1):
       // `scores` is a fresh aggregation output hash-partitioned on id
-      // and `flags` is pre-hashed on id ([[topicTeleport]]) — the join is
+      // and `flags` is hashed on id ([[topicTeleport]]) — the join is
       // co-partitioned and exchange-free, while the broadcast plan
       // rebuilt and shipped a |V|-row broadcast TWICE PER ITERATION
       // (16 driver collects per topic kernel in the r19 event logs).
       scores.join(flags.hint("SHUFFLE_HASH"), Seq("id"))
         .select(col("id"),
           when(col("flag") === 0, lit(beta) * col("score"))
-            .otherwise(lit(beta) * col("score") + lit((1.0 - beta) / nTopic))
+            .otherwise(lit(beta) * col("score") +
+              Fixpoint.constant((1.0 - beta) / nTopic))
             .as("score"))
   }
 }

@@ -85,15 +85,10 @@ object KCore {
     * threshold and the join falls back to the shuffled plan, which is
     * exactly the pre-r20 cost. */
   private def maybeBroadcast(drop: DataFrame, nDrop: Long): DataFrame = {
-    val raw = drop.sparkSession.conf
-      .get("spark.sql.autoBroadcastJoinThreshold", "10MB").trim
-    // "-1" (or anything unparseable) disables auto-broadcast — honor it.
-    val thresholdBytes =
-      if (raw.startsWith("-")) -1L
-      else scala.util.Try(org.apache.spark.network.util.JavaUtils
-        .byteStringAsBytes(raw)).getOrElse(-1L)
-    if (thresholdBytes > 0 && nDrop * 32 <= thresholdBytes) broadcast(drop)
-    else drop
+    // -1 disables auto-broadcast: honor it.
+    val threshold =
+      drop.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    if (threshold > 0 && nDrop * 32 <= threshold) broadcast(drop) else drop
   }
 
   /** What a peel tracks per node. `drops` picks the nodes to drop; `cols`

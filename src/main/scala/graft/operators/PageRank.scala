@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.{Fixpoint, Graph}
 import graft.Fixpoint.{Program, Schedule}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** PageRank — a kernel-family extension (the reference covers HITS and
@@ -37,18 +37,13 @@ object PageRank {
     * with `s` uniform over the nodes labeled `topic` and zero
     * elsewhere; `p₀ = s`. Same simplified no-dangling-redistribution
     * formulation, same execution shape as [[run]]: the teleport vector
-    * rides the pre-hashed node table. Kept distinct from the uniform
+    * rides the loop's node checkpoint. Kept distinct from the uniform
     * teleport rather than expressing it through this path:
     * `(1-d)·(1/n)` and `(1-d)/n` round differently in IEEE doubles,
     * and the uniform gate's oracle replays the latter. */
   def runPersonalized(g: Graph, topic: String, damping: Double = 0.85,
-      numIter: Int = 8): DataFrame = {
-    val nSeeds = g.nodes.filter(col("label") === topic).count()
-    require(nSeeds > 0, s"no nodes labeled '$topic' to seed teleport")
-    iterate(g, damping, Schedule(numIter), Some(
-      when(col("label") === topic, lit(1.0 / nSeeds)).otherwise(lit(0.0))))
-      .result
-  }
+      numIter: Int = 8): DataFrame =
+    iterate(g, damping, Schedule(numIter), Some(topic)).result
 
   /** Fixed-point extension completing the convergence family
     * ([[Hits.runConverged]], [[Salsa.runConverged]]): iterate the
@@ -68,33 +63,37 @@ object PageRank {
     iterate(g, damping, Schedule(maxIter, Some(tol), checkEvery, firstCheck),
       None)
 
-  /** `seeds`: the personalized teleport vector s(v) over the node
-    * table, or None for the uniform `(1-d)/N`. */
+  /** `topic`: teleport to the nodes labeled `topic`, or None for the
+    * uniform `(1-d)/N`. The node universe (+ teleport column) is the
+    * loop's node checkpoint, hash-partitioned on id, so the left join
+    * that gives rankless nodes their floor is shuffle-free on both
+    * sides; N and nSeeds are its tallies. */
   private def iterate(g: Graph, damping: Double, s: Schedule,
-      seeds: Option[Column]): Fixpoint[DataFrame] =
-    Fixpoint.run(g, Seq(col("src"), col("dst")), s) { e =>
+      topic: Option[String]): Fixpoint[DataFrame] =
+    Fixpoint.run(g, Seq(col("src"), col("dst")), s,
+        topic.map(Hits.labeled).toSeq) { e =>
       // Per-join SHUFFLE_HASH hints (not a session-wide planner flag) —
       // the degree/score sides are the |V|-sized build sides.
       val dOut = Degrees.out(e.bySrc).hint("SHUFFLE_HASH")
       val eOut = e.bySrc.join(dOut, col("src") === dOut("id"))
         .select(col("src"), col("dst"), col("out_degree")).persist()
-      // node universe (+ teleport column), pre-hashed once: the per-
-      // iteration left join that gives rankless nodes their teleport
-      // floor is then shuffle-free on both sides
-      val tele = e.nodes.select(col("id") +: seeds.map(_.as("t")).toSeq: _*)
-        .repartition(e.width, col("id")).persist()
-      lazy val n = e.nodes.count()
-      val (init, floor) = seeds match {
-        case None => (e.nodes.select(col("id"), lit(1.0 / n).as("score")),
-          lit((1.0 - damping) / n))
-        case Some(_) => (tele.select(col("id"), col("t").as("score")),
-          lit(1.0 - damping) * col("t"))
+      val (tele, init, floor) = topic match {
+        case None => (e.nodes.select(col("id")),
+          e.nodes.select(col("id"), Fixpoint.constant(1.0 / e.n).as("score")),
+          Fixpoint.constant((1.0 - damping) / e.n))
+        case Some(t) =>
+          val nSeeds = e.counts.head
+          require(nSeeds > 0, s"no nodes labeled '$t' to seed teleport")
+          val tele = e.nodes.select(col("id"), when(Hits.labeled(t),
+            Fixpoint.constant(1.0 / nSeeds)).otherwise(lit(0.0)).as("t"))
+          (tele, tele.select(col("id"), col("t").as("score")),
+            lit(1.0 - damping) * col("t"))
       }
       Program(init, None, v => tele
         .join(Fixpoint.gather(eOut, "src", col("score") / col("out_degree"))(v)
           .hint("SHUFFLE_HASH"), Seq("id"), "left")
         .select(col("id"), (floor +
           lit(damping) * coalesce(col("score"), lit(0.0))).as("score")),
-        None, (_, p) => p, Seq(eOut, tele))
+        None, (_, p) => p, Seq(eOut))
     }
 }

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.{Checkpoints, Fixpoint, Graph}
 import graft.Fixpoint.{Edges, Program, Schedule}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** SALSA kernel family, K7-K12 of SURVEY.md §2.6.
@@ -57,10 +57,8 @@ object Salsa {
 
   /** K10 random-teleport SALSA: `beta*s + (1-beta)/(2N)` applied to every
     * aggregated node, hubs first (reference `src/random_teleport_salsa.py:70-85`). */
-  def runTeleport(g: Graph, beta: Double = 0.8, numIter: Int = 8): Result = {
-    val n = g.nodes.count()
-    fixed(g, numIter)(_ => Hits.Teleport(beta, 2L * n))
-  }
+  def runTeleport(g: Graph, beta: Double = 0.8, numIter: Int = 8): Result =
+    fixed(g, numIter)(e => Hits.Teleport(beta, 2L * e.n))
 
   /** K11 topic-specific SALSA: init 0 for non-topic nodes and
     * 1/(2·N_topic) for topic nodes (reference
@@ -68,7 +66,8 @@ object Salsa {
     * teleport each update. */
   def runTopicSpecific(g: Graph, topic: String, beta: Double = 0.8,
       numIter: Int = 8): Result =
-    fixed(g, numIter)(Hits.topicTeleport(topic, beta, 2))
+    fixed(g, numIter, Seq(Hits.labeled(topic)))(
+      Hits.topicTeleport(topic, beta, 2))
 
   /** K12 query-dependent SALSA: simplified SALSA on the neighborhood
     * subgraph (reference `src/query_dependent_salsa.py:36-55`). The
@@ -111,9 +110,9 @@ object Salsa {
 
   /** `post` reuses the HITS transforms; for SALSA the teleport `n` slot
     * carries 2N / 2·N_topic (the reference's denominators). */
-  private def fixed(g: Graph, numIter: Int)(post: Edges => Hits.Post)
-      : Result =
-    Fixpoint.run(g, Cols, Schedule(numIter))(program(post)).result
+  private def fixed(g: Graph, numIter: Int, counted: Seq[Column] = Nil)(
+      post: Edges => Hits.Post): Result =
+    Fixpoint.run(g, Cols, Schedule(numIter), counted)(program(post)).result
 
   /** The mutual update over degree-annotated edge caches. Each degree
     * aggregation groups by its copy's clustering key and each
@@ -133,9 +132,9 @@ object Salsa {
     val p = post(e)
     val init = p match {
       case Hits.TopicTeleport(_, twoNTopic, flags) => flags.select(col("id"),
-        when(col("flag") === 0, lit(0.0)).otherwise(lit(1.0 / twoNTopic))
-          .as("score"))
-      case _ => Hits.uniform(e.nodes, e.nodes.count())
+        when(col("flag") === 0, lit(0.0))
+          .otherwise(Fixpoint.constant(1.0 / twoNTopic)).as("score"))
+      case _ => Hits.uniform(e)
     }
     Hits.mutual(init, eIn, col("score") / col("in_degree"),
       eOut, col("score") / col("out_degree"), p, Normalize.L1, Result,

@@ -5,13 +5,14 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeMap,
   BindReferences, InterpretedMutableProjection, JoinedRow, LeafExpression,
-  NamedExpression, SpecificInternalRow}
+  NamedExpression, SortOrder, SpecificInternalRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{
   AggregateExpression, Complete, DeclarativeAggregate}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan,
+  RepartitionByExpression}
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning,
-  Partitioning, PartitioningCollection, UnknownPartitioning}
+  Partitioning, PartitioningCollection, SinglePartition, UnknownPartitioning}
 import org.apache.spark.sql.classic.{Dataset, ExpressionUtils}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
@@ -39,8 +40,8 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   * This shim replays `Dataset.checkpoint`'s body but reads the
   * partitioning from the ADAPTIVE FINAL plan and carries it into the
   * [[LogicalRDD]] explicitly (remapped onto the analyzed output
-  * attributes; anything that isn't a plain hash partitioning falls back
-  * to `UnknownPartitioning`, i.e. exactly the old behavior). The
+  * attributes; anything but a hash partitioning falls back to
+  * `UnknownPartitioning`, Spark's own behavior, see [[remap]]). The
   * checkpointed query also runs with AQE partition coalescing OFF: the
   * final shuffle before a checkpoint has no downstream requirement
   * inside its own plan — the consumer is the NEXT query, which the
@@ -98,7 +99,7 @@ object CheckpointShim {
         val rdd = finalPlan.execute().map(_.copy())
         rdd.localCheckpoint()
         (rdd, remap(finalPlan.outputPartitioning,
-          finalPlan.output, ds.queryExecution.analyzed.output),
+          finalPlan.output, ds.queryExecution.analyzed),
           run(rdd, ds, tally))
       }
     // Statistics from the optimized plan, like LogicalRDD.fromDataset —
@@ -163,13 +164,16 @@ object CheckpointShim {
     ExpressionUtils.column(
       Scalar(CatalystTypeConverters.convertToCatalyst(value), dataType))
 
-  /** The final plan's partitioning, rewritten onto the checkpoint's
-    * output attributes. Only plain hash partitionings are claimed; a
-    * collection (join output) contributes its first mappable hash
-    * member — the `LogicalRDD.fromDataset` first-leaf rule. */
+  /** The final plan's partitioning, rewritten onto the output attributes
+    * of `analyzed`, the checkpointed plan. Only hash partitionings are
+    * claimed; a collection (join output) contributes its first mappable
+    * hash member — the `LogicalRDD.fromDataset` first-leaf rule. The
+    * single partition `repartition(1, keys)` plans is claimed as the
+    * hash layout it asked for: joined to an unmaterialized cache, a
+    * bare single partition makes the planner shuffle the cache's side. */
   private def remap(p: Partitioning, from: Seq[Attribute],
-      to: Seq[Attribute]): Partitioning = {
-    val m = AttributeMap(from.zip(to))
+      analyzed: LogicalPlan): Partitioning = {
+    val m = AttributeMap(from.zip(analyzed.output))
     def hash(h: HashPartitioning): Option[Partitioning] = {
       var ok = true
       val exprs = h.expressions.map(_.transform {
@@ -182,6 +186,12 @@ object CheckpointShim {
     }
     p match {
       case h: HashPartitioning => hash(h).getOrElse(UnknownPartitioning(0))
+      case SinglePartition => analyzed match {
+        case RepartitionByExpression(keys, _, Some(1), _)
+            if keys.nonEmpty && !keys.exists(_.isInstanceOf[SortOrder]) =>
+          HashPartitioning(keys, 1)
+        case _ => UnknownPartitioning(0)
+      }
       case pc: PartitioningCollection =>
         pc.partitionings.iterator.collect { case h: HashPartitioning => h }
           .map(hash).collectFirst { case Some(x) => x }

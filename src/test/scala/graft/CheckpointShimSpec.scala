@@ -45,6 +45,24 @@ class CheckpointShimSpec extends SparkSuite {
     Checkpoints.release(ck)
   }
 
+  test("a repartition(1, key) checkpoint keeps a hash layout on the key") {
+    // Such a repartition plans a single partition. Claimed bare, it makes
+    // the planner shuffle the edge cache of the kernel loop's first join
+    // at width 1; a hash layout on the key is co-partitioned with it.
+    val ck = Checkpoints.materializeKeyed(spark.range(20).toDF("id")
+      .repartition(1, col("id")))
+    ck.queryExecution.analyzed match {
+      case l: LogicalRDD => assert(l.outputPartitioning match {
+        case h: HashPartitioning => h.numPartitions == 1 &&
+          h.expressions.map(_.references.head.name) == Seq("id")
+        case _ => false
+      }, s"got ${l.outputPartitioning}")
+      case other => fail(s"not a checkpoint: ${other.nodeName}")
+    }
+    assert(ck.count() == 20)
+    Checkpoints.release(ck)
+  }
+
   test("a co-keyed join against the checkpoint plans no exchange on " +
       "the checkpoint side") {
     import spark.implicits._

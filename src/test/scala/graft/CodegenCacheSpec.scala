@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Hits
+import graft.operators.{Hits, PageRank, Salsa}
 
 /** Spark caches generated classes by (class loader, source). build.sbt
   * starts every forked JVM, this one included, with the three flags that
@@ -81,6 +81,34 @@ class CodegenCacheSpec extends SparkSuite {
     val other = pass(b)
     assert(other == 0, s"the second graph compiled $other classes " +
       s"(the first: $first)")
+  }
+
+  test("HITS, SALSA and PageRank on a second graph with two more nodes " +
+      "compile no class") {
+    // Same edges, two more (isolated) nodes: N, and with it every
+    // per-graph constant (1/√N, (1-β)/N, 1/N, (1-d)/N), differs between
+    // the graphs. A constant compiled into the generated code (a `lit`)
+    // would make each kernel's init and teleport steps new classes.
+    val edges = (0 until 80).map(i =>
+      (s"n${i % 29}", s"n${(i * 7 + 3) % 29}", 1.0 + i % 5))
+    val (a, b) =
+      (graph(edges), graph(edges, Map("x1" -> "none", "x2" -> "none")))
+    def pass(g: Graph): Long = {
+      val before = Bench.codegenCounters()._1
+      val h = Hits.runConverged(g).result
+      val t = Hits.runTeleport(g)
+      val s = Salsa.run(g)
+      Seq(h.hubs, h.auths, t.hubs, t.auths, s.hubs, s.auths, PageRank.run(g),
+          PageRank.runConverged(g).result).foreach { df =>
+        assert(df.collect().nonEmpty)
+        Checkpoints.releaseAll(df)
+      }
+      Bench.codegenCounters()._1 - before
+    }
+    val first = pass(a)
+    val other = pass(b)
+    assert(other == 0, s"the graph with two more nodes compiled $other " +
+      s"classes (the first: $first)")
   }
 
   test("warm graph_components passes do not recompile the star-forest " +

@@ -1,6 +1,7 @@
 package graft
 
-import graft.operators.Hits
+import graft.operators.{Hits, Salsa}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** FIXTURES.md §3 micro-graphs: closed-form HITS checks. */
@@ -41,6 +42,27 @@ class HitsSpec extends SparkSuite {
       // aggregate exchange and the broadcast of a cross join.
       assert(b - a == 3, s"$n iterations ran $a jobs, ${n + 1} ran $b")
     } finally spark.conf.unset(AdaptiveWidth.BytesPerTaskKey)
+  }
+
+  test("the teleport kernels count no nodes on the driver: N is the loop's " +
+      "tally") {
+    val g = graph(Seq(("a", "c", 1.0), ("a", "d", 2.0), ("b", "c", 1.0),
+      ("c", "d", 3.0), ("d", "a", 1.0), ("e", "a", 1.0)))
+    def jobsOfRun(run: => Seq[DataFrame]): Int = {
+      var out = Seq.empty[DataFrame]
+      val jobs = jobsOf { out = run }
+      out.foreach(Checkpoints.releaseAll)
+      jobs
+    }
+    def hits(r: Hits.Result) = Seq(r.hubs, r.auths)
+    def salsa(r: Salsa.Result) = Seq(r.hubs, r.auths)
+    val (base, teleport) = (jobsOfRun(hits(Hits.run(g, numIter = 4))),
+      jobsOfRun(hits(Hits.runTeleport(g, numIter = 4))))
+    assert(teleport == base, s"HITS ran $base jobs, with teleport $teleport")
+    val (sBase, sTeleport) = (jobsOfRun(salsa(Salsa.run(g, numIter = 4))),
+      jobsOfRun(salsa(Salsa.runTeleport(g, numIter = 4))))
+    assert(sTeleport == sBase,
+      s"SALSA ran $sBase jobs, with teleport $sTeleport")
   }
 
   test("G1 dropout semantics: d never a hub, a/b never authorities") {
