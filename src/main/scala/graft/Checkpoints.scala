@@ -119,7 +119,11 @@ object Checkpoints {
     * coalescing off already ([[Fixpoint]]); for a frame on any other
     * session the query is planned on a scoped sibling session, and no
     * session's conf is changed (see
-    * [[org.apache.spark.sql.graftshim.CheckpointShim]]).
+    * [[org.apache.spark.sql.graftshim.CheckpointShim]]). A checkpoint of
+    * ONE partition claims a width-1 hash layout on every column, so a
+    * width-1 kernel loop reads its edge checkpoint clustered on `dst` and
+    * on `src` at once, and joins its node and vector checkpoints on any
+    * key, without an exchange ([[Fixpoint]]).
     *
     * NOT the default: for checkpoints whose consumers re-key anyway
     * (the structural peels re-aggregate degrees from scratch and

@@ -40,8 +40,11 @@ case class Fixpoint[A](result: A, iterations: Int, converged: Boolean)
   *    and on `src` at that width ([[Edges]]) — repartitioned once per
   *    run, or read from the bucketed tables with no shuffle at all —
   *    dropped, with every cache and checkpoint the program made, when
-  *    the loop ends.
-  *  - Nodes and `N`: the node frame is checkpointed once per run,
+  *    the loop ends. At width 1 they are one copy: a one-partition
+  *    checkpoint of the projection, made without a shuffle, claims a
+  *    layout on both keys ([[drive]]).
+  *  - Nodes and `N`: the node frame (its `id` alone unless a node
+  *    predicate reads more) is checkpointed once per run,
   *    hash-partitioned on `id` at the loop width, and that job tallies
   *    `N` ([[Edges]]). Inits, teleport columns and topic flags are
   *    projections of it; per-graph constants (`1/√N`, `(1-β)/N`) enter
@@ -67,8 +70,11 @@ case class Fixpoint[A](result: A, iterations: Int, converged: Boolean)
   *    own job tallies the program's norm; the normalized vector is the
   *    checkpoint divided by that value ([[operators.Normalize.divide]]),
   *    a projection that keeps its hash layout. A HITS iteration so runs
-  *    three jobs (its two aggregate exchanges and the checkpoint), none
-  *    for the norm.
+  *    three jobs above width 1 (its two aggregate exchanges and the
+  *    checkpoint), none for the norm; at width 1 it runs one, the
+  *    checkpoint's, and shuffles nothing: the edge, node and vector
+  *    checkpoints all claim a hash layout on each of their columns
+  *    ([[Checkpoints.materializeKeyed]]).
   *  - Schedule: a fixed count, or delta checks on the
   *    `firstCheck, firstCheck+checkEvery, ...` schedule — the delta is
   *    a second |V|-sized job, so checking every iteration would double
@@ -91,15 +97,22 @@ object Fixpoint {
   }
 
   /** The kernel's edge projection, hash-clustered on `dst` / `src` at the
-    * loop width, and the graph's nodes, all on the loop session. The edge
-    * copies are plans, not caches: a program persists the copies it
-    * re-reads every iteration, `byDst` first — `bySrc` derives from it,
-    * so a cached `byDst` runs an upstream subgraph derivation once.
-    * `nodes` is the loop's node checkpoint, hash-partitioned on `id`;
-    * its job tallied `n` nodes, `counts(i)` of them satisfying the run's
-    * `counted(i)` ([[run]]). */
+    * loop width, and the graph's nodes, all on the loop session. Above
+    * width 1 the edge copies are plans, not caches: a program caches the
+    * copies it re-reads every iteration ([[cached]]), `byDst` first —
+    * `bySrc` derives from it, so a cached `byDst` runs an upstream
+    * subgraph derivation once. At width 1 both are the same one-partition
+    * checkpoint ([[drive]]). `nodes` is the loop's node checkpoint,
+    * hash-partitioned on `id`; its job tallied `n` nodes, `counts(i)` of
+    * them satisfying the run's `counted(i)` ([[run]]). */
   private[graft] final case class Edges(byDst: DataFrame, bySrc: DataFrame,
-      nodes: DataFrame, n: Long, counts: Seq[Long])
+      nodes: DataFrame, n: Long, counts: Seq[Long]) {
+    /** `edges` (`byDst` or `bySrc`) kept for re-reading every iteration:
+      * cached, except the width-1 edge checkpoint, which is stored
+      * already — a cache of it would be a second, columnar copy. */
+    def cached(edges: DataFrame): DataFrame =
+      if (byDst eq bySrc) edges else edges.persist()
+  }
 
   /** One kernel's iteration. `side` (HITS/SALSA hubs) maps the carried
     * vector to the side vector and `step` maps that (or, without a
@@ -142,7 +155,9 @@ object Fixpoint {
   private[graft] def run[A](g: Graph, cols: Seq[Column], schedule: Schedule,
       counted: Seq[Column] = Nil)(program: Edges => Program[A]): Fixpoint[A] = {
     val np = width(g.edges)
-    val byDst = g.edges.select(cols: _*).repartition(np, col("dst"))
+    val edges = g.edges.select(cols: _*)
+    // At width 1 the loop coalesces the projection itself ([[drive]]).
+    val byDst = if (np == 1) edges else edges.repartition(np, col("dst"))
     drive(byDst, byDst.repartition(np, col("src")), g.nodes, np, counted,
       schedule, program)
   }
@@ -172,19 +187,33 @@ object Fixpoint {
 
   /** Runs `program` on the loop session: the edges' session at the loop
     * `width`, with AQE coalescing off. The node checkpoint is made there
-    * first, and dropped with the edge copies when the loop ends. */
+    * first (its `id` alone when no `counted` predicate reads more), and
+    * dropped with the edge copies when the loop ends.
+    *
+    * At width 1 the two edge copies are one checkpoint: `byDst`
+    * coalesced to one partition, which shuffles nothing, and `bySrc` is
+    * not read. A one-partition checkpoint claims a hash layout on every
+    * column ([[CheckpointShim]]), so it is clustered on `dst` and on
+    * `src` at once; the node checkpoint is coalesced the same way. Every
+    * join and aggregate of an iteration then reads its inputs in place,
+    * and the iteration runs as one job: its checkpoint's. */
   private def drive[A](byDst: DataFrame, bySrc: DataFrame, nodes: DataFrame,
       width: Int, counted: Seq[Column], schedule: Schedule,
       program: Edges => Program[A]): Fixpoint[A] = {
     val caller = bySrc.sparkSession
     val s = session(caller, width,
       SQLConf.COALESCE_PARTITIONS_ENABLED.key -> "false")
+    val (dst, src) = if (width == 1) {
+      val one = Checkpoints.materializeKeyed(Rebind(byDst, s).coalesce(1))
+      (one, one)
+    } else (Rebind(byDst, s), Rebind(bySrc, s))
+    val node = if (counted.isEmpty) Rebind(nodes, s).select(col("id"))
+      else Rebind(nodes, s)
     val ids = Checkpoints.materializeKeyed(
-      Rebind(nodes, s).repartition(width, col("id")),
+      if (width == 1) node.coalesce(1) else node.repartition(width, col("id")),
       count(lit(1)) +: counted.map(p => count(when(p, true))))
     val counts = Seq.tabulate(ids.tally.length)(ids.tally.getLong)
-    val e = Edges(Rebind(byDst, s), Rebind(bySrc, s), ids.df, counts.head,
-      counts.tail)
+    val e = Edges(dst, src, ids.df, counts.head, counts.tail)
     try {
       val p = program(e)
       try iterate(p, schedule, Rebind(_, caller))

@@ -112,7 +112,7 @@ object Hits {
     val contribution = if (weighted) col("w") * col("score") else col("score")
     // Both copies are re-probed every iteration: cache them (the parquet
     // scan of a bucketed layout then also stays out of the loop).
-    mutual(uniform(e), e.byDst.persist(), contribution, e.bySrc.persist(),
+    mutual(uniform(e), e.cached(e.byDst), contribution, e.cached(e.bySrc),
       contribution, post(e), Normalize.L2, Result, Nil)
   }
 

@@ -122,7 +122,7 @@ object Salsa {
   private def program(post: Edges => Hits.Post)(e: Edges): Program[Result] = {
     // A derived edge set's upstream derivation runs exactly ONCE, into
     // the cached by-dst copy the by-src copy derives from.
-    val eBase = e.byDst.persist()
+    val eBase = e.cached(e.byDst)
     val dIn = Degrees.in(eBase).hint("SHUFFLE_HASH")
     val eIn = eBase.join(dIn, eBase("dst") === dIn("id"))
       .select(col("src"), col("dst"), col("in_degree")).persist()

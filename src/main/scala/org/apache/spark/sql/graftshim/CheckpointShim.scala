@@ -5,14 +5,13 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeMap,
   BindReferences, InterpretedMutableProjection, JoinedRow, LeafExpression,
-  NamedExpression, SortOrder, SpecificInternalRow}
+  NamedExpression, SpecificInternalRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{
   AggregateExpression, Complete, DeclarativeAggregate}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan,
-  RepartitionByExpression}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning,
-  Partitioning, PartitioningCollection, SinglePartition, UnknownPartitioning}
+  Partitioning, PartitioningCollection, UnknownPartitioning}
 import org.apache.spark.sql.classic.{Dataset, ExpressionUtils}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
@@ -41,7 +40,12 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   * partitioning from the ADAPTIVE FINAL plan and carries it into the
   * [[LogicalRDD]] explicitly (remapped onto the analyzed output
   * attributes; anything but a hash partitioning falls back to
-  * `UnknownPartitioning`, Spark's own behavior, see [[remap]]). The
+  * `UnknownPartitioning`, Spark's own behavior, see [[remap]]). A
+  * checkpoint of ONE partition claims a width-1 hash layout on each of
+  * its columns, true of every row whatever the final plan reports, and
+  * never `SinglePartition` ([[remap]] says why): at loop width 1 every
+  * join and aggregate of a kernel iteration then reads its inputs in
+  * place, and the iteration runs as one job. The
   * checkpointed query also runs with AQE partition coalescing OFF: the
   * final shuffle before a checkpoint has no downstream requirement
   * inside its own plan — the consumer is the NEXT query, which the
@@ -54,7 +58,7 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   * a scoped sibling of its session ([[graft.Sessions.scoped]]), and the
   * checkpoint comes back on the frame's own session. Both halves only
   * claim what is physically true: the declared partitioning is the
-  * executed final plan's.
+  * executed final plan's, or the one-partition layout of its rows.
   *
   * The job that materializes a checkpoint also returns its TALLY: the
   * values of aggregate columns over the checkpointed rows, folded while
@@ -98,7 +102,7 @@ object CheckpointShim {
         // buffers, so the persisted blocks must own their bytes.
         val rdd = finalPlan.execute().map(_.copy())
         rdd.localCheckpoint()
-        (rdd, remap(finalPlan.outputPartitioning,
+        (rdd, remap(finalPlan.outputPartitioning, rdd.getNumPartitions,
           finalPlan.output, ds.queryExecution.analyzed),
           run(rdd, ds, tally))
       }
@@ -167,11 +171,20 @@ object CheckpointShim {
   /** The final plan's partitioning, rewritten onto the output attributes
     * of `analyzed`, the checkpointed plan. Only hash partitionings are
     * claimed; a collection (join output) contributes its first mappable
-    * hash member — the `LogicalRDD.fromDataset` first-leaf rule. The
-    * single partition `repartition(1, keys)` plans is claimed as the
-    * hash layout it asked for: joined to an unmaterialized cache, a
-    * bare single partition makes the planner shuffle the cache's side. */
-  private def remap(p: Partitioning, from: Seq[Attribute],
+    * hash member — the `LogicalRDD.fromDataset` first-leaf rule.
+    *
+    * Rows in one partition (`parts == 1`) are hash-partitioned on every
+    * column at width 1 (`pmod(hash, 1) = 0`), whatever the final plan
+    * reports, so that is the claim: a `HashPartitioning(Seq(a), 1)` per
+    * output column `a`. A join or aggregate on any key of such a
+    * checkpoint then reads it in place, next to another width-1 hash
+    * layout or another such checkpoint. `SinglePartition` stays out of
+    * the claim: where both children of a join report it, the planner
+    * keeps them only if both size estimates fit
+    * `spark.sql.maxSinglePartitionBytes`, which a join product's never
+    * does; a join of two checkpoints that claimed it next to their hash
+    * members re-shuffled both sides. */
+  private def remap(p: Partitioning, parts: Int, from: Seq[Attribute],
       analyzed: LogicalPlan): Partitioning = {
     val m = AttributeMap(from.zip(analyzed.output))
     def hash(h: HashPartitioning): Option[Partitioning] = {
@@ -184,14 +197,12 @@ object CheckpointShim {
       })
       if (ok) Some(HashPartitioning(exprs, h.numPartitions)) else None
     }
-    p match {
+    if (parts == 1) analyzed.output.map(a => HashPartitioning(Seq(a), 1)) match {
+      case Seq() => UnknownPartitioning(0)
+      case Seq(h) => h
+      case hs => PartitioningCollection(hs)
+    } else p match {
       case h: HashPartitioning => hash(h).getOrElse(UnknownPartitioning(0))
-      case SinglePartition => analyzed match {
-        case RepartitionByExpression(keys, _, Some(1), _)
-            if keys.nonEmpty && !keys.exists(_.isInstanceOf[SortOrder]) =>
-          HashPartitioning(keys, 1)
-        case _ => UnknownPartitioning(0)
-      }
       case pc: PartitioningCollection =>
         pc.partitionings.iterator.collect { case h: HashPartitioning => h }
           .map(hash).collectFirst { case Some(x) => x }

@@ -1,7 +1,11 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
-import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning,
+  PartitioningCollection}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 
 /** The partitioning-preserving localCheckpoint
@@ -61,6 +65,49 @@ class CheckpointShimSpec extends SparkSuite {
     }
     assert(ck.count() == 20)
     Checkpoints.release(ck)
+  }
+
+  test("one-partition checkpoints claim a hash layout on every column, and " +
+      "a kernel iteration over them plans no exchange") {
+    import spark.implicits._
+    val edges = Checkpoints.materializeKeyed((1 to 60)
+      .map(i => (s"n${i % 11}", s"n${(i * 7) % 11}", (i % 3).toDouble))
+      .toDF("src", "dst", "w").coalesce(1))
+    val v = Checkpoints.materializeKeyed((0 until 11)
+      .map(i => (s"n$i", 1.0 / (i + 1))).toDF("id", "score").coalesce(1))
+    try {
+      Seq(edges -> Seq("src", "dst", "w"), v -> Seq("id", "score")).foreach {
+        case (ck, cols) =>
+          val claimed = ck.queryExecution.analyzed match {
+            case l: LogicalRDD => l.outputPartitioning match {
+              case pc: PartitioningCollection => pc.partitionings
+              case p => Seq(p)
+            }
+            case other => fail(s"not a checkpoint: ${other.nodeName}")
+          }
+          assert(claimed.map {
+            case h: HashPartitioning if h.numPartitions == 1 =>
+              h.expressions.map(_.references.head.name)
+            case p => fail(s"not a width-1 hash layout: $p")
+          } == cols.map(Seq(_)))
+      }
+      // HITS's two gathers: hubs from the vector over `dst`, then
+      // authorities from those hubs over `src`, on the same edges.
+      def gather(key: String, by: String)(x: DataFrame) = {
+        val x0 = x.hint("SHUFFLE_HASH")
+        edges.join(x0, edges(key) === x0("id"))
+          .groupBy(edges(by).as("id")).agg(sum(col("w") * col("score"))
+            .as("score"))
+      }
+      val auths = gather("src", "dst")(gather("dst", "src")(v))
+      val finalPlan = auths.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.finalPhysicalPlan
+        case p => p
+      }
+      assert(finalPlan.collect { case e: ShuffleExchangeExec => e }.isEmpty,
+        s"expected an exchange-free iteration, got:\n$finalPlan")
+      assert(auths.count() > 0)
+    } finally Seq(edges, v).foreach(Checkpoints.release)
   }
 
   test("a co-keyed join against the checkpoint plans no exchange on " +

@@ -44,6 +44,32 @@ class HitsSpec extends SparkSuite {
     } finally spark.conf.unset(AdaptiveWidth.BytesPerTaskKey)
   }
 
+  test("at width 1 an iteration runs one job: nothing is exchanged") {
+    val g = graph(Seq(("a", "c", 1.0), ("a", "d", 2.0), ("b", "c", 1.0),
+      ("c", "d", 3.0), ("d", "a", 1.0), ("e", "a", 1.0)))
+    def jobsOfRun(run: => Seq[DataFrame]): Int = {
+      var out = Seq.empty[DataFrame]
+      val jobs = jobsOf { out = run }
+      out.foreach(Checkpoints.releaseAll)
+      jobs
+    }
+    val key = AdaptiveWidth.BytesPerTaskKey
+    val old = spark.conf.getOption(key)
+    spark.conf.set(key, "1t")
+    try Seq(3, 8).foreach { n =>
+      Seq[(String, Int => Seq[DataFrame])](
+        "HITS" -> { i => val r = Hits.run(g, numIter = i); Seq(r.hubs, r.auths) },
+        "SALSA" -> { i => val r = Salsa.run(g, numIter = i); Seq(r.hubs, r.auths) }
+      ).foreach { case (kernel, run) =>
+        val (a, b) = (jobsOfRun(run(n)), jobsOfRun(run(n + 1)))
+        // The checkpoint's job: both aggregates and both joins read the
+        // one-partition edge, node and vector checkpoints in place.
+        assert(b - a == 1, s"$kernel: $n iterations ran $a jobs, " +
+          s"${n + 1} ran $b")
+      }
+    } finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("the teleport kernels count no nodes on the driver: N is the loop's " +
       "tally") {
     val g = graph(Seq(("a", "c", 1.0), ("a", "d", 2.0), ("b", "c", 1.0),
