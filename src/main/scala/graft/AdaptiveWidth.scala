@@ -13,7 +13,7 @@ import org.apache.spark.sql.DataFrame
   * ([[Checkpoints.materializeKeyed]]). Each loop runs on a session of
   * its own whose `shuffle.partitions` is this width ([[Fixpoint]]; the
   * streaming drains likewise, [[graft.streaming.Drain]]), so the
-  * caller's session keeps its conf; the kernel loop's session also has
+  * caller's session keeps its conf; a keyed loop's session also has
   * AQE coalescing off, so there is a hash layout to preserve.
   * The width is not put into the plans as `repartition(k, key)`: under
   * a `groupBy` that moves the partial aggregate after the exchange, so

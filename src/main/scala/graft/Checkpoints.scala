@@ -7,7 +7,7 @@ import org.apache.spark.storage.StorageLevel
 
 /** Deterministic lifecycle for per-iteration plan checkpoints.
   *
-  * Every iterative operator on [[Fixpoint]]'s two loops (the kernels;
+  * Every iterative operator on [[Fixpoint]]'s one loop (the kernels;
   * components, label propagation and the peels) truncates its growing
   * logical plan by checkpointing the fresh vector or edge set each
   * iteration. Spark frees a checkpoint's storage blocks only
@@ -16,10 +16,10 @@ import org.apache.spark.storage.StorageLevel
   * (exactly what a 100 TB pipeline is) the superseded MEMORY_AND_DISK
   * blocks accumulate between GCs and heap health becomes a GC-timing
   * lottery; round 4's scoring harness died of it. The fix is
-  * structural, not JVM flags: each of the two loops keeps a handle to
-  * the previous iteration's checkpointed plan and [[release]]s its
-  * blocks as soon as the next one is materialized, so the live block
-  * set per operator stays two generations regardless of run length.
+  * structural, not JVM flags: the loop tracks every checkpoint a round
+  * makes and [[release]]s the previous generation's blocks as soon as
+  * the next one is materialized, so the live block set per operator
+  * stays two generations regardless of run length.
   *
   * [[materialize]] also carries the fault-tolerance knob for real
   * clusters: `localCheckpoint` stores blocks on the executors and is NOT
@@ -115,7 +115,7 @@ object Checkpoints {
     * `UnknownPartitioning`), which cost every such loop one |V|-sized
     * Exchange per iteration; this path preserves it — and plans the
     * checkpointed query with AQE partition coalescing off, so there IS
-    * a hash layout to preserve (guide §2.4). A kernel loop's session has
+    * a hash layout to preserve (guide §2.4). A keyed loop's session has
     * coalescing off already ([[Fixpoint]]); for a frame on any other
     * session the query is planned on a scoped sibling session, and no
     * session's conf is changed (see

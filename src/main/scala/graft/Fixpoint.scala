@@ -26,55 +26,69 @@ import org.apache.spark.sql.types.DoubleType
   */
 case class Fixpoint[A](result: A, iterations: Int, converged: Boolean)
 
-/** The iteration loops. The structural operators run on [[rounds]]; the
-  * rest of this doc is the one loop of the link-analysis kernels (HITS,
-  * SALSA, PageRank): a superstep of equi-join + hash aggregate over a
-  * persisted edge set, repeated on a fixed or a converged schedule.
-  * The kernels supply only what differs — edge annotation,
-  * contribution expression, norm, teleport — as a [[Program]]; the
-  * loop owns the execution discipline they share:
+/** The one iteration loop ([[rounds]]). Every iterative operator is a
+  * round plan on it: the link-analysis kernels (HITS, SALSA, PageRank)
+  * as the superstep of [[run]], and the structural operators
+  * (components, label propagation, the k-core and k-truss peels). A
+  * plan's `start` makes the first generation and each `round` makes the
+  * next or returns the result; the loop owns what they share:
   *
-  *  - Width: one scale-adaptive loop width ([[width]]), or
-  *    a bucketed layout's bucket count.
-  *  - Edge copies: the kernel's edge projection hash-clustered on `dst`
-  *    and on `src` at that width ([[Edges]]) — repartitioned once per
-  *    run, or read from the bucketed tables with no shuffle at all —
-  *    dropped, with every cache and checkpoint the program made, when
-  *    the loop ends. At width 1 they are one copy: a one-partition
-  *    checkpoint of the projection, made without a shuffle, claims a
-  *    layout on both keys ([[drive]]).
-  *  - Nodes and `N`: the node frame (its `id` alone unless a node
-  *    predicate reads more) is checkpointed once per run,
-  *    hash-partitioned on `id` at the loop width, and that job tallies
-  *    `N` ([[Edges]]). Inits, teleport columns and topic flags are
-  *    projections of it; per-graph constants (`1/√N`, `(1-β)/N`) enter
-  *    the plans as run-time values ([[constant]]): no driver count, no
-  *    class compiled per graph.
-  *  - The loop session: the loop plans on a session of its own
+  *  - Width and session: every round plans on a session of its own
   *    ([[Sessions.scoped]], one per run) whose `shuffle.partitions` is
   *    the loop width, so every aggregation exchange plans at that width
-  *    and every per-iteration join reads both sides co-partitioned. AQE
-  *    partition coalescing is off on it: every shuffle of the loop
-  *    feeds a keyed checkpoint, whose layout must stay hash-routable.
-  *    The edges and nodes are rebound onto it from their analyzed plans
-  *    (a join runs on its left input's session), and the results are
-  *    rebound onto the caller's session, so later queries plan under the
-  *    caller's conf, which the loop never changes.
-  *  - Checkpoints: each iteration's carried vector is truncated with
-  *    [[Checkpoints.materializeKeyed]] (one eager job, hash layout
-  *    preserved for the next join); superseded checkpoints are
-  *    released eagerly, so live storage stays O(|V|) however long the
-  *    run (see [[Checkpoints]]); the final side vector is
-  *    materialized before the edge caches drop.
-  *  - Norms: every vector is checkpointed raw, and the checkpoint's
-  *    own job tallies the program's norm; the normalized vector is the
-  *    checkpoint divided by that value ([[operators.Normalize.divide]]),
-  *    a projection that keeps its hash layout. A HITS iteration so runs
-  *    three jobs above width 1 (its two aggregate exchanges and the
-  *    checkpoint), none for the norm; at width 1 it runs one, the
-  *    checkpoint's, and shuffles nothing: the edge, node and vector
-  *    checkpoints all claim a hash layout on each of their columns
-  *    ([[Checkpoints.materializeKeyed]]).
+  *    and every per-round join reads both sides co-partitioned. The
+  *    loop's input and any other frame made outside it are rebound onto
+  *    that session from their analyzed plans (a join runs on its left
+  *    input's session), and the result is rebound onto the caller's
+  *    session, whose conf the loop never changes. A keyed loop (the
+  *    kernels, min-label components) has AQE partition coalescing off
+  *    on its session: its checkpoints are keyed
+  *    ([[Checkpoints.materializeKeyed]]), and their layout must stay
+  *    hash-routable. The peels, label propagation and the star engine
+  *    keep coalescing on: their stock checkpoints' consumers re-key
+  *    anyway, and coalescing keeps their late, tiny rounds cheap.
+  *  - Storage: a round plan stores frames only through the loop
+  *    ([[Rounds]]). After `start` and after each round, every frame the
+  *    loop holds that the new generation does not carry is dropped —
+  *    cache unpersisted, checkpoint released — so at most two
+  *    generations are ever stored, however long the run (see
+  *    [[Checkpoints]]); the generation a round reads stays stored for
+  *    the whole round. At the end every frame the result does not read
+  *    is dropped; on failure, all of them.
+  *  - The cap: a round that still makes a generation after `maxRounds`
+  *    such rounds fails loudly, since a SQL oracle that unrolls the same
+  *    bound would see a partial result.
+  *
+  * The kernel superstep repeats an equi-join + hash aggregate over the
+  * kernel's edges on a fixed or a converged [[Schedule]]. The kernels
+  * supply only what differs — edge annotation, contribution expression,
+  * norm, teleport — as a [[Program]]:
+  *
+  *  - Width: [[width]] of the kernel's edge projection, or a bucketed
+  *    layout's bucket count; the loop is keyed.
+  *  - `start` makes the edge copies, the node checkpoint and the
+  *    program, which all live until the run ends. The edge copies are
+  *    the projection hash-clustered on `dst` and on `src` ([[Edges]]),
+  *    repartitioned once per run or read from the bucketed tables with
+  *    no shuffle at all; at width 1 they are one one-partition
+  *    checkpoint, made without a shuffle, that claims a layout on both
+  *    keys. The node checkpoint (its `id` alone unless a node predicate
+  *    reads more) is hash-partitioned on `id` and its job tallies `N`.
+  *    Inits, teleport columns and topic flags are projections of it;
+  *    per-graph constants (`1/√N`, `(1-β)/N`) enter the plans as
+  *    run-time values ([[constant]]): no driver count, no class
+  *    compiled per graph. The program's caches are made through the
+  *    loop ([[Edges.cached]]).
+  *  - A round is one iteration: the side vector, then the step's
+  *    checkpoint ([[Checkpoints.materializeKeyed]], hash layout kept for
+  *    the next join), whose own job tallies the program's norm; the
+  *    normalized vector is the checkpoint divided by that value
+  *    ([[operators.Normalize.divide]]), a projection that keeps its hash
+  *    layout. A HITS iteration so runs three jobs above width 1 (its two
+  *    aggregate exchanges and the checkpoint), none for the norm; at
+  *    width 1 it runs one, the checkpoint's, and shuffles nothing: the
+  *    edge, node and vector checkpoints all claim a hash layout on each
+  *    of their columns.
   *  - Schedule: a fixed count, or delta checks on the
   *    `firstCheck, firstCheck+checkEvery, ...` schedule — the delta is
   *    a second |V|-sized job, so checking every iteration would double
@@ -102,16 +116,17 @@ object Fixpoint {
     * copies it re-reads every iteration ([[cached]]), `byDst` first —
     * `bySrc` derives from it, so a cached `byDst` runs an upstream
     * subgraph derivation once. At width 1 both are the same one-partition
-    * checkpoint ([[drive]]). `nodes` is the loop's node checkpoint,
-    * hash-partitioned on `id`; its job tallied `n` nodes, `counts(i)` of
-    * them satisfying the run's `counted(i)` ([[run]]). */
+    * checkpoint. `nodes` is the loop's node checkpoint, hash-partitioned
+    * on `id`; its job tallied `n` nodes, `counts(i)` of them satisfying
+    * the run's `counted(i)` ([[run]]). */
   private[graft] final case class Edges(byDst: DataFrame, bySrc: DataFrame,
-      nodes: DataFrame, n: Long, counts: Seq[Long]) {
-    /** `edges` (`byDst` or `bySrc`) kept for re-reading every iteration:
-      * cached, except the width-1 edge checkpoint, which is stored
-      * already — a cache of it would be a second, columnar copy. */
-    def cached(edges: DataFrame): DataFrame =
-      if (byDst eq bySrc) edges else edges.persist()
+      nodes: DataFrame, n: Long, counts: Seq[Long])(loop: Rounds) {
+    /** `df` kept for re-reading every iteration: cached through the loop,
+      * which drops the cache when the run ends. The width-1 edge
+      * checkpoint is stored already — a cache of it would be a second,
+      * columnar copy. */
+    def cached(df: DataFrame): DataFrame =
+      if ((df eq byDst) && (df eq bySrc)) df else loop.cache(df)
   }
 
   /** One kernel's iteration. `side` (HITS/SALSA hubs) maps the carried
@@ -119,13 +134,10 @@ object Fixpoint {
     * side, the carried vector) to the next carried vector, both
     * un-normalized. `norm` is the aggregate over a vector's `score`s
     * that each score is divided by ([[operators.Normalize.L2]],
-    * [[operators.Normalize.L1]]); None carries vectors as computed.
-    * `owned` are the program's own caches and checkpoints, dropped when
-    * the loop ends. */
+    * [[operators.Normalize.L1]]); None carries vectors as computed. */
   private[graft] final case class Program[A](init: DataFrame,
       side: Option[DataFrame => DataFrame], step: DataFrame => DataFrame,
-      norm: Option[Column], result: (DataFrame, DataFrame) => A,
-      owned: Seq[DataFrame])
+      norm: Option[Column], result: (DataFrame, DataFrame) => A)
 
   /** The loop width for a kernel over these edges: data-proportional at
     * gate scale, the session's `shuffle.partitions` at cluster scale.
@@ -156,9 +168,9 @@ object Fixpoint {
       counted: Seq[Column] = Nil)(program: Edges => Program[A]): Fixpoint[A] = {
     val np = width(g.edges)
     val edges = g.edges.select(cols: _*)
-    // At width 1 the loop coalesces the projection itself ([[drive]]).
+    // At width 1 the superstep coalesces the projection itself.
     val byDst = if (np == 1) edges else edges.repartition(np, col("dst"))
-    drive(byDst, byDst.repartition(np, col("src")), g.nodes, np, counted,
+    superstep(byDst, byDst.repartition(np, col("src")), g.nodes, np, counted,
       schedule, program)
   }
 
@@ -181,49 +193,8 @@ object Fixpoint {
         "zero-edge-Exchange plan")
     def table(key: String): DataFrame =
       spark.table(s"${prefix}_edges_by_$key").select(cols: _*)
-    drive(table("dst"), table("src"), spark.table(s"${prefix}_nodes"),
+    superstep(table("dst"), table("src"), spark.table(s"${prefix}_nodes"),
       buckets.get, Nil, schedule, program)
-  }
-
-  /** Runs `program` on the loop session: the edges' session at the loop
-    * `width`, with AQE coalescing off. The node checkpoint is made there
-    * first (its `id` alone when no `counted` predicate reads more), and
-    * dropped with the edge copies when the loop ends.
-    *
-    * At width 1 the two edge copies are one checkpoint: `byDst`
-    * coalesced to one partition, which shuffles nothing, and `bySrc` is
-    * not read. A one-partition checkpoint claims a hash layout on every
-    * column ([[CheckpointShim]]), so it is clustered on `dst` and on
-    * `src` at once; the node checkpoint is coalesced the same way. Every
-    * join and aggregate of an iteration then reads its inputs in place,
-    * and the iteration runs as one job: its checkpoint's. */
-  private def drive[A](byDst: DataFrame, bySrc: DataFrame, nodes: DataFrame,
-      width: Int, counted: Seq[Column], schedule: Schedule,
-      program: Edges => Program[A]): Fixpoint[A] = {
-    val caller = bySrc.sparkSession
-    val s = session(caller, width,
-      SQLConf.COALESCE_PARTITIONS_ENABLED.key -> "false")
-    val (dst, src) = if (width == 1) {
-      val one = Checkpoints.materializeKeyed(Rebind(byDst, s).coalesce(1))
-      (one, one)
-    } else (Rebind(byDst, s), Rebind(bySrc, s))
-    val node = if (counted.isEmpty) Rebind(nodes, s).select(col("id"))
-      else Rebind(nodes, s)
-    val ids = Checkpoints.materializeKeyed(
-      if (width == 1) node.coalesce(1) else node.repartition(width, col("id")),
-      count(lit(1)) +: counted.map(p => count(when(p, true))))
-    val counts = Seq.tabulate(ids.tally.length)(ids.tally.getLong)
-    val e = Edges(dst, src, ids.df, counts.head, counts.tail)
-    try {
-      val p = program(e)
-      try iterate(p, schedule, Rebind(_, caller))
-      finally p.owned.foreach(drop)
-    } finally {
-      // The loop runs eager actions, so exceptions mid-loop are real;
-      // results live on their own checkpoints, so the caches and the
-      // node checkpoint can go (non-blocking) without recompute risk.
-      Seq(e.byDst, e.bySrc, e.nodes).foreach(drop)
-    }
   }
 
   /** A per-graph constant of a kernel plan as a run-time value, as the
@@ -231,76 +202,93 @@ object Fixpoint {
   private[graft] def constant(v: Double): Column =
     CheckpointShim.scalar(v, DoubleType)
 
-  /** A loop's session: `caller`'s conf at the loop `width`, and `conf`. */
-  private def session(caller: SparkSession, width: Int,
-      conf: (String, String)*): SparkSession =
-    Sessions.scoped(caller,
-      (SQLConf.SHUFFLE_PARTITIONS.key -> width.toString) +: conf: _*)
+  /** A kernel generation: the program, what `start` stored for the whole
+    * run (the edge copies, the node checkpoint, the program's caches),
+    * and the vector carried after `it` iterations with the checkpoint
+    * behind it (none for the init). */
+  private final case class Step[A](p: Program[A], stored: Seq[DataFrame],
+      v: DataFrame, ck: Option[DataFrame], it: Int)
 
-  /** `back` rebinds the result frames onto the caller's session. */
-  private def iterate[A](p: Program[A], s: Schedule,
-      back: DataFrame => DataFrame): Fixpoint[A] = {
-    // Checkpoints `v` and returns it with its normalized view: the norm
-    // is tallied by the checkpoint's own job, and the view divides the
-    // checkpoint by it (no second pass over the vector).
-    def checkpoint(v: DataFrame): (DataFrame, DataFrame) = p.norm match {
-      case None =>
-        val ck = Checkpoints.materializeKeyed(v)
-        (ck, ck)
-      case Some(norm) =>
-        val t = Checkpoints.materializeKeyed(v, Seq(norm))
-        (t.df, Normalize.divide(t))
-    }
-    val fixed = s.tol.isEmpty
-    // Only a converged run's side vector stays lazy past its iteration
-    // (the last iteration is unknown in advance); it reads the previous
-    // checkpoint, which is then held one iteration longer.
-    val lazySide = !fixed && p.side.nonEmpty
-    var carried = p.init
-    var side: Option[DataFrame] = None    // the last side vector, raw
-    var sideOut: Option[DataFrame] = None // normalized, once checkpointed
-    var ck: DataFrame = null   // checkpoint behind `carried`
-    var held: DataFrame = null // superseded, still read by the lazy side
-    var it = 0
-    var done = false
-    while (it < s.maxIter && !done) {
-      it += 1
+  /** Runs `program` as a round plan on a keyed loop at `width` whose input
+    * is `byDst`. At width 1 the two edge copies are one checkpoint:
+    * `byDst` coalesced to one partition, which shuffles nothing, and
+    * `bySrc` is not read. A one-partition checkpoint claims a hash layout
+    * on every column ([[CheckpointShim]]), so it is clustered on `dst`
+    * and on `src` at once; the node checkpoint is coalesced the same way.
+    * Every join and aggregate of an iteration then reads its inputs in
+    * place, and the iteration runs as one job: its checkpoint's. */
+  private def superstep[A](byDst: DataFrame, bySrc: DataFrame,
+      nodes: DataFrame, width: Int, counted: Seq[Column], s: Schedule,
+      program: Edges => Program[A]): Fixpoint[A] =
+    rounds[Step[A], Fixpoint[A]](new Rounds(byDst, width, keyed = true),
+        s.maxIter, "kernel")(k => k.stored ++ k.ck) { r =>
+      val (dst, src) = if (width == 1) {
+        val one = r.materializeKeyed(r.input.coalesce(1), Nil).df
+        (one, one)
+      } else (r.input, r.on(bySrc))
+      val node = if (counted.isEmpty) r.on(nodes).select(col("id"))
+        else r.on(nodes)
+      val ids = r.materializeKeyed(
+        if (width == 1) node.coalesce(1) else node.repartition(width, col("id")),
+        count(lit(1)) +: counted.map(p => count(when(p, true))))
+      val counts = Seq.tabulate(ids.tally.length)(ids.tally.getLong)
+      val p = program(Edges(dst, src, ids.df, counts.head, counts.tail)(r))
+      Step(p, r.made, p.init, None, 0)
+    } { (r, k) =>
+      val p = k.p
+      val it = k.it + 1
+      val last = it == s.maxIter
+      // Checkpoints `v` and returns it with its normalized view: the norm
+      // is tallied by the checkpoint's own job, and the view divides the
+      // checkpoint by it (no second pass over the vector).
+      def checkpoint(v: DataFrame): (DataFrame, DataFrame) = p.norm match {
+        case None =>
+          val ck = r.materializeKeyed(v, Nil).df
+          (ck, ck)
+        case Some(norm) =>
+          val t = r.materializeKeyed(v, Seq(norm))
+          (t.df, Normalize.divide(t))
+      }
       // A fixed run's final side vector is checkpointed where it is
       // computed: the step below consumes the checkpoint instead of
       // re-running the side aggregate (no extra job), and intermediate
       // side vectors stay lazy subtrees of the step's checkpoint job.
-      side = p.side.map(f => f(carried))
-      val sideCk = if (fixed && it == s.maxIter) side.map(checkpoint) else None
-      val (raw, cur) =
-        checkpoint(p.step(sideCk.map(_._1).orElse(side).getOrElse(carried)))
-      if (s.checks(it)) done = maxDelta(cur, carried) < s.tol.get
-      val stale = if (lazySide) held else ck
-      if (lazySide) held = ck
-      if (stale != null) Checkpoints.release(stale)
-      ck = raw
-      carried = cur
-      sideOut = sideCk.map(_._2)
-    }
-    // Materialize the lazy side before the edge caches drop; the
-    // checkpoint it read is unreachable after that.
-    val out = sideOut.orElse(side.map(v => checkpoint(v)._2))
-    if (held != null) Checkpoints.release(held)
-    Fixpoint(p.result(out.map(back).orNull, back(carried)), it, done)
-  }
+      val side = p.side.map(f => f(k.v))
+      val sideCk = if (s.tol.isEmpty && last) side.map(checkpoint) else None
+      val (ck, v) =
+        checkpoint(p.step(sideCk.map(_._1).orElse(side).getOrElse(k.v)))
+      val done = s.checks(it) && maxDelta(v, k.v) < s.tol.get
+      if (!done && !last) Right(k.copy(v = v, ck = Some(ck), it = it))
+      else {
+        // A converged run learns only now that this iteration is its
+        // last: its side vector is checkpointed here, while the
+        // generation it reads is still stored.
+        val out = sideCk.map(_._2).orElse(side.map(checkpoint(_)._2))
+        Left(Fixpoint(p.result(out.map(r.back).orNull, r.back(v)), it, done) ->
+          (out.toSeq :+ v))
+      }
+    }._1
 
-  /** A structural round plan's view of the loop: the loop [[width]], the
-    * loop's `input` (its `widthOf`) and any other frame made outside the
-    * loop ([[on]]) on the loop session, and the operator's choice of
-    * checkpoint for each frame it makes, which the loop tracks to
-    * release. */
-  private[graft] final class Rounds private[Fixpoint] (widthOf: DataFrame) {
-    val width: Int = AdaptiveWidth.of(widthOf)
-    private val session = Fixpoint.session(widthOf.sparkSession, width)
-    /** `widthOf` on the loop session. */
-    val input: DataFrame = on(widthOf)
+  /** A round plan's view of the loop: the loop [[width]], the loop's
+    * `input` and any other frame made outside the loop ([[on]]) on the
+    * loop session, and the frames the plan stores — cached or
+    * checkpointed — each of which the loop tracks to release. A `keyed`
+    * loop's session has AQE partition coalescing off. */
+  private[graft] final class Rounds private[Fixpoint] (of: DataFrame,
+      val width: Int, keyed: Boolean) {
+    private val session = Sessions.scoped(of.sparkSession,
+      (SQLConf.SHUFFLE_PARTITIONS.key -> width.toString) +:
+        (if (keyed) Seq(SQLConf.COALESCE_PARTITIONS_ENABLED.key -> "false")
+        else Nil): _*)
+    /** The loop's input on the loop session; the loop owns it. */
+    val input: DataFrame = on(of)
     /** `df` on the loop session: the rounds read only frames on it. */
     def on(df: DataFrame): DataFrame = Rebind(df, session)
+    /** `df` on the caller's session: a result. */
+    private[Fixpoint] def back(df: DataFrame): DataFrame =
+      Rebind(df, of.sparkSession)
     private[Fixpoint] var made = Vector.empty[DataFrame]
+    def cache(df: DataFrame): DataFrame = track(df.persist())
     def materialize(df: DataFrame): DataFrame =
       track(Checkpoints.materialize(df))
     def materialize(df: DataFrame, tally: Seq[Column]): Tallied =
@@ -311,35 +299,31 @@ object Fixpoint {
     private def track(t: Tallied): Tallied = { made :+= t.df; t }
   }
 
-  /** The one round loop of the structural operators (components, label
-    * propagation, the k-core and k-truss peels). `start` makes the first
-    * generation `S`; each `round` makes the next (`Right`) or returns the
-    * result (`Left`), so the round plan holds the stop test. The loop
-    * owns the rest:
-    *  - width: [[AdaptiveWidth.of]] on `widthOf`, the frame the rounds
-    *    re-read, handed to them as [[Rounds.width]];
-    *  - the loop session: every round plans on one session of its own
-    *    ([[Sessions.scoped]]) whose `shuffle.partitions` is that width.
-    *    AQE coalescing stays on there: the peels' stock checkpoints need
-    *    it (see [[Checkpoints.materializeKeyed]]). `start` reads
-    *    `widthOf` as [[Rounds.input]] and rebinds any other frame made
-    *    outside the loop with [[Rounds.on]]; the result comes back on
-    *    the caller's session, whose conf the loop never changes;
-    *  - the cap: a round that still makes a generation after `maxRounds`
-    *    such rounds fails loudly, since a SQL oracle that unrolls the same
-    *    bound would see a partial result;
-    *  - storage: after `start` and after each round, every frame the loop
-    *    holds (`widthOf`, the carried ones, the ones the round made) that
-    *    the new generation does not carry is dropped — checkpoint
-    *    released, cache unpersisted — so at most two generations are ever
-    *    stored; at the end, every one whose checkpoint the result does not
-    *    read; on failure, all.
-    * Returns the result and the number of rounds run, the last included.
-    */
+  /** [[rounds]] for a structural operator: the width is
+    * [[AdaptiveWidth.of]] `widthOf`, the frame the rounds re-read,
+    * which they get as [[Rounds.input]]; a round returns the result as
+    * `Left`. Components' min-label rounds run `keyed`; the peels, label
+    * propagation and the star engine do not. */
   private[graft] def rounds[S](widthOf: DataFrame, maxRounds: Int,
-      what: String)(carried: S => Seq[DataFrame])(start: Rounds => S)(
-      round: (Rounds, S) => Either[DataFrame, S]): (DataFrame, Int) = {
-    val r = new Rounds(widthOf)
+      what: String, keyed: Boolean = false)(carried: S => Seq[DataFrame])(
+      start: Rounds => S)(
+      round: (Rounds, S) => Either[DataFrame, S]): (DataFrame, Int) =
+    rounds[S, DataFrame](new Rounds(widthOf, AdaptiveWidth.of(widthOf), keyed),
+        maxRounds, what)(carried)(start) { (r, s) =>
+      round(r, s).left.map(df => r.back(df) -> Seq(df))
+    }
+
+  /** The loop. `start` makes the first generation `S`; each `round` makes
+    * the next (`Right`) or returns the result with the frames it reads
+    * (`Left`). `carried` lists the frames a generation reads: after
+    * `start` and after each round every frame the loop holds (its
+    * input, the carried ones, the ones the round made) that the new
+    * generation does not carry is dropped; at the end, every one whose
+    * checkpoint the result does not read; on failure, all. Returns the
+    * result and the number of rounds run, the last included. */
+  private def rounds[S, R](r: Rounds, maxRounds: Int, what: String)(
+      carried: S => Seq[DataFrame])(start: Rounds => S)(
+      round: (Rounds, S) => Either[(R, Seq[DataFrame]), S]): (R, Int) = {
     var live = Seq(r.input)
     def keep(read: DataFrame => Boolean): Unit = {
       (live ++ r.made).filterNot(read).foreach(drop)
@@ -353,10 +337,10 @@ object Fixpoint {
     }
     try {
       @annotation.tailrec
-      def loop(s: S, n: Int): (DataFrame, Int) = round(r, s) match {
-        case Left(result) =>
-          keep(Checkpoints.reads(result))
-          (Rebind(result, widthOf.sparkSession), n)
+      def loop(s: S, n: Int): (R, Int) = round(r, s) match {
+        case Left((result, reads)) =>
+          keep(f => reads.exists(Checkpoints.reads(_)(f)))
+          (result, n)
         case Right(next) =>
           require(n <= maxRounds,
             s"$what did not converge within $maxRounds rounds (raise the " +

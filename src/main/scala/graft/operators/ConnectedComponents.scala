@@ -52,9 +52,9 @@ object ConnectedComponents {
       .unionAll(pairs.select(col(b).as("x"), col(a).as("y")))
     // Labels only decrease, so the checksum falls every round until the
     // fixed point: the loop always ends, and needs no cap.
-    Fixpoint.rounds[Labels](sym, Int.MaxValue, "min-label propagation")(
-        l => Seq(l.e, l.comp)) { r =>
-      val e = r.input.repartition(r.width, col("y")).persist()
+    Fixpoint.rounds[Labels](sym, Int.MaxValue, "min-label propagation",
+        keyed = true)(l => Seq(l.e, l.comp)) { r =>
+      val e = r.cache(r.input.repartition(r.width, col("y")))
       val comp = r.materializeKeyed(e.groupBy(col("x").as("id"))
         .agg(min(col("y")).as("nmin"))
         .select(col("id"), least(col("id"), col("nmin")).as("comp")),

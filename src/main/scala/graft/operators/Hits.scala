@@ -113,7 +113,7 @@ object Hits {
     // Both copies are re-probed every iteration: cache them (the parquet
     // scan of a bucketed layout then also stays out of the loop).
     mutual(uniform(e), e.cached(e.byDst), contribution, e.cached(e.bySrc),
-      contribution, post(e), Normalize.L2, Result, Nil)
+      contribution, post(e), Normalize.L2, Result)
   }
 
   /** Uniform `1/√N` init over the loop's node checkpoint, hash-partitioned
@@ -144,12 +144,11 @@ object Hits {
     * normalized, and only to aggregated nodes (dropout semantics). */
   private[operators] def mutual[A](init: DataFrame, byDst: DataFrame,
       toHub: Column, bySrc: DataFrame, toAuth: Column, post: Post,
-      norm: Column, result: (DataFrame, DataFrame) => A,
-      owned: Seq[DataFrame]): Program[A] =
+      norm: Column, result: (DataFrame, DataFrame) => A): Program[A] =
     Program(init,
       Some(v => applyPost(Fixpoint.gather(byDst, "dst", toHub)(v), post)),
       v => applyPost(Fixpoint.gather(bySrc, "src", toAuth)(v), post),
-      Some(norm), result, owned)
+      Some(norm), result)
 
   private def applyPost(scores: DataFrame, post: Post): DataFrame = post match {
     case Identity => scores

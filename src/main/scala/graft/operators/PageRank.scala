@@ -75,8 +75,8 @@ object PageRank {
       // Per-join SHUFFLE_HASH hints (not a session-wide planner flag) —
       // the degree/score sides are the |V|-sized build sides.
       val dOut = Degrees.out(e.bySrc).hint("SHUFFLE_HASH")
-      val eOut = e.bySrc.join(dOut, col("src") === dOut("id"))
-        .select(col("src"), col("dst"), col("out_degree")).persist()
+      val eOut = e.cached(e.bySrc.join(dOut, col("src") === dOut("id"))
+        .select(col("src"), col("dst"), col("out_degree")))
       val (tele, init, floor) = topic match {
         case None => (e.nodes.select(col("id")),
           e.nodes.select(col("id"), Fixpoint.constant(1.0 / e.n).as("score")),
@@ -94,6 +94,6 @@ object PageRank {
           .hint("SHUFFLE_HASH"), Seq("id"), "left")
         .select(col("id"), (floor +
           lit(damping) * coalesce(col("score"), lit(0.0))).as("score")),
-        None, (_, p) => p, Seq(eOut))
+        None, (_, p) => p)
     }
 }

@@ -124,11 +124,11 @@ object Salsa {
     // the cached by-dst copy the by-src copy derives from.
     val eBase = e.cached(e.byDst)
     val dIn = Degrees.in(eBase).hint("SHUFFLE_HASH")
-    val eIn = eBase.join(dIn, eBase("dst") === dIn("id"))
-      .select(col("src"), col("dst"), col("in_degree")).persist()
+    val eIn = e.cached(eBase.join(dIn, eBase("dst") === dIn("id"))
+      .select(col("src"), col("dst"), col("in_degree")))
     val dOut = Degrees.out(e.bySrc).hint("SHUFFLE_HASH")
-    val eOut = e.bySrc.join(dOut, col("src") === dOut("id"))
-      .select(col("src"), col("dst"), col("out_degree")).persist()
+    val eOut = e.cached(e.bySrc.join(dOut, col("src") === dOut("id"))
+      .select(col("src"), col("dst"), col("out_degree")))
     val p = post(e)
     val init = p match {
       case Hits.TopicTeleport(_, twoNTopic, flags) => flags.select(col("id"),
@@ -137,7 +137,6 @@ object Salsa {
       case _ => Hits.uniform(e)
     }
     Hits.mutual(init, eIn, col("score") / col("in_degree"),
-      eOut, col("score") / col("out_degree"), p, Normalize.L1, Result,
-      Seq(eIn, eOut))
+      eOut, col("score") / col("out_degree"), p, Normalize.L1, Result)
   }
 }

@@ -516,16 +516,10 @@ object Similarity {
     val qe = base.filter(col("vec_id") < nq)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
         col("nrm").as("qn"))
-    val scored = cand.join(base, Seq("vec_id")).join(broadcast(qe), Seq("query_id"))
+    topK(cand.join(base, Seq("vec_id")).join(broadcast(qe), Seq("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        (dot(col("qv"), col("embedding")) / (col("qn") * col("nrm"))).as("cos"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("rn"), col("neighbor_id"),
-        round(col("cos"), 6).as("cosine"))
-      .orderBy(col("query_id"), col("rn"))
+        (dot(col("qv"), col("embedding")) / (col("qn") * col("nrm"))).as("cos")),
+      k)
   }
 
   /** Nearest-`n` centroid assignment: centroids are always broadcast
@@ -694,18 +688,12 @@ object Similarity {
     val queries = qcorpus
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
         col("nrm").as("qn"))
-    val scored = indexed.join(broadcast(probes), Seq("cid"))
+    topK(indexed.join(broadcast(probes), Seq("cid"))
       .filter(col("vec_id") =!= col("query_id"))
       .join(broadcast(queries), Seq("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        (dot(col("qv"), col("embedding")) / (col("qn") * col("nrm"))).as("cos"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("rn"), col("neighbor_id"),
-        round(col("cos"), 6).as("cosine"))
-      .orderBy(col("query_id"), col("rn"))
+        (dot(col("qv"), col("embedding")) / (col("qn") * col("nrm"))).as("cos")),
+      k)
   }
 
   /** Build-and-persist half of the IVF index lifecycle (the embedding
@@ -972,27 +960,7 @@ object Similarity {
         (intDot(col("q"), col("qq")).cast("double") *
           col("ma") * col("qma") /
           (lit(127.0 * 127.0) * col("nrm") * col("qn"))).as("qcos"))
-    val wc = Window.partitionBy(col("query_id"))
-      .orderBy(col("qcos").desc, col("neighbor_id"))
-    val candidates = approx.withColumn("crn", row_number().over(wc))
-      .filter(col("crn") <= cand)
-      .select(col("query_id"), col("neighbor_id"))
-    val ce = base.select(col("vec_id").as("neighbor_id"),
-      col("embedding").as("ve"), col("nrm").as("vn"))
-    val qe = base.filter(col("vec_id") < nq)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
-        col("nrm").as("qn"))
-    val exact = candidates.join(ce, Seq("neighbor_id"))
-      .join(broadcast(qe), Seq("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        (dot(col("qv"), col("ve")) / (col("qn") * col("vn"))).as("cos"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    exact.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("rn"), col("neighbor_id"),
-        round(col("cos"), 6).as("cosine"))
-      .orderBy(col("query_id"), col("rn"))
+    rerank(approx, base, nq, k, cand)
   }
 
   /** Matryoshka (truncated-dimension) ANN — the THIRD cheap-candidate
@@ -1021,28 +989,8 @@ object Similarity {
     val approx = pref.join(broadcast(queries),
         col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        (dot(col("p"), col("qp")) / (col("pn") * col("qpn"))).as("pcos"))
-    val wc = Window.partitionBy(col("query_id"))
-      .orderBy(col("pcos").desc, col("neighbor_id"))
-    val candidates = approx.withColumn("crn", row_number().over(wc))
-      .filter(col("crn") <= cand)
-      .select(col("query_id"), col("neighbor_id"))
-    val ce = base.select(col("vec_id").as("neighbor_id"),
-      col("embedding").as("ve"), col("nrm").as("vn"))
-    val qe = base.filter(col("vec_id") < nq)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
-        col("nrm").as("qn"))
-    val exact = candidates.join(ce, Seq("neighbor_id"))
-      .join(broadcast(qe), Seq("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        (dot(col("qv"), col("ve")) / (col("qn") * col("vn"))).as("cos"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    exact.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("rn"), col("neighbor_id"),
-        round(col("cos"), 6).as("cosine"))
-      .orderBy(col("query_id"), col("rn"))
+        (dot(col("p"), col("qp")) / (col("pn") * col("qpn"))).as("qcos"))
+    rerank(approx, base, nq, k, cand)
   }
 
   /** MRL×IVF composition — the dimension axis made SUBLINEAR: the
@@ -1180,7 +1128,7 @@ object Similarity {
       .join(broadcast(qn), Seq("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         (col("adot") / (col("nrm") * col("qn"))).as("qcos"))
-    pqRerank(approx, base, nq, k, cnd)
+    rerank(approx, base, nq, k, cnd)
   }
 
   /** IVF + PQ — the canonical 100 TB ANN configuration (FAISS's
@@ -1230,13 +1178,14 @@ object Similarity {
       .join(broadcast(qn), Seq("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         (col("adot") / (col("nrm") * col("qn"))).as("qcos"))
-    pqRerank(approx, corpus, nq, k, cnd)
+    rerank(approx, corpus, nq, k, cnd)
   }
 
-  /** Shared candidate-cut + exact-rerank tail of the PQ rungs: keep
-    * `cand` by (qcos desc, id), re-score on full vectors, emit the
-    * ladder's standard `(query_id, rn, neighbor_id, cosine)`. */
-  private def pqRerank(approx: DataFrame, base: DataFrame, nq: Int,
+  /** Shared candidate-cut + exact-rerank tail of the two-stage rungs
+    * (Q8, MRL, PQ and their IVF compositions): keep `cand` per query by
+    * (qcos desc, id), where `qcos` is the rung's cheap score, re-score
+    * on full vectors, rank with [[topK]]. */
+  private def rerank(approx: DataFrame, base: DataFrame, nq: Int,
       k: Int, cand: Int): DataFrame = {
     val wc = Window.partitionBy(col("query_id"))
       .orderBy(col("qcos").desc, col("neighbor_id"))
@@ -1248,13 +1197,19 @@ object Similarity {
     val qe = base.filter(col("vec_id") < nq)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
         col("nrm").as("qn"))
-    val exact = candidates.join(ce, Seq("neighbor_id"))
+    topK(candidates.join(ce, Seq("neighbor_id"))
       .join(broadcast(qe), Seq("query_id"))
       .select(col("query_id"), col("neighbor_id"),
-        (dot(col("qv"), col("ve")) / (col("qn") * col("vn"))).as("cos"))
+        (dot(col("qv"), col("ve")) / (col("qn") * col("vn"))).as("cos")), k)
+  }
+
+  /** The ladder's shared top-k tail: the `k` best neighbors per query by
+    * (cos desc, neighbor_id) as `(query_id, rn, neighbor_id, cosine)`,
+    * `cosine` rounded to 6 decimals. */
+  private def topK(scored: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cos").desc, col("neighbor_id"))
-    exact.withColumn("rn", row_number().over(w))
+    scored.withColumn("rn", row_number().over(w))
       .filter(col("rn") <= k)
       .select(col("query_id"), col("rn"), col("neighbor_id"),
         round(col("cos"), 6).as("cosine"))
@@ -1288,29 +1243,9 @@ object Similarity {
       .filter(col("vec_id") =!= col("query_id"))
       .join(broadcast(qpref), Seq("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        (dot(col("p"), col("qp")) / (col("pn") * col("qpn"))).as("pcos"))
-    val wc = Window.partitionBy(col("query_id"))
-      .orderBy(col("pcos").desc, col("neighbor_id"))
-    val candidates = approx.withColumn("crn", row_number().over(wc))
-      .filter(col("crn") <= cnd)
-      .select(col("query_id"), col("neighbor_id"))
+        (dot(col("p"), col("qp")) / (col("pn") * col("qpn"))).as("qcos"))
     // Stage 2: exact full-vector rerank of the candidates only.
-    val ce = corpus.select(col("vec_id").as("neighbor_id"),
-      col("embedding").as("ve"), col("nrm").as("vn"))
-    val qe = corpus.filter(col("vec_id") < nq)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
-        col("nrm").as("qn"))
-    val exact = candidates.join(ce, Seq("neighbor_id"))
-      .join(broadcast(qe), Seq("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        (dot(col("qv"), col("ve")) / (col("qn") * col("vn"))).as("cos"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    exact.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("rn"), col("neighbor_id"),
-        round(col("cos"), 6).as("cosine"))
-      .orderBy(col("query_id"), col("rn"))
+    rerank(approx, corpus, nq, k, cnd)
   }
 
   /** The full 100 TB ANN ladder in one entry point: IVF cell-probe
@@ -1352,27 +1287,7 @@ object Similarity {
         (intDot(col("q"), col("qq")).cast("double") *
           col("ma") * col("qma") /
           (lit(127.0 * 127.0) * col("nrm") * col("qn"))).as("qcos"))
-    val wc = Window.partitionBy(col("query_id"))
-      .orderBy(col("qcos").desc, col("neighbor_id"))
-    val candidates = approx.withColumn("crn", row_number().over(wc))
-      .filter(col("crn") <= cand)
-      .select(col("query_id"), col("neighbor_id"))
-    val ce = corpus.select(col("vec_id").as("neighbor_id"),
-      col("embedding").as("ve"), col("nrm").as("vn"))
-    val qe = corpus.filter(col("vec_id") < nq)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
-        col("nrm").as("qxn"))
-    val exact = candidates.join(ce, Seq("neighbor_id"))
-      .join(broadcast(qe), Seq("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        (dot(col("qv"), col("ve")) / (col("qxn") * col("vn"))).as("cos"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    exact.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("rn"), col("neighbor_id"),
-        round(col("cos"), 6).as("cosine"))
-      .orderBy(col("query_id"), col("rn"))
+    rerank(approx, corpus, nq, k, cand)
   }
 
   /** Brute-force cosine top-k for the first `nq` query vectors: the
@@ -1385,16 +1300,10 @@ object Similarity {
     val q = corpus.filter(col("vec_id") < nq)
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
         col("nrm").as("qn"))
-    val c = corpus.join(broadcast(q), col("vec_id") =!= col("query_id"))
+    topK(corpus.join(broadcast(q), col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        (dot(col("qe"), col("embedding")) / (col("qn") * col("nrm"))).as("cos"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    c.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("rn"), col("neighbor_id"),
-        round(col("cos"), 6).as("cosine"))
-      .orderBy(col("query_id"), col("rn"))
+        (dot(col("qe"), col("embedding")) / (col("qn") * col("nrm"))).as("cos")),
+      k)
   }
 }
 

@@ -53,10 +53,10 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   * (observed: `AQEShuffleRead coalesced` on the kernel agg exchanges at
   * sf0.1) and the materialized layout would genuinely no longer be
   * hash-routable. No conf is set for that: a frame whose session
-  * already has coalescing off (every kernel loop's,
-  * [[graft.Fixpoint]]) is checkpointed there; any other is planned on
-  * a scoped sibling of its session ([[graft.Sessions.scoped]]), and the
-  * checkpoint comes back on the frame's own session. Both halves only
+  * already has coalescing off (every keyed loop's: the kernels' and
+  * components', [[graft.Fixpoint]]) is checkpointed there; any other is
+  * planned on a scoped sibling of its session ([[graft.Sessions.scoped]]),
+  * and the checkpoint comes back on the frame's own session. Both halves only
   * claim what is physically true: the declared partitioning is the
   * executed final plan's, or the one-partition layout of its rows.
   *

@@ -2,6 +2,7 @@ package graft
 
 import graft.operators.{ConnectedComponents, Hits, KCore, KTruss, LabelProp,
   PageRank, Salsa}
+import org.apache.spark.sql.graftshim.CacheManagerShim
 import org.apache.spark.storage.StorageLevel
 import scala.jdk.CollectionConverters._
 
@@ -56,6 +57,21 @@ class CheckpointLifecycleSpec extends SparkSuite {
       assert(fp.iterations > 1 && scoresMap(fp.result.auths).nonEmpty)
     }
     assert(added.size <= 2, s"leaked checkpoint RDDs: $added")
+  }
+
+  test("a kernel run that throws leaves nothing stored") {
+    // The run fails after its edge copy, its node checkpoint and
+    // PageRank's degree-annotated edge cache exist: no node carries the
+    // topic, so there is no seed to teleport to.
+    val cached = CacheManagerShim.entries(spark)
+    val added = addedPersistentRdds {
+      val e = intercept[IllegalArgumentException](
+        PageRank.runPersonalized(g1, "no-such-topic"))
+      assert(e.getMessage.contains("no nodes labeled"))
+    }
+    assert(added.isEmpty, s"leaked persisted RDDs: $added")
+    assert(CacheManagerShim.entries(spark) == cached,
+      "the failed run left a cache registered")
   }
 
   private def pairs = {

@@ -84,19 +84,24 @@ class LoopSessionSpec extends SparkSuite {
 
   test("20 kernel runs and 20 peels leave the context's listener count " +
       "unchanged") {
+    // The peels include min-label components, whose loop is keyed.
+    import spark.implicits._
     val g = graph(edgeRows)
+    val pairs = pairRows.toDF("a", "b")
     val sc = spark.sparkContext
     // one run first, so whatever the first use of a Spark facility
     // registers is not counted against the loops
     val h0 = Hits.run(g, 2)
-    Seq(h0.hubs, h0.auths).foreach(Checkpoints.releaseAll)
+    val c0 = ConnectedComponents.run(pairs)
+    Seq(h0.hubs, h0.auths, c0).foreach(Checkpoints.releaseAll)
     ListenerBusShim.drain(sc)
     val before = ListenerBusShim.listeners(sc)
     (1 to 20).foreach { _ =>
       val h = Hits.run(g, 2)
       val core = KCore.run(g.edges, 2)
-      assert(core.count() > 0)
-      Seq(h.hubs, h.auths, core).foreach(Checkpoints.releaseAll)
+      val comps = ConnectedComponents.run(pairs)
+      assert(core.count() > 0 && comps.count() > 0)
+      Seq(h.hubs, h.auths, core, comps).foreach(Checkpoints.releaseAll)
     }
     ListenerBusShim.drain(sc)
     assert(ListenerBusShim.listeners(sc) == before)

@@ -6,10 +6,11 @@ import graft.operators.{ConnectedComponents, Hits, KCore, KTruss,
 /** Kernel scores and structural-operator results must not depend on the
   * loop width. The fixtures are small enough that the default
   * bytes-per-task target derives width 1, so every operator here runs
-  * twice: with the target forced huge (width 1) and forced to one byte
-  * (width = the session's `shuffle.partitions` cap), via
-  * [[AdaptiveWidth.BytesPerTaskKey]]. Each loop runs on a session of its
-  * own, so `shuffle.partitions` must read as it did after every call.
+  * three times: with the target forced huge (width 1) and forced to one
+  * byte (width = the session's `shuffle.partitions` cap), via
+  * [[AdaptiveWidth.BytesPerTaskKey]], at the session's cap and at a cap
+  * of 7. Each loop runs on a session of its own, so `shuffle.partitions`
+  * must read as it did after every call.
   */
 class WidthInvarianceSpec extends SparkSuite {
 
@@ -93,13 +94,14 @@ class WidthInvarianceSpec extends SparkSuite {
   private def rows(df: org.apache.spark.sql.DataFrame) =
     (df.collect().map(_.mkString("|") -> 0.0).toMap, 0, false)
 
-  private def atBytesPerTask[T](bytes: String)(body: => T): T = {
-    val prev = spark.conf.getOption(AdaptiveWidth.BytesPerTaskKey)
-    spark.conf.set(AdaptiveWidth.BytesPerTaskKey, bytes)
+  /** `body` with `conf` set on the session, each key restored after. */
+  private def withConf[T](conf: (String, String)*)(body: => T): T = {
+    val prev = conf.map { case (k, _) => k -> spark.conf.getOption(k) }
+    conf.foreach { case (k, v) => spark.conf.set(k, v) }
     try body
-    finally prev match {
-      case Some(v) => spark.conf.set(AdaptiveWidth.BytesPerTaskKey, v)
-      case None => spark.conf.unset(AdaptiveWidth.BytesPerTaskKey)
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
     }
   }
 
@@ -107,22 +109,28 @@ class WidthInvarianceSpec extends SparkSuite {
       "the shuffle.partitions cap") {
     val cap = spark.conf.get(ShufflePartitions).toInt
     assert(cap > 1, "the cap must differ from width 1 for this spec to bite")
-    val narrow = atBytesPerTask("1t") {
+    val narrow = withConf(AdaptiveWidth.BytesPerTaskKey -> "1t") {
       assert(Fixpoint.width(g.edges) == 1)
       runAll()
     }
-    val wide = atBytesPerTask("1b") {
-      assert(Fixpoint.width(g.edges) == cap)
-      runAll()
-    }
-    assert(narrow.keySet == wide.keySet)
-    narrow.foreach { case (k, (scores, iters, conv)) =>
-      val (wScores, wIters, wConv) = wide(k)
-      assert(scores.nonEmpty, s"$k: empty result")
-      withClue(s"$k: ") { assertApprox(wScores, scores, 1e-12) }
-      assert(wIters == iters && wConv == conv,
-        s"$k: (iterations, converged) ($iters, $conv) at width 1 vs " +
-          s"($wIters, $wConv) at width $cap")
+    // The cap, and an odd width that divides no other width here.
+    Seq(cap, 7).foreach { width =>
+      val wide = withConf(ShufflePartitions -> width.toString,
+          AdaptiveWidth.BytesPerTaskKey -> "1b") {
+        assert(Fixpoint.width(g.edges) == width)
+        runAll()
+      }
+      assert(narrow.keySet == wide.keySet)
+      narrow.foreach { case (k, (scores, iters, conv)) =>
+        val (wScores, wIters, wConv) = wide(k)
+        assert(scores.nonEmpty, s"$k: empty result")
+        withClue(s"$k at width $width: ") {
+          assertApprox(wScores, scores, 1e-12)
+        }
+        assert(wIters == iters && wConv == conv,
+          s"$k: (iterations, converged) ($iters, $conv) at width 1 vs " +
+            s"($wIters, $wConv) at width $width")
+      }
     }
   }
 }
