@@ -1,16 +1,13 @@
 #!/bin/bash
 # Run a graft main outside sbt with build.sbt's forked-JVM flags, so long
-# measurements don't hold the sbt lock while sources evolve. The classes
-# dir is overridable (GRAFT_CLASSES) for paired A/B runs: point one
-# invocation at a snapshot of the baseline classes and the next at the
-# current build, alternating, so host drift is shared between the two
-# arms instead of landing on one. Keep the flags below in step with
-# build.sbt's javaOptions (LauncherFlagsSpec checks the -Dspark.* ones).
-# Usage: [GRAFT_CLASSES=/tmp/classes_base] java_main_cp.sh <MainClass> [args...]
+# measurements don't hold the sbt lock while sources evolve. It runs the
+# classes built in the checkout it sits in. Keep the flags below in step
+# with build.sbt's javaOptions (LauncherFlagsSpec checks the -Dspark.* ones).
+# Usage: java_main_cp.sh <MainClass> [args...]
 set -e
 CLS=$1; shift
 REPO=$(cd "$(dirname "$0")/../.." && pwd)
-CLASSES=${GRAFT_CLASSES:-$REPO/target/scala-2.13/classes}
+CLASSES=$REPO/target/scala-2.13/classes
 OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
          java.nio java.util java.util.concurrent java.util.concurrent.atomic; do
